@@ -697,12 +697,15 @@ object Dedup {
     // over SALT reducers; the explicit-count repartition pins the
     // layout AQE would otherwise coalesce away. Pair set unchanged —
     // each (a, b) still meets exactly once, at salt = doc_a mod SALT.
-    val SALT = 8
+    // both salts are bigint (pmod of the bigint doc_id), so the join
+    // keys carry no cast and the pinned repartitions already satisfy
+    // the join's distribution — no extra exchange of the exploded side
+    val SALT = 8L
     val p = graft.util.Par.shufflePartitions(s)
     val a = keyed.toDF("doc_a", "sha", "nidx", "nib")
       .withColumn("salt", pmod(col("doc_a"), lit(SALT)))
     val b = keyed.toDF("doc_b", "shb", "nidx_b", "nib_b")
-      .withColumn("salt_b", explode(array((0 until SALT).map(lit(_)): _*)))
+      .withColumn("salt_b", explode(array((0L until SALT).map(lit(_)): _*)))
     val pairs = a.repartition(p, col("nidx"), col("nib"), col("salt"))
       .join(b.repartition(p, col("nidx_b"), col("nib_b"), col("salt_b")),
         col("nidx") === col("nidx_b") && col("nib") === col("nib_b") &&

@@ -1,10 +1,9 @@
 package graft.dedup
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.util.BloomSidecars
+import graft.util.{BloomSidecars, SegmentedIndex}
 
 /** Incrementally-maintained train-gram decontamination index — the
   * third member of the incremental-index family ([[MinHashIndex]] for
@@ -32,51 +31,15 @@ import graft.util.BloomSidecars
   * DISJOINT by construction, so the multi-path read needs no distinct
   * and chained appends equal a full rebuild exactly (GramIndexSpec).
   *
-  * Versioning, crash behavior (markerless dirs invisible, orphan
-  * segments swept), [[compact]] and [[vacuum]] are the shared
-  * [[graft.util.VersionedTableStore]] contract, as in the two sibling
+  * Versioning, crash behavior, [[compact]] and [[vacuum]] are the
+  * shared [[graft.util.SegmentedIndex]] lifecycle, as in the sibling
   * indexes. Single writer per index dir.
   */
-final class GramIndex(spark: SparkSession, indexDir: String) {
-  private val snaps = new graft.util.VersionedTableStore(spark, indexDir, "_INDEX_OK")
-  private def segRoot = new Path(snaps.dir, "seg")
-  private def fs = snaps.fs
-
-  /** Newest COMPLETE index version (manifest + marker), if any. */
-  def version: Option[Long] = snaps.version
+final class GramIndex(spark: SparkSession, indexDir: String)
+    extends SegmentedIndex(spark, indexDir) {
 
   /** The corpus-lifetime distinct gram digest set: (g64). */
-  def grams(): DataFrame = {
-    val paths = segmentsOf(requireVersion())
-      .map(s => new Path(segRoot, s"$s/grams").toString)
-    spark.read.parquet(paths: _*)
-  }
-
-  private def requireVersion(): Long = version.getOrElse(
-    throw new java.util.NoSuchElementException(
-      s"index at $indexDir never built — call build() first"))
-
-  private def segmentsOf(v: Long): Seq[String] =
-    snaps.readTextFile(new Path(snaps.versionPath(v), "segments"))
-      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-
-  /** The caller-supplied tag version `v` was published with, if any —
-    * the streaming decontaminator's batch journal (one tiny file per
-    * version), the same replay-detection contract as
-    * [[MinHashIndex.tagOf]].
-    */
-  def tagOf(v: Long): Option[String] = {
-    val p = new Path(snaps.versionPath(v), "tag")
-    if (fs.exists(p)) Some(snaps.readTextFile(p).trim) else None
-  }
-
-  /** Newest complete version carrying `tag` — scans all retained
-    * versions newest-first (tiny manifest reads, bounded by vacuum
-    * retention) so an interleaved [[compact]] can't hide a crashed
-    * batch's journal entry.
-    */
-  def versionTagged(tag: String): Option[Long] =
-    snaps.completeVersions.sorted.reverse.find(tagOf(_).contains(tag))
+  def grams(): DataFrame = readTable("grams")
 
   /** The gram set as it stood BEFORE version `v`'s own delta — the
     * union of `v`'s manifest minus its delta segment (equivalently:
@@ -88,10 +51,9 @@ final class GramIndex(spark: SparkSession, indexDir: String) {
     * segment IS its delta).
     */
   def gramsBefore(v: Long): DataFrame = {
-    val paths = segmentsOf(v).filterNot(_ == s"s$v")
-      .map(s => new Path(segRoot, s"$s/grams").toString)
-    if (paths.isEmpty) grams().limit(0)
-    else spark.read.parquet(paths: _*)
+    val segs = segmentsOf(v).filterNot(_ == s"s$v")
+    if (segs.isEmpty) grams().limit(0)
+    else readSegments(segs, "grams")
   }
 
   /** The subset of `g64s` (a g64 column) ALREADY in the store — the
@@ -103,52 +65,46 @@ final class GramIndex(spark: SparkSession, indexDir: String) {
   def knownGrams(g64s: DataFrame): DataFrame = {
     val segs = segmentsOf(requireVersion())
     BloomSidecars.knownStringKeys(spark, g64s, "g64", fs,
-      segs.map(s => new Path(segRoot, s"$s/grams_bloom")),
-      segs.map(s => new Path(segRoot, s"$s/grams")))
+      segs.map(segPath(_, "grams_bloom")), segs.map(segPath(_, "grams")))
   }
 
-  /** Write the delta segment (grams parquet + delta-sized bloom), then
-    * publish `v` as the previous segments plus it — segment first,
-    * manifest+marker last, the shared crash contract.
+  /** Claim a version and write its delta segment (grams parquet +
+    * delta-sized bloom), then publish it as the previous segments plus
+    * it — segment first, manifest+marker last, the shared crash
+    * contract.
     *
     * `grams` must be materialized by the caller (it is consumed twice:
     * parquet write + bloom build over the written parquet).
     */
-  private def writeDelta(grams: DataFrame, v: Long,
-      prevSegments: Seq[String], tag: Option[String] = None): Unit = {
-    val seg = s"s$v"
-    val gramsPath = new Path(segRoot, s"$seg/grams").toString
-    grams.select(col("g64")).write.mode("overwrite").parquet(gramsPath)
-    // bloom from the just-written parquet: stable storage, no second
-    // evaluation of the (possibly expensive) delta plan
-    val written = spark.read.parquet(gramsPath)
-    BloomSidecars.write(fs, new Path(segRoot, s"$seg/grams_bloom"),
-      BloomSidecars.build(written, "g64", written.count()))
-    snaps.publish(v) { v =>
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "segments"),
-        (prevSegments :+ seg).mkString("\n"))
-      tag.foreach(t =>
-        snaps.writeTextFile(new Path(snaps.versionPath(v), "tag"), t))
+  private def writeDelta(grams: DataFrame, prevSegments: Seq[String],
+      tag: Option[String] = None): Long =
+    publishSegment(prevSegments, tag) { seg =>
+      val gramsPath = segPath(seg, "grams").toString
+      grams.select(col("g64")).write.mode("overwrite").parquet(gramsPath)
+      // bloom from the just-written parquet: stable storage, no second
+      // evaluation of the (possibly expensive) delta plan
+      val written = spark.read.parquet(gramsPath)
+      BloomSidecars.write(fs, segPath(seg, "grams_bloom"),
+        BloomSidecars.build(written, "g64", written.count()))
     }
-  }
 
   /** Full build from a corpus (docs: doc_id, text) — the once-per-
-    * training-snapshot materialization.
+    * training-snapshot materialization. Returns the published version.
     */
-  def build(docs: DataFrame): Unit =
-    writeDelta(Dedup.docGrams8(docs).select(col("g64")).distinct(),
-      version.getOrElse(0L) + 1, Seq.empty)
+  def build(docs: DataFrame): Long =
+    writeDelta(Dedup.docGrams8(docs).select(col("g64")).distinct(), Seq.empty)
 
   /** Delta refresh for appended documents: shingle the NEW docs only,
     * keep only grams absent from every earlier segment (bloom-pruned
     * membership, exact-confirmed), write one delta segment. Replaying
-    * an overlapping batch appends the empty set — idempotent.
+    * an overlapping batch appends the empty set — idempotent. Returns
+    * the published version.
     */
-  def append(newDocs: DataFrame, tag: Option[String] = None): Unit = {
+  def append(newDocs: DataFrame, tag: Option[String] = None): Long = {
     val v = requireVersion()
     val batch = Dedup.docGrams8(newDocs).select(col("g64")).distinct()
     val fresh = batch.join(knownGrams(batch), Seq("g64"), "left_anti")
-    writeDelta(fresh, v + 1, segmentsOf(v), tag)
+    writeDelta(fresh, segmentsOf(v), tag)
   }
 
   /** Merge the current version's segments into ONE and publish it as a
@@ -158,24 +114,5 @@ final class GramIndex(spark: SparkSession, indexDir: String) {
     * from the segment-union parquet (stable until [[vacuum]]) — no
     * full-store pin.
     */
-  def compact(): Long = {
-    val v = requireVersion()
-    writeDelta(grams(), v + 1, Seq.empty)
-    v + 1
-  }
-
-  /** Drop all but the newest `keepLast` complete versions plus
-    * markerless crash leftovers, then delete every segment no retained
-    * version references. Returns the dropped versions.
-    */
-  def vacuum(keepLast: Int): Seq[Long] = {
-    val dropped = snaps.vacuum(keepLast)
-    val live = snaps.completeVersions.flatMap(segmentsOf).toSet
-    if (fs.exists(segRoot)) {
-      fs.listStatus(segRoot).map(_.getPath)
-        .filterNot(p => live.contains(p.getName))
-        .foreach(p => fs.delete(p, true))
-    }
-    dropped
-  }
+  def compact(): Long = writeDelta(grams(), Seq.empty)
 }

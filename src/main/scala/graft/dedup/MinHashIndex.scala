@@ -1,10 +1,9 @@
 package graft.dedup
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat_ws, explode, greatest, least}
 
-import graft.util.BloomSidecars
+import graft.util.{BloomSidecars, SegmentedIndex}
 
 /** Incrementally-maintained MinHash/LSH dedup index — the LLM-pipeline
   * analog of [[graft.graph.DegreeView]], and the operator a daily crawl
@@ -46,25 +45,16 @@ import graft.util.BloomSidecars
   * At sf0.1 the full d02 index build is the bench's biggest cold cost
   * (~9.5 s); this is the delta path that amortizes it across ingests.
   *
-  * Versioning is the shared [[graft.util.VersionedTableStore]]
-  * contract: immutable `v<k>` dirs published with a completion marker
-  * written after the manifest commits (a crash mid-publish leaves an
-  * invisible markerless dir, and a crash between the segment write and
-  * the publish leaves an orphan segment that [[vacuum]] sweeps), plus
-  * `vacuum(keepLast)` retention that also deletes segments no retained
-  * version references. Single writer per index dir.
+  * Versioning, the tag journal, crash behavior and retention are the
+  * shared [[graft.util.SegmentedIndex]] lifecycle. Single writer per
+  * index dir.
   *
   * Append is first-writer-wins per doc_id: a re-ingested doc_id keeps
   * its original signature (the delta is anti-joined against the stored
   * store), so replaying an overlapping crawl batch is idempotent.
   */
-final class MinHashIndex(spark: SparkSession, indexDir: String) {
-  private val snaps = new graft.util.VersionedTableStore(spark, indexDir, "_INDEX_OK")
-  private def segRoot = new Path(snaps.dir, "seg")
-  private def fs = snaps.fs
-
-  /** Newest COMPLETE index version (manifest + marker), if any. */
-  def version: Option[Long] = snaps.version
+final class MinHashIndex(spark: SparkSession, indexDir: String)
+    extends SegmentedIndex(spark, indexDir) {
 
   /** The signature store: (doc_id, mh0..mh8). */
   def signatures(): DataFrame = readTable("sig")
@@ -79,36 +69,12 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
     * needs: the dup decision for one ingest touches the ingest's own
     * collisions, never the full corpus-lifetime pair set.
     */
-  def candidatesAddedAt(v: Long): DataFrame = {
-    require(snaps.completeVersions.contains(v), s"no complete version $v")
-    spark.read.parquet(new Path(segRoot, s"s$v/cand").toString)
-  }
+  def candidatesAddedAt(v: Long): DataFrame = addedAt(v, "cand")
 
   /** The doc_ids first ingested at version `v` — the version's delta
     * segment, an O(batch) read.
     */
-  def idsAddedAt(v: Long): DataFrame = {
-    require(snaps.completeVersions.contains(v), s"no complete version $v")
-    spark.read.parquet(new Path(segRoot, s"s$v/sig").toString)
-      .select(col("doc_id"))
-  }
-
-  /** The caller-supplied tag version `v` was published with, if any —
-    * the streaming crawl's batch journal (one tiny file per version).
-    */
-  def tagOf(v: Long): Option[String] = {
-    val p = new Path(snaps.versionPath(v), "tag")
-    if (fs.exists(p)) Some(snaps.readTextFile(p).trim) else None
-  }
-
-  /** Newest complete version carrying `tag` — the replay detector.
-    * Scans ALL retained versions (newest first, tiny manifest reads,
-    * count bounded by [[vacuum]] retention) rather than only the
-    * newest, so a maintenance [[compact]] published between a crashed
-    * append and its replay cannot hide the batch's journal entry.
-    */
-  def versionTagged(tag: String): Option[Long] =
-    snaps.completeVersions.sorted.reverse.find(tagOf(_).contains(tag))
+  def idsAddedAt(v: Long): DataFrame = addedAt(v, "sig").select(col("doc_id"))
 
   // ---- bloom sidecars: O(batch)-read membership ----------------------
   // (machinery shared with SignLshIndex via graft.util.BloomSidecars;
@@ -125,10 +91,9 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
     * semi-join, against ONLY the claiming segments.
     */
   def knownIds(ids: DataFrame): DataFrame = {
-    val segs = currentSegments()
+    val segs = segmentsOf(requireVersion())
     BloomSidecars.knownKeys(spark, ids, "doc_id", fs,
-      segs.map(s => new Path(segRoot, s"$s/ids_bloom")),
-      segs.map(s => new Path(segRoot, s"$s/sig")))
+      segs.map(segPath(_, "ids_bloom")), segs.map(segPath(_, "sig")))
   }
 
   /** Combined LSH band key (band || bkey) as one bloom-able string. */
@@ -141,62 +106,39 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
     */
   private def bandHitSegments(nb: DataFrame, segs: Seq[String]): Seq[Int] = {
     val bc = spark.sparkContext.broadcast(segs.map(s =>
-      BloomSidecars.read(fs, new Path(segRoot, s"$s/bands_bloom"))).toArray)
+      BloomSidecars.read(fs, segPath(s, "bands_bloom"))).toArray)
     nb.select(explode(BloomSidecars.stringHits(bc)(bandKey)).as("i"))
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
   }
 
-  /** Segment names the newest complete version is the union of. */
-  private def currentSegments(): Seq[String] = {
-    val v = version.getOrElse(
-      throw new java.util.NoSuchElementException(s"index at $indexDir never built"))
-    segmentsOf(v)
-  }
-
-  private def segmentsOf(v: Long): Seq[String] =
-    snaps.readTextFile(new Path(snaps.versionPath(v), "segments"))
-      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-
-  private def readTable(which: String): DataFrame = {
-    val paths = currentSegments().map(s => new Path(segRoot, s"$s/$which").toString)
-    spark.read.parquet(paths: _*)
-  }
-
-  /** Write the delta segment for version `v` (sig + cand parquet plus
-    * the two bloom sidecars — `ids_bloom` over the delta's doc_ids,
-    * `bands_bloom` over its LSH band keys, both delta-sized), then
-    * publish `v` as the previous segments plus it. Segment first,
-    * manifest+marker last — a crash in between leaves an orphan
-    * segment no version references.
+  /** Claim a version and write its delta segment (sig + cand parquet
+    * plus the two bloom sidecars — `ids_bloom` over the delta's
+    * doc_ids, `bands_bloom` over its LSH band keys, both delta-sized),
+    * then publish it as `prevSegments` plus the segment.
     *
     * `sig` must be materialized (checkpointed) by the caller: it is
     * consumed three times here (parquet write, two bloom builds).
     */
-  private def writeDelta(sig: DataFrame, cand: DataFrame, v: Long,
-      prevSegments: Seq[String], tag: Option[String]): Unit = {
-    val seg = s"s$v"
-    sig.write.mode("overwrite").parquet(new Path(segRoot, s"$seg/sig").toString)
-    cand.select(col("doc_a"), col("doc_b"))
-      .write.mode("overwrite").parquet(new Path(segRoot, s"$seg/cand").toString)
-    val n = sig.count()
-    BloomSidecars.write(fs, new Path(segRoot, s"$seg/ids_bloom"),
-      BloomSidecars.build(sig, "doc_id", n))
-    BloomSidecars.write(fs, new Path(segRoot, s"$seg/bands_bloom"),
-      BloomSidecars.build(
-        Dedup.bands(sig).select(bandKey.as("bk")), "bk", n * Dedup.BANDS))
-    snaps.publish(v) { v =>
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "segments"),
-        (prevSegments :+ seg).mkString("\n"))
-      tag.foreach(t =>
-        snaps.writeTextFile(new Path(snaps.versionPath(v), "tag"), t))
+  private def writeDelta(sig: DataFrame, cand: DataFrame,
+      prevSegments: Seq[String], tag: Option[String]): Long =
+    publishSegment(prevSegments, tag) { seg =>
+      sig.write.mode("overwrite").parquet(segPath(seg, "sig").toString)
+      cand.select(col("doc_a"), col("doc_b"))
+        .write.mode("overwrite").parquet(segPath(seg, "cand").toString)
+      val n = sig.count()
+      BloomSidecars.write(fs, segPath(seg, "ids_bloom"),
+        BloomSidecars.build(sig, "doc_id", n))
+      BloomSidecars.write(fs, segPath(seg, "bands_bloom"),
+        BloomSidecars.build(
+          Dedup.bands(sig).select(bandKey.as("bk")), "bk", n * Dedup.BANDS))
     }
-  }
 
-  /** Full build from a corpus (docs: doc_id, text) — initialization. */
-  def build(docs: DataFrame): Unit = {
+  /** Full build from a corpus (docs: doc_id, text) — initialization.
+    * Returns the published version.
+    */
+  def build(docs: DataFrame): Long = {
     val sig = Dedup.minhashes(docs).localCheckpoint()
-    writeDelta(sig, Dedup.candidates(sig), version.getOrElse(0L) + 1,
-      Seq.empty, None)
+    writeDelta(sig, Dedup.candidates(sig), Seq.empty, None)
   }
 
   /** Delta refresh for appended documents: shingle/minhash the NEW
@@ -217,8 +159,9 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
     *
     * @param tag optional journal tag published with the version (see
     *            [[tagOf]]) — the streaming crawl's replay detector
+    * @return the published version
     */
-  def append(newDocs: DataFrame, tag: Option[String] = None): Unit =
+  def append(newDocs: DataFrame, tag: Option[String] = None): Long =
     // first-writer-wins: drop re-ingested doc_ids before shingling
     appendFresh(newDocs.join(knownIds(newDocs.select(col("doc_id"))),
       Seq("doc_id"), "left_anti"), tag)
@@ -229,11 +172,8 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
     * doc_id and no duplicate doc_id, or segment disjointness breaks.
     */
   private[graft] def appendFresh(fresh: DataFrame,
-      tag: Option[String] = None): Unit = {
-    val v = version.getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"index at $indexDir never built — call build() first"))
-    val segs = segmentsOf(v)
+      tag: Option[String] = None): Long = {
+    val segs = segmentsOf(requireVersion())
     val newSig = Dedup.minhashes(fresh).localCheckpoint()
 
     // new-vs-all band collisions over the bloom-surviving segments
@@ -246,8 +186,7 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
     val hit = bandHitSegments(nb, segs)
     val oldRelevant =
       if (hit.isEmpty) newSig.limit(0)
-      else spark.read.parquet(
-        hit.map(i => new Path(segRoot, s"${segs(i)}/sig").toString): _*)
+      else readSegments(hit.map(segs), "sig")
     val ab = Dedup.bands(oldRelevant.unionByName(newSig))
       .select(col("doc_id").as("doc_o"), col("band").as("band_o"), col("bkey").as("bkey_o"))
     val newCand = nb.join(ab,
@@ -257,9 +196,9 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
         greatest(col("doc_n"), col("doc_o")).as("doc_b"))
       .distinct()
 
-    // delta fully computed from v<k> inputs before v<k+1> is written;
-    // the manifest+marker publish it atomically-enough
-    writeDelta(newSig, newCand, v + 1, segs, tag)
+    // delta fully computed from the base version's inputs before the
+    // new version is written; the manifest+marker publish it
+    writeDelta(newSig, newCand, segs, tag)
   }
 
   /** Merge the current version's segments into ONE and publish it as
@@ -281,32 +220,12 @@ final class MinHashIndex(spark: SparkSession, indexDir: String) {
     * @return the published compaction version
     */
   def compact(): Long = {
-    val v = version.getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"index at $indexDir never built — call build() first"))
+    requireVersion(): Unit
     // No pin (cf. writeDelta's materialization contract, which is for
     // COMPUTED deltas): signatures() is a parquet read over the old
     // segments, which stay on disk until a later vacuum() — the
     // multiple consumptions re-scan stable storage instead of holding
     // a full-store localCheckpoint copy alongside the rewrite.
-    writeDelta(signatures(), candidates(), v + 1, Seq.empty, Some("compaction"))
-    v + 1
-  }
-
-  /** Drop all but the newest `keepLast` complete index versions (the
-    * served one always retained) plus markerless crash leftovers, then
-    * delete every segment no retained complete version references
-    * (including orphans from a crash between segment write and
-    * publish). Returns the dropped versions.
-    */
-  def vacuum(keepLast: Int): Seq[Long] = {
-    val dropped = snaps.vacuum(keepLast)
-    val live = snaps.completeVersions.flatMap(segmentsOf).toSet
-    if (fs.exists(segRoot)) {
-      fs.listStatus(segRoot).map(_.getPath)
-        .filterNot(p => live.contains(p.getName))
-        .foreach(p => fs.delete(p, true))
-    }
-    dropped
+    writeDelta(signatures(), candidates(), Seq.empty, Some("compaction"))
   }
 }

@@ -3,17 +3,22 @@ package graft.graph
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.VersionedTableStore
+
 /** Persistent graph store with the reference's add/modify semantics
   * (client.c ops 1-2) re-expressed for a distributed file system.
   *
   * The reference serializes writers with a named semaphore per graph
   * file and counts readers in shared memory (primary_server.c:60,150,
-  * secondary_server.c:229-303). On Spark the equivalent consistency
-  * story is snapshot isolation via immutable versioned directories:
-  * each add/modify writes a fresh `v<k>` directory, then atomically
-  * publishes it by renaming a pointer file. Readers resolve the
-  * pointer once and then read an immutable snapshot — no locks, any
-  * number of concurrent readers, old snapshots stay valid mid-query.
+  * secondary_server.c:229-303). Here each graph name is one
+  * [[graft.util.VersionedTableStore]] at `<baseDir>/<name>`: every
+  * add/modify claims a fresh `v<k>` directory, writes the edges there
+  * as parquet, and the committer's `_SUCCESS` marks it complete.
+  * Readers serve the newest complete version: no locks, any number of
+  * concurrent readers, and old snapshots stay valid mid-query. The
+  * claim keeps writers in separate processes off each other's
+  * directories, and a per-name lock serializes this instance's own
+  * writers.
   */
 final class GraphStore(spark: SparkSession, baseDir: String) {
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -21,160 +26,35 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
   private def fs(p: Path) = p.getFileSystem(hadoopConf)
 
   private def graphDir(name: String) = new Path(baseDir, name)
-  private def currentPtr(name: String) = new Path(graphDir(name), "_CURRENT")
 
-  // One writer per graph name at a time (the reference's per-graph
-  // writer semaphore, primary_server.c:60,150): serializes the
-  // version-read/version-write pair so concurrent put() calls can't
-  // allocate the same version number. In-JVM scope matches the
-  // reference's single-primary-writer model.
+  private def snaps(name: String) =
+    new VersionedTableStore(spark, graphDir(name).toString, "_SUCCESS")
+
+  // One writer per graph name at a time within this instance (the
+  // reference's per-graph writer semaphore): put and vacuum of one
+  // name never interleave.
   private val writerLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def writerLock(name: String): Object =
     writerLocks.computeIfAbsent(name, _ => new Object)
 
-  /** Allocate the next snapshot version via an atomic exclusive-create
-    * claim marker — the piece the in-JVM writer lock cannot give: two
-    * store instances (two driver processes) racing put() must never
-    * write the same v<k> directory, or one silently clobbers the
-    * other's snapshot mid-write. Exclusive create is atomic on POSIX
-    * (java.nio createFile) and on HDFS/object-store semantics (Hadoop
-    * create(overwrite=false)); a lost race just bumps to the next
-    * number.
-    */
-  private def claimVersion(name: String): Long = {
-    val dir = graphDir(name)
-    val f = fs(dir)
-    // read the version BEFORE mkdirs: a fresh graph must look like
-    // "no dir" to currentVersion (immediate None), not "dir without
-    // pointer" (the non-file publish-in-flight retry path)
-    val base = currentVersion(name).getOrElse(0L)
-    f.mkdirs(dir)
-    val scheme = Option(f.getUri.getScheme).getOrElse("file")
-    var v = base + 1L
-    var claimed = false
-    while (!claimed) {
-      val claim = new Path(dir, s"_claim.v$v")
-      claimed =
-        if (scheme == "file") {
-          try {
-            java.nio.file.Files.createFile(java.nio.file.Paths.get(claim.toUri.getPath))
-            true
-          } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        } else {
-          try { f.create(claim, false).close(); true }
-          catch { case _: java.io.IOException => false }
-        }
-      if (!claimed) v += 1
-    }
-    v
-  }
+  // Read-your-writes: the version this instance last published per
+  // name. It counts while its claim file exists (a drop, from any
+  // instance, deletes the claim with the graph), so a listing that
+  // lags the write, or snapshot files deleted behind the store's back,
+  // never make the current version fall behind this instance's own
+  // writes.
+  private val published =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Store a graph's edge DataFrame under `name` (create or overwrite —
     * reference ops "add graph" and "modify graph" share this path).
     */
   def put(name: String, edges: DataFrame): Unit = writerLock(name).synchronized {
-    val dir = graphDir(name)
-    val f = fs(dir)
-    val version = claimVersion(name)
-    val target = new Path(dir, s"v$version")
-    edges.write.mode("overwrite").parquet(target.toString)
-    // A concurrent writer may have published a NEWER version while
-    // this snapshot was writing; last-writer-wins on the pointer would
-    // silently roll the store back, so leave the pointer alone when it
-    // is already ahead — this snapshot stays readable via time travel.
-    if (currentVersion(name).exists(_ > version)) return
-    publishPointer(name, version)
-    // The guard above is check-then-publish: a cross-process writer can
-    // publish a newer version BETWEEN the check and the rename, and the
-    // rename just rolled the pointer back to this (older) snapshot. The
-    // claim marker only prevents directory clobbering — pointer
-    // monotonicity needs this post-publish fix-up: re-read the pointer
-    // and re-publish the newest COMPLETE snapshot (its _SUCCESS marker
-    // exists, so the parquet commit finished) until the published
-    // version has caught up. Any writer that momentarily rolls the
-    // pointer back runs this same loop, so the store converges to the
-    // max published version rather than staying rolled back.
-    //
-    // Known crash window (best-effort by design): a process that dies
-    // BETWEEN its rollback rename and this fix-up loop leaves the
-    // pointer rolled back until the next put() — or until someone
-    // calls [[repair]], the reader-side hook for exactly that state.
-    // A CAS-capable pointer would close it atomically where the FS
-    // supports one; plain rename-over is the portable floor.
-    var published = currentVersion(name).getOrElse(version)
-    var newest = latestCompleteVersion(name).getOrElse(version)
-    while (published < newest) {
-      publishPointer(name, newest)
-      published = currentVersion(name).getOrElse(newest)
-      newest = latestCompleteVersion(name).getOrElse(newest)
-    }
-  }
-
-  /** Reader-side repair for the put() crash window above: if the
-    * pointer lags the newest COMPLETE snapshot (a writer died between
-    * its rollback rename and the fix-up loop), re-publish that
-    * snapshot. Returns the version the pointer resolves to afterwards.
-    *
-    * Explicitly opt-in rather than wired into read(): a normal put()
-    * in another process also shows a momentary pointer<newest state
-    * (parquet committed, pointer not yet renamed), and repairing then
-    * merely publishes the same version that writer is about to publish
-    * — harmless, the fix-up loop converges — but an automatic repair
-    * on every read would turn read-only consumers into writers (and
-    * fail on read-only mounts).
-    */
-  def repair(name: String): Option[Long] = writerLock(name).synchronized {
-    val newest = latestCompleteVersion(name)
-    newest.foreach { n =>
-      if (currentVersion(name).forall(_ < n)) publishPointer(name, n)
-    }
-    currentVersion(name)
-  }
-
-  /** Atomically point `name`'s `_CURRENT` at `v<version>`: write the
-    * pointer to a temp file, then rename over the live pointer with
-    * OVERWRITE semantics — no delete/rename window where readers see no
-    * pointer at all.
-    */
-  private def publishPointer(name: String, version: Long): Unit = {
-    val dir = graphDir(name)
-    val f = fs(dir)
-    // tmp name unique PER ATTEMPT, not per version: the fix-up loop can
-    // have two writers publishing the same newest version, and a shared
-    // tmp name lets one rename the other's file out from under it
-    val tmp = new Path(dir, s"_CURRENT.tmp$version.${java.util.UUID.randomUUID}")
-    val out = f.create(tmp, true)
-    out.write(s"v$version".getBytes("UTF-8"))
-    out.close()
-    val ptr = currentPtr(name)
-    val scheme = Option(f.getUri.getScheme).getOrElse("file")
-    if (scheme == "file") {
-      // POSIX rename() replaces the target atomically; Hadoop's local
-      // FileContext.rename(OVERWRITE) internally deletes then renames,
-      // which reopens the no-pointer window (caught by the
-      // concurrent-read spec)
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(ptr.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, hadoopConf)
-      fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
-
-  /** Newest version whose snapshot write COMMITTED (the `_SUCCESS`
-    * marker the parquet committer writes last is present) — a claimed
-    * version still being written never qualifies, so the publish
-    * fix-up can never point readers at a half-written directory.
-    */
-  private def latestCompleteVersion(name: String): Option[Long] = {
-    val f = fs(graphDir(name))
-    versions(name).reverse.find { v =>
-      f.exists(new Path(graphDir(name), s"v$v/_SUCCESS"))
-    }
+    val s = snaps(name)
+    val v = s.claim()
+    s.publish(v)(v => edges.write.mode("overwrite").parquet(s.tablePath(v, "").toString))
+    published.put(name, v): Unit
   }
 
   def add(name: String, edges: DataFrame): Unit = put(name, edges)
@@ -198,6 +78,7 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     * snapshot are unaffected mid-query on object stores).
     */
   def drop(name: String): Unit = {
+    published.remove(name)
     val dir = graphDir(name)
     val f = fs(dir)
     if (f.exists(dir)) f.delete(dir, true)
@@ -223,66 +104,33 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     spark.read.parquet(dir.toString)
   }
 
-  /** Drop all but the newest `keepLast` snapshot versions of `name`
-    * (the published current version is always retained, even if older
-    * than the newest `keepLast`). Returns the dropped versions.
+  /** Drop old snapshot versions of `name` by the store's vacuum rule:
+    * keep the newest `keepLast` complete versions, never a version
+    * another process is still writing above them. Returns the dropped
+    * versions.
     *
-    * Runs under the graph's writer lock so a concurrent put() can't
-    * publish while the keep set is computed — the newly-allocated
-    * version can never be vacuumed. Readers of retained snapshots are
-    * unaffected (snapshots are immutable and the vacuum never touches
-    * them); readers still scanning an already-vacuumed version keep
-    * their open file handles on POSIX but fail on re-scan — retention
-    * policy must exceed the longest query, same contract as any
-    * snapshot store.
+    * Runs under the graph's writer lock, so this instance's own put()
+    * is never in flight. Readers of retained snapshots are unaffected
+    * (snapshots are immutable and the vacuum never touches them);
+    * readers still scanning an already-vacuumed version keep their
+    * open file handles on POSIX but fail on re-scan — retention policy
+    * must exceed the longest query, same contract as any snapshot
+    * store.
     */
   def vacuum(name: String, keepLast: Int): Seq[Long] = writerLock(name).synchronized {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val vs = versions(name)
-    val keep = vs.takeRight(keepLast).toSet ++ currentVersion(name)
-    val dropped = vs.filterNot(keep)
-    val f = fs(graphDir(name))
-    dropped.foreach { v =>
-      f.delete(new Path(graphDir(name), s"v$v"), true)
-      // the claim marker is never reused (claims only move forward
-      // from the retained current version), so it can go too
-      f.delete(new Path(graphDir(name), s"_claim.v$v"), false)
-    }
-    dropped
+    snaps(name).vacuum(keepLast)
   }
 
   /** All retained snapshot versions of `name`, ascending. */
-  def versions(name: String): Seq[Long] = {
-    val dir = graphDir(name)
-    val f = fs(dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("v")).map(_.stripPrefix("v").toLong).toSeq.sorted
-  }
+  def versions(name: String): Seq[Long] = snaps(name).allVersions
 
+  /** The newest complete version of `name`, or this instance's own
+    * newer write (see `published`).
+    */
   def currentVersion(name: String): Option[Long] = {
-    val ptr = currentPtr(name)
-    val f = fs(ptr)
-    // belt-and-braces ONLY for stores whose overwrite-rename may not be
-    // atomic (object stores / non-file schemes): pointer momentarily
-    // absent + graph dir present could be a publish in flight there, so
-    // re-check briefly. On local file:// the publish rename IS atomic
-    // (ATOMIC_MOVE), so a missing pointer means a corrupted store —
-    // retrying would only add 25ms latency and mask the real error.
-    val maxAttempts = if (f.getScheme == "file") 1 else 5
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      if (f.exists(ptr)) {
-        val in = f.open(ptr)
-        val content = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        in.close()
-        return Some(content.stripPrefix("v").toLong)
-      }
-      if (!f.exists(graphDir(name))) return None
-      attempt += 1
-      Thread.sleep(5)
-    }
-    None
+    val s = snaps(name)
+    val mine = Option(published.get(name)).map(_.longValue).filter(s.isClaimed)
+    (s.version ++ mine).maxOption
   }
 
   def list(): Seq[String] = {

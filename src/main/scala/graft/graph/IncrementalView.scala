@@ -20,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * View snapshots are immutable parquet directories `v<k>` where k is
   * the GRAPH version the view reflects, so freshness is one version
   * compare and time-travel works for the view exactly as for the
-  * graph. Single-writer per view, like the store's per-graph writer
-  * model.
+  * graph. Single-writer per view: the view publishes at the graph
+  * version it reflects, not at a claimed one.
   */
 final class DistinctPairView(spark: SparkSession, store: GraphStore,
     graph: String, viewDir: String) {
@@ -74,11 +74,12 @@ final class DistinctPairView(spark: SparkSession, store: GraphStore,
   }
 
   /** Drop all but the newest `keepLast` complete view snapshots (the
-    * newest — the one read() serves — is always retained), plus any
-    * markerless crash leftovers older than it. Same retention contract
-    * as [[GraphStore.vacuum]]: single writer per view, so no snapshot
-    * write is in flight during a vacuum, and readers of retained
-    * snapshots are unaffected. Returns the dropped versions.
+    * newest — the one read() serves — is always retained), plus
+    * markerless crash leftovers: the [[graft.util.VersionedTableStore]]
+    * vacuum rule. A view publishes at the graph version it reflects and
+    * takes no claim, so it is single-writer: no snapshot write may be in
+    * flight during a vacuum. Readers of retained snapshots are
+    * unaffected. Returns the dropped versions.
     */
   def vacuum(keepLast: Int): Seq[Long] = snaps.vacuum(keepLast)
 }
@@ -225,11 +226,9 @@ final class DegreeView(spark: SparkSession, store: GraphStore,
     write(newK, newDeg, store.currentVersion(graph).get)
   }
 
-  /** Drop all but the newest `keepLast` complete view snapshots (the
-    * newest — the one read() serves — is always retained), plus any
-    * markerless crash leftovers. Same retention contract as
-    * [[GraphStore.vacuum]]: single writer per view, so no snapshot
-    * write is in flight during a vacuum. Returns the dropped versions.
+  /** Drop all but the newest `keepLast` complete view snapshots plus
+    * markerless crash leftovers — the [[DistinctPairView.vacuum]]
+    * contract. Returns the dropped versions.
     */
   def vacuum(keepLast: Int): Seq[Long] = snaps.vacuum(keepLast)
 }

@@ -173,11 +173,15 @@ object Scc {
     // leads to a node some earlier round already labeled or split away
     // — following it would break the FW-BW invariant)
     def reach(pivots: DataFrame, act: DataFrame): DataFrame = {
-      var visited = pivots
-        .select(col("part"), col("pivot").as("node"), explode(array(lit(1), lit(2))).as("d"))
-        .localCheckpoint()
-      var frontier = visited
-      var frontierN = 1L // pivots are nonempty whenever reach is called
+      // the seed's size comes from the same job that materializes it:
+      // empty pivots leave the loop before its first round
+      val (seed, seedN) = Traversals.checkpointWithCount(
+        pivots.select(col("part"), col("pivot").as("node"),
+          explode(array(lit(1), lit(2))).as("d")),
+        lit(true))
+      var visited = seed
+      var frontier = seed
+      var frontierN = seedN
       while (frontierN > 0) {
         val dirE = dirAll
         // checkpoint + frontier probe fused into one job (r17, the

@@ -57,9 +57,9 @@ import graft.functions.VectorFunctions.floatNorm
   * the layout: [[adcTopK]] serves the ANN shortlist reading only the
   * code store, the cell assignment, and the frozen model (a few KB);
   * per-query work is the 64-entry LUT plus the probed cells' codes.
-  * Versioning, crash behavior ([[compact]]/[[vacuum]], markerless
-  * dirs invisible, orphan segments swept), and single-writer-per-dir
-  * are the shared [[graft.util.VersionedTableStore]] contract.
+  * Versioning, crash behavior, [[compact]]/[[vacuum]] and
+  * single-writer-per-dir are the shared [[graft.util.SegmentedIndex]]
+  * lifecycle.
   *
   * Append==rebuild contract (PqIndexSpec): under the frozen model,
   * encoding is per-vector and deterministic ([[Kmeans.assign]] /
@@ -68,22 +68,9 @@ import graft.functions.VectorFunctions.floatNorm
   * all yield bit-identical cells/codes tables, and a replayed batch
   * appends the empty delta.
   */
-final class PqIndex(spark: SparkSession, indexDir: String) {
-  private val snaps = new graft.util.VersionedTableStore(spark, indexDir, "_INDEX_OK")
-  private def segRoot = new Path(snaps.dir, "seg")
+final class PqIndex(spark: SparkSession, indexDir: String)
+    extends graft.util.SegmentedIndex(spark, indexDir) {
   private def modelRoot = new Path(snaps.dir, "model")
-  private def fs = snaps.fs
-
-  /** Newest COMPLETE index version (manifest + marker), if any. */
-  def version: Option[Long] = snaps.version
-
-  private def requireVersion(): Long = version.getOrElse(
-    throw new java.util.NoSuchElementException(
-      s"index at $indexDir never built — call build() first"))
-
-  private def segmentsOf(v: Long): Seq[String] =
-    snaps.readTextFile(new Path(snaps.versionPath(v), "segments"))
-      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** The frozen coarse quantizer (cell, centroid). */
   def coarseCentroids(): DataFrame = {
@@ -99,14 +86,7 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
 
   /** The number of coarse cells k, from the pinned params manifest. */
   def coarseK: Int =
-    snaps.readTextFile(new Path(snaps.versionPath(requireVersion()), "params"))
-      .trim.split("\\s+")(0).toInt
-
-  private def readTable(which: String): DataFrame = {
-    val paths = segmentsOf(requireVersion())
-      .map(s => new Path(segRoot, s"$s/$which").toString)
-    spark.read.parquet(paths: _*)
-  }
+    readText(manifestFile("params")).split("\\s+")(0).toInt
 
   /** The coarse inverted-list assignment: (vec_id, cell). */
   def cells(): DataFrame = readTable("cells")
@@ -116,25 +96,7 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
     * path's re-emission set, the [[graft.text.WinnowIndex.idsAddedAt]]
     * contract).
     */
-  def cellsAddedAt(v: Long): DataFrame = {
-    require(snaps.completeVersions.contains(v), s"no complete version $v")
-    spark.read.parquet(new Path(segRoot, s"s$v/cells").toString)
-  }
-
-  /** The caller-supplied tag version `v` was published with — the
-    * streaming batch journal (the sibling indexes' replay contract).
-    */
-  def tagOf(v: Long): Option[String] = {
-    val p = new Path(snaps.versionPath(v), "tag")
-    if (fs.exists(p)) Some(snaps.readTextFile(p).trim) else None
-  }
-
-  /** Newest complete version carrying `tag` — scans all retained
-    * versions newest-first so an interleaved [[compact]] can't hide a
-    * crashed batch's journal entry.
-    */
-  def versionTagged(tag: String): Option[Long] =
-    snaps.completeVersions.sorted.reverse.find(tagOf(_).contains(tag))
+  def cellsAddedAt(v: Long): DataFrame = addedAt(v, "cells")
 
   /** The 4 B/vec code store: (vec_id, m, code). */
   def codes(): DataFrame = readTable("codes")
@@ -145,8 +107,7 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
   def knownIds(ids: DataFrame): DataFrame = {
     val segs = segmentsOf(requireVersion())
     graft.util.BloomSidecars.knownKeys(spark, ids, "vec_id", fs,
-      segs.map(s => new Path(segRoot, s"$s/ids_bloom")),
-      segs.map(s => new Path(segRoot, s"$s/cells")))
+      segs.map(segPath(_, "ids_bloom")), segs.map(segPath(_, "cells")))
   }
 
   private def withNorm(vecs: DataFrame): DataFrame =
@@ -187,39 +148,34 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
     (asg, codes, errLine)
   }
 
-  /** Write the delta segment (cells + codes parquet, the delta-sized
-    * id bloom, the err stats), then publish `v` — segment first,
+  /** Claim a version and write its delta segment (cells + codes
+    * parquet, the delta-sized id bloom, the err stats), then publish it
+    * with the coarse k in the manifest — segment first,
     * manifest+marker last, the shared crash contract.
     */
   private def writeDelta(cellsDf: DataFrame, codesDf: DataFrame,
-      errLine: String, v: Long, prevSegments: Seq[String], k: Int,
-      tag: Option[String] = None): Unit = {
-    val seg = s"s$v"
-    val cellsPath = new Path(segRoot, s"$seg/cells").toString
-    cellsDf.select(col("vec_id"), col("cell"))
-      .write.mode("overwrite").parquet(cellsPath)
-    codesDf.select(col("vec_id"), col("m"), col("code"))
-      .write.mode("overwrite").parquet(new Path(segRoot, s"$seg/codes").toString)
-    val wc = spark.read.parquet(cellsPath)
-    graft.util.BloomSidecars.write(fs, new Path(segRoot, s"$seg/ids_bloom"),
-      graft.util.BloomSidecars.build(wc, "vec_id", wc.count()))
-    snaps.writeTextFile(new Path(segRoot, s"$seg/err"), errLine)
-    snaps.publish(v) { v =>
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "segments"),
-        (prevSegments :+ seg).mkString("\n"))
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "params"), k.toString)
-      tag.foreach(t =>
-        snaps.writeTextFile(new Path(snaps.versionPath(v), "tag"), t))
+      errLine: String, prevSegments: Seq[String], k: Int,
+      tag: Option[String] = None): Long =
+    publishSegment(prevSegments, tag, Seq("params" -> k.toString)) { seg =>
+      val cellsPath = segPath(seg, "cells").toString
+      cellsDf.select(col("vec_id"), col("cell"))
+        .write.mode("overwrite").parquet(cellsPath)
+      codesDf.select(col("vec_id"), col("m"), col("code"))
+        .write.mode("overwrite").parquet(segPath(seg, "codes").toString)
+      val wc = spark.read.parquet(cellsPath)
+      graft.util.BloomSidecars.write(fs, segPath(seg, "ids_bloom"),
+        graft.util.BloomSidecars.build(wc, "vec_id", wc.count()))
+      snaps.writeTextFile(segPath(seg, "err"), errLine)
     }
-  }
 
   /** Train the model on `vecs` (vec_id, embedding) and encode them —
     * the once-per-index materialization that freezes the coarse
     * quantizer and the residual codebooks. `k`/`iters` default to the
     * registered s10/s12 parameters, so an index built over a corpus
-    * serves bit-exactly what the registered s12 computes on it.
+    * serves bit-exactly what the registered s12 computes on it. Returns
+    * the published version.
     */
-  def build(vecs: DataFrame, k: Int = 10, iters: Int = 3): Unit = {
+  def build(vecs: DataFrame, k: Int = 10, iters: Int = 3): Long = {
     val e = withNorm(vecs.dropDuplicates("vec_id")).persist()
     try {
       val cents = Kmeans.fit(e, k, iters)
@@ -237,17 +193,17 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
       val storedBooks = spark.read.parquet(new Path(modelRoot, "books").toString)
       val (cellsDf, codesDf, errLine) = encodeDelta(e, storedCents, storedBooks, k)
       snaps.writeTextFile(new Path(modelRoot, "err"), errLine)
-      writeDelta(cellsDf, codesDf, errLine,
-        version.getOrElse(0L) + 1, Seq.empty, k)
+      writeDelta(cellsDf, codesDf, errLine, Seq.empty, k)
     } finally { e.unpersist(): Unit }
   }
 
   /** Delta refresh: encode only the id-FRESH vectors of the batch
     * under the frozen model, write their codes as one segment.
     * First-writer-wins per vec_id; replaying an overlapping batch
-    * appends the empty delta — idempotent.
+    * appends the empty delta — idempotent. Returns the published
+    * version.
     */
-  def append(newVecs: DataFrame, tag: Option[String] = None): Unit = {
+  def append(newVecs: DataFrame, tag: Option[String] = None): Long = {
     val v = requireVersion()
     val k = coarseK
     val batch = newVecs.dropDuplicates("vec_id")
@@ -257,7 +213,7 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
     try {
       val (cellsDf, codesDf, errLine) =
         encodeDelta(fresh, coarseCentroids(), codebooks(), k)
-      writeDelta(cellsDf, codesDf, errLine, v + 1, segmentsOf(v), k, tag)
+      writeDelta(cellsDf, codesDf, errLine, segmentsOf(v), k, tag)
     } finally { fresh.unpersist(): Unit }
   }
 
@@ -271,11 +227,9 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
     * (compact sums the err stats), so the signal survives compaction.
     */
   def reconstructionDrift(): Double = {
-    val base = snaps.readTextFile(new Path(modelRoot, "err")).trim.split("\\s+")
+    val base = readText(new Path(modelRoot, "err")).split("\\s+")
     val baseMse = base(0).toDouble / math.max(base(1).toLong, 1L)
-    val pooled = segmentsOf(requireVersion())
-      .map(s => snaps.readTextFile(new Path(segRoot, s"$s/err")).trim.split("\\s+"))
-      .map(p => (BigDecimal(p(0)), p(1).toLong))
+    val pooled = errStats(segmentsOf(requireVersion()))
     val n = pooled.map(_._2).sum
     if (n == 0 || baseMse == 0.0) 1.0
     else (pooled.map(_._1).sum / n).toDouble / baseMse
@@ -344,26 +298,13 @@ final class PqIndex(spark: SparkSession, indexDir: String) {
     * by compaction. Old segments are retired by [[vacuum]].
     */
   def compact(): Long = {
-    val v = requireVersion()
-    val summed = segmentsOf(v)
-      .map(s => snaps.readTextFile(new Path(segRoot, s"$s/err")).trim.split("\\s+"))
-      .map(p => (BigDecimal(p(0)), p(1).toLong))
+    val summed = errStats(segmentsOf(requireVersion()))
     val errLine = s"${summed.map(_._1).sum} ${summed.map(_._2).sum}"
-    writeDelta(cells(), codes(), errLine, v + 1, Seq.empty, coarseK)
-    v + 1
+    writeDelta(cells(), codes(), errLine, Seq.empty, coarseK)
   }
 
-  /** Drop all but the newest `keepLast` complete versions plus
-    * markerless crash leftovers, then delete unreferenced segments.
-    */
-  def vacuum(keepLast: Int): Seq[Long] = {
-    val dropped = snaps.vacuum(keepLast)
-    val live = snaps.completeVersions.flatMap(segmentsOf).toSet
-    if (fs.exists(segRoot)) {
-      fs.listStatus(segRoot).map(_.getPath)
-        .filterNot(p => live.contains(p.getName))
-        .foreach(p => fs.delete(p, true))
-    }
-    dropped
-  }
+  /** Per-segment (summed squared error, row count) from `err` files. */
+  private def errStats(segs: Seq[String]): Seq[(BigDecimal, Long)] =
+    segs.map(s => readText(segPath(s, "err")).split("\\s+"))
+      .map(p => (BigDecimal(p(0)), p(1).toLong))
 }

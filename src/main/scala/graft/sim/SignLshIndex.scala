@@ -1,6 +1,5 @@
 package graft.sim
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,10 +48,9 @@ import graft.functions.VectorFunctions.floatNorm
   * contents are provably disjoint — appends are first-writer-wins per
   * vec_id (the delta is anti-joined against the stored vectors), so a
   * replayed or overlapping crawl batch is idempotent and a multi-path
-  * read needs no distinct. Versioning, crash behavior (markerless
-  * dirs invisible, orphan segments swept), and retention are the
-  * shared [[graft.util.VersionedTableStore]] contract. Single writer
-  * per index dir.
+  * read needs no distinct. Versioning, crash behavior and retention
+  * are the shared [[graft.util.SegmentedIndex]] lifecycle. Single
+  * writer per index dir.
   *
   * [[annGraph]] serves the top-3 ANN graph straight off the stored
   * tables: probe signatures derive from the STORED `tsig` by bit
@@ -63,13 +61,8 @@ import graft.functions.VectorFunctions.floatNorm
   * index size; chained appends yield the bit-exact graph a full
   * rebuild would (SignLshIndexSpec).
   */
-final class SignLshIndex(spark: SparkSession, indexDir: String) {
-  private val snaps = new graft.util.VersionedTableStore(spark, indexDir, "_INDEX_OK")
-  private def segRoot = new Path(snaps.dir, "seg")
-  private def fs = snaps.fs
-
-  /** Newest COMPLETE index version (manifest + marker), if any. */
-  def version: Option[Long] = snaps.version
+final class SignLshIndex(spark: SparkSession, indexDir: String)
+    extends graft.util.SegmentedIndex(spark, indexDir) {
 
   /** Segment-layout format this code writes: 2 = vec segments carry
     * the int8 quantized form (qv, qn2). Pre-quantization indexes (no
@@ -87,8 +80,8 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
     * [[compact]] is the upgrade path (backfill-quantize + restamp).
     */
   def formatVersion: Int = {
-    val p = new Path(snaps.versionPath(requireVersion()), "format")
-    if (fs.exists(p)) snaps.readTextFile(p).trim.toInt else 1
+    val p = manifestFile("format")
+    if (fs.exists(p)) readText(p).toInt else 1
   }
 
   private def requireFormat(what: String): Unit = {
@@ -101,9 +94,7 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
 
   /** The pinned (bits, tables) family, fixed at [[build]]. */
   def params: (Int, Int) = {
-    val v = requireVersion()
-    val parts = snaps.readTextFile(new Path(snaps.versionPath(v), "params"))
-      .trim.split("\\s+")
+    val parts = readText(manifestFile("params")).split("\\s+")
     (parts(0).toInt, parts(1).toInt)
   }
 
@@ -112,20 +103,6 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
 
   /** The signature index: (vec_id, tsig). */
   def signatures(): DataFrame = readTable("sig")
-
-  private def requireVersion(): Long = version.getOrElse(
-    throw new java.util.NoSuchElementException(
-      s"index at $indexDir never built — call build() first"))
-
-  private def segmentsOf(v: Long): Seq[String] =
-    snaps.readTextFile(new Path(snaps.versionPath(v), "segments"))
-      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-
-  private def readTable(which: String): DataFrame = {
-    val paths = segmentsOf(requireVersion())
-      .map(s => new Path(segRoot, s"$s/$which").toString)
-    spark.read.parquet(paths: _*)
-  }
 
   private def withNorm(vecs: DataFrame): DataFrame = {
     import graft.functions.Int8Functions.{int8NormSq, int8Quantize}
@@ -155,37 +132,29 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
   def knownIds(ids: DataFrame): DataFrame = {
     val segs = segmentsOf(requireVersion())
     graft.util.BloomSidecars.knownKeys(spark, ids, "vec_id", fs,
-      segs.map(s => new Path(segRoot, s"$s/ids_bloom")),
-      segs.map(s => new Path(segRoot, s"$s/vec")))
+      segs.map(segPath(_, "ids_bloom")), segs.map(segPath(_, "vec")))
   }
 
-  /** Write the delta segment for version `v` (vec + sig parquet plus
-    * the delta-sized vec_id bloom sidecar), then publish `v` as the
-    * previous segments plus it (segment first, manifest+marker last —
-    * a crash in between leaves an orphan segment no version
-    * references, which [[vacuum]] sweeps).
+  /** Claim a version and write its delta segment (vec + sig parquet
+    * plus the delta-sized vec_id bloom sidecar), then publish it as the
+    * previous segments plus it, with the pinned family and the segment
+    * format in the manifest.
     */
-  private def writeDelta(vec: DataFrame, sig: DataFrame, v: Long,
-      prevSegments: Seq[String], paramsLine: String): Unit = {
-    val seg = s"s$v"
-    vec.write.mode("overwrite").parquet(new Path(segRoot, s"$seg/vec").toString)
-    sig.write.mode("overwrite").parquet(new Path(segRoot, s"$seg/sig").toString)
-    graft.util.BloomSidecars.write(fs, new Path(segRoot, s"$seg/ids_bloom"),
-      graft.util.BloomSidecars.build(vec, "vec_id", vec.count()))
-    snaps.publish(v) { v =>
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "segments"),
-        (prevSegments :+ seg).mkString("\n"))
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "params"), paramsLine)
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "format"),
-        CurrentFormat.toString)
+  private def writeDelta(vec: DataFrame, sig: DataFrame,
+      prevSegments: Seq[String], paramsLine: String): Long =
+    publishSegment(prevSegments,
+        extra = Seq("params" -> paramsLine, "format" -> CurrentFormat.toString)) { seg =>
+      vec.write.mode("overwrite").parquet(segPath(seg, "vec").toString)
+      sig.write.mode("overwrite").parquet(segPath(seg, "sig").toString)
+      graft.util.BloomSidecars.write(fs, segPath(seg, "ids_bloom"),
+        graft.util.BloomSidecars.build(vec, "vec_id", vec.count()))
     }
-  }
 
   /** Full build from a corpus (vecs: vec_id, embedding) —
     * initialization; calibrates and pins the family from this corpus'
-    * size.
+    * size. Returns the published version.
     */
-  def build(vecs: DataFrame): Unit = {
+  def build(vecs: DataFrame): Long = {
     val e = withNorm(vecs).persist()
     try {
       // shared family resolution: the measured-anchor map below
@@ -193,8 +162,7 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
       // map has no anchor for must not be pinned to the capped
       // (16, 192) family for its whole index lifetime
       val (bits, tables) = Similarity.annParamsFor(e, e.count())
-      writeDelta(e, sigOf(e, bits, tables), version.getOrElse(0L) + 1,
-        Seq.empty, s"$bits $tables")
+      writeDelta(e, sigOf(e, bits, tables), Seq.empty, s"$bits $tables")
     } finally e.unpersist()
   }
 
@@ -204,9 +172,9 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
     * First-writer-wins per vec_id (membership via the bloom-pruned
     * [[knownIds]], not a store-lifetime id scan): re-ingested ids keep
     * their original vector and signatures, so replaying an overlapping
-    * batch is idempotent.
+    * batch is idempotent. Returns the published version.
     */
-  def append(newVecs: DataFrame): Unit = {
+  def append(newVecs: DataFrame): Long = {
     val v = requireVersion()
     // an append carries the old segments forward into the new manifest,
     // so appending format-2 deltas onto format-1 segments is exactly the
@@ -223,8 +191,8 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
     val fresh = withNorm(batch
       .join(knownIds(batch.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
       .persist()
-    try writeDelta(fresh, sigOf(fresh, bits, tables), v + 1,
-      segmentsOf(v), s"$bits $tables")
+    try writeDelta(fresh, sigOf(fresh, bits, tables), segmentsOf(v),
+      s"$bits $tables")
     finally fresh.unpersist()
   }
 
@@ -239,7 +207,6 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
     * @return the published compaction version
     */
   def compact(): Long = {
-    val v = requireVersion()
     val (bits, tables) = params
     // No pin: vectors()/signatures() are plain parquet reads over the
     // old segments, which stay on disk until a LATER vacuum() retires
@@ -261,8 +228,7 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
           .withColumn("qv", int8Quantize(col("embedding")))
           .withColumn("qn2", int8NormSq(col("qv")))
       }
-    writeDelta(vec, signatures(), v + 1, Seq.empty, s"$bits $tables")
-    v + 1
+    writeDelta(vec, signatures(), Seq.empty, s"$bits $tables")
   }
 
   /** Per-bucket occupancy n / 2^bits of the CURRENT corpus against the
@@ -330,21 +296,5 @@ final class SignLshIndex(spark: SparkSession, indexDir: String) {
           col("tsig").bitwiseAND(lit(low)).bitwiseXOR(col("m"))).as("tsig"))
     Similarity.candidatePairsCanonical(probes,
       sig.select(col("vec_id").as("neighbor_id"), col("tsig")))
-  }
-
-  /** Drop all but the newest `keepLast` complete index versions (the
-    * served one always retained) plus markerless crash leftovers, then
-    * delete every segment no retained complete version references.
-    * Returns the dropped versions.
-    */
-  def vacuum(keepLast: Int): Seq[Long] = {
-    val dropped = snaps.vacuum(keepLast)
-    val live = snaps.completeVersions.flatMap(segmentsOf).toSet
-    if (fs.exists(segRoot)) {
-      fs.listStatus(segRoot).map(_.getPath)
-        .filterNot(p => live.contains(p.getName))
-        .foreach(p => fs.delete(p, true))
-    }
-    dropped
   }
 }

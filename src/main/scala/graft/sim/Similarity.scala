@@ -618,12 +618,20 @@ object Similarity {
         col("nrm").as("nq"))
     val c = e.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ec"), col("nrm").as("nc"))
+    // rank the narrow (query_id, neighbor_id, cos) stream only: the
+    // window sorts every (query, corpus) pair, and carrying both
+    // embeddings into that sort spilled ~18 GB for a 67 MB corpus;
+    // the embeddings join back for the ~3 × 400 winners
     val pairs = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", floatDot(col("eq"), col("ec")) / (col("nq") * col("nc")))
+      .select(col("query_id"), col("neighbor_id"),
+        (floatDot(col("eq"), col("ec")) / (col("nq") * col("nc"))).as("cos"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    val top = pairs
+    val winners = pairs
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
+    val top = c.select(col("neighbor_id"), col("ec"))
+      .join(broadcast(winners), Seq("neighbor_id"))
+      .join(broadcast(q.select(col("query_id"), col("eq"))), Seq("query_id"))
 
     // per-pair retention over the family's first ProbeTables tables
     val groups = scaledDimGroups(bits, ProbeTables)

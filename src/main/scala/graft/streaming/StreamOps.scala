@@ -176,9 +176,7 @@ object StreamOps {
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) index.append(batch.toDF())
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          index.compact(): Unit
-        if (vacuumKeep > 0) index.vacuum(vacuumKeep): Unit
+        index.maintain(batchId, compactEvery, vacuumKeep)
       }
 
   /** [[indexMaintenance]] with a live CONSUMER: after every non-empty
@@ -219,10 +217,15 @@ object StreamOps {
           serve(if (compactEvery > 0 || vacuumKeep > 0)
             graph.localCheckpoint() else graph)
         }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          index.compact(): Unit
-        if (vacuumKeep > 0) index.vacuum(vacuumKeep): Unit
+        index.maintain(batchId, compactEvery, vacuumKeep)
       }
+
+  /** A journaled stream's replay needs its tagged version retained:
+    * vacuum off (0) or keeping at least 2 versions.
+    */
+  private def requireReplaySlack(vacuumKeep: Int): Unit =
+    require(vacuumKeep == 0 || vacuumKeep >= 2,
+      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
 
   /** Streaming decontamination against the HISTORICAL gram store —
     * the third incremental-index streaming driver ([[crawlDedup]]
@@ -253,15 +256,12 @@ object StreamOps {
   def decontamStream(docs: DataFrame, index: graft.dedup.GramIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
       sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    require(vacuumKeep == 0 || vacuumKeep >= 2,
-      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
+    requireReplaySlack(vacuumKeep)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) decontamBatch(index, batch.toDF(), batchId)(sink)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          index.compact(): Unit
-        if (vacuumKeep > 0) index.vacuum(vacuumKeep): Unit
+        index.maintain(batchId, compactEvery, vacuumKeep)
       }
   }
 
@@ -280,10 +280,8 @@ object StreamOps {
     val idRow = b.agg(count(lit(1)),
       bit_xor(xxhash64(col("doc_id"), col("text")))).head()
     val tag = s"decontam_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}"
-    val v = index.versionTagged(tag).getOrElse {
-      index.append(b.select(col("doc_id"), col("text")), Some(tag))
-      index.version.get
-    }
+    val v = index.versionTagged(tag).getOrElse(
+      index.append(b.select(col("doc_id"), col("text")), Some(tag)))
     // audit against the PRE-batch gram set — versioned, so a replay
     // (append journaled, sink never ran) recomputes identical rows
     val train = index.gramsBefore(v).withColumn("hit", lit(1L))
@@ -333,15 +331,12 @@ object StreamOps {
   def spanDedupStream(docs: DataFrame, index: graft.text.WinnowIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
       sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    require(vacuumKeep == 0 || vacuumKeep >= 2,
-      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
+    requireReplaySlack(vacuumKeep)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) spanDedupBatch(index, batch.toDF(), batchId)(sink)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          index.compact(): Unit
-        if (vacuumKeep > 0) index.vacuum(vacuumKeep): Unit
+        index.maintain(batchId, compactEvery, vacuumKeep)
       }
   }
 
@@ -373,8 +368,7 @@ object StreamOps {
         val f = index.freshDocs(b.select(col("doc_id"), col("text")))
           .localCheckpoint()
         val w = graft.text.TextOps.winnowWindows(f).localCheckpoint()
-        index.appendShingled(f, w, Some(tag))
-        (index.version.get, f, w)
+        (index.appendShingled(f, w, Some(tag)), f, w)
     }
     val batchCensus = wins.select(col("doc_id"), col("fp")).distinct()
       .groupBy(col("fp")).agg(count(lit(1)).as("bn"))
@@ -428,15 +422,12 @@ object StreamOps {
   def lmScoreStream(docs: DataFrame, index: graft.text.BigramLmIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
       sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    require(vacuumKeep == 0 || vacuumKeep >= 2,
-      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
+    requireReplaySlack(vacuumKeep)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) lmScoreBatch(index, batch.toDF(), batchId)(sink)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          index.compact(): Unit
-        if (vacuumKeep > 0) index.vacuum(vacuumKeep): Unit
+        index.maintain(batchId, compactEvery, vacuumKeep)
       }
   }
 
@@ -461,8 +452,7 @@ object StreamOps {
         val f = index.freshDocs(b.select(col("doc_id"), col("text")))
           .localCheckpoint()
         val g = graft.text.TextOps.bigramStream(f).localCheckpoint()
-        index.appendBigrams(f, g, Some(tag))
-        (index.version.get, g)
+        (index.appendBigrams(f, g, Some(tag)), g)
     }
     val c12 = index.censusAtFor(v, big.select(col("bigram")))
       .withColumnRenamed("c", "c12")
@@ -566,15 +556,12 @@ object StreamOps {
   def crawlDedup(docs: DataFrame, index: graft.dedup.MinHashIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
       sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    require(vacuumKeep == 0 || vacuumKeep >= 2,
-      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
+    requireReplaySlack(vacuumKeep)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) crawlDedupBatch(index, batch.toDF(), batchId)(sink)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          index.compact(): Unit
-        if (vacuumKeep > 0) index.vacuum(vacuumKeep): Unit
+        index.maintain(batchId, compactEvery, vacuumKeep)
       }
   }
 
@@ -609,15 +596,12 @@ object StreamOps {
   def pqIngestStream(vecs: DataFrame, index: graft.sim.PqIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
       sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    require(vacuumKeep == 0 || vacuumKeep >= 2,
-      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
+    requireReplaySlack(vacuumKeep)
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) pqIngestBatch(index, batch.toDF(), batchId)(sink)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          index.compact(): Unit
-        if (vacuumKeep > 0) index.vacuum(vacuumKeep): Unit
+        index.maintain(batchId, compactEvery, vacuumKeep)
       }
   }
 
@@ -631,10 +615,8 @@ object StreamOps {
     val idRow = b.agg(count(lit(1)),
       bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
     val tag = s"pqingest_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}"
-    val v = index.versionTagged(tag).getOrElse {
-      index.append(b.select(col("vec_id"), col("embedding")), Some(tag))
-      index.version.get
-    }
+    val v = index.versionTagged(tag).getOrElse(
+      index.append(b.select(col("vec_id"), col("embedding")), Some(tag)))
     sink(index.cellsAddedAt(v))
   }
 
@@ -778,8 +760,7 @@ object StreamOps {
       else {
         // appendFresh: the membership probe above is the trigger's one
         // — b is already id-deduped, so fresh meets its contract
-        index.appendFresh(fresh, Some(tag))
-        index.version
+        Some(index.appendFresh(fresh, Some(tag)))
       }
     }
     appendedV.foreach { v =>

@@ -1,10 +1,9 @@
 package graft.text
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.BloomSidecars
+import graft.util.{BloomSidecars, SegmentedIndex}
 
 /** Incrementally-maintained bigram language-model census — the SIXTH
   * member of the incremental-index family ([[graft.dedup.MinHashIndex]]:
@@ -50,32 +49,18 @@ import graft.util.BloomSidecars
   * (StreamingSpec exercises it through [[graft.streaming.StreamOps.lmScoreStream]]).
   *
   * Versioning, crash behavior, [[compact]]/[[vacuum]], and the tag
-  * journal are the shared [[graft.util.VersionedTableStore]] contract
-  * of the five sibling indexes. Single writer per index dir.
+  * journal are the shared [[graft.util.SegmentedIndex]] lifecycle of
+  * the five sibling indexes. Single writer per index dir.
   */
-final class BigramLmIndex(spark: SparkSession, indexDir: String) {
-  private val snaps = new graft.util.VersionedTableStore(spark, indexDir, "_INDEX_OK")
-  private def segRoot = new Path(snaps.dir, "seg")
-  private def fs = snaps.fs
-
-  /** Newest COMPLETE index version (manifest + marker), if any. */
-  def version: Option[Long] = snaps.version
-
-  private def requireVersion(): Long = version.getOrElse(
-    throw new java.util.NoSuchElementException(
-      s"index at $indexDir never built — call build() first"))
-
-  private def segmentsOf(v: Long): Seq[String] =
-    snaps.readTextFile(new Path(snaps.versionPath(v), "segments"))
-      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+final class BigramLmIndex(spark: SparkSession, indexDir: String)
+    extends SegmentedIndex(spark, indexDir) {
 
   private def emptyCounts(key: String): DataFrame =
     spark.range(0).select(col("id").cast("string").as(key), col("id").as("c"))
 
   private def countsOf(segs: Seq[String], table: String, key: String): DataFrame =
     if (segs.isEmpty) emptyCounts(key)
-    else spark.read
-      .parquet(segs.map(s => new Path(segRoot, s"$s/$table").toString): _*)
+    else readSegments(segs, table)
       .groupBy(col(key)).agg(sum(col("c")).as("c"))
 
   /** The corpus-lifetime bigram census: (bigram, c) summed over segments. */
@@ -94,7 +79,7 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String) {
     val segs = segmentsOf(v)
     if (segs.isEmpty) return emptyCounts(key)
     val bc = spark.sparkContext.broadcast(
-      segs.map(s => BloomSidecars.read(fs, new Path(segRoot, s"$s/${table}_bloom")))
+      segs.map(s => BloomSidecars.read(fs, segPath(s, s"${table}_bloom")))
         .toArray)
     val suspects = keys.select(col(key)).distinct()
       .withColumn("segi", BloomSidecars.stringHits(bc)(col(key)))
@@ -103,9 +88,7 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String) {
     val segIdx = suspects.select(explode(col("segi")).as("i"))
       .distinct().collect().map(_.getInt(0)).sorted
     if (segIdx.isEmpty) emptyCounts(key)
-    else spark.read
-      .parquet(segIdx.map(i => new Path(segRoot, s"${segs(i)}/$table").toString)
-        .toSeq: _*)
+    else readSegments(segIdx.toSeq.map(segs), table)
       .join(suspects.select(col(key)), Seq(key), "left_semi")
       .groupBy(col(key)).agg(sum(col("c")).as("c"))
   }
@@ -121,10 +104,7 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String) {
   /** The doc_ids first ingested at version `v` — the version's delta
     * segment, an O(batch) read (the replay path's fresh set).
     */
-  def idsAddedAt(v: Long): DataFrame = {
-    require(snaps.completeVersions.contains(v), s"no complete version $v")
-    spark.read.parquet(new Path(segRoot, s"s$v/docs").toString)
-  }
+  def idsAddedAt(v: Long): DataFrame = addedAt(v, "docs")
 
   /** The subset of `ids` ALREADY ingested — bloom-pruned, exact-
     * confirmed (first-writer-wins membership).
@@ -132,8 +112,7 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String) {
   def knownDocs(ids: DataFrame): DataFrame = {
     val segs = segmentsOf(requireVersion())
     BloomSidecars.knownKeys(spark, ids, "doc_id", fs,
-      segs.map(s => new Path(segRoot, s"$s/docs_bloom")),
-      segs.map(s => new Path(segRoot, s"$s/docs")))
+      segs.map(segPath(_, "docs_bloom")), segs.map(segPath(_, "docs")))
   }
 
   /** The id-FRESH subset of `newDocs` (duplicate ids collapsed, then
@@ -146,62 +125,49 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String) {
     b.join(knownDocs(b.select(col("doc_id"))), Seq("doc_id"), "left_anti")
   }
 
-  def tagOf(v: Long): Option[String] = {
-    val p = new Path(snaps.versionPath(v), "tag")
-    if (fs.exists(p)) Some(snaps.readTextFile(p).trim) else None
-  }
-
-  /** Newest complete version carrying `tag` — newest-first so an
-    * interleaved [[compact]] can't hide a crashed batch's journal.
+  /** Claim a version and write its delta segment (census + lefts +
+    * ids, blooms built from the written parquet so the delta plan
+    * evaluates once), then publish it — segment first, manifest+marker
+    * last, the crash contract.
     */
-  def versionTagged(tag: String): Option[Long] =
-    snaps.completeVersions.sorted.reverse.find(tagOf(_).contains(tag))
-
-  /** Write the delta segment (census + lefts + ids, blooms built from
-    * the written parquet so the delta plan evaluates once), publish
-    * `v` — segment first, manifest+marker last, the crash contract.
-    */
-  private def writeDelta(census: DataFrame, docIds: DataFrame, v: Long,
-      prevSegments: Seq[String], tag: Option[String] = None): Unit = {
-    val seg = s"s$v"
-    def writeBloomed(df: DataFrame, table: String, key: String): DataFrame = {
-      val p = new Path(segRoot, s"$seg/$table").toString
-      df.write.mode("overwrite").parquet(p)
-      val w = spark.read.parquet(p)
-      BloomSidecars.write(fs, new Path(segRoot, s"$seg/${table}_bloom"),
-        BloomSidecars.build(w, key, w.count()))
-      w
+  private def writeDelta(census: DataFrame, docIds: DataFrame,
+      prevSegments: Seq[String], tag: Option[String] = None): Long =
+    publishSegment(prevSegments, tag) { seg =>
+      def writeBloomed(df: DataFrame, table: String, key: String): DataFrame = {
+        val p = segPath(seg, table).toString
+        df.write.mode("overwrite").parquet(p)
+        val w = spark.read.parquet(p)
+        BloomSidecars.write(fs, segPath(seg, s"${table}_bloom"),
+          BloomSidecars.build(w, key, w.count()))
+        w
+      }
+      // lefts derive from the WRITTEN census parquet — stable storage, so
+      // the (possibly expensive) delta plan evaluates exactly once
+      val wc = writeBloomed(census.select(col("bigram"), col("c")), "census", "bigram")
+      writeBloomed(wc
+        .groupBy(expr("split_part(bigram, ' ', 1)").as("w1"))
+        .agg(sum(col("c")).as("c")), "lefts", "w1")
+      writeBloomed(docIds.select(col("doc_id")), "docs", "doc_id")
     }
-    // lefts derive from the WRITTEN census parquet — stable storage, so
-    // the (possibly expensive) delta plan evaluates exactly once
-    val wc = writeBloomed(census.select(col("bigram"), col("c")), "census", "bigram")
-    writeBloomed(wc
-      .groupBy(expr("split_part(bigram, ' ', 1)").as("w1"))
-      .agg(sum(col("c")).as("c")), "lefts", "w1")
-    writeBloomed(docIds.select(col("doc_id")), "docs", "doc_id")
-    snaps.publish(v) { v =>
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "segments"),
-        (prevSegments :+ seg).mkString("\n"))
-      tag.foreach(t =>
-        snaps.writeTextFile(new Path(snaps.versionPath(v), "tag"), t))
-    }
-  }
 
   private def censusFromBigrams(big: DataFrame): DataFrame =
     big.groupBy(col("bigram")).agg(count(lit(1)).as("c"))
 
-  /** Full build from a corpus (docs: doc_id, text). */
-  def build(docs: DataFrame): Unit = {
+  /** Full build from a corpus (docs: doc_id, text). Returns the
+    * published version.
+    */
+  def build(docs: DataFrame): Long = {
     val b = docs.dropDuplicates("doc_id").localCheckpoint()
     writeDelta(censusFromBigrams(TextOps.bigramStream(b)),
-      b.select(col("doc_id")), version.getOrElse(0L) + 1, Seq.empty)
+      b.select(col("doc_id")), Seq.empty)
   }
 
   /** Delta refresh: tokenize only the id-FRESH documents, append their
     * census delta + ids as one segment. A replayed batch appends the
-    * empty delta — no occurrence ever double-counts.
+    * empty delta — no occurrence ever double-counts. Returns the
+    * published version.
     */
-  def append(newDocs: DataFrame, tag: Option[String] = None): Unit = {
+  def append(newDocs: DataFrame, tag: Option[String] = None): Long = {
     val fresh = freshDocs(newDocs).localCheckpoint()
     appendBigrams(fresh, TextOps.bigramStream(fresh), tag)
   }
@@ -212,35 +178,13 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String) {
     * caller can only hand in mismatched streams, not a forged census).
     */
   private[graft] def appendBigrams(fresh: DataFrame, big: DataFrame,
-      tag: Option[String] = None): Unit = {
-    val v = requireVersion()
+      tag: Option[String] = None): Long =
     writeDelta(censusFromBigrams(big), fresh.select(col("doc_id")),
-      v + 1, segmentsOf(v), tag)
-  }
+      segmentsOf(requireVersion()), tag)
 
   /** Merge the current segments into ONE (pre-summed census + disjoint
     * id union) and publish as a new version.
     */
-  def compact(): Long = {
-    val v = requireVersion()
-    val segs = segmentsOf(v)
-    val ids = spark.read
-      .parquet(segs.map(s => new Path(segRoot, s"$s/docs").toString): _*)
-    writeDelta(census(), ids, v + 1, Seq.empty)
-    v + 1
-  }
-
-  /** Drop all but the newest `keepLast` complete versions plus
-    * markerless crash leftovers, then delete unreferenced segments.
-    */
-  def vacuum(keepLast: Int): Seq[Long] = {
-    val dropped = snaps.vacuum(keepLast)
-    val live = snaps.completeVersions.flatMap(segmentsOf).toSet
-    if (fs.exists(segRoot)) {
-      fs.listStatus(segRoot).map(_.getPath)
-        .filterNot(p => live.contains(p.getName))
-        .foreach(p => fs.delete(p, true))
-    }
-    dropped
-  }
+  def compact(): Long =
+    writeDelta(census(), readTable("docs"), Seq.empty)
 }

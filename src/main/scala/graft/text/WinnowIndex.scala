@@ -1,10 +1,9 @@
 package graft.text
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.BloomSidecars
+import graft.util.{BloomSidecars, SegmentedIndex}
 
 /** Incrementally-maintained duplicated-span census — the fourth member
   * of the incremental-index family ([[graft.dedup.MinHashIndex]]:
@@ -34,32 +33,18 @@ import graft.util.BloomSidecars
   * a corpus-lifetime column scan.
   *
   * Versioning, crash behavior, [[compact]]/[[vacuum]], and the tag
-  * journal are the shared [[graft.util.VersionedTableStore]] contract
-  * of the three sibling indexes. Single writer per index dir.
+  * journal are the shared [[graft.util.SegmentedIndex]] lifecycle of
+  * the three sibling indexes. Single writer per index dir.
   */
-final class WinnowIndex(spark: SparkSession, indexDir: String) {
-  private val snaps = new graft.util.VersionedTableStore(spark, indexDir, "_INDEX_OK")
-  private def segRoot = new Path(snaps.dir, "seg")
-  private def fs = snaps.fs
-
-  /** Newest COMPLETE index version (manifest + marker), if any. */
-  def version: Option[Long] = snaps.version
-
-  private def requireVersion(): Long = version.getOrElse(
-    throw new java.util.NoSuchElementException(
-      s"index at $indexDir never built — call build() first"))
-
-  private def segmentsOf(v: Long): Seq[String] =
-    snaps.readTextFile(new Path(snaps.versionPath(v), "segments"))
-      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+final class WinnowIndex(spark: SparkSession, indexDir: String)
+    extends SegmentedIndex(spark, indexDir) {
 
   private def emptyCensus(): DataFrame =
     spark.range(0).select(col("id").as("fp"), col("id").as("n_docs"))
 
   private def censusOf(segs: Seq[String]): DataFrame =
     if (segs.isEmpty) emptyCensus()
-    else spark.read
-      .parquet(segs.map(s => new Path(segRoot, s"$s/census").toString): _*)
+    else readSegments(segs, "census")
       .groupBy(col("fp")).agg(sum(col("n_docs")).as("n_docs"))
 
   /** The corpus-lifetime census: (fp, n_docs) summed over segments. */
@@ -83,7 +68,7 @@ final class WinnowIndex(spark: SparkSession, indexDir: String) {
     val segs = segmentsOf(v).filterNot(_ == s"s$v")
     if (segs.isEmpty) return emptyCensus()
     val bc = spark.sparkContext.broadcast(
-      segs.map(s => BloomSidecars.read(fs, new Path(segRoot, s"$s/census_bloom")))
+      segs.map(s => BloomSidecars.read(fs, segPath(s, "census_bloom")))
         .toArray)
     val suspects = fps.select(col("fp")).distinct()
       .withColumn("segi", BloomSidecars.longHits(bc)(col("fp")))
@@ -92,9 +77,7 @@ final class WinnowIndex(spark: SparkSession, indexDir: String) {
     val segIdx = suspects.select(explode(col("segi")).as("i"))
       .distinct().collect().map(_.getInt(0)).sorted
     if (segIdx.isEmpty) emptyCensus()
-    else spark.read
-      .parquet(segIdx.map(i => new Path(segRoot, s"${segs(i)}/census").toString)
-        .toSeq: _*)
+    else readSegments(segIdx.toSeq.map(segs), "census")
       .join(suspects.select(col("fp")), Seq("fp"), "left_semi")
       .groupBy(col("fp")).agg(sum(col("n_docs")).as("n_docs"))
   }
@@ -102,10 +85,7 @@ final class WinnowIndex(spark: SparkSession, indexDir: String) {
   /** The doc_ids first ingested at version `v` — the version's delta
     * segment, an O(batch) read (the replay path's fresh set).
     */
-  def idsAddedAt(v: Long): DataFrame = {
-    require(snaps.completeVersions.contains(v), s"no complete version $v")
-    spark.read.parquet(new Path(segRoot, s"s$v/docs").toString)
-  }
+  def idsAddedAt(v: Long): DataFrame = addedAt(v, "docs")
 
   /** The subset of `ids` (a doc_id column) ALREADY ingested —
     * bloom-pruned, exact-confirmed (first-writer-wins membership).
@@ -113,51 +93,29 @@ final class WinnowIndex(spark: SparkSession, indexDir: String) {
   def knownDocs(ids: DataFrame): DataFrame = {
     val segs = segmentsOf(requireVersion())
     BloomSidecars.knownKeys(spark, ids, "doc_id", fs,
-      segs.map(s => new Path(segRoot, s"$s/docs_bloom")),
-      segs.map(s => new Path(segRoot, s"$s/docs")))
+      segs.map(segPath(_, "docs_bloom")), segs.map(segPath(_, "docs")))
   }
 
-  /** The caller-supplied tag version `v` was published with — the
-    * streaming batch journal (the sibling indexes' replay contract).
+  /** Claim a version and write its delta segment (census + ids
+    * parquet, blooms built from the written files so the delta plan
+    * evaluates once), then publish it — segment first, manifest+marker
+    * last, the shared crash contract.
     */
-  def tagOf(v: Long): Option[String] = {
-    val p = new Path(snaps.versionPath(v), "tag")
-    if (fs.exists(p)) Some(snaps.readTextFile(p).trim) else None
-  }
-
-  /** Newest complete version carrying `tag` — scans all retained
-    * versions newest-first so an interleaved [[compact]] can't hide a
-    * crashed batch's journal entry.
-    */
-  def versionTagged(tag: String): Option[Long] =
-    snaps.completeVersions.sorted.reverse.find(tagOf(_).contains(tag))
-
-  /** Write the delta segment (census + ids parquet, blooms built from
-    * the written files so the delta plan evaluates once), then publish
-    * `v` — segment first, manifest+marker last, the shared crash
-    * contract.
-    */
-  private def writeDelta(census: DataFrame, docIds: DataFrame, v: Long,
-      prevSegments: Seq[String], tag: Option[String] = None): Unit = {
-    val seg = s"s$v"
-    val censusPath = new Path(segRoot, s"$seg/census").toString
-    census.select(col("fp"), col("n_docs"))
-      .write.mode("overwrite").parquet(censusPath)
-    val docsPath = new Path(segRoot, s"$seg/docs").toString
-    docIds.select(col("doc_id")).write.mode("overwrite").parquet(docsPath)
-    val wc = spark.read.parquet(censusPath)
-    BloomSidecars.write(fs, new Path(segRoot, s"$seg/census_bloom"),
-      BloomSidecars.build(wc, "fp", wc.count()))
-    val wd = spark.read.parquet(docsPath)
-    BloomSidecars.write(fs, new Path(segRoot, s"$seg/docs_bloom"),
-      BloomSidecars.build(wd, "doc_id", wd.count()))
-    snaps.publish(v) { v =>
-      snaps.writeTextFile(new Path(snaps.versionPath(v), "segments"),
-        (prevSegments :+ seg).mkString("\n"))
-      tag.foreach(t =>
-        snaps.writeTextFile(new Path(snaps.versionPath(v), "tag"), t))
+  private def writeDelta(census: DataFrame, docIds: DataFrame,
+      prevSegments: Seq[String], tag: Option[String] = None): Long =
+    publishSegment(prevSegments, tag) { seg =>
+      val censusPath = segPath(seg, "census").toString
+      census.select(col("fp"), col("n_docs"))
+        .write.mode("overwrite").parquet(censusPath)
+      val docsPath = segPath(seg, "docs").toString
+      docIds.select(col("doc_id")).write.mode("overwrite").parquet(docsPath)
+      val wc = spark.read.parquet(censusPath)
+      BloomSidecars.write(fs, segPath(seg, "census_bloom"),
+        BloomSidecars.build(wc, "fp", wc.count()))
+      val wd = spark.read.parquet(docsPath)
+      BloomSidecars.write(fs, segPath(seg, "docs_bloom"),
+        BloomSidecars.build(wd, "doc_id", wd.count()))
     }
-  }
 
   private def censusFrom(docs: DataFrame): DataFrame =
     censusFromWindows(TextOps.winnowWindows(docs))
@@ -168,20 +126,20 @@ final class WinnowIndex(spark: SparkSession, indexDir: String) {
 
   /** Full build from a corpus (docs: doc_id, text) — the once-per-
     * corpus materialization. Duplicate ids collapse first (one vote
-    * per document, the census invariant).
+    * per document, the census invariant). Returns the published
+    * version.
     */
-  def build(docs: DataFrame): Unit = {
+  def build(docs: DataFrame): Long = {
     val b = docs.dropDuplicates("doc_id").localCheckpoint()
-    writeDelta(censusFrom(b), b.select(col("doc_id")),
-      version.getOrElse(0L) + 1, Seq.empty)
+    writeDelta(censusFrom(b), b.select(col("doc_id")), Seq.empty)
   }
 
   /** Delta refresh: shingle only the id-FRESH documents of the batch,
     * write their census delta + ids as one segment. Replaying an
     * overlapping batch appends the empty delta — idempotent, and no
-    * document ever double-counts.
+    * document ever double-counts. Returns the published version.
     */
-  def append(newDocs: DataFrame, tag: Option[String] = None): Unit = {
+  def append(newDocs: DataFrame, tag: Option[String] = None): Long = {
     val fresh = freshDocs(newDocs).localCheckpoint()
     appendShingled(fresh, TextOps.winnowWindows(fresh), tag)
   }
@@ -207,37 +165,15 @@ final class WinnowIndex(spark: SparkSession, indexDir: String) {
     * document contract, only mismatched windows).
     */
   private[graft] def appendShingled(fresh: DataFrame, windows: DataFrame,
-      tag: Option[String] = None): Unit = {
-    val v = requireVersion()
+      tag: Option[String] = None): Long =
     writeDelta(censusFromWindows(windows), fresh.select(col("doc_id")),
-      v + 1, segmentsOf(v), tag)
-  }
+      segmentsOf(requireVersion()), tag)
 
   /** Merge the current segments into ONE (the pre-aggregated census +
     * the disjoint id union) and publish as a new version — the
     * amortized bound on per-append sidecar/footer reads, as in the
     * sibling indexes.
     */
-  def compact(): Long = {
-    val v = requireVersion()
-    val segs = segmentsOf(v)
-    val ids = spark.read
-      .parquet(segs.map(s => new Path(segRoot, s"$s/docs").toString): _*)
-    writeDelta(census(), ids, v + 1, Seq.empty)
-    v + 1
-  }
-
-  /** Drop all but the newest `keepLast` complete versions plus
-    * markerless crash leftovers, then delete unreferenced segments.
-    */
-  def vacuum(keepLast: Int): Seq[Long] = {
-    val dropped = snaps.vacuum(keepLast)
-    val live = snaps.completeVersions.flatMap(segmentsOf).toSet
-    if (fs.exists(segRoot)) {
-      fs.listStatus(segRoot).map(_.getPath)
-        .filterNot(p => live.contains(p.getName))
-        .foreach(p => fs.delete(p, true))
-    }
-    dropped
-  }
+  def compact(): Long =
+    writeDelta(census(), readTable("docs"), Seq.empty)
 }

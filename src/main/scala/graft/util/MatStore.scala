@@ -24,17 +24,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mtime), so ANY change to the source corpus resolves to a new
   * subdirectory and triggers a rebuild; parquet rewrites also rename
   * part files, so even same-size rewrites change the fingerprint. The
-  * publish is build-into-hidden-tmp + atomic directory rename (same
-  * pattern as GraphStore snapshots): racing JVMs can both build, but
-  * exactly one rename wins and the loser reads the winner's table.
+  * publish is build-into-hidden-tmp + atomic directory rename: racing
+  * JVMs can both build, but exactly one rename wins and the loser
+  * reads the winner's table.
   * Stale fingerprints are swept after a successful publish —
   * retention contract: don't run queries against a corpus while
   * overwriting that corpus.
   *
   * At 100 TB the same structure holds with two substitutions: the
   * fingerprint comes from the table format's snapshot id (e.g. a
-  * GraphStore version pointer) instead of a file walk, and the rename
-  * becomes the store's pointer publish.
+  * GraphStore snapshot version) instead of a file walk, and the rename
+  * becomes the store's versioned publish (claim, write, marker).
   */
 object MatStore {
   private def persistRoot: Option[String] =

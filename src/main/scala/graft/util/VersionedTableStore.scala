@@ -1,31 +1,58 @@
 package graft.util
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The versioned-snapshot machinery shared by every derived-table
-  * artifact in the engine — [[graft.graph.DistinctPairView]],
-  * [[graft.graph.DegreeView]], [[graft.dedup.MinHashIndex]] — which
-  * each previously hand-rolled (and had already let diverge once:
-  * `_SUCCESS` vs `_VIEW_OK` vs `_INDEX_OK`).
+/** The one snapshot protocol of every persistent artifact in the engine:
+  * [[graft.graph.GraphStore]] (one store per graph name), the graph
+  * views ([[graft.graph.DistinctPairView]], [[graft.graph.DegreeView]])
+  * and the six segment indexes ([[SegmentedIndex]]). It re-expresses
+  * the reference's consistency contract, one exclusive writer per graph
+  * and any number of concurrent readers (primary_server.c:60,150,
+  * secondary_server.c:229-303), as immutable versioned directories.
   *
-  * Layout contract (unchanged from the hand-rolled copies, so existing
-  * on-disk artifacts keep working):
+  *   - Layout. A snapshot is an immutable directory `baseDir/v<k>`;
+  *     its tables live at `v<k>/<table>`, and the table name `""`
+  *     means the snapshot directory itself is the single parquet table
+  *     (the GraphStore and DistinctPairView layout, where the parquet
+  *     committer's own `_SUCCESS` doubles as the marker).
+  *   - Claim. A writer that allocates its own version takes it with
+  *     [[claim]]: an exclusive create of `baseDir/_claim.v<k>`, for the
+  *     first free k above the newest complete version. Exclusive create
+  *     is atomic on POSIX and on Hadoop file systems, so two writers in
+  *     two processes never write the same `v<k>`; a lost race moves on
+  *     to the next k. (The graph views publish at the graph version
+  *     they reflect instead, and take no claim.)
+  *   - Marker. A snapshot counts once `v<k>/<marker>` exists, and
+  *     [[publish]] creates the marker only after every table committed.
+  *     A writer that crashes mid-publish leaves a markerless `v<k>`
+  *     that no read sees.
+  *   - Visibility. The newest complete version is the visible one.
+  *     [[version]] finds it with one directory listing, checking
+  *     markers from the newest version down and stopping at the first
+  *     hit, so a read does not grow with retained history. Versions
+  *     are claimed in increasing order and a complete version stays
+  *     complete until vacuumed, so the visible version only moves
+  *     forward: readers never go back to an older snapshot.
+  *   - Vacuum. [[vacuum]] keeps the newest `keepLast` complete
+  *     versions and drops the older complete ones. It drops a
+  *     markerless version when it holds no claim or is older than the
+  *     newest complete one, together with its claim file. A claimed,
+  *     markerless version newer than the newest complete one may still
+  *     be being written, and is kept.
   *
-  *   - a snapshot is an immutable directory `baseDir/v<k>`;
-  *   - a snapshot only COUNTS once `v<k>/<marker>` exists, and the
-  *     marker is created only after every table in the snapshot has
-  *     committed — a writer that crashes mid-publish leaves a
-  *     markerless `v<k>` that [[version]] and every read ignore, so
-  *     readers keep serving the previous snapshot;
-  *   - single writer per store dir (the GraphStore writer model);
-  *     readers of retained snapshots are never disturbed because a new
-  *     version means new files, never an in-place overwrite.
-  *
-  * Tables live at `v<k>/<table>`; the table name `""` means the
-  * snapshot directory itself is the (single) parquet table, the
-  * DistinctPairView layout where the parquet committer's own
-  * `_SUCCESS` doubles as the marker.
+  * Across processes this guarantees: readers never see a partial
+  * snapshot, and never see the visible version go backwards; two
+  * writers never share a version directory; a vacuum never deletes a
+  * version another writer is still writing above the newest complete
+  * one. What remains single-writer is the read-modify-write on top of
+  * the visible version: two segment-index appends that start from the
+  * same version both publish, under distinct versions, but the newer
+  * one does not contain the other's segment. Index appends, compactions
+  * and vacuums of one directory must therefore come from one writer at
+  * a time (GraphStore serializes its own writers per graph in-JVM).
+  * Readers of retained snapshots are never disturbed: a new version is
+  * new files, never an in-place overwrite.
   */
 final class VersionedTableStore(spark: SparkSession, baseDir: String,
     marker: String) {
@@ -33,21 +60,42 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
   def dir = new Path(baseDir)
   def fs = dir.getFileSystem(hadoopConf)
 
-  /** Every `v<k>` directory, markerless crash leftovers included. */
-  def allVersions: Seq[Long] = {
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("v")).map(_.stripPrefix("v").toLong).toSeq.sorted
+  private val VersionDir = "v(\\d+)".r
+  private val ClaimFile = "_claim\\.v(\\d+)".r
+
+  /** `v<k>` directories and `_claim.v<k>` files, from one listing. */
+  private def listing: (Seq[Long], Set[Long]) = {
+    val st = try fs.listStatus(dir)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    val dirs = st.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case VersionDir(k) => k.toLong }
+    val claims = st.filterNot(_.isDirectory).map(_.getPath.getName)
+      .collect { case ClaimFile(k) => k.toLong }
+    (dirs.toSeq.sorted, claims.toSet)
   }
 
+  /** Every `v<k>` directory, markerless crash leftovers included. */
+  def allVersions: Seq[Long] = listing._1
+
+  /** Every version with a directory or a claim file, ascending. */
+  def retainedVersions: Seq[Long] = {
+    val (dirs, claims) = listing
+    (dirs.toSet ++ claims).toSeq.sorted
+  }
+
+  def isComplete(v: Long): Boolean = fs.exists(new Path(versionPath(v), marker))
+
   /** Versions whose marker exists — the ones a reader may serve. */
-  def completeVersions: Seq[Long] =
-    allVersions.filter(v => fs.exists(new Path(dir, s"v$v/$marker")))
+  def completeVersions: Seq[Long] = allVersions.filter(isComplete)
 
   /** Newest COMPLETE snapshot version, if any. */
-  def version: Option[Long] = completeVersions.lastOption
+  def version: Option[Long] = allVersions.reverseIterator.find(isComplete)
 
   def versionPath(v: Long): Path = new Path(dir, s"v$v")
+
+  private def claimPath(v: Long): Path = new Path(dir, s"_claim.v$v")
+
+  def isClaimed(v: Long): Boolean = fs.exists(claimPath(v))
 
   def tablePath(v: Long, table: String): Path =
     if (table.isEmpty) versionPath(v) else new Path(versionPath(v), table)
@@ -61,36 +109,68 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
     spark.read.parquet(tablePath(v, table).toString)
   }
 
+  /** Take the next version for a new snapshot: exclusive-create
+    * `_claim.v<k>` for the first free k above the newest complete
+    * version. On `file://` the create is java.nio's atomic createFile;
+    * on other schemes Hadoop's create(overwrite = false).
+    */
+  def claim(): Long = {
+    val base = version.getOrElse(0L)
+    fs.mkdirs(dir)
+    val scheme = Option(fs.getUri.getScheme).getOrElse("file")
+    var v = base + 1L
+    var claimed = false
+    while (!claimed) {
+      val claim = claimPath(v)
+      claimed =
+        if (scheme == "file") {
+          try {
+            java.nio.file.Files.createFile(java.nio.file.Paths.get(claim.toUri.getPath))
+            true
+          } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        } else {
+          try { fs.create(claim, false).close(); true }
+          catch { case _: java.io.IOException => false }
+        }
+      if (!claimed) v += 1
+    }
+    v
+  }
+
   /** Publish snapshot `v`: run `write` (which must commit every table
     * under [[tablePath]](v, _)), then create the marker. If `write`
     * throws, no marker is created and the partial `v<k>` stays
-    * invisible. Creating the marker when the parquet committer already
-    * wrote it (the `""`-table `_SUCCESS` layout) truncates a
-    * zero-length file — a no-op.
+    * invisible. A marker the parquet committer already wrote (the
+    * `""`-table `_SUCCESS` layout) is left as it is.
     */
   def publish(v: Long)(write: Long => Unit): Unit = {
     write(v)
-    fs.create(new Path(versionPath(v), marker), true).close()
+    val m = new Path(versionPath(v), marker)
+    if (!fs.exists(m)) fs.create(m, false).close()
   }
 
-  /** Drop all but the newest `keepLast` complete snapshots (the served
-    * one always retained) plus markerless crash leftovers. Single
-    * writer per store, so no snapshot write is in flight during a
-    * vacuum. Returns the dropped versions.
+  /** Apply the vacuum rule (see the class doc) and return the dropped
+    * versions, ascending. A dropped version loses its directory and
+    * its claim file.
     */
   def vacuum(keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val all = allVersions
-    if (all.isEmpty) return Seq.empty
-    val keep = completeVersions.takeRight(keepLast).toSet
-    val dropped = all.filterNot(keep)
-    dropped.foreach(v => fs.delete(versionPath(v), true))
+    val (dirs, claims) = listing
+    val complete = dirs.filter(isComplete)
+    val newest = complete.lastOption.getOrElse(0L)
+    val keep = complete.takeRight(keepLast).toSet
+    val dropped = (dirs.toSet ++ claims).toSeq.sorted
+      .filterNot(v => keep(v) || (v > newest && claims(v)))
+    dropped.foreach { v =>
+      fs.delete(versionPath(v), true)
+      fs.delete(claimPath(v), false)
+    }
     dropped
   }
 
-  /** Write a small text file (e.g. a segment manifest) atomically
-    * enough for the single-writer model: content is fully written and
-    * the stream closed before the caller publishes a marker over it.
+  /** Write a small text file (e.g. a segment manifest): content is
+    * fully written and the stream closed before the caller publishes a
+    * marker over it.
     */
   def writeTextFile(p: Path, content: String): Unit = {
     val out = fs.create(p, true)

@@ -561,23 +561,4 @@ class GraphSpec extends AnyFunSuite {
     // grow with the invocation count
     g21Dirs().foreach(d => assert(versionDirs(d).size <= 6))
   }
-
-  test("GraphStore.repair re-publishes the newest complete snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("graphrepair").toString
-    val store = new GraphStore(spark, dir)
-    store.add("G", edgeDf((0, 1)))
-    store.modify("G", edgeDf((1, 2)))
-    assert(store.currentVersion("G").contains(2L))
-    // simulate a writer that died between its rollback rename and the
-    // fix-up loop: pointer rolled back to v1 while complete v2 exists
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/G/_CURRENT"), "v1".getBytes("UTF-8"))
-    assert(store.currentVersion("G").contains(1L))
-    assert(store.repair("G").contains(2L))
-    assert(store.currentVersion("G").contains(2L))
-    assert(store.read("G").collect().map(r => (r.getInt(0), r.getInt(1))).toSeq ==
-      Seq((1, 2)))
-    // repair on a healthy store is a no-op
-    assert(store.repair("G").contains(2L))
-  }
 }

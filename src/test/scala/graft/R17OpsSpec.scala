@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * independent recount) and the plan property the optimization exists
   * for, so a regression of either fails loudly.
   */
-class R17OpsSpec extends AnyFunSuite {
+class R17OpsSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
 
@@ -43,6 +44,20 @@ class R17OpsSpec extends AnyFunSuite {
     assert(reparts.size >= 2,
       s"expected the two pinned salt repartitions, found ${reparts.size}")
     assert(plan.toString.contains("pmod"), "salt projection missing")
+
+    // executed plan: the salted join's keys are plain column references
+    // of one type — a `cast(salt_b as bigint)` key would defeat the
+    // pinned repartition and add an exchange of the exploded side
+    val saltJoins = collect(d07.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == "salt")) => j
+    }
+    assert(saltJoins.size == 1, s"expected one salted join, found ${saltJoins.size}")
+    val keys = saltJoins.head.leftKeys ++ saltJoins.head.rightKeys
+    assert(keys.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute]),
+      s"salted join keys must carry no cast: $keys")
+    assert(saltJoins.head.leftKeys.map(_.dataType) == saltJoins.head.rightKeys.map(_.dataType),
+      s"salted join key types differ: $keys")
   }
 
   test("d18 emits both directions of each d04 candidate from ONE " +
