@@ -39,9 +39,9 @@ import org.apache.spark.sql.functions._
   * pivot sampling is THE practical form at scale). Each level is one
   * frontier ⋈ edges join + a map-side-combining σ-sum + an anti-join
   * (forward), or two keyed joins + a δ-sum (backward) — all
-  * hash-uniform on (pivot, node), nothing driver-sized (the loop
-  * probe is isEmpty; lineage checkpoint-truncated per level like
-  * g03/g26). At 100 TB: K grows as accuracy demands, not with |V|.
+  * hash-uniform on (pivot, node), nothing driver-sized (each level's
+  * size comes from the job that checkpoints it). At 100 TB: K grows
+  * as accuracy demands, not with |V|.
   */
 object Betweenness {
   /** Pivot budget: bc is summed over this many BFS sources. */
@@ -58,82 +58,82 @@ object Betweenness {
     // is the expensive prelude, so the symmetric edge list materializes
     // ONCE per (session, corpus) — the d04/d18 shared-table move; the
     // BFS machinery below re-reads a tiny parquet
-    // r16: the 16 forward/backward level joins all probe this table on
-    // src — partitioned once and resident for the query (previously
-    // each level re-read the parquet and re-exchanged/broadcast it)
-    val sym = Traversals.keyedResident(
-      graft.util.MatStore.table(s, s"prefsym:$dir", "graft_prefsym") {
-        val sel = Traversals.prefSel(s, dir)
-        val bi = sel.select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-        // bipartite parity (even ⊕ odd) means the two directions can
-        // never collide, so no distinct is needed on the symmetric view
-        bi.unionAll(bi.select(col("dst").as("src"), col("src").as("dst")))
-      }, "src")
-    val gnodes = sym.select(col("src").as("node")).distinct().localCheckpoint()
-    val pivots = Hash32.withH32(gnodes, "bw", col("node"))
-      .orderBy(col("h32"), col("node")).limit(PIVOTS)
-      .select(col("node").as("p")).localCheckpoint()
-
-    // forward: batched BFS — levels(d) = (p, node, sigma) for nodes
-    // first reached at hop d, sigma = exact shortest-path count
-    val levels = new Array[DataFrame](HOPS + 1)
-    levels(0) = pivots.select(col("p"), col("p").as("node"), lit(1L).as("sigma"))
-      .localCheckpoint()
-    // the graph is UNDIRECTED, so a neighbor of a level-(d-1) node sits
-    // at level d-2, d-1, or d: the first-visit anti-join only needs the
-    // previous TWO levels, not the whole visited set — the per-round
-    // exchange stays wavefront-sized instead of growing cumulatively
-    // (the values are identical; the oracle keeps the cumulative form)
-    var deepest = 0
-    var d = 0
-    var frontierN = if (levels(0).isEmpty) 0L else 1L
-    while (d < HOPS && frontierN > 0) {
-      d += 1
-      val seen =
-        if (d >= 2) levels(d - 1).select(col("p"), col("node"))
-          .unionAll(levels(d - 2).select(col("p"), col("node")))
-        else levels(d - 1).select(col("p"), col("node"))
-      // checkpoint + next-level emptiness probe fused into one job (r17)
-      val (nxt, n) = Traversals.checkpointWithCount(
-        levels(d - 1)
-          .join(sym, col("node") === col("src"))
-          .groupBy(col("p"), col("dst"))
-          .agg(sum(col("sigma")).as("sigma"))
-          .withColumnRenamed("dst", "node")
-          .join(seen, Seq("p", "node"), "left_anti"),
-        lit(true))
-      levels(d) = nxt
-      frontierN = n
-      deepest = d
+    // the 16 forward/backward level joins all probe this table on src:
+    // partitioned once and resident for the query
+    val symTable = graft.util.MatStore.table(s, s"prefsym:$dir", "graft_prefsym") {
+      val sel = Traversals.prefSel(s, dir)
+      val bi = sel.select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
+      // bipartite parity (even ⊕ odd) means the two directions can
+      // never collide, so no distinct is needed on the symmetric view
+      bi.unionAll(bi.select(col("dst").as("src"), col("src").as("dst")))
     }
+    val (gnodes, pivotN, deltas, deepest) = Fixpoint.resident(symTable, "src") { sym =>
+      val gnodes = sym.select(col("src").as("node")).distinct().localCheckpoint()
+      val pivots = Hash32.withH32(gnodes, "bw", col("node"))
+        .orderBy(col("h32"), col("node")).limit(PIVOTS)
+        .select(col("node").as("p")).localCheckpoint()
 
-    // backward: Brandes dependency accumulation in fixed point, level
-    // d reading only level d+1 (shortest-path DAG edges are strictly
-    // level-increasing)
-    val e = sym.select(col("src").as("esrc"), col("dst").as("edst"))
-    val deltas = new Array[DataFrame](deepest + 1)
-    deltas(deepest) = levels(deepest)
-      .select(col("p"), col("node"), col("sigma"), lit(0L).as("delta"))
-    var lvl = deepest
-    while (lvl > 0) {
-      lvl -= 1
-      val below = deltas(lvl + 1).select(col("p").as("bp"), col("node").as("bnode"),
-        col("sigma").as("bsigma"), col("delta").as("bdelta"))
-      deltas(lvl) = levels(lvl)
-        .join(e, col("node") === col("esrc"), "left")
-        .join(below,
-          col("bp") === col("p") && col("bnode") === col("edst"), "left")
-        .groupBy(col("p"), col("node"), col("sigma"))
-        .agg(coalesce(sum(expr(s"sigma * ($SCALE + bdelta) div bsigma")), lit(0L))
-          .as("delta"))
-        .localCheckpoint()
+      // forward: batched BFS — levels(d) = (p, node, sigma) for nodes
+      // first reached at hop d, sigma = exact shortest-path count; the
+      // pivot count comes from the job that materializes level 0
+      val levels = new Array[DataFrame](HOPS + 1)
+      val (level0, pivotN) = Fixpoint.checkpointWithCount(
+        pivots.select(col("p"), col("p").as("node"), lit(1L).as("sigma")), lit(true))
+      levels(0) = level0
+      // the graph is UNDIRECTED, so a neighbor of a level-(d-1) node sits
+      // at level d-2, d-1, or d: the first-visit anti-join only needs the
+      // previous TWO levels, not the whole visited set — the per-round
+      // exchange stays wavefront-sized instead of growing cumulatively
+      // (the values are identical; the oracle keeps the cumulative form)
+      var deepest = 0
+      var d = 0
+      var frontierN = pivotN
+      while (d < HOPS && frontierN > 0) {
+        d += 1
+        val seen =
+          if (d >= 2) levels(d - 1).select(col("p"), col("node"))
+            .unionAll(levels(d - 2).select(col("p"), col("node")))
+          else levels(d - 1).select(col("p"), col("node"))
+        val (nxt, n) = Fixpoint.checkpointWithCount(
+          levels(d - 1)
+            .join(sym, col("node") === col("src"))
+            .groupBy(col("p"), col("dst"))
+            .agg(sum(col("sigma")).as("sigma"))
+            .withColumnRenamed("dst", "node")
+            .join(seen, Seq("p", "node"), "left_anti"),
+          lit(true))
+        levels(d) = nxt
+        frontierN = n
+        deepest = d
+      }
+
+      // backward: Brandes dependency accumulation in fixed point, level
+      // d reading only level d+1 (shortest-path DAG edges are strictly
+      // level-increasing)
+      val e = sym.select(col("src").as("esrc"), col("dst").as("edst"))
+      val deltas = new Array[DataFrame](deepest + 1)
+      deltas(deepest) = levels(deepest)
+        .select(col("p"), col("node"), col("sigma"), lit(0L).as("delta"))
+      var lvl = deepest
+      while (lvl > 0) {
+        lvl -= 1
+        val below = deltas(lvl + 1).select(col("p").as("bp"), col("node").as("bnode"),
+          col("sigma").as("bsigma"), col("delta").as("bdelta"))
+        deltas(lvl) = levels(lvl)
+          .join(e, col("node") === col("esrc"), "left")
+          .join(below,
+            col("bp") === col("p") && col("bnode") === col("edst"), "left")
+          .groupBy(col("p"), col("node"), col("sigma"))
+          .agg(coalesce(sum(expr(s"sigma * ($SCALE + bdelta) div bsigma")), lit(0L))
+            .as("delta"))
+          .localCheckpoint()
+      }
+      (gnodes, pivotN, deltas, deepest)
     }
-
-    sym.unpersist(false)
     // bc excludes each pivot's own source row (level 0); a node never
     // reached by any pivot scores 0
     val n = gnodes.count().toDouble
-    val k = pivots.count().toDouble
+    val k = pivotN.toDouble
     val acc =
       if (deepest == 0) gnodes.limit(0)
         .select(col("node"), lit(0L).as("bc_fp0"))

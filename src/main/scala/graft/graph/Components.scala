@@ -30,47 +30,46 @@ object Components {
     */
   def labelPropagate(nodes: DataFrame, symEdges: DataFrame, maxIters: Int = 50,
       onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
-    // r16: the edge table is partitioned on the join key once and kept
-    // resident (Traversals.keyedResident — under AQE a localCheckpoint
+    // the edge table is partitioned on the join key once and kept
+    // resident (Fixpoint.resident — under AQE a localCheckpoint
     // loses its partitioning and every round re-shuffled the edges);
     // each round now exchanges only the label table (into the join,
     // then the min-combine). Join strategy per round is left to AQE
-    // (keyedResident's doc: a forced SHUFFLE_HASH measured 2.4x slower;
-    // the cached edge side is pre-sorted, so an SMJ round never
-    // re-sorts it).
-    val e = Traversals.keyedResident(symEdges.select(col("src"), col("dst")), "src")
-    var labels = nodes.select(col("node"), col("node").as("comp")).localCheckpoint()
-    var labelSum = Long.MaxValue
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      it += 1
-      val t0 = System.nanoTime()
-      val msgs = labels.join(e, labels("node") === e("src"))
-        .select(e("dst").as("node"), col("comp"))
-      // r17: LAZY checkpoint — the convergence aggregate right below
-      // computes every partition, so materialization rides the same
-      // job and each round pays one scheduler round-trip, not two
-      // (the Traversals.checkpointWithCount fusion, with the label-sum
-      // probe in place of a count)
-      val next = labels.select(col("node"), col("comp")).unionAll(msgs)
-        .groupBy(col("node")).agg(min(col("comp")).as("comp"))
-        .localCheckpoint(eager = false)
-      // r16 negative result, documented so it is not retried: a
-      // label(label(v)) pointer-doubling shortcut per round was
-      // measured on d17's diameter-21 near-dup graph at 21 → 17
-      // rounds for +1 join per round — NET SLOWER. Min-over-ball
-      // pointers do not align toward the component min (the ball's
-      // argmin id is positionally arbitrary), so composition buys no
-      // exponential reach without true SV hooking.
-      val nextSum = next.agg(sum(col("comp").cast("long"))).collect()(0).getLong(0)
-      converged = nextSum == labelSum
-      labelSum = nextSum
-      labels = next
-      onRound(it, (System.nanoTime() - t0) / 1e9)
+    // (a forced SHUFFLE_HASH measured 2.4x slower; the cached edge side
+    // is pre-sorted, so an SMJ round never re-sorts it).
+    Fixpoint.resident(symEdges.select(col("src"), col("dst")), "src") { e =>
+      var labels = nodes.select(col("node"), col("node").as("comp")).localCheckpoint()
+      var labelSum = Long.MaxValue
+      var converged = false
+      var it = 0
+      while (!converged && it < maxIters) {
+        it += 1
+        val t0 = System.nanoTime()
+        val msgs = labels.join(e, labels("node") === e("src"))
+          .select(e("dst").as("node"), col("comp"))
+        // LAZY checkpoint — the convergence aggregate right below
+        // computes every partition, so materialization rides the same
+        // job and each round pays one scheduler round-trip, not two
+        // (the Fixpoint.checkpointWithCount fusion, with the label-sum
+        // probe in place of a count)
+        val next = labels.select(col("node"), col("comp")).unionAll(msgs)
+          .groupBy(col("node")).agg(min(col("comp")).as("comp"))
+          .localCheckpoint(eager = false)
+        // r16 negative result, documented so it is not retried: a
+        // label(label(v)) pointer-doubling shortcut per round was
+        // measured on d17's diameter-21 near-dup graph at 21 → 17
+        // rounds for +1 join per round — NET SLOWER. Min-over-ball
+        // pointers do not align toward the component min (the ball's
+        // argmin id is positionally arbitrary), so composition buys no
+        // exponential reach without true SV hooking.
+        val nextSum = next.agg(sum(col("comp").cast("long"))).collect()(0).getLong(0)
+        converged = nextSum == labelSum
+        labelSum = nextSum
+        labels = next
+        onRound(it, (System.nanoTime() - t0) / 1e9)
+      }
+      labels
     }
-    e.unpersist(false)
-    labels
   }
 
   /** Connected components of the undirected trade graph. */
@@ -239,8 +238,7 @@ object Components {
     // recomputes the inner peel once per reference (3 refs: two degree
     // aggs + the semi-join source) and was measured slower; see
     // labelPropagate's note
-    // r17: checkpoint + initial count fused into one job
-    var (p, nPairs) = Traversals.checkpointWithCount(
+    var (p, nPairs) = Fixpoint.checkpointWithCount(
       pairs.select(col("cust"), col("supp")).distinct(), lit(true))
     var changed = true
     while (changed) {
@@ -248,8 +246,7 @@ object Components {
         .filter(col("d") >= k).select(col("cust"))
       val keepS = p.groupBy(col("supp")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("supp"))
-      // r17: checkpoint + fixpoint count fused into one job
-      val (np, n) = Traversals.checkpointWithCount(
+      val (np, n) = Fixpoint.checkpointWithCount(
         p.join(keepC, Seq("cust"), "left_semi")
           .join(keepS, Seq("supp"), "left_semi"),
         lit(true))
@@ -475,43 +472,42 @@ object Components {
     */
   private[graft] def lpaCommunities(nodes: DataFrame, symW: DataFrame,
       rounds: Int): DataFrame = {
-    // r16: the weighted edge list is partitioned on its JOIN key (dst)
+    // the weighted edge list is partitioned on its JOIN key (dst)
     // once and kept resident — the per-round side filter preserves the
     // partitioning, so each round exchanges only the label table.
-    val e = Traversals.keyedResident(
-      symW.select(col("src"), col("dst"), col("w")), "dst")
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-      .localCheckpoint()
-    for (r <- 1 to rounds) {
-      // the color class this round updates: odd rounds the even
-      // (customer) nodes, even rounds the odd (supplier) nodes
-      val side = if (r % 2 == 1) 0L else 1L
-      // Only the updating side's winners survive the merge below,
-      // so tally only edges whose src is on that side — halves the
-      // join probe and both aggregates each round.
-      val tally = e
-        .where(col("src") % 2 === lit(side))
-        .join(labels.select(col("node").as("dst"), col("lbl")), Seq("dst"))
-        .groupBy(col("src").as("node"), col("lbl"))
-        .agg(sum(col("w")).as("sw"))
-      // r16: one union + min-combine replaces the separate winner
-      // aggregate plus the left-join merge (two exchanges + a join
-      // per round → one): carried labels ride with pri=1 and tallies
-      // with pri=0, so an updating-side node takes its best tally
-      // (largest weight, then smallest label — the same
-      // min(struct(-sw, lbl)) argmax) and every other node keeps its
-      // label (it has no tally rows: the side filter above).
-      labels = labels
-        .select(col("node"), lit(1).as("pri"), lit(0L).as("negw"), col("lbl"))
-        .unionAll(tally.select(col("node"), lit(0).as("pri"),
-          (lit(0L) - col("sw")).as("negw"), col("lbl")))
-        .groupBy(col("node"))
-        .agg(min(struct(col("pri"), col("negw"), col("lbl"))).as("b"))
-        .select(col("node"), col("b.lbl").as("lbl"))
+    Fixpoint.resident(symW.select(col("src"), col("dst"), col("w")), "dst") { e =>
+      var labels = nodes.select(col("node"), col("node").as("lbl"))
         .localCheckpoint()
+      for (r <- 1 to rounds) {
+        // the color class this round updates: odd rounds the even
+        // (customer) nodes, even rounds the odd (supplier) nodes
+        val side = if (r % 2 == 1) 0L else 1L
+        // Only the updating side's winners survive the merge below,
+        // so tally only edges whose src is on that side — halves the
+        // join probe and both aggregates each round.
+        val tally = e
+          .where(col("src") % 2 === lit(side))
+          .join(labels.select(col("node").as("dst"), col("lbl")), Seq("dst"))
+          .groupBy(col("src").as("node"), col("lbl"))
+          .agg(sum(col("w")).as("sw"))
+        // r16: one union + min-combine replaces the separate winner
+        // aggregate plus the left-join merge (two exchanges + a join
+        // per round → one): carried labels ride with pri=1 and tallies
+        // with pri=0, so an updating-side node takes its best tally
+        // (largest weight, then smallest label — the same
+        // min(struct(-sw, lbl)) argmax) and every other node keeps its
+        // label (it has no tally rows: the side filter above).
+        labels = labels
+          .select(col("node"), lit(1).as("pri"), lit(0L).as("negw"), col("lbl"))
+          .unionAll(tally.select(col("node"), lit(0).as("pri"),
+            (lit(0L) - col("sw")).as("negw"), col("lbl")))
+          .groupBy(col("node"))
+          .agg(min(struct(col("pri"), col("negw"), col("lbl"))).as("b"))
+          .select(col("node"), col("b.lbl").as("lbl"))
+          .localCheckpoint()
+      }
+      labels
     }
-    e.unpersist(false)
-    labels
   }
 
   /** g27: LPA communities of the weighted PREFERRED-PARTNER bipartite

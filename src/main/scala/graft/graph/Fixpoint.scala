@@ -1,0 +1,133 @@
+package graft.graph
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions._
+
+/** The round every data-dependent graph loop shares, written once.
+  *
+  * A graph loop is Pregel-shaped (GraphX builds the same pattern as one
+  * operator over dataflow joins): a state table, a frontier of rows the
+  * last round changed, one `frontier ⋈ edges` expansion per round, and
+  * a probe that decides whether another round is needed. The three
+  * pieces here own the decisions those loops used to restate by hand:
+  *   - [[checkpointWithCount]]: truncate the round's lineage and answer
+  *     its continue-probe in ONE Spark job;
+  *   - [[resident]]: the edge table partitioned on the round's join key
+  *     once, cached for the loop's lifetime and released however the
+  *     loop ends;
+  *   - [[frontier]]: the tagged round — the state carries the round a
+  *     row last changed in a tag column, so the next frontier is
+  *     exactly `tag === round` and its size comes from the same job
+  *     that materializes the state.
+  * Loops whose round shape differs (fixed-iteration PageRank/LPA, the
+  * lazy-union FW-BW reach, pointer-doubling walks) use the first two
+  * and keep their own loop bodies.
+  */
+object Fixpoint {
+
+  /** Checkpoint `df` and count its rows matching `pred` in ONE Spark
+    * job. The checkpoint is LAZY; the counting action computes every
+    * partition of the checkpointed RDD, so materialization rides the
+    * same job that answers the loop's continue-probe — one scheduler
+    * round-trip per round instead of an eager-checkpoint job plus an
+    * isEmpty/convergence job (on a cluster, one barrier per round
+    * fewer: the iterative family's true scale cost). Semantics equal
+    * the eager form: localCheckpoint(eager = false) returns the same
+    * LogicalRDD-backed frame, and the count's full-partition pass is
+    * exactly the materialization the eager form runs internally.
+    */
+  private[graft] def checkpointWithCount(df: DataFrame, pred: Column): (DataFrame, Long) = {
+    val ck = df.localCheckpoint(eager = false)
+    // RDD-level count, NOT Dataset.count(): the SQL count plans a
+    // partial-agg + single-partition exchange, which AQE materializes
+    // as its own extra job — toRdd.count() sums per-partition counts
+    // on the driver in exactly ONE job with no exchange. It runs under
+    // its own SQL execution id like any Dataset action, so listeners
+    // and the UI attribute the job to a query.
+    val probe = ck.filter(pred).queryExecution
+    (ck, SQLExecution.withNewExecutionId(probe, Some("checkpointWithCount"))(
+      probe.toRdd.count()))
+  }
+
+  /** Run `body` over `df` partitioned by `key` and cached, then release
+    * the cache — also when `body` throws or its job is cancelled.
+    * Everything `body` returns must be checkpointed (the loop states
+    * are), so nothing downstream re-reads the released table.
+    */
+  private[graft] def resident[T](df: DataFrame, key: String)(body: DataFrame => T): T = {
+    val e = keyedResident(df, key)
+    try body(e) finally e.unpersist(blocking = false)
+  }
+
+  /** Iterate the tagged round from `seed` until a round changes no row
+    * or `maxRounds` rounds ran. Round `r` calls `step(state, frontier,
+    * r)` for the merged next state — rows the round changed carry `r`
+    * in column `tag` — and that state's checkpoint and its `tag === r`
+    * count are one job. The seed is checkpointed and counted the same
+    * way, so an empty seed runs no round. Returns the final
+    * (checkpointed) state and the number of rounds run, the last,
+    * empty-frontier one included.
+    */
+  private[graft] def frontier(seed: DataFrame, tag: String, maxRounds: Int = Int.MaxValue)(
+      step: (DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Int) = {
+    var (state, changed) = checkpointWithCount(seed, lit(true))
+    var front = state
+    var round = 0
+    while (changed > 0 && round < maxRounds) {
+      round += 1
+      val (next, n) = checkpointWithCount(step(state, front, round), col(tag) === round)
+      state = next
+      changed = n
+      front = state.filter(col(tag) === round)
+    }
+    (state, round)
+  }
+
+  private val scopes = new java.util.concurrent.atomic.AtomicLong
+
+  /** The edge table of one [[resident]] scope. Two measured choices:
+    *   - `persist`, not `localCheckpoint`: under AQE a checkpoint's
+    *     LogicalRDD reports UnknownPartitioning (every round's join
+    *     re-exchanged the WHOLE edge table) and loses its size
+    *     statistics (every per-round broadcast of the edge side was
+    *     demoted to a shuffled join: g29 +26% wall, +0.35M shuffled
+    *     rows); a cached plan keeps both, since AQE may not change a
+    *     cached plan's output partitioning;
+    *   - size-adaptive, the same runtime-statistics decision AQE makes
+    *     for joins: a table under the broadcast threshold is cached
+    *     as-is and re-broadcast per round (repartitioning it measured
+    *     +0.1-0.3 s per query on the 25-node nation spine); a larger one
+    *     is partitioned on `key` into the session's shuffle-partition
+    *     count, so each round exchanges only the frontier.
+    * Returning the frame uncached is no good either: derivations that
+    * contain an exchange (PageRank's distinct) would re-run every round
+    * (g09/g16 shuffle rows 1.2k → 7.4k).
+    *
+    * Spark's cache manager keys entries by logical plan and does not
+    * count references, so a cache of the caller's plan would be shared
+    * with any caller holding an equal one (concurrent reads of one
+    * stored graph version build identical plans), and whichever scope
+    * ends first would evict the others' table. The cached plan is
+    * therefore made unique to this scope by an always-true filter on
+    * the scope's own number; the optimizer drops the filter, so the
+    * cached data and its plan are the caller's.
+    */
+  private def keyedResident(df: DataFrame, key: String): DataFrame = {
+    val sess = df.sparkSession
+    val scope = lit(scopes.incrementAndGet())
+    val own = df.where(scope === scope)
+    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = sess.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold > 0 && estBytes <= threshold) return own.persist()
+    // also sorted within partitions: the cached plan's outputOrdering
+    // survives (like its partitioning), so a sort-merge round join at
+    // the wavefront peak never re-sorts the edge side; one sort at
+    // cache build, not one per round. Join strategy per round is left
+    // to AQE: small frontiers convert to broadcast at runtime (the
+    // measured local winner — a forced SHUFFLE_HASH was 2.4x slower),
+    // big frontiers stay sort-merge against the pre-sorted cache.
+    own.repartition(graft.util.Par.shufflePartitions(sess), col(key))
+      .sortWithinPartitions(key).persist()
+  }
+}

@@ -24,64 +24,62 @@ object PageRank {
   private val D = 0.85
 
   def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    // r16 iteration shape: the edge table is partitioned on the join
-    // key once and kept resident (Traversals.keyedResident), and the
-    // out-degree column RIDES IN THE ITERATED STATE instead of being
-    // re-joined every round — one union + merge aggregation per
+    // The edge table is partitioned on the join key once and kept
+    // resident (Fixpoint.resident), and the out-degree column RIDES IN
+    // THE ITERATED STATE instead of being re-joined every round — one union + merge aggregation per
     // iteration (contribution rows carry a null outdeg, state rows a
     // null contribution; max/sum ignore nulls) replaces the old
     // ranks⋈outDeg join + contribution aggregate + nodes⋈contribs
     // join. The decimal contribution sum is unchanged addend-for-
     // addend, so ranks stay bit-identical to the unrolled oracle.
-    val e = Traversals.keyedResident(
-      edges.select(col("src"), col("dst")).distinct(), "src")
-    val n = nodes.count().toDouble
-    val dec = DecimalType(28, 15)
-    var state = nodes.join(
-        e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        (lit(1.0) / lit(n)).as("rank"))
-      .localCheckpoint()
-    // With no dangling nodes the redistribution term is identically
-    // +0.0 (bit-neutral on non-negative ranks), so skip its per-
-    // iteration aggregate+broadcast entirely — one upfront check
-    // instead of 10 broadcast jobs.
-    val hasDangling = !state.filter(col("outdeg") === 0).isEmpty
-    for (_ <- 1 to iters) {
-      val carried = state.select(col("node"), col("outdeg"),
-        lit(null).cast(dec).as("c"))
-      val contribs = state.filter(col("outdeg") > 0)
-        .join(e, col("node") === e("src"))
-        .select(e("dst").as("node"), lit(null).cast("long").as("outdeg"),
-          (col("rank") / col("outdeg")).cast(dec).as("c"))
-      // Confine the merged state to nodes of `nodes`: an edge dst
-      // absent from `nodes` has only contribution rows (null outdeg),
-      // so max(outdeg) is null exactly for unknown endpoints — without
-      // the filter they would leak into the iterated state and the
-      // final output with undefined rank semantics (r16 ADVICE). For
-      // edges ⊆ nodes (every registered caller) this drops no row.
-      val merged = carried.unionAll(contribs)
-        .groupBy(col("node"))
-        .agg(max(col("outdeg")).as("outdeg"),
-          sum(col("c")).cast("double").as("s"))
-        .filter(col("outdeg").isNotNull)
-      val next =
-        if (hasDangling) {
-          val dangling = state.filter(col("outdeg") === 0)
-            .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
-          merged.crossJoin(broadcast(dangling))
-            .select(col("node"), col("outdeg"),
-              (lit(0.15) / lit(n) +
-                lit(D) * (coalesce(col("s"), lit(0.0)) + col("dm") / lit(n))).as("rank"))
-        } else {
-          merged.select(col("node"), col("outdeg"),
-            (lit(0.15) / lit(n) + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
-        }
-      state = next.localCheckpoint()
+    Fixpoint.resident(edges.select(col("src"), col("dst")).distinct(), "src") { e =>
+      val n = nodes.count().toDouble
+      val dec = DecimalType(28, 15)
+      var state = nodes.join(
+          e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
+          Seq("node"), "left")
+        .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
+          (lit(1.0) / lit(n)).as("rank"))
+        .localCheckpoint()
+      // With no dangling nodes the redistribution term is identically
+      // +0.0 (bit-neutral on non-negative ranks), so skip its per-
+      // iteration aggregate+broadcast entirely — one upfront check
+      // instead of 10 broadcast jobs.
+      val hasDangling = !state.filter(col("outdeg") === 0).isEmpty
+      for (_ <- 1 to iters) {
+        val carried = state.select(col("node"), col("outdeg"),
+          lit(null).cast(dec).as("c"))
+        val contribs = state.filter(col("outdeg") > 0)
+          .join(e, col("node") === e("src"))
+          .select(e("dst").as("node"), lit(null).cast("long").as("outdeg"),
+            (col("rank") / col("outdeg")).cast(dec).as("c"))
+        // Confine the merged state to nodes of `nodes`: an edge dst
+        // absent from `nodes` has only contribution rows (null outdeg),
+        // so max(outdeg) is null exactly for unknown endpoints — without
+        // the filter they would leak into the iterated state and the
+        // final output with undefined rank semantics (r16 ADVICE). For
+        // edges ⊆ nodes (every registered caller) this drops no row.
+        val merged = carried.unionAll(contribs)
+          .groupBy(col("node"))
+          .agg(max(col("outdeg")).as("outdeg"),
+            sum(col("c")).cast("double").as("s"))
+          .filter(col("outdeg").isNotNull)
+        val next =
+          if (hasDangling) {
+            val dangling = state.filter(col("outdeg") === 0)
+              .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
+            merged.crossJoin(broadcast(dangling))
+              .select(col("node"), col("outdeg"),
+                (lit(0.15) / lit(n) +
+                  lit(D) * (coalesce(col("s"), lit(0.0)) + col("dm") / lit(n))).as("rank"))
+          } else {
+            merged.select(col("node"), col("outdeg"),
+              (lit(0.15) / lit(n) + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
+          }
+        state = next.localCheckpoint()
+      }
+      state.select(col("node"), col("rank"))
     }
-    e.unpersist(false)
-    state.select(col("node"), col("rank"))
   }
 
   private def g09(s: SparkSession, dir: String): DataFrame =
@@ -95,49 +93,48 @@ object PageRank {
     */
   def runPersonalized(nodes: DataFrame, edges: DataFrame, source: Int,
       iters: Int): DataFrame = {
-    // r16 iteration shape — see [[run]]; teleport/dangling terms are
+    // iteration shape of [[run]]; teleport/dangling terms are
     // the personalized (source-concentrated) variants, expression-
     // identical to the previous per-iteration plan.
-    val e = Traversals.keyedResident(
-      edges.select(col("src"), col("dst")).distinct(), "src")
-    val dec = DecimalType(28, 15)
-    var state = nodes.join(
-        e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        when(col("node") === source, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-      .localCheckpoint()
-    val hasDangling = !state.filter(col("outdeg") === 0).isEmpty
-    for (_ <- 1 to iters) {
-      val carried = state.select(col("node"), col("outdeg"),
-        lit(null).cast(dec).as("c"))
-      val contribs = state.filter(col("outdeg") > 0)
-        .join(e, col("node") === e("src"))
-        .select(e("dst").as("node"), lit(null).cast("long").as("outdeg"),
-          (col("rank") / col("outdeg")).cast(dec).as("c"))
-      // same unknown-endpoint confinement as [[run]] (r16 ADVICE)
-      val merged = carried.unionAll(contribs)
-        .groupBy(col("node"))
-        .agg(max(col("outdeg")).as("outdeg"),
-          sum(col("c")).cast("double").as("s"))
-        .filter(col("outdeg").isNotNull)
-      val teleport = when(col("node") === source, lit(0.15)).otherwise(lit(0.0))
-      val next =
-        if (hasDangling) {
-          val dangling = state.filter(col("outdeg") === 0)
-            .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
-          merged.crossJoin(broadcast(dangling))
-            .select(col("node"), col("outdeg"),
-              (teleport + lit(D) * (coalesce(col("s"), lit(0.0)) +
-                when(col("node") === source, col("dm")).otherwise(lit(0.0)))).as("rank"))
-        } else {
-          merged.select(col("node"), col("outdeg"),
-            (teleport + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
-        }
-      state = next.localCheckpoint()
+    Fixpoint.resident(edges.select(col("src"), col("dst")).distinct(), "src") { e =>
+      val dec = DecimalType(28, 15)
+      var state = nodes.join(
+          e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
+          Seq("node"), "left")
+        .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
+          when(col("node") === source, lit(1.0)).otherwise(lit(0.0)).as("rank"))
+        .localCheckpoint()
+      val hasDangling = !state.filter(col("outdeg") === 0).isEmpty
+      for (_ <- 1 to iters) {
+        val carried = state.select(col("node"), col("outdeg"),
+          lit(null).cast(dec).as("c"))
+        val contribs = state.filter(col("outdeg") > 0)
+          .join(e, col("node") === e("src"))
+          .select(e("dst").as("node"), lit(null).cast("long").as("outdeg"),
+            (col("rank") / col("outdeg")).cast(dec).as("c"))
+        // same unknown-endpoint confinement as [[run]] (r16 ADVICE)
+        val merged = carried.unionAll(contribs)
+          .groupBy(col("node"))
+          .agg(max(col("outdeg")).as("outdeg"),
+            sum(col("c")).cast("double").as("s"))
+          .filter(col("outdeg").isNotNull)
+        val teleport = when(col("node") === source, lit(0.15)).otherwise(lit(0.0))
+        val next =
+          if (hasDangling) {
+            val dangling = state.filter(col("outdeg") === 0)
+              .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
+            merged.crossJoin(broadcast(dangling))
+              .select(col("node"), col("outdeg"),
+                (teleport + lit(D) * (coalesce(col("s"), lit(0.0)) +
+                  when(col("node") === source, col("dm")).otherwise(lit(0.0)))).as("rank"))
+          } else {
+            merged.select(col("node"), col("outdeg"),
+              (teleport + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
+          }
+        state = next.localCheckpoint()
+      }
+      state.select(col("node"), col("rank"))
     }
-    e.unpersist(false)
-    state.select(col("node"), col("rank"))
   }
 
   private def g16(s: SparkSession, dir: String): DataFrame =

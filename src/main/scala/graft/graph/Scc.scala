@@ -164,6 +164,7 @@ object Scc {
     // contracted chain nodes awaiting endpoint labels: (node, head, tail)
     var chainAcc = active.select(col("node"), col("node").as("head"), col("node").as("tail"))
       .filter(lit(false)).toDF("node", "head", "tail").localCheckpoint()
+    var chainAccN = 0L
     var anyChains = false
     lastPeelPasses = 0; lastDoublingRounds = 0; lastPivotRounds = 0
 
@@ -175,7 +176,7 @@ object Scc {
     def reach(pivots: DataFrame, act: DataFrame): DataFrame = {
       // the seed's size comes from the same job that materializes it:
       // empty pivots leave the loop before its first round
-      val (seed, seedN) = Traversals.checkpointWithCount(
+      val (seed, seedN) = Fixpoint.checkpointWithCount(
         pivots.select(col("part"), col("pivot").as("node"),
           explode(array(lit(1), lit(2))).as("d")),
         lit(true))
@@ -184,9 +185,7 @@ object Scc {
       var frontierN = seedN
       while (frontierN > 0) {
         val dirE = dirAll
-        // checkpoint + frontier probe fused into one job (r17, the
-        // Traversals.checkpointWithCount move)
-        val (next, n) = Traversals.checkpointWithCount(
+        val (next, n) = Fixpoint.checkpointWithCount(
           frontier.join(dirE,
               frontier("node") === dirE("src") && frontier("d") === dirE("d"))
             .select(frontier("part"), dirE("dst").as("node"), frontier("d")).distinct()
@@ -232,8 +231,7 @@ object Scc {
           .localCheckpoint()
         // -- trim: peel sources/sinks (and edgeless nodes, which have
         // no flags row) as singleton SCCs
-        // r17: checkpoint + survivor count fused into one job
-        val (kept, keptCount) = Traversals.checkpointWithCount(
+        val (kept, keptCount) = Fixpoint.checkpointWithCount(
           active.join(
             flags.filter(col("outd") > 0 && col("ind") > 0).select(col("part"), col("node")),
             Seq("part", "node"), "left_semi"),
@@ -260,8 +258,7 @@ object Scc {
         // the contraction still collapses it on the FIRST pass and the
         // O(log n) worst-case cap is unchanged (SccSpec pins it).
         if (trimmedCount * 20L < preTrim) {
-        // r17: checkpoint + emptiness probe + size all in one job
-        val (intr, nInt) = Traversals.checkpointWithCount(
+        val (intr, nInt) = Fixpoint.checkpointWithCount(
           flags.filter(col("ind") === 1 && col("outd") === 1 &&
               col("succ") =!= col("node"))
             .select(col("node"), col("succ"), col("pred"))
@@ -318,13 +315,16 @@ object Scc {
             .select(col("node"), col("nh").as("head"), col("nt").as("tail"))
             .toDF("node", "head", "tail").localCheckpoint()
           labeled = labeled.unionAll(cyc)
-          chainAcc = chainAcc.unionAll(chains)
-            .toDF("node", "head", "tail").localCheckpoint()
+          // checkpoint + size fused into one job: the size is the
+          // chain-resolution loop's seed count
+          val (acc, accN) = Fixpoint.checkpointWithCount(
+            chainAcc.unionAll(chains).toDF("node", "head", "tail"), lit(true))
+          chainAcc = acc
+          chainAccN = accN
           extraE = extraE.unionAll(
               chains.select(col("head").as("src"), col("tail").as("dst")).distinct())
             .distinct().toDF("src", "dst").localCheckpoint()
-          // r17: checkpoint + live count fused into one job
-          val (act2, act2N) = Traversals.checkpointWithCount(
+          val (act2, act2N) = Fixpoint.checkpointWithCount(
             active.join(isIntr, Seq("node"), "left_anti").toDF("node", "part"),
             lit(true))
           active = act2
@@ -348,8 +348,7 @@ object Scc {
         // three-way split of the unlabeled remainder; scc ⊆ fw ∩ bw, so
         // a remainder node is in at most ONE of fw/bw and the branch
         // code is well-defined
-        // r17: checkpoint + live count fused into one job
-        val (act3, act3N) = Traversals.checkpointWithCount(
+        val (act3, act3N) = Fixpoint.checkpointWithCount(
           active.join(scc, Seq("part", "node"), "left_anti")
             .join(fw.withColumn("in_fw", lit(1)), Seq("part", "node"), "left")
             .join(bw.withColumn("in_bw", lit(1)), Seq("part", "node"), "left")
@@ -372,7 +371,7 @@ object Scc {
       // endpoints' own resolution; strict pass-order dependency
       // guarantees progress)
       var pending = chainAcc
-      var pendingN = if (pending.isEmpty) 0L else 1L
+      var pendingN = chainAccN
       while (pendingN > 0) {
         val lh = labeled.select(col("node").as("head"), col("scc_id").as("h_scc"))
         val lt = labeled.select(col("node").as("tail"), col("scc_id").as("t_scc"))
@@ -381,8 +380,7 @@ object Scc {
             when(col("h_scc") === col("t_scc"), col("h_scc")).otherwise(col("node"))
               .as("scc_id"))
           .toDF("node", "scc_id").localCheckpoint()
-        // r17: checkpoint + emptiness probe fused into one job
-        val (pend2, pend2N) = Traversals.checkpointWithCount(
+        val (pend2, pend2N) = Fixpoint.checkpointWithCount(
           pending.join(resolved.select(col("node")), Seq("node"), "left_anti")
             .toDF("node", "head", "tail"),
           lit(true))

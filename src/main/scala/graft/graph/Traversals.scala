@@ -7,163 +7,44 @@ import org.apache.spark.sql.functions._
 
 /** Frontier-join traversals: the Spark re-expression of the
   * reference's BFS (secondary_server.c:503-537, level order) and DFS
-  * terminal-node query (secondary_server.c:166-180), plus
-  * transitive closure and bounded weighted shortest path.
+  * terminal-node query (secondary_server.c:166-180), plus transitive
+  * closure, closeness and shortest paths.
   *
-  * Pattern (Pregel-style): keep a `visited` set and a `frontier`
-  * DataFrame; each hop is one shuffle join frontier ⋈ edges followed
-  * by an anti-join against visited. `localCheckpoint` truncates the
-  * growing lineage so a 20-hop traversal doesn't replan 20 nested
-  * joins; on a cluster the frontier stays partitioned by the join key
-  * and AQE broadcasts it once it shrinks below the threshold.
+  * Every data-dependent loop here is one [[Fixpoint.frontier]] over a
+  * [[Fixpoint.resident]] edge table; each operator supplies only its
+  * expansion (frontier ⋈ edges → candidates tagged with the round) and
+  * its merge aggregate. The merge is `state ∪ candidates` under a
+  * map-side-combining `min` per key: an already-settled row keeps its
+  * smaller tag, a changed row takes the round's, so the next frontier
+  * is exactly `tag === round`. One union + groupBy per round replaces
+  * a distinct + anti-join + union cascade: two exchanges per round
+  * (frontier into the join, the min-combine), and the edge table is
+  * never re-shuffled. On a cluster AQE broadcasts the frontier once it
+  * shrinks below the threshold.
   */
 object Traversals {
 
-  /** Edge table partitioned by the per-round join key ONCE and kept
-    * resident for the loop's lifetime (r16 optimization round). Two
-    * deliberate choices, both measured:
-    *   - `persist`, not `localCheckpoint`: under AQE a checkpoint's
-    *     LogicalRDD reports UnknownPartitioning, so every round's
-    *     frontier join re-exchanged the WHOLE edge table; a cached
-    *     plan keeps its HashPartitioning (AQE may not change cached
-    *     plan output partitioning), so each round exchanges only the
-    *     frontier (guide §2.4 — remove shuffles of data already
-    *     partitioned as needed).
-    *   - the partition count is the session's shuffle-partition conf
-    *     (scale-adaptive: the bench drives it from SPARK_GRAFT_CPUS,
-    *     a cluster from its own sizing), pinned explicitly so the
-    *     frontier exchange lands co-partitioned.
-    * Callers unpersist after the loop; every returned frame is
-    * checkpointed first, so nothing downstream re-reads the cache.
-    */
-  private[graph] def keyedResident(df: DataFrame, key: String): DataFrame = {
-    val sess = df.sparkSession
-    // Size-adaptive (the same runtime-statistics decision AQE makes
-    // for joins): an edge table under the broadcast threshold is
-    // cheapest re-broadcast per round — repartition+cache overhead
-    // buys nothing (measured +0.1-0.3 s per query on the 25-node
-    // nation spine) — while a larger one is partitioned on the
-    // per-round join key once and kept resident for the loop.
-    // The small path caches WITHOUT repartitioning — and deliberately
-    // not localCheckpoint: a checkpoint's LogicalRDD loses size
-    // statistics (estimated as the default huge size), which silently
-    // demotes every per-round broadcast of the edge side to a shuffled
-    // join (measured on g29: +26% wall, +0.35M shuffled rows), while a
-    // cached plan keeps its child's statistics. Returning the frame
-    // unchanged is no good either: derivations that contain an
-    // exchange (e.g. PageRank's distinct) would re-run every round
-    // (measured: g09/g16 shuffle rows 1.2k → 7.4k).
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val threshold = sess.sessionState.conf.autoBroadcastJoinThreshold
-    // The persisted plan is wrapped in a no-op projection so its cache
-    // entry is keyed on a plan NO caller shares: Spark's cache manager
-    // keys by logical plan and is not reference-counted, so persisting
-    // the caller's frame as-is (often a shared MatStore read) would let
-    // this loop's end-of-loop unpersist evict a cache an overlapping
-    // operator still iterates over (r16 ADVICE).
-    if (threshold > 0 && estBytes <= threshold)
-      return df.select(df.columns.map(c => col(c)): _*).persist()
-    val p = graft.util.Par.shufflePartitions(sess)
-    // also sorted within partitions: the cached plan's outputOrdering
-    // survives (like its partitioning), so a sort-merge round join at
-    // the wavefront peak never re-sorts the edge side; one sort at
-    // cache build, not one per round. Join strategy per round is left
-    // to AQE: small frontiers convert to broadcast at runtime (the
-    // measured local winner — a forced SHUFFLE_HASH was 2.4x slower),
-    // big frontiers stay sort-merge against the pre-sorted cache.
-    df.repartition(p, col(key)).sortWithinPartitions(key).persist()
-  }
-
-  /** Checkpoint `df` and count its rows matching `pred` in ONE Spark
-    * job (r17). The checkpoint is LAZY; the counting action computes
-    * every partition of the checkpointed RDD, so materialization rides
-    * the same job that answers the loop's continue-probe. Every
-    * iterative loop previously paid one eager-checkpoint job PLUS one
-    * isEmpty/convergence job — two scheduler round-trips per round
-    * where one suffices. Wall time here is per-job latency; on a
-    * cluster the same fusion removes one barrier per round, which is
-    * the iterative family's true scale cost (guide §2.2's latency
-    * channel). Semantics are unchanged: localCheckpoint(eager=false)
-    * returns the same LogicalRDD-backed frame as the eager form, and
-    * the count's full-partition pass is exactly the materialization
-    * the eager form runs internally.
-    */
-  private[graft] def checkpointWithCount(df: DataFrame,
-      pred: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    val ck = df.localCheckpoint(eager = false)
-    // RDD-level count, NOT Dataset.count(): the SQL count plans a
-    // partial-agg + single-partition exchange, which AQE materializes
-    // as its own extra job — toRdd.count() sums per-partition counts
-    // on the driver in exactly ONE job with no exchange (the bench's
-    // own action), and computing every partition is what materializes
-    // the lazy checkpoint.
-    (ck, ck.filter(pred).queryExecution.toRdd.count())
-  }
-
-  /** (node, dist) for every node within `maxHops` of `source`.
-    *
-    * Round shape (r16): the hop number doubles as the first-visit tag
-    * — `visited ∪ candidates` under a map-side-combining `min(dist)`
-    * keeps the old row for already-visited nodes (its dist is
-    * strictly smaller) and assigns `hop` to first visits, and the
-    * next frontier is exactly `dist === hop`. One union+groupBy
-    * replaces the old distinct + anti-join + union cascade: two
-    * exchanges per hop (frontier into the join, the min-combine)
-    * instead of four, and the edge table is never re-shuffled.
+  /** (node, dist) for every node within `maxHops` of `source`; dist is
+    * the first-visit hop, so `min(dist)` keeps a visited node's row.
     */
   def bfsLevels(edges: DataFrame, source: Int, maxHops: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e = keyedResident(edges.select(col("src"), col("dst")), "src")
-    var visited = Seq((source, 0)).toDF("node", "dist").localCheckpoint()
-    var frontier = visited
-    var frontierN = 1L // the source row
-    var hop = 0
-    while (hop < maxHops && frontierN > 0) {
-      hop += 1
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"), lit(hop).as("dist"))
-      // checkpoint + frontier probe fused into one job (r17)
-      val (ck, n) = checkpointWithCount(
-        visited.unionAll(cand)
-          .groupBy(col("node")).agg(min(col("dist")).as("dist")),
-        col("dist") === hop)
-      visited = ck
-      frontierN = n
-      frontier = visited.filter(col("dist") === hop)
+    Fixpoint.resident(edges.select(col("src"), col("dst")), "src") { e =>
+      Fixpoint.frontier(Seq((source, 0)).toDF("node", "dist"), "dist", maxHops) {
+        (visited, front, hop) =>
+          visited.unionAll(front.join(e, front("node") === e("src"))
+              .select(e("dst").as("node"), lit(hop).as("dist")))
+            .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+      }._1
     }
-    e.unpersist(false)
-    visited
   }
 
-  /** Nodes reachable from `source` (source included), frontier loop
-    * until fixpoint. Same tagged round shape as [[bfsLevels]] (the
-    * first-visit hop is carried internally and dropped at return).
+  /** Nodes reachable from `source` (source included): [[bfsLevels]]
+    * without a hop cap.
     */
-  def reachableFrom(edges: DataFrame, source: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val e = keyedResident(edges.select(col("src"), col("dst")), "src")
-    var visited = Seq((source, 0)).toDF("node", "tag").localCheckpoint()
-    var frontier = visited
-    var frontierN = 1L // the source row
-    var hop = 0
-    while (frontierN > 0) {
-      hop += 1
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"), lit(hop).as("tag"))
-      // checkpoint + frontier probe fused into one job (r17)
-      val (ck, n) = checkpointWithCount(
-        visited.unionAll(cand)
-          .groupBy(col("node")).agg(min(col("tag")).as("tag")),
-        col("tag") === hop)
-      visited = ck
-      frontierN = n
-      frontier = visited.filter(col("tag") === hop)
-    }
-    e.unpersist(false)
-    visited.select(col("node"))
-  }
+  def reachableFrom(edges: DataFrame, source: Int): DataFrame =
+    bfsLevels(edges, source, Int.MaxValue).select(col("node"))
 
   /** BFS level order from nation 0, capped at 6 hops (reference op 4). */
   private def g03(s: SparkSession, dir: String): DataFrame =
@@ -273,32 +154,17 @@ object Traversals {
     * path for reach COUNTS; closure-pair consumers at 100 TB bound the
     * root set instead).
     */
-  private def closurePairs(edges: DataFrame): DataFrame = {
-    // r16 round shape: first-visit tag + union/min-combine, edge table
-    // resident and partitioned on the join key once (see keyedResident)
-    val e = keyedResident(edges.select(col("src"), col("dst")), "src")
-    // initial checkpoint + emptiness probe fused like the loop's (r17)
-    var (pairs, frontierN) = checkpointWithCount(
-      e.select(col("src").as("root"), col("dst").as("node"), lit(0).as("tag"))
-        .groupBy(col("root"), col("node")).agg(min(col("tag")).as("tag")),
-      lit(true))
-    var frontier = pairs
-    var hop = 0
-    while (frontierN > 0) {
-      hop += 1
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .select(frontier("root"), e("dst").as("node"), lit(hop).as("tag"))
-      val (ck, n) = checkpointWithCount(
-        pairs.unionAll(cand)
+  private def closurePairs(edges: DataFrame): DataFrame =
+    Fixpoint.resident(edges.select(col("src"), col("dst")), "src") { e =>
+      Fixpoint.frontier(
+        e.select(col("src").as("root"), col("dst").as("node"), lit(0).as("tag"))
           .groupBy(col("root"), col("node")).agg(min(col("tag")).as("tag")),
-        col("tag") === hop)
-      pairs = ck
-      frontierN = n
-      frontier = pairs.filter(col("tag") === hop)
-    }
-    e.unpersist(false)
-    pairs.select(col("root"), col("node"))
-  }
+        "tag") { (pairs, front, hop) =>
+        pairs.unionAll(front.join(e, front("node") === e("src"))
+            .select(front("root"), e("dst").as("node"), lit(hop).as("tag")))
+          .groupBy(col("root"), col("node")).agg(min(col("tag")).as("tag"))
+      }._1
+    }.select(col("root"), col("node"))
 
   private def g07(s: SparkSession, dir: String): DataFrame = {
     val edges = TradeGraph.edgesTable(s, dir)
@@ -390,12 +256,6 @@ object Traversals {
       .orderBy(col("node"))
   }
 
-  /** Closeness centrality via multi-source BFS: every vertex's frontier
-    * advances in the same loop (as in g07, the diameter — not the
-    * vertex count — bounds the shuffle count), tracking min hop
-    * distance; closeness = n_reachable / sum(dist) over the reachable
-    * set. Integral hops, so the only double is the final ratio.
-    */
   /** Hop cap shared by the Spark loop and the DuckDB oracle's
     * recursion bound — if only the oracle capped (as it used to),
     * any graph with eccentricity ≥ the cap would legitimately
@@ -403,28 +263,23 @@ object Traversals {
     */
   private val g14MaxHops = 10
 
+  /** Closeness centrality via multi-source BFS: every vertex's frontier
+    * advances in the same loop (as in g07, the diameter — not the
+    * vertex count — bounds the shuffle count), tracking min hop
+    * distance; closeness = n_reachable / sum(dist) over the reachable
+    * set. Integral hops, so the only double is the final ratio.
+    */
   private def g14(s: SparkSession, dir: String): DataFrame = {
-    // r16 round shape: the hop is the first-visit tag — one
-    // union + min-combine per hop replaces the old groupBy + anti-join
-    // + union cascade, and the symmetric edge table stays resident and
-    // partitioned on the join key (see keyedResident)
-    val sym = keyedResident(
-      TradeGraph.symEdges(TradeGraph.edgesTable(s, dir)), "src")
-    var dist = TradeGraph.nodes(s, dir)
+    val seed = TradeGraph.nodes(s, dir)
       .select(col("node").as("root"), col("node"), lit(0).as("hop"))
-      .localCheckpoint()
-    var frontier = dist
-    var round = 0
-    while (!frontier.isEmpty && round < g14MaxHops) {
-      round += 1
-      val cand = frontier.join(sym, frontier("node") === sym("src"))
-        .select(frontier("root"), sym("dst").as("node"), lit(round).as("hop"))
-      dist = dist.unionAll(cand)
-        .groupBy(col("root"), col("node")).agg(min(col("hop")).as("hop"))
-        .localCheckpoint()
-      frontier = dist.filter(col("hop") === round)
+    val dist = Fixpoint.resident(
+        TradeGraph.symEdges(TradeGraph.edgesTable(s, dir)), "src") { sym =>
+      Fixpoint.frontier(seed, "hop", g14MaxHops) { (dist, front, round) =>
+        dist.unionAll(front.join(sym, front("node") === sym("src"))
+            .select(front("root"), sym("dst").as("node"), lit(round).as("hop")))
+          .groupBy(col("root"), col("node")).agg(min(col("hop")).as("hop"))
+      }._1
     }
-    sym.unpersist(false)
     dist.groupBy(col("root").as("node"))
       .agg((count(lit(1)) - 1).as("n_reachable"),
         sum(col("hop")).cast("long").as("sum_dist"))
@@ -490,59 +345,39 @@ object Traversals {
     */
   @volatile private[graft] var lastSsspRounds: Int = 0
 
+  /** Long-typed (src, dst, cost): the edge table of both SSSP forms. */
+  private def costEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
+      col("cost").cast("long").as("cost"))
+
   /** Unbounded single-source shortest path over positive integral
     * edge costs, iterated to FIXPOINT — the general form of g08's
     * bounded Bellman-Ford (the reference's "shortest route" semantics
-    * without a depth cap). Frontier-relaxation (delta-stepping
-    * shape): each round relaxes only edges out of nodes whose
-    * distance improved last round — one equi-join on the frontier +
-    * a map-side-combining min per destination + one anti/left join
-    * against the running distance table, all hash-uniform on node
-    * ids, nothing driver-sized (the loop probe is isEmpty, lineage is
-    * checkpoint-truncated per round like g03's BFS). Positive costs
+    * without a depth cap). Frontier relaxation: each round relaxes
+    * only the edges out of nodes whose cost improved in the previous
+    * round. The distance table carries the round a node's cost last
+    * improved (`tag`), and candidates merge per node by
+    * `min(struct(cost, tag))`: a candidate wins only on a strict cost
+    * improvement (a cost tie keeps the old row: its tag is smaller),
+    * so `tag === round` is exactly the improved set. Positive costs
     * guarantee termination in ≤ (max shortest-path hop count) rounds;
-    * at 1000 executors the cost per round is one shuffle of the
-    * improved set, which shrinks monotonically after the wavefront
-    * peak.
+    * the cost per round is one shuffle of the improved set, which
+    * shrinks monotonically after the wavefront peak.
     */
   private[graft] def ssspConverged(edges: DataFrame, source: Long): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    // r16 round shape. The distance table carries the round each
-    // node's cost last IMPROVED (`tag`); one union + map-side-
-    // combining `min(struct(cost, tag))` merges the raw relaxation
-    // candidates into the table — a candidate wins only on a strict
-    // cost improvement (cost ties keep the old row: its tag is
-    // smaller), so `tag === round` is exactly the old `improved`
-    // frontier. Replaces the old per-round candidate groupBy +
-    // left-join-filter + anti-join + union (4 exchanges + 2
-    // checkpoints per round, with the edge table re-shuffled every
-    // round) with 2 exchanges + 1 checkpoint and a resident,
-    // pre-partitioned edge table (guide §2.3/§2.4).
-    val e = keyedResident(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("cost").cast("long").as("cost")),
-      "src")
-    var dist = Seq((source, 0L, 0)).toDF("node", "cost", "tag").localCheckpoint()
-    var frontier = dist
-    var frontierN = 1L // the source row
-    var rounds = 0
-    while (frontierN > 0) {
-      rounds += 1
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"), (frontier("cost") + e("cost")).as("cost"),
-          lit(rounds).as("tag"))
-      // checkpoint + improved-frontier probe fused into one job (r17)
-      val (ck, n) = checkpointWithCount(
-        dist.unionAll(cand)
-          .groupBy(col("node")).agg(min(struct(col("cost"), col("tag"))).as("b"))
-          .select(col("node"), col("b.cost").as("cost"), col("b.tag").as("tag")),
-        col("tag") === rounds)
-      dist = ck
-      frontierN = n
-      frontier = dist.filter(col("tag") === rounds)
+    val (dist, rounds) = Fixpoint.resident(costEdges(edges), "src") { e =>
+      Fixpoint.frontier(Seq((source, 0L, 0)).toDF("node", "cost", "tag"), "tag") {
+        (dist, front, round) =>
+          dist.unionAll(front.join(e, front("node") === e("src"))
+              .select(e("dst").as("node"), (front("cost") + e("cost")).as("cost"),
+                lit(round).as("tag")))
+            .groupBy(col("node")).agg(min(struct(col("cost"), col("tag"))).as("b"))
+            .select(col("node"), col("b.cost").as("cost"), col("b.tag").as("tag"))
+      }
     }
     lastSsspRounds = rounds
-    e.unpersist(false)
     dist.select(col("node"), col("cost"))
   }
 
@@ -642,39 +477,22 @@ object Traversals {
   private[graft] def ssspPredsConverged(edges: DataFrame, source: Long): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    // r16 round shape, see ssspConverged. The merge key extends to
-    // min(struct(cost, tag, pred)): a cost tie keeps the old row (its
-    // tag is strictly smaller — "a node's pred never changes after the
-    // round its final cost is achieved"), and among same-round
-    // candidates the smallest pred wins — both exactly the documented
-    // tie rules of the old min(struct(cost, pred)) + strict-< filter.
-    val e = keyedResident(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("cost").cast("long").as("cost")),
-      "src")
-    var dist = Seq((source, 0L, 0, source)).toDF("node", "cost", "tag", "pred")
-      .localCheckpoint()
-    var frontier = dist
-    var frontierN = 1L // the source row
-    var rounds = 0
-    while (frontierN > 0) {
-      rounds += 1
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"), (frontier("cost") + e("cost")).as("cost"),
-          lit(rounds).as("tag"), frontier("node").as("pred"))
-      // checkpoint + improved-frontier probe fused into one job (r17)
-      val (ck, n) = checkpointWithCount(
-        dist.unionAll(cand)
-          .groupBy(col("node"))
-          .agg(min(struct(col("cost"), col("tag"), col("pred"))).as("b"))
-          .select(col("node"), col("b.cost").as("cost"), col("b.tag").as("tag"),
-            col("b.pred").as("pred")),
-        col("tag") === rounds)
-      dist = ck
-      frontierN = n
-      frontier = dist.filter(col("tag") === rounds)
+    // the merge key extends to min(struct(cost, tag, pred)): a cost tie
+    // keeps the old row, and among same-round candidates the smallest
+    // pred wins — both exactly the tie rules above
+    val (dist, rounds) = Fixpoint.resident(costEdges(edges), "src") { e =>
+      Fixpoint.frontier(Seq((source, 0L, 0, source)).toDF("node", "cost", "tag", "pred"), "tag") {
+        (dist, front, round) =>
+          dist.unionAll(front.join(e, front("node") === e("src"))
+              .select(e("dst").as("node"), (front("cost") + e("cost")).as("cost"),
+                lit(round).as("tag"), front("node").as("pred")))
+            .groupBy(col("node"))
+            .agg(min(struct(col("cost"), col("tag"), col("pred"))).as("b"))
+            .select(col("node"), col("b.cost").as("cost"), col("b.tag").as("tag"),
+              col("b.pred").as("pred"))
+      }
     }
     lastSsspRounds = rounds
-    e.unpersist(false)
     dist.select(col("node"), col("cost"), col("pred"))
   }
 
@@ -705,8 +523,8 @@ object Traversals {
           .otherwise(array(col("pred"))).as("seg"))
       .localCheckpoint()
     // checkpoint + active probe fused into one job, here and per
-    // round below (r17)
-    val (start, startActiveN) = Traversals.checkpointWithCount(
+    // round below
+    val (start, startActiveN) = Fixpoint.checkpointWithCount(
       dist.select(col("node"), col("cost"), col("node").as("cur"),
         array(col("node")).as("path")),
       col("cur") =!= lit(source))
@@ -715,7 +533,7 @@ object Traversals {
     var activeEmpty = startActiveN == 0
     while (!activeEmpty) {
       val j = jump
-      val (stepped, activeN) = Traversals.checkpointWithCount(
+      val (stepped, activeN) = Fixpoint.checkpointWithCount(
         active.join(j, active("cur") === j("jn"))
           .select(col("node"), col("cost"), j("jp").as("cur"),
             concat(j("seg"), col("path")).as("path"))

@@ -1,0 +1,163 @@
+package graft
+
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import graft.graph.{Fixpoint, Traversals}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The shared loop machinery: one job per frontier round, probes that
+  * carry a SQL execution id, and resident edge tables that belong to
+  * their scope alone and are released however the scope ends.
+  */
+class FixpointSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  /** 0 → 1 → … → 9 */
+  private def path10: DataFrame = (0 until 9).map(i => (i, i + 1)).toDF("src", "dst")
+
+  private var groups = 0
+
+  /** `body`'s result and the properties of every Spark job it started.
+    * The jobs are told apart by a job group; a marker job in a second
+    * group is submitted after `body`, and the listener bus delivers
+    * events in order, so once the marker's start is seen every job of
+    * `body` has been seen too.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[Properties]) = {
+    val sc = spark.sparkContext
+    groups += 1
+    val group = s"fixpoint-spec-$groups"
+    val seen = new ConcurrentLinkedQueue[Properties]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = seen.add(js.properties): Unit
+    }
+    def inGroup(p: Properties, g: String) = p.getProperty("spark.jobGroup.id") == g
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.setJobGroup(s"$group-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(inGroup(_, s"$group-end")) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.asScala.exists(inGroup(_, s"$group-end")), "marker job never seen")
+      (out, seen.asScala.filter(inGroup(_, group)).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with session confs set, restoring the previous values. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("frontier: one Spark job per round plus one for the seed, on a 10-vertex path; " +
+      "bfsLevels and reachableFrom likewise") {
+    // AQE off and no broadcasts: then a round's exchanges are stages of
+    // its one fused checkpoint+count job, and the count of jobs is the
+    // loop's own (AQE would add one job per query stage)
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val edges = path10
+      val ((levels, rounds), jobs) = jobsOf {
+        Fixpoint.resident(edges, "src") { e =>
+          Fixpoint.frontier(Seq((0, 0)).toDF("node", "dist"), "dist") { (st, front, r) =>
+            st.unionAll(front.join(e, front("node") === e("src"))
+                .select(e("dst").as("node"), lit(r).as("dist")))
+              .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+          }
+        }
+      }
+      // nine rounds that reach a vertex, one that finds the frontier empty
+      assert(rounds == 10)
+      assert(jobs.size == rounds + 1, s"${jobs.size} jobs for $rounds rounds")
+      assert(levels.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq
+        == (0 until 10).map(i => (i, i)))
+
+      // (source, cap, rounds the loop runs): uncapped loops end on the
+      // empty round, a capped one on the cap
+      for ((src, cap, expected) <- Seq((0, 20, 10), (0, 4, 4), (5, 20, 5))) {
+        val (bfs, bfsJobs) = jobsOf(Traversals.bfsLevels(edges, src, cap))
+        assert(bfsJobs.size == expected + 1, s"bfsLevels($src, $cap): ${bfsJobs.size} jobs")
+        assert(bfs.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq
+          == (src until 10).map(i => (i, i - src)).filter(_._2 <= cap))
+        if (cap == 20) {
+          val (reach, reachJobs) = jobsOf(Traversals.reachableFrom(edges, src))
+          assert(reachJobs.size == expected + 1, s"reachableFrom($src): ${reachJobs.size} jobs")
+          assert(reach.collect().map(_.getInt(0)).sorted.toSeq == (src until 10))
+        }
+      }
+    }
+  }
+
+  test("checkpointWithCount's probe is one job and carries a SQL execution id") {
+    val df = spark.range(0, 1000, 1, 4).toDF("id")
+    val ((ck, n), jobs) = jobsOf(Fixpoint.checkpointWithCount(df, col("id") % 7 === 3))
+    assert(n == (0 until 1000).count(_ % 7 == 3))
+    assert(jobs.size == 1, s"${jobs.size} jobs")
+    assert(jobs.head.getProperty("spark.sql.execution.id") != null,
+      "the probe job runs outside any SQL execution")
+    assert(ck.count() == 1000)
+  }
+
+  test("overlapping resident scopes on one frame keep separate cache entries") {
+    val df = (0 until 50).map(i => (i, (i * 7) % 50)).toDF("src", "dst")
+    def cached(f: DataFrame) = f.groupBy(col("src")).count().queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r }.isDefined
+    // both sides of keyedResident's size switch: cached as-is, and
+    // repartitioned on the key (no broadcast threshold)
+    for (threshold <- Seq(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"), "-1"))
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        Fixpoint.resident(df, "src") { outer =>
+          assert(outer.count() == 50)
+          Fixpoint.resident(df, "src") { inner => assert(inner.count() == 50) }
+          assert(cached(outer), s"threshold $threshold: the inner scope evicted the outer table")
+          assert(outer.count() == 50)
+        }
+      }
+  }
+
+  /** The session cache manager's entry count (package-private in
+    * Spark, so read reflectively).
+    */
+  private def cachedEntries: Int = {
+    val cm = spark.sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  test("a round that throws leaves no resident table cached") {
+    val before = cachedEntries
+    // the UDF fails on one dst: the round that first reads the resident
+    // edge table, after the seed's round, throws
+    val boom = udf((d: Int) => { if (d == 3) throw new IllegalStateException("boom"); d })
+    val edges = path10.select(col("src"), boom(col("dst")).as("dst"))
+    intercept[Exception](Traversals.bfsLevels(edges, 0, 20))
+    assert(cachedEntries == before, "bfsLevels left its edge table cached")
+
+    // a driver-side failure in round 2, after round 1 read the table
+    val e2 = intercept[IllegalStateException] {
+      Fixpoint.resident(path10, "src") { e =>
+        Fixpoint.frontier(Seq((0, 0)).toDF("node", "dist"), "dist") { (st, front, r) =>
+          if (r == 2) throw new IllegalStateException("round 2")
+          st.unionAll(front.join(e, front("node") === e("src"))
+              .select(e("dst").as("node"), lit(r).as("dist")))
+            .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+        }
+      }
+    }
+    assert(e2.getMessage == "round 2")
+    assert(cachedEntries == before, "the scope left its edge table cached")
+  }
+}
