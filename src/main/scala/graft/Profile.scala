@@ -68,8 +68,8 @@ object Profile {
 
     if (args.length > 1 && args(1) == "bipartite") {
       // decompose g11/g13 using the SHIPPED pipeline pieces (no inline
-      // copies — Components exposes supplierStar and labelPropagate's
-      // onRound hook so the profiler can't drift from the real code)
+      // copies — Components exposes supplierStar and labelPropagate so
+      // the profiler can't drift from the real code)
       import org.apache.spark.sql.functions._
       t("warmup")(Tables(spark, sfDir, "lineitem").count())
       val pairs = graph.Components.bipartitePairs(spark, sfDir)
@@ -78,8 +78,7 @@ object Profile {
       t("g11.star.distinct")(star.count())
       val snodes = pairs.select(col("supp").as("node")).distinct()
       val ssym = star.unionAll(star.select(col("dst").as("src"), col("src").as("dst")))
-      t("g11.labelPropagate")(graph.Components.labelPropagate(snodes, ssym,
-        onRound = (round, sec) => println(f"$sec%8.2f  g11.round$round")).count())
+      t("g11.labelPropagate")(graph.Components.labelPropagate(snodes, ssym).count())
       var threshold = Int.MaxValue
       t("g13.hotkeys.measure") {
         threshold = graph.Components.measuredSaltThreshold(pairs).getOrElse(Int.MaxValue)

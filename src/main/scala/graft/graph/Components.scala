@@ -17,10 +17,15 @@ object Components {
 
   /** (node, comp) with comp = min node id in the component.
     *
-    * Convergence check: labels only ever decrease, so the global label
-    * sum strictly decreases until fixpoint — comparing one scalar
-    * aggregate per round replaces a join against the previous labels
-    * (one cheap job instead of a shuffle per iteration).
+    * One [[Fixpoint.frontier]] over the resident edge table: the state
+    * carries the round a node's label last fell in `tag`, and the merge
+    * is `min(struct(comp, tag))` — a label tie keeps the old row (its
+    * tag is smaller), so `tag === round` is exactly the set of nodes
+    * whose label fell, and only those send labels next round. A node
+    * whose label did not fall already sent it in the round it last fell,
+    * so frontier rounds equal full-relaxation rounds: hash-min stops
+    * within diameter + 1 rounds and runs uncapped, like
+    * [[Traversals.reachableFrom]].
     *
     * One materialization per round, deliberately: batching two rounds
     * into one job was measured 5× SLOWER (round 3) — the inner round's
@@ -28,49 +33,24 @@ object Components {
     * the outer round and gets recomputed in each, and AQE does not
     * reuse the duplicated exchanges.
     */
-  def labelPropagate(nodes: DataFrame, symEdges: DataFrame, maxIters: Int = 50,
-      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
-    // the edge table is partitioned on the join key once and kept
-    // resident (Fixpoint.resident — under AQE a localCheckpoint
-    // loses its partitioning and every round re-shuffled the edges);
-    // each round now exchanges only the label table (into the join,
-    // then the min-combine). Join strategy per round is left to AQE
-    // (a forced SHUFFLE_HASH measured 2.4x slower; the cached edge side
-    // is pre-sorted, so an SMJ round never re-sorts it).
+  def labelPropagate(nodes: DataFrame, symEdges: DataFrame): DataFrame =
     Fixpoint.resident(symEdges.select(col("src"), col("dst")), "src") { e =>
-      var labels = nodes.select(col("node"), col("node").as("comp")).localCheckpoint()
-      var labelSum = Long.MaxValue
-      var converged = false
-      var it = 0
-      while (!converged && it < maxIters) {
-        it += 1
-        val t0 = System.nanoTime()
-        val msgs = labels.join(e, labels("node") === e("src"))
-          .select(e("dst").as("node"), col("comp"))
-        // LAZY checkpoint — the convergence aggregate right below
-        // computes every partition, so materialization rides the same
-        // job and each round pays one scheduler round-trip, not two
-        // (the Fixpoint.checkpointWithCount fusion, with the label-sum
-        // probe in place of a count)
-        val next = labels.select(col("node"), col("comp")).unionAll(msgs)
-          .groupBy(col("node")).agg(min(col("comp")).as("comp"))
-          .localCheckpoint(eager = false)
-        // r16 negative result, documented so it is not retried: a
-        // label(label(v)) pointer-doubling shortcut per round was
-        // measured on d17's diameter-21 near-dup graph at 21 → 17
-        // rounds for +1 join per round — NET SLOWER. Min-over-ball
-        // pointers do not align toward the component min (the ball's
-        // argmin id is positionally arbitrary), so composition buys no
-        // exponential reach without true SV hooking.
-        val nextSum = next.agg(sum(col("comp").cast("long"))).collect()(0).getLong(0)
-        converged = nextSum == labelSum
-        labelSum = nextSum
-        labels = next
-        onRound(it, (System.nanoTime() - t0) / 1e9)
-      }
-      labels
+      // r16 negative result, documented so it is not retried: a
+      // label(label(v)) pointer-doubling shortcut per round was
+      // measured on d17's diameter-21 near-dup graph at 21 → 17
+      // rounds for +1 join per round — NET SLOWER. Min-over-ball
+      // pointers do not align toward the component min (the ball's
+      // argmin id is positionally arbitrary), so composition buys no
+      // exponential reach without true SV hooking.
+      Fixpoint.frontier(
+        nodes.select(col("node"), col("node").as("comp"), lit(0).as("tag")), "tag") {
+        (labels, front, round) =>
+          labels.unionAll(front.join(e, front("node") === e("src"))
+              .select(e("dst").as("node"), front("comp"), lit(round).as("tag")))
+            .groupBy(col("node")).agg(min(struct(col("comp"), col("tag"))).as("b"))
+            .select(col("node"), col("b.comp").as("comp"), col("b.tag").as("tag"))
+      }._1.select(col("node"), col("comp"))
     }
-  }
 
   /** Connected components of the undirected trade graph. */
   private def g05(s: SparkSession, dir: String): DataFrame = {
@@ -204,17 +184,16 @@ object Components {
     * convergence check is a cheap count comparison.
     */
   def kCore(symEdges: DataFrame, k: Int): DataFrame = {
-    var e = symEdges.select(col("src"), col("dst")).localCheckpoint()
-    var nEdges = e.count()
+    var (e, nEdges) = Fixpoint.checkpointWithCount(
+      symEdges.select(col("src"), col("dst")), lit(true))
     var changed = true
     while (changed) {
       val keep = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("node"))
-        .localCheckpoint()
-      val ne = e.join(keep, e("src") === keep("node"), "left_semi")
-        .join(keep, e("dst") === keep("node"), "left_semi")
-        .localCheckpoint()
-      val n = ne.count()
+      val (ne, n) = Fixpoint.checkpointWithCount(
+        e.join(keep, e("src") === keep("node"), "left_semi")
+          .join(keep, e("dst") === keep("node"), "left_semi"),
+        lit(true))
       changed = n != nEdges
       nEdges = n
       e = ne

@@ -20,9 +20,24 @@ import org.apache.spark.sql.functions._
   *     row last changed in a tag column, so the next frontier is
   *     exactly `tag === round` and its size comes from the same job
   *     that materializes the state.
-  * Loops whose round shape differs (fixed-iteration PageRank/LPA, the
-  * lazy-union FW-BW reach, pointer-doubling walks) use the first two
-  * and keep their own loop bodies.
+  *
+  * On [[frontier]]: `bfsLevels` (and `reachableFrom`, its uncapped
+  * form), `closurePairs`, g14, both SSSP forms (g08 is `ssspConverged`
+  * capped at 4 rounds) and `labelPropagate` (hash-min with a
+  * `min(struct(comp, tag))` merge).
+  *
+  * Keep their own bodies:
+  *   - Betweenness' forward pass: ported to `frontier`, the
+  *     union-merged state piles up partitions (measured at sf0.01: g29
+  *     jobs 90 → 91, tasks 122 → 288, shuffle rows +16);
+  *   - `Scc.reach`: ported, the anti-join form's tasks grow with
+  *     hops² and the min-merge form shuffles more (g25 shuffle rows
+  *     975 → 1079 at sf0.01);
+  *   - no frontier at all: fixed-iteration PageRank and LPA,
+  *     ReachSketch's capped bit-OR rounds, the peeling loops (`kCore`,
+  *     `kCoreBipartite`, Scc's trim), Borůvka and the pointer-doubling
+  *     walks (`unfoldPaths`, Scc's chain resolution). Their count
+  *     probes ride [[checkpointWithCount]].
   */
 object Fixpoint {
 

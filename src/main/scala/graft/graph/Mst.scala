@@ -31,12 +31,13 @@ object Mst {
     while (!done) {
       val la = labels.toDF("n1", "c1")
       val lb = labels.toDF("n2", "c2")
-      val cross = e0.join(la, col("src") === col("n1"))
-        .join(lb, col("dst") === col("n2"))
-        .filter(col("c1") =!= col("c2"))
-        .select(col("src"), col("dst"), col("cost"), col("c1"), col("c2"))
-        .localCheckpoint()
-      if (cross.isEmpty) done = true
+      val (cross, nCross) = Fixpoint.checkpointWithCount(
+        e0.join(la, col("src") === col("n1"))
+          .join(lb, col("dst") === col("n2"))
+          .filter(col("c1") =!= col("c2"))
+          .select(col("src"), col("dst"), col("cost"), col("c1"), col("c2")),
+        lit(true))
+      if (nCross == 0) done = true
       else {
         val edgeStruct = struct(col("cost"), col("src"), col("dst")).as("e")
         val cand = cross.select(col("c1").as("comp"), edgeStruct)

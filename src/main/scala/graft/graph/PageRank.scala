@@ -1,12 +1,13 @@
 package graft.graph
 
 import graft.Op
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** PageRank, 10 fixed iterations, damping 0.85, dangling mass
-  * redistributed uniformly.
+  * redistributed uniformly; [[runPersonalized]] is the same loop with
+  * teleport and dangling mass returned to one source node.
   *
   * Oracle parity trick: the only order-sensitive float op in PageRank
   * is the per-node sum of incoming contributions. We cast each
@@ -24,6 +25,31 @@ object PageRank {
   private val D = 0.85
 
   def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    val n = nodes.count().toDouble
+    iterate(nodes, edges, iters, lit(1.0) / lit(n), lit(0.15) / lit(n), _ / lit(n))
+  }
+
+  /** Personalized PageRank: teleport AND dangling mass return to the
+    * source node instead of spreading uniformly — the "nodes related
+    * to X" query a graph database serves for recommendations. Same
+    * decimal-exact contraction as [[run]].
+    */
+  def runPersonalized(nodes: DataFrame, edges: DataFrame, source: Int,
+      iters: Int): DataFrame = {
+    val atSource = col("node") === source
+    iterate(nodes, edges, iters, when(atSource, lit(1.0)).otherwise(lit(0.0)),
+      when(atSource, lit(0.15)).otherwise(lit(0.0)),
+      dm => when(atSource, dm).otherwise(lit(0.0)))
+  }
+
+  /** The one iteration loop of both forms: each node starts at
+    * `seedRank` and each round takes `teleport + D * (s + share(dm))`,
+    * with `s` its decimal-exact contribution sum and `dm` the dangling
+    * nodes' total rank. The callers' columns are the exact expressions
+    * the oracles unroll, so ranks stay bit-identical.
+    */
+  private def iterate(nodes: DataFrame, edges: DataFrame, iters: Int, seedRank: Column,
+      teleport: Column, share: Column => Column): DataFrame =
     // The edge table is partitioned on the join key once and kept
     // resident (Fixpoint.resident), and the out-degree column RIDES IN
     // THE ITERATED STATE instead of being re-joined every round — one union + merge aggregation per
@@ -33,13 +59,12 @@ object PageRank {
     // join. The decimal contribution sum is unchanged addend-for-
     // addend, so ranks stay bit-identical to the unrolled oracle.
     Fixpoint.resident(edges.select(col("src"), col("dst")).distinct(), "src") { e =>
-      val n = nodes.count().toDouble
       val dec = DecimalType(28, 15)
       var state = nodes.join(
           e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-          (lit(1.0) / lit(n)).as("rank"))
+          seedRank.as("rank"))
         .localCheckpoint()
       // With no dangling nodes the redistribution term is identically
       // +0.0 (bit-neutral on non-negative ranks), so skip its per-
@@ -70,63 +95,7 @@ object PageRank {
               .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
             merged.crossJoin(broadcast(dangling))
               .select(col("node"), col("outdeg"),
-                (lit(0.15) / lit(n) +
-                  lit(D) * (coalesce(col("s"), lit(0.0)) + col("dm") / lit(n))).as("rank"))
-          } else {
-            merged.select(col("node"), col("outdeg"),
-              (lit(0.15) / lit(n) + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
-          }
-        state = next.localCheckpoint()
-      }
-      state.select(col("node"), col("rank"))
-    }
-  }
-
-  private def g09(s: SparkSession, dir: String): DataFrame =
-    run(TradeGraph.nodes(s, dir), TradeGraph.edgesTable(s, dir), iters = 10)
-      .orderBy(col("node"))
-
-  /** Personalized PageRank: teleport AND dangling mass return to the
-    * source node instead of spreading uniformly — the "nodes related
-    * to X" query a graph database serves for recommendations. Same
-    * decimal-exact contraction as [[run]].
-    */
-  def runPersonalized(nodes: DataFrame, edges: DataFrame, source: Int,
-      iters: Int): DataFrame = {
-    // iteration shape of [[run]]; teleport/dangling terms are
-    // the personalized (source-concentrated) variants, expression-
-    // identical to the previous per-iteration plan.
-    Fixpoint.resident(edges.select(col("src"), col("dst")).distinct(), "src") { e =>
-      val dec = DecimalType(28, 15)
-      var state = nodes.join(
-          e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
-          Seq("node"), "left")
-        .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-          when(col("node") === source, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-        .localCheckpoint()
-      val hasDangling = !state.filter(col("outdeg") === 0).isEmpty
-      for (_ <- 1 to iters) {
-        val carried = state.select(col("node"), col("outdeg"),
-          lit(null).cast(dec).as("c"))
-        val contribs = state.filter(col("outdeg") > 0)
-          .join(e, col("node") === e("src"))
-          .select(e("dst").as("node"), lit(null).cast("long").as("outdeg"),
-            (col("rank") / col("outdeg")).cast(dec).as("c"))
-        // same unknown-endpoint confinement as [[run]] (r16 ADVICE)
-        val merged = carried.unionAll(contribs)
-          .groupBy(col("node"))
-          .agg(max(col("outdeg")).as("outdeg"),
-            sum(col("c")).cast("double").as("s"))
-          .filter(col("outdeg").isNotNull)
-        val teleport = when(col("node") === source, lit(0.15)).otherwise(lit(0.0))
-        val next =
-          if (hasDangling) {
-            val dangling = state.filter(col("outdeg") === 0)
-              .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
-            merged.crossJoin(broadcast(dangling))
-              .select(col("node"), col("outdeg"),
-                (teleport + lit(D) * (coalesce(col("s"), lit(0.0)) +
-                  when(col("node") === source, col("dm")).otherwise(lit(0.0)))).as("rank"))
+                (teleport + lit(D) * (coalesce(col("s"), lit(0.0)) + share(col("dm")))).as("rank"))
           } else {
             merged.select(col("node"), col("outdeg"),
               (teleport + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
@@ -135,7 +104,10 @@ object PageRank {
       }
       state.select(col("node"), col("rank"))
     }
-  }
+
+  private def g09(s: SparkSession, dir: String): DataFrame =
+    run(TradeGraph.nodes(s, dir), TradeGraph.edgesTable(s, dir), iters = 10)
+      .orderBy(col("node"))
 
   private def g16(s: SparkSession, dir: String): DataFrame =
     runPersonalized(TradeGraph.nodes(s, dir), TradeGraph.edgesTable(s, dir),

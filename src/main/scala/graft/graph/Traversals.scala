@@ -306,23 +306,18 @@ object Traversals {
 
   /** Bounded Bellman-Ford: min-cost path from node 0 on the DAG view
     * using ≤4 relaxation rounds; edge cost is the integral trade-cost
-    * proxy FLOOR(1e6 / weight) + 1 so path sums stay exact.
+    * proxy FLOOR(1e6 / weight) + 1 so path sums stay exact. This is
+    * [[ssspConverged]] capped at 4 rounds: after round r frontier
+    * relaxation holds the min cost over paths of ≤ r hops, exactly what
+    * r full-relaxation rounds compute.
     */
   private def g08(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val dag = TradeGraph.dagEdges(TradeGraph.edgesTable(s, dir))
       .select(col("src"), col("dst"),
         (floor(lit(1000000.0) / col("weight")) + 1).cast("long").as("cost"))
-      .localCheckpoint()
-    var dist = Seq((0, 0L)).toDF("node", "cost")
-    for (_ <- 1 to 4) {
-      val relaxed = dist.join(dag, dist("node") === dag("src"))
-        .select(dag("dst").as("node"), (dist("cost") + dag("cost")).as("cost"))
-      dist = dist.unionAll(relaxed)
-        .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint()
-    }
-    dist.orderBy(col("node"))
+    ssspConverged(dag, 0L, maxRounds = 4)
+      .select(col("node").cast("int").as("node"), col("cost"))
+      .orderBy(col("node"))
   }
 
   private val g08Sql = s"""
@@ -362,13 +357,16 @@ object Traversals {
     * so `tag === round` is exactly the improved set. Positive costs
     * guarantee termination in ≤ (max shortest-path hop count) rounds;
     * the cost per round is one shuffle of the improved set, which
-    * shrinks monotonically after the wavefront peak.
+    * shrinks monotonically after the wavefront peak. `maxRounds` caps
+    * the loop (g08's bounded form): the result is then the min cost
+    * over paths of at most `maxRounds` hops.
     */
-  private[graft] def ssspConverged(edges: DataFrame, source: Long): DataFrame = {
+  private[graft] def ssspConverged(edges: DataFrame, source: Long,
+      maxRounds: Int = Int.MaxValue): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val (dist, rounds) = Fixpoint.resident(costEdges(edges), "src") { e =>
-      Fixpoint.frontier(Seq((source, 0L, 0)).toDF("node", "cost", "tag"), "tag") {
+      Fixpoint.frontier(Seq((source, 0L, 0)).toDF("node", "cost", "tag"), "tag", maxRounds) {
         (dist, front, round) =>
           dist.unionAll(front.join(e, front("node") === e("src"))
               .select(e("dst").as("node"), (front("cost") + e("cost")).as("cost"),

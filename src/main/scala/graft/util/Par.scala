@@ -14,25 +14,30 @@ object Par {
     try s.conf.get("spark.sql.shuffle.partitions").toInt
     catch { case _: NumberFormatException => s.sparkContext.defaultParallelism }
 
+  private val schemaConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema", "spark.sql.caseSensitive")
+
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   /** `spark.read.parquet(path)` with the inferred schema memoized per
-    * (path, nanos-flag): schema inference launches a one-task footer
+    * (path, schema confs): schema inference launches a one-task footer
     * job on EVERY read call, and this library re-reads the same base
     * tables and session-materialized index tables hundreds of times
     * per bench/verify run — those jobs were a measurable slice of the
     * per-query session floor (guide §5: the driver should do almost no
     * data work; a known schema makes the read job-free). Keyed by path
-    * plus the legacy-nanos flag because that flag changes what type
-    * `events.ts` infers to; both base corpora and MatStore dirs are
-    * write-once under a given path, so a cached schema cannot go
+    * plus every conf that changes what the footers infer to (the
+    * legacy-nanos flag decides what type `events.ts` infers to,
+    * binaryAsString whether a BINARY column is a string); both base
+    * corpora and MatStore dirs are write-once under a given path, so
+    * a cached schema cannot go
     * stale within a process (a rewritten corpus lands under a new
     * MatStore fingerprint path by construction).
     */
   def readParquet(s: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    val key = path + "#" +
-      s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val key = (path +: schemaConfs.map(c => s.conf.getOption(c).orNull)).mkString("#")
     val sch = schemaCache.computeIfAbsent(key, _ => s.read.parquet(path).schema)
     s.read.schema(sch).parquet(path)
   }

@@ -52,6 +52,16 @@ class GraphSpec extends AnyFunSuite {
     assert(got == Seq((0, 0), (1, 0), (2, 0), (10, 10), (11, 10)))
   }
 
+  test("labelPropagate labels every vertex of a 60-vertex path with 0") {
+    // diameter 59: hash-min needs 60 rounds, so a round cap below that
+    // would leave the far end with a wrong label
+    val nodes = (0 until 60).toDF("node")
+    val path = (0 until 59).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+    val got = Components.labelPropagate(nodes, edgeDf(path: _*))
+      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    assert(got == (0 until 60).map(_ -> 0).toMap)
+  }
+
   test("adjacency matrix text roundtrip matches G.txt format") {
     val e = edgeDf((0, 1), (1, 2), (2, 0))
     val text = AdjacencyCodec.toText(AdjacencyCodec.toMatrix(e, 3), 3)
@@ -292,19 +302,34 @@ class GraphSpec extends AnyFunSuite {
 
   test("bounded Bellman-Ford relaxes through cheaper multi-hop paths") {
     import org.apache.spark.sql.functions.{col => c}
+    // reference: 4 full-relaxation rounds, every edge relaxed every round
+    def fullRelax(dag: org.apache.spark.sql.DataFrame): Map[Int, Long] = {
+      var dist = Seq((0, 0L)).toDF("node", "cost")
+      for (_ <- 1 to 4) {
+        val relaxed = dist.join(dag, dist("node") === dag("src"))
+          .select(dag("dst").as("node"), (dist("cost") + dag("cost")).as("cost"))
+        dist = dist.unionAll(relaxed)
+          .groupBy(c("node")).agg(org.apache.spark.sql.functions.min(c("cost")).as("cost"))
+          .localCheckpoint()
+      }
+      dist.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
+    def bounded(dag: org.apache.spark.sql.DataFrame): Map[Int, Long] =
+      Traversals.ssspConverged(dag, 0L, maxRounds = 4)
+        .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
     // direct 0->3 cost 10 vs 0->1->2->3 cost 3
     val dag = Seq((0, 3, 10L), (0, 1, 1L), (1, 2, 1L), (2, 3, 1L))
       .toDF("src", "dst", "cost").localCheckpoint()
-    var dist = Seq((0, 0L)).toDF("node", "cost")
-    for (_ <- 1 to 4) {
-      val relaxed = dist.join(dag, dist("node") === dag("src"))
-        .select(dag("dst").as("node"), (dist("cost") + dag("cost")).as("cost"))
-      dist = dist.unionAll(relaxed)
-        .groupBy(c("node")).agg(org.apache.spark.sql.functions.min(c("cost")).as("cost"))
-        .localCheckpoint()
-    }
-    val m = dist.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val m = bounded(dag)
+    assert(m == fullRelax(dag))
     assert(m(3) == 3L && m(2) == 2L && m(1) == 1L && m(0) == 0L)
+    // the cap binds: the 5-hop cheap path 0->1->...->5 (cost 5) lies
+    // beyond 4 rounds, so node 5 keeps the 1-hop expensive edge's cost
+    val capped = (Seq((0, 5, 100L)) ++ (0 until 5).map(i => (i, i + 1, 1L)))
+      .toDF("src", "dst", "cost").localCheckpoint()
+    val mc = bounded(capped)
+    assert(mc == fullRelax(capped))
+    assert(mc(5) == 100L && mc(4) == 4L)
   }
 
   test("pagerank ranks sum to ~1") {

@@ -111,4 +111,34 @@ class R17OpsSpec extends AnyFunSuite
     // the probe must not have narrowed the frame: full re-count agrees
     assert(ck.count() == 1000)
   }
+
+  test("readParquet re-infers the schema when a schema-affecting conf changes") {
+    // a BINARY column with no Spark schema in the footer (Spark's own
+    // writer records one, which would pin the type), so the
+    // binaryAsString conf alone decides what it infers to
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType("message m { required binary payload; }")
+    val dir = java.nio.file.Files.createTempDirectory("binparquet")
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(dir.resolve("part-0.parquet").toString))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("payload", "abc"))
+    finally w.close()
+    val conf = "spark.sql.parquet.binaryAsString"
+    val before = spark.conf.getOption(conf)
+    def payloadType = util.Par.readParquet(spark, dir.toString).schema("payload").dataType
+    try {
+      spark.conf.set(conf, "false")
+      assert(payloadType == org.apache.spark.sql.types.BinaryType)
+      spark.conf.set(conf, "true")
+      assert(payloadType == org.apache.spark.sql.types.StringType)
+      assert(util.Par.readParquet(spark, dir.toString).collect().map(_.getString(0)).toSeq
+        == Seq("abc"))
+    } finally before match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+  }
 }
