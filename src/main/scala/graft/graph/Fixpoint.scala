@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   *     that materializes the state.
   *
   * On [[frontier]]: `bfsLevels` (and `reachableFrom`, its uncapped
-  * form), `closurePairs`, g14, both SSSP forms (g08 is `ssspConverged`
-  * capped at 4 rounds) and `labelPropagate` (hash-min with a
-  * `min(struct(comp, tag))` merge).
+  * form) over an edge table too large to broadcast, `closurePairs`,
+  * g14, both SSSP forms (g08 is `ssspConverged` capped at 4 rounds)
+  * and `labelPropagate` (hash-min with a `min(struct(comp, tag))`
+  * merge).
   *
   * Keep their own bodies:
   *   - Betweenness' forward pass: ported to `frontier`, the
@@ -38,6 +39,10 @@ import org.apache.spark.sql.functions._
   *     `kCoreBipartite`, Scc's trim), Borůvka and the pointer-doubling
   *     walks (`unfoldPaths`, Scc's chain resolution). Their count
   *     probes ride [[checkpointWithCount]].
+  *
+  * [[graft.util.Par.broadcastSized]] is the one size test behind
+  * [[keyedResident]]'s layout, `bfsLevels`' choice of its driver-side
+  * path and `GraphStore.put`'s one-file write.
   */
 object Fixpoint {
 
@@ -110,11 +115,13 @@ object Fixpoint {
     *     rows); a cached plan keeps both, since AQE may not change a
     *     cached plan's output partitioning;
     *   - size-adaptive, the same runtime-statistics decision AQE makes
-    *     for joins: a table under the broadcast threshold is cached
-    *     as-is and re-broadcast per round (repartitioning it measured
-    *     +0.1-0.3 s per query on the 25-node nation spine); a larger one
-    *     is partitioned on `key` into the session's shuffle-partition
-    *     count, so each round exchanges only the frontier.
+    *     for joins, by the shared size test
+    *     [[graft.util.Par.broadcastSized]]: a table under the broadcast
+    *     threshold is cached as-is and re-broadcast per round
+    *     (repartitioning it measured +0.1-0.3 s per query on the
+    *     25-node nation spine); a larger one is partitioned on `key`
+    *     into the session's shuffle-partition count, so each round
+    *     exchanges only the frontier.
     * Returning the frame uncached is no good either: derivations that
     * contain an exchange (PageRank's distinct) would re-run every round
     * (g09/g16 shuffle rows 1.2k → 7.4k).
@@ -129,12 +136,9 @@ object Fixpoint {
     * cached data and its plan are the caller's.
     */
   private def keyedResident(df: DataFrame, key: String): DataFrame = {
-    val sess = df.sparkSession
     val scope = lit(scopes.incrementAndGet())
     val own = df.where(scope === scope)
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val threshold = sess.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold > 0 && estBytes <= threshold) return own.persist()
+    if (graft.util.Par.broadcastSized(df)) return own.persist()
     // also sorted within partitions: the cached plan's outputOrdering
     // survives (like its partitioning), so a sort-merge round join at
     // the wavefront peak never re-sorts the edge side; one sort at
@@ -142,7 +146,7 @@ object Fixpoint {
     // to AQE: small frontiers convert to broadcast at runtime (the
     // measured local winner — a forced SHUFFLE_HASH was 2.4x slower),
     // big frontiers stay sort-merge against the pre-sorted cache.
-    own.repartition(graft.util.Par.shufflePartitions(sess), col(key))
+    own.repartition(graft.util.Par.shufflePartitions(df.sparkSession), col(key))
       .sortWithinPartitions(key).persist()
   }
 }

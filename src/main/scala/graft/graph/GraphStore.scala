@@ -2,8 +2,9 @@ package graft.graph
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-import graft.util.VersionedTableStore
+import graft.util.{Par, VersionedTableStore}
 
 /** Persistent graph store with the reference's add/modify semantics
   * (client.c ops 1-2) re-expressed for a distributed file system.
@@ -19,6 +20,18 @@ import graft.util.VersionedTableStore
   * claim keeps writers in separate processes off each other's
   * directories, and a per-name lock serializes this instance's own
   * writers.
+  *
+  * Two choices keep the reference's request path (graphs of N ≤ 30)
+  * cheap:
+  *   - a snapshot small enough to broadcast
+  *     ([[graft.util.Par.broadcastSized]]) is written as ONE part file,
+  *     not one per input partition: fewer files to create, commit and
+  *     list on every later read;
+  *   - the schema of the version a name was last read at is memoized,
+  *     so a repeat read plans no footer-inference job. The memo is
+  *     keyed by the version AND its directory's modification time: a
+  *     drop followed by a new put can reuse `v1` with another schema,
+  *     in a new directory. It holds one entry per name.
   */
 final class GraphStore(spark: SparkSession, baseDir: String) {
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -47,13 +60,19 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
   private val published =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
+  // (version, directory mtime) -> inferred schema of the version each
+  // name was last read at (see the class doc).
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), StructType)]()
+
   /** Store a graph's edge DataFrame under `name` (create or overwrite —
     * reference ops "add graph" and "modify graph" share this path).
     */
   def put(name: String, edges: DataFrame): Unit = writerLock(name).synchronized {
     val s = snaps(name)
     val v = s.claim()
-    s.publish(v)(v => edges.write.mode("overwrite").parquet(s.tablePath(v, "").toString))
+    val out = if (Par.broadcastSized(edges)) edges.coalesce(1) else edges
+    s.publish(v)(v => out.write.mode("overwrite").parquet(s.tablePath(v, "").toString))
     published.put(name, v): Unit
   }
 
@@ -99,9 +118,15 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     */
   def readVersion(name: String, version: Long): DataFrame = {
     val dir = new Path(graphDir(name), s"v$version")
-    if (!fs(dir).exists(dir))
-      throw new java.util.NoSuchElementException(s"no version $version of $name")
-    spark.read.parquet(dir.toString)
+    val key = try (version, fs(dir).getFileStatus(dir).getModificationTime)
+      catch { case _: java.io.FileNotFoundException =>
+        throw new java.util.NoSuchElementException(s"no version $version of $name") }
+    val schema = Option(schemas.get(name)).filter(_._1 == key).map(_._2).getOrElse {
+      val inferred = spark.read.parquet(dir.toString).schema
+      schemas.put(name, key -> inferred)
+      inferred
+    }
+    spark.read.schema(schema).parquet(dir.toString)
   }
 
   /** Drop old snapshot versions of `name` by the store's vacuum rule:

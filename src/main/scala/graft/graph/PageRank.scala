@@ -60,17 +60,20 @@ object PageRank {
     // addend, so ranks stay bit-identical to the unrolled oracle.
     Fixpoint.resident(edges.select(col("src"), col("dst")).distinct(), "src") { e =>
       val dec = DecimalType(28, 15)
-      var state = nodes.join(
-          e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
-          Seq("node"), "left")
-        .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-          seedRank.as("rank"))
-        .localCheckpoint()
       // With no dangling nodes the redistribution term is identically
       // +0.0 (bit-neutral on non-negative ranks), so skip its per-
-      // iteration aggregate+broadcast entirely — one upfront check
-      // instead of 10 broadcast jobs.
-      val hasDangling = !state.filter(col("outdeg") === 0).isEmpty
+      // iteration aggregate+broadcast entirely — one upfront count,
+      // riding the seed state's checkpoint job, instead of 10
+      // broadcast jobs.
+      val (seed, nDangling) = Fixpoint.checkpointWithCount(
+        nodes.join(
+            e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
+            Seq("node"), "left")
+          .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
+            seedRank.as("rank")),
+        col("outdeg") === 0)
+      val hasDangling = nDangling > 0
+      var state = seed
       for (_ <- 1 to iters) {
         val carried = state.select(col("node"), col("outdeg"),
           lit(null).cast(dec).as("c"))

@@ -1,9 +1,14 @@
 package graft.graph
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import graft.Op
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Par
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Frontier-join traversals: the Spark re-expression of the
   * reference's BFS (secondary_server.c:503-537, level order) and DFS
@@ -21,23 +26,83 @@ import org.apache.spark.sql.functions._
   * (frontier into the join, the min-combine), and the edge table is
   * never re-shuffled. On a cluster AQE broadcasts the frontier once it
   * shrinks below the threshold.
+  *
+  * The exception is the reference's own request. GraphX pays a
+  * scheduling cost per iteration of its join chain too, and on a
+  * 30-vertex graph that cost is the whole request: a round measured
+  * about 0.33 s on a 4-core host, 0.2 s of it driver gap between jobs
+  * and 0.02 s executor CPU. So [[bfsLevels]] (and [[reachableFrom]])
+  * over an edge table Spark would broadcast anyway runs one collect
+  * and a driver-side BFS instead.
   */
 object Traversals {
 
   /** (node, dist) for every node within `maxHops` of `source`; dist is
     * the first-visit hop, so `min(dist)` keeps a visited node's row.
+    *
+    * Two paths, one result. An integer-keyed edge table that passes
+    * [[graft.util.Par.broadcastSized]] (every reference graph, N ≤ 30,
+    * and the 25-nation trade graph) is collected once and walked level
+    * by level on the driver: the frontier path's broadcast join
+    * collects the same table in every round, so this is one job
+    * instead of about 3.5 per hop. Any other table runs
+    * [[Fixpoint.frontier]] rounds over a resident edge table.
+    *
+    * The driver path returns a local frame with the frontier path's
+    * rows and schema: the schema is taken from the analysis of the
+    * same round ([[bfsRound]]; the seed's own when no round runs), an
+    * edge with a null `src` is never followed, and a null `dst` yields
+    * one `(null, hop)` row, as the join and the `min` merge do.
     */
   def bfsLevels(edges: DataFrame, source: Int, maxHops: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    Fixpoint.resident(edges.select(col("src"), col("dst")), "src") { e =>
-      Fixpoint.frontier(Seq((source, 0)).toDF("node", "dist"), "dist", maxHops) {
-        (visited, front, hop) =>
-          visited.unionAll(front.join(e, front("node") === e("src"))
-              .select(e("dst").as("node"), lit(hop).as("dist")))
-            .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      }._1
+    val seed = Seq((source, 0)).toDF("node", "dist")
+    val e = edges.select(col("src"), col("dst"))
+    if (e.schema.forall(f => integralKeys(f.dataType)) && Par.broadcastSized(e))
+      bfsOnDriver(seed, e, source, maxHops)
+    else Fixpoint.resident(e, "src") { r =>
+      Fixpoint.frontier(seed, "dist", maxHops)((visited, front, hop) =>
+        bfsRound(visited, front, r, hop))._1
     }
+  }
+
+  /** One frontier round of [[bfsLevels]]: reach the frontier's
+    * out-neighbours and keep each node's smallest hop.
+    */
+  private def bfsRound(visited: DataFrame, front: DataFrame, e: DataFrame, hop: Int): DataFrame =
+    visited.unionAll(front.join(e, front("node") === e("src"))
+        .select(e("dst").as("node"), lit(hop).as("dist")))
+      .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+
+  private val integralKeys: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** [[bfsLevels]] over one collect of an integer-keyed `e`. Keys are
+    * compared as longs, exactly as the round's join compares them after
+    * widening, and written back in the node column's widened type.
+    */
+  private def bfsOnDriver(seed: DataFrame, e: DataFrame, source: Int, maxHops: Int): DataFrame = {
+    val schema = if (maxHops > 0) bfsRound(seed, seed, e, 1).schema else seed.schema
+    val longNodes = schema("node").dataType == LongType
+    def node(v: Long): Any = if (longNodes) Long.box(v) else Int.box(v.toInt)
+    def key(v: Any): Option[Long] = Option(v).map(_.asInstanceOf[Number].longValue)
+    val adj = e.collect().toSeq
+      .flatMap(r => key(r.get(0)).map(_ -> key(r.get(1))))
+      .groupMap(_._1)(_._2)
+    val dist = mutable.LinkedHashMap(source.toLong -> 0)
+    var nullDist = Option.empty[Int]
+    var front = Seq(source.toLong)
+    var hop = 0
+    while (front.nonEmpty && hop < maxHops) {
+      hop += 1
+      front = front.flatMap(adj.getOrElse(_, Nil)).flatMap {
+        case None => nullDist = nullDist.orElse(Some(hop)); None
+        case Some(v) if !dist.contains(v) => dist(v) = hop; Some(v)
+        case _ => None
+      }
+    }
+    val rows = dist.map { case (v, d) => Row(node(v), d) } ++ nullDist.map(Row(null, _))
+    e.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   /** Nodes reachable from `source` (source included): [[bfsLevels]]

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session parallelism lookup shared by every operator that sizes an
   * explicit repartition or bucket count from the shuffle-partition
@@ -13,6 +13,18 @@ object Par {
   def shufflePartitions(s: SparkSession): Int =
     try s.conf.get("spark.sql.shuffle.partitions").toInt
     catch { case _: NumberFormatException => s.sparkContext.defaultParallelism }
+
+  /** Whether Spark would broadcast `df` as a join side: its optimized
+    * plan's size estimate is within `spark.sql.autoBroadcastJoinThreshold`
+    * (and broadcasting is on). A table that passes is one the driver
+    * already collects whole for every broadcast, so an operator may
+    * collect it once itself, or write it as one file. Planning only:
+    * no job runs.
+    */
+  def broadcastSized(df: DataFrame): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+  }
 
   private val schemaConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",

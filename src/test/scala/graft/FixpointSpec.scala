@@ -1,11 +1,7 @@
 package graft
 
-import java.util.Properties
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-
+import graft.SparkJobs.{jobsOf, withConf}
 import graft.graph.{Fixpoint, Traversals}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
@@ -21,47 +17,6 @@ class FixpointSpec extends AnyFunSuite {
 
   /** 0 → 1 → … → 9 */
   private def path10: DataFrame = (0 until 9).map(i => (i, i + 1)).toDF("src", "dst")
-
-  private var groups = 0
-
-  /** `body`'s result and the properties of every Spark job it started.
-    * The jobs are told apart by a job group; a marker job in a second
-    * group is submitted after `body`, and the listener bus delivers
-    * events in order, so once the marker's start is seen every job of
-    * `body` has been seen too.
-    */
-  private def jobsOf[T](body: => T): (T, Seq[Properties]) = {
-    val sc = spark.sparkContext
-    groups += 1
-    val group = s"fixpoint-spec-$groups"
-    val seen = new ConcurrentLinkedQueue[Properties]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = seen.add(js.properties): Unit
-    }
-    def inGroup(p: Properties, g: String) = p.getProperty("spark.jobGroup.id") == g
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.setJobGroup(s"$group-end", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(inGroup(_, s"$group-end")) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.asScala.exists(inGroup(_, s"$group-end")), "marker job never seen")
-      (out, seen.asScala.filter(inGroup(_, group)).toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** Runs `body` with session confs set, restoring the previous values. */
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("frontier: one Spark job per round plus one for the seed, on a 10-vertex path; " +
       "bfsLevels and reachableFrom likewise") {
@@ -143,7 +98,11 @@ class FixpointSpec extends AnyFunSuite {
     // edge table, after the seed's round, throws
     val boom = udf((d: Int) => { if (d == 3) throw new IllegalStateException("boom"); d })
     val edges = path10.select(col("src"), boom(col("dst")).as("dst"))
-    intercept[Exception](Traversals.bfsLevels(edges, 0, 20))
+    // no broadcast threshold: a table this small would take
+    // bfsLevels' driver path, which holds no resident table
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      intercept[Exception](Traversals.bfsLevels(edges, 0, 20))
+    }
     assert(cachedEntries == before, "bfsLevels left its edge table cached")
 
     // a driver-side failure in round 2, after round 1 read the table

@@ -44,6 +44,77 @@ class GraphSpec extends AnyFunSuite {
     assert(got == Seq(0, 1, 2))
   }
 
+  test("bfsLevels: the driver path equals the frontier path in rows and schema") {
+    import SparkJobs.withConf
+    import org.apache.spark.sql.DataFrame
+    val rnd = new scala.util.Random(11)
+    def tree(n: Int) = (1 until n).map(v => (rnd.nextInt(v), v))
+    // duplicate edges and a self-loop on top of random arcs
+    def digraph(n: Int, m: Int) = {
+      val arcs = Seq.fill(m)((rnd.nextInt(n), rnd.nextInt(n)))
+      arcs ++ arcs.take(3) :+ ((2, 2))
+    }
+    def ints(pairs: Seq[(Int, Int)]) = pairs.toDF("src", "dst")
+    def longs(pairs: Seq[(Int, Int)]) =
+      pairs.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
+    // a nullable dst with one null, reached from vertex 1
+    def longsWithNull(pairs: Seq[(Int, Int)]) =
+      (pairs.map { case (a, b) => (a.toLong, Option(b.toLong)) } :+ ((1L, None))).toDF("src", "dst")
+    def intsWithNull(pairs: Seq[(Int, Int)]) =
+      (pairs.map { case (a, b) => (a, Option(b)) } :+ ((1, None))).toDF("src", "dst")
+    val inputs: Seq[(String, DataFrame)] = Seq(
+      "int tree" -> ints(tree(16)),
+      "long tree, null dst" -> longsWithNull(tree(16)),
+      "int digraph, null dst" -> intsWithNull(digraph(12, 24)),
+      "long digraph" -> longs(digraph(12, 24)))
+    for ((label, e) <- inputs) {
+      assert(graft.util.Par.broadcastSized(e), s"$label would not take the driver path")
+      for (source <- Seq(0, 5, 999); hops <- Seq(0, 1, 3, Int.MaxValue)) {
+        def run() = {
+          val df = Traversals.bfsLevels(e, source, hops)
+          (df.schema, df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq)
+        }
+        val driver = run()
+        val frontier = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
+        assert(driver == frontier, s"$label from $source, maxHops $hops")
+      }
+    }
+  }
+
+  test("serve path cost: one job per traversal, one file per small put, no job per repeat read") {
+    import SparkJobs.jobsOf
+    val dir = java.nio.file.Files.createTempDirectory("graphserve")
+    val store = new GraphStore(spark, dir.toString)
+    val rnd = new scala.util.Random(3)
+    val tree = (1 until 30).flatMap { v => val p = rnd.nextInt(v); Seq((p, v), (v, p)) }
+    store.put("T", edgeDf(tree: _*))
+    val parts = java.nio.file.Files.list(dir.resolve("T").resolve("v1"))
+    try assert(parts.filter(_.getFileName.toString.startsWith("part-")).count() == 1)
+    finally parts.close()
+
+    store.read("T")
+    val (edges, readJobs) = jobsOf(store.read("T"))
+    assert(readJobs.isEmpty, s"a repeat read ran ${readJobs.size} jobs")
+    val (levels, bfsJobs) = jobsOf(Traversals.bfsLevels(edges, 0, 30).collect())
+    assert(bfsJobs.size == 1, s"bfsLevels ran ${bfsJobs.size} jobs")
+    val (reach, reachJobs) = jobsOf(Traversals.reachableFrom(edges, 0).collect())
+    assert(reachJobs.size == 1, s"reachableFrom ran ${reachJobs.size} jobs")
+    // the tree's own levels: a vertex is one hop below its parent
+    val parent = tree.filter { case (p, v) => p < v }.map(_.swap).toMap
+    def depth(v: Int): Int = parent.get(v).map(depth(_) + 1).getOrElse(0)
+    assert(levels.map(r => r.getInt(0) -> r.getInt(1)).toMap == (0 until 30).map(v => v -> depth(v)).toMap)
+    assert(reach.map(_.getInt(0)).sorted.toSeq == (0 until 30))
+
+    // a drop and a new put, from another store instance, reuse v1: the
+    // read must not serve the old schema
+    val other = new GraphStore(spark, dir.toString)
+    other.drop("T")
+    other.put("T", tree.map { case (a, b) => (a, b, 1.5) }.toDF("src", "dst", "weight"))
+    assert(store.currentVersion("T").contains(1L))
+    assert(store.read("T").schema.fieldNames.toSeq == Seq("src", "dst", "weight"))
+    assert(store.read("T").filter(col("weight") === 1.5).count() == tree.size)
+  }
+
   test("labelPropagate separates two components") {
     val nodes = Seq(0, 1, 2, 10, 11).toDF("node")
     val sym = edgeDf((0, 1), (1, 0), (1, 2), (2, 1), (10, 11), (11, 10))
