@@ -45,16 +45,6 @@ object AdjacencyCodec {
     (n.toString +: rows).mkString("\n")
   }
 
-  /** Parse a G.txt payload into matrix rows. */
-  def parseText(s: SparkSession, text: String): DataFrame = {
-    import s.implicits._
-    val lines = text.split("\n")
-    val n = lines.head.trim.toInt
-    lines.tail.take(n).zipWithIndex
-      .map { case (row, i) => (i, row.trim) }.toSeq
-      .toDF("i", "row")
-  }
-
   /** g10: adjacency-matrix roundtrip — trade edges -> dense matrix ->
     * edges again; identity, so the oracle is the distinct edge list.
     */

@@ -2,6 +2,8 @@ package graft.graph
 
 import graft.Op
 import graft.functions.Hash32
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,73 +69,66 @@ object Betweenness {
       // never collide, so no distinct is needed on the symmetric view
       bi.unionAll(bi.select(col("dst").as("src"), col("src").as("dst")))
     }
-    val (gnodes, pivotN, deltas, deepest) = Fixpoint.resident(symTable, "src") { sym =>
+    val (gnodes, deltas, deepest) = Fixpoint.resident(symTable, "src") { sym =>
       val gnodes = sym.select(col("src").as("node")).distinct().localCheckpoint()
       val pivots = Hash32.withH32(gnodes, "bw", col("node"))
         .orderBy(col("h32"), col("node")).limit(PIVOTS)
         .select(col("node").as("p")).localCheckpoint()
 
       // forward: batched BFS — levels(d) = (p, node, sigma) for nodes
-      // first reached at hop d, sigma = exact shortest-path count; the
-      // pivot count comes from the job that materializes level 0
+      // first reached at hop d, sigma = exact shortest-path count; a
+      // round whose level is empty ends the pass
       val levels = new Array[DataFrame](HOPS + 1)
-      val (level0, pivotN) = Fixpoint.checkpointWithCount(
-        pivots.select(col("p"), col("p").as("node"), lit(1L).as("sigma")), lit(true))
-      levels(0) = level0
       // the graph is UNDIRECTED, so a neighbor of a level-(d-1) node sits
       // at level d-2, d-1, or d: the first-visit anti-join only needs the
       // previous TWO levels, not the whole visited set — the per-round
       // exchange stays wavefront-sized instead of growing cumulatively
       // (the values are identical; the oracle keeps the cumulative form)
-      var deepest = 0
-      var d = 0
-      var frontierN = pivotN
-      while (d < HOPS && frontierN > 0) {
-        d += 1
+      val (lastLevel, deepest) = Fixpoint.iterate(
+          pivots.select(col("p"), col("p").as("node"), lit(1L).as("sigma")),
+          Until.Empty(lit(true)), HOPS) { (prev, d) =>
+        levels(d - 1) = prev
         val seen =
-          if (d >= 2) levels(d - 1).select(col("p"), col("node"))
+          if (d >= 2) prev.select(col("p"), col("node"))
             .unionAll(levels(d - 2).select(col("p"), col("node")))
-          else levels(d - 1).select(col("p"), col("node"))
-        val (nxt, n) = Fixpoint.checkpointWithCount(
-          levels(d - 1)
-            .join(sym, col("node") === col("src"))
-            .groupBy(col("p"), col("dst"))
-            .agg(sum(col("sigma")).as("sigma"))
-            .withColumnRenamed("dst", "node")
-            .join(seen, Seq("p", "node"), "left_anti"),
-          lit(true))
-        levels(d) = nxt
-        frontierN = n
-        deepest = d
+          else prev.select(col("p"), col("node"))
+        prev.join(sym, col("node") === col("src"))
+          .groupBy(col("p"), col("dst"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .withColumnRenamed("dst", "node")
+          .join(seen, Seq("p", "node"), "left_anti")
       }
+      levels(deepest) = lastLevel
 
       // backward: Brandes dependency accumulation in fixed point, level
       // d reading only level d+1 (shortest-path DAG edges are strictly
-      // level-increasing)
+      // level-increasing); it stops at level 1, since bc excludes the
+      // pivots' own level 0
       val e = sym.select(col("src").as("esrc"), col("dst").as("edst"))
       val deltas = new Array[DataFrame](deepest + 1)
-      deltas(deepest) = levels(deepest)
-        .select(col("p"), col("node"), col("sigma"), lit(0L).as("delta"))
-      var lvl = deepest
-      while (lvl > 0) {
-        lvl -= 1
-        val below = deltas(lvl + 1).select(col("p").as("bp"), col("node").as("bnode"),
+      val (level1, _) = Fixpoint.iterate(
+          levels(deepest).select(col("p"), col("node"), col("sigma"), lit(0L).as("delta")),
+          Until.Rounds, math.max(deepest - 1, 0)) { (belowLevel, r) =>
+        val lvl = deepest - r
+        deltas(lvl + 1) = belowLevel
+        val below = belowLevel.select(col("p").as("bp"), col("node").as("bnode"),
           col("sigma").as("bsigma"), col("delta").as("bdelta"))
-        deltas(lvl) = levels(lvl)
+        levels(lvl)
           .join(e, col("node") === col("esrc"), "left")
           .join(below,
             col("bp") === col("p") && col("bnode") === col("edst"), "left")
           .groupBy(col("p"), col("node"), col("sigma"))
           .agg(coalesce(sum(expr(s"sigma * ($SCALE + bdelta) div bsigma")), lit(0L))
             .as("delta"))
-          .localCheckpoint()
       }
-      (gnodes, pivotN, deltas, deepest)
+      if (deepest > 0) deltas(1) = level1
+      (gnodes, deltas, deepest)
     }
     // bc excludes each pivot's own source row (level 0); a node never
-    // reached by any pivot scores 0
+    // reached by any pivot scores 0. The pivots are the first PIVOTS
+    // of the distinct nodes.
     val n = gnodes.count().toDouble
-    val k = pivotN.toDouble
+    val k = math.min(PIVOTS.toDouble, n)
     val acc =
       if (deepest == 0) gnodes.limit(0)
         .select(col("node"), lit(0L).as("bc_fp0"))

@@ -1,6 +1,8 @@
 package graft.graph
 
 import graft.Op
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -177,33 +179,9 @@ object Components {
     FROM l$rounds GROUP BY comp ORDER BY comp"""
   }
 
-  /** k-core: iteratively peel nodes of degree < k until fixpoint. The
-    * third iterative pattern in the engine (frontier expansion, label
-    * propagation, and now peeling); each round is one degree count +
-    * two semi-joins, and the edge count strictly decreases so the
-    * convergence check is a cheap count comparison.
-    */
-  def kCore(symEdges: DataFrame, k: Int): DataFrame = {
-    var (e, nEdges) = Fixpoint.checkpointWithCount(
-      symEdges.select(col("src"), col("dst")), lit(true))
-    var changed = true
-    while (changed) {
-      val keep = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("node"))
-      val (ne, n) = Fixpoint.checkpointWithCount(
-        e.join(keep, e("src") === keep("node"), "left_semi")
-          .join(keep, e("dst") === keep("node"), "left_semi"),
-        lit(true))
-      changed = n != nEdges
-      nEdges = n
-      e = ne
-    }
-    e.select(col("src").as("node")).distinct()
-  }
-
   /** Bipartite k-core peeling on the (cust, supp) pair list directly —
     * degrees per side are two aggregations over the same pair table,
-    * half the rows of the symmetrized form kCore consumes.
+    * half the rows of a symmetrized edge list.
     *
     * Degrees are counted as rows per cust/supp, which equals
     * distinct-neighbor degree only on a distinct pair list — so the
@@ -212,29 +190,21 @@ object Components {
     * (cust, supp) frames are not, and duplicate pairs would silently
     * inflate degrees and keep nodes that k-core semantics peel).
     */
-  def kCoreBipartite(pairs: DataFrame, k: Int): DataFrame = {
+  def kCoreBipartite(pairs: DataFrame, k: Int): DataFrame =
     // one peel per materialization — batching peels into one job
     // recomputes the inner peel once per reference (3 refs: two degree
     // aggs + the semi-join source) and was measured slower; see
-    // labelPropagate's note
-    var (p, nPairs) = Fixpoint.checkpointWithCount(
-      pairs.select(col("cust"), col("supp")).distinct(), lit(true))
-    var changed = true
-    while (changed) {
+    // labelPropagate's note. A peel only removes pairs, so an unchanged
+    // pair count is the fixpoint.
+    Fixpoint.iterate(pairs.select(col("cust"), col("supp")).distinct(),
+        Until.Unchanged(lit(true))) { (p, _) =>
       val keepC = p.groupBy(col("cust")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("cust"))
       val keepS = p.groupBy(col("supp")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("supp"))
-      val (np, n) = Fixpoint.checkpointWithCount(
-        p.join(keepC, Seq("cust"), "left_semi")
-          .join(keepS, Seq("supp"), "left_semi"),
-        lit(true))
-      changed = n != nPairs
-      nPairs = n
-      p = np
-    }
-    p
-  }
+      p.join(keepC, Seq("cust"), "left_semi")
+        .join(keepS, Seq("supp"), "left_semi")
+    }._1
 
   /** 2-core of the customer–supplier bipartite graph: strip customers
     * with a single supplier and suppliers with a single customer,
@@ -455,9 +425,8 @@ object Components {
     // once and kept resident — the per-round side filter preserves the
     // partitioning, so each round exchanges only the label table.
     Fixpoint.resident(symW.select(col("src"), col("dst"), col("w")), "dst") { e =>
-      var labels = nodes.select(col("node"), col("node").as("lbl"))
-        .localCheckpoint()
-      for (r <- 1 to rounds) {
+      Fixpoint.iterate(nodes.select(col("node"), col("node").as("lbl")).localCheckpoint(),
+          Until.Rounds, rounds) { (labels, r) =>
         // the color class this round updates: odd rounds the even
         // (customer) nodes, even rounds the odd (supplier) nodes
         val side = if (r % 2 == 1) 0L else 1L
@@ -476,16 +445,14 @@ object Components {
         // (largest weight, then smallest label — the same
         // min(struct(-sw, lbl)) argmax) and every other node keeps its
         // label (it has no tally rows: the side filter above).
-        labels = labels
+        labels
           .select(col("node"), lit(1).as("pri"), lit(0L).as("negw"), col("lbl"))
           .unionAll(tally.select(col("node"), lit(0).as("pri"),
             (lit(0L) - col("sw")).as("negw"), col("lbl")))
           .groupBy(col("node"))
           .agg(min(struct(col("pri"), col("negw"), col("lbl"))).as("b"))
           .select(col("node"), col("b.lbl").as("lbl"))
-          .localCheckpoint()
-      }
-      labels
+      }._1
     }
   }
 

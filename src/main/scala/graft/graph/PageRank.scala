@@ -1,6 +1,8 @@
 package graft.graph
 
 import graft.Op
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -73,8 +75,7 @@ object PageRank {
             seedRank.as("rank")),
         col("outdeg") === 0)
       val hasDangling = nDangling > 0
-      var state = seed
-      for (_ <- 1 to iters) {
+      Fixpoint.iterate(seed, Until.Rounds, iters) { (state, _) =>
         val carried = state.select(col("node"), col("outdeg"),
           lit(null).cast(dec).as("c"))
         val contribs = state.filter(col("outdeg") > 0)
@@ -92,20 +93,17 @@ object PageRank {
           .agg(max(col("outdeg")).as("outdeg"),
             sum(col("c")).cast("double").as("s"))
           .filter(col("outdeg").isNotNull)
-        val next =
-          if (hasDangling) {
-            val dangling = state.filter(col("outdeg") === 0)
-              .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
-            merged.crossJoin(broadcast(dangling))
-              .select(col("node"), col("outdeg"),
-                (teleport + lit(D) * (coalesce(col("s"), lit(0.0)) + share(col("dm")))).as("rank"))
-          } else {
-            merged.select(col("node"), col("outdeg"),
-              (teleport + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
-          }
-        state = next.localCheckpoint()
-      }
-      state.select(col("node"), col("rank"))
+        if (hasDangling) {
+          val dangling = state.filter(col("outdeg") === 0)
+            .agg(coalesce(sum(col("rank").cast(dec)).cast("double"), lit(0.0)).as("dm"))
+          merged.crossJoin(broadcast(dangling))
+            .select(col("node"), col("outdeg"),
+              (teleport + lit(D) * (coalesce(col("s"), lit(0.0)) + share(col("dm")))).as("rank"))
+        } else {
+          merged.select(col("node"), col("outdeg"),
+            (teleport + lit(D) * coalesce(col("s"), lit(0.0))).as("rank"))
+        }
+      }._1.select(col("node"), col("rank"))
     }
 
   private def g09(s: SparkSession, dir: String): DataFrame =

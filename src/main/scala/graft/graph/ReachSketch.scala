@@ -1,6 +1,8 @@
 package graft.graph
 
 import graft.Op
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,43 +80,41 @@ object ReachSketch {
     * frame per round 1..[[Rounds]] (round d covers distance ≤ d).
     * Per round: one shuffle join (edges ⋈ sketch on dst) + one bit_or
     * aggregation — both map-side combinable, state linear in V.
-    * Rounds past the fixpoint reuse the converged frame — OR-monotone
-    * registers make them provably identical to running the round,
+    *
+    * The merge aggregate also flags each node whose registers grew
+    * (its new bit count exceeds the count its own row carried in), and
+    * the round's checkpoint job counts the flags ([[Fixpoint.iterate]]).
+    * Registers are OR-monotone, so no node growing is exactly the
+    * global bit count standing still: the fixpoint. Rounds past it
+    * reuse the converged frame — provably identical to running them,
     * which is also why the early exit can't diverge from the
     * fully-unrolled oracle.
     */
   def sketchRegisterRounds(edges: DataFrame): Seq[DataFrame] = {
     val aggs0 = (0 until R).map(r => expr(s"bit_or(${maskSpark("dst", r)})").as(s"reg$r"))
-    var sk = edges.groupBy(col("src").as("node")).agg(aggs0.head, aggs0.tail: _*)
-      .localCheckpoint()
+    // round 1: every node's registers grew from nothing
+    val s0 = edges.groupBy(col("src").as("node")).agg(aggs0.head, aggs0.tail: _*)
+      .withColumn("grew", lit(true))
     val aggsN = regNames.map(n => expr(s"bit_or($n)").as(n))
-    // Convergence scalar: registers are monotone under OR, so the
-    // global set-bit count strictly grows until fixpoint — one tiny
-    // aggregate over the (V-row) sketch per round replaces running the
-    // full cap.
-    val bitsExpr = expr(regNames.map(n => s"CAST(bit_count($n) AS BIGINT)")
-      .mkString("sum(", " + ", ")"))
+    val bits = expr(regNames.map(n => s"CAST(bit_count($n) AS BIGINT)").mkString(" + "))
     val frames = Seq.newBuilder[DataFrame]
-    frames += sk
-    var bits = sk.agg(bitsExpr).head().getLong(0)
-    var round = 1
-    var converged = false
-    while (round < Rounds && !converged) {
-      round += 1
-      // shuffle_hash: the sketch side is V rows of 17 ints — hash-build
-      // it instead of sort-merge, which would re-sort the E-row edge
-      // side every round (measured 5x slower on the 1M-edge bipartite
-      // graph at sf0.1)
-      val succ = edges.join(sk.hint("shuffle_hash"), col("dst") === col("node"))
-        .select(col("src").as("node") +: regNames.map(col): _*)
-      sk = succ.unionByName(sk)
-        .groupBy(col("node")).agg(aggsN.head, aggsN.tail: _*)
-        .localCheckpoint()
-      frames += sk
-      val nextBits = sk.agg(bitsExpr).head().getLong(0)
-      converged = nextBits == bits
-      bits = nextBits
+    def frame(sk: DataFrame) = sk.select(col("node") +: regNames.map(col): _*)
+    val (last, _) = Fixpoint.iterate(s0, Until.Empty(col("grew")), Rounds - 1) {
+      (sk, _) =>
+        frames += frame(sk)
+        // shuffle_hash: the sketch side is V rows of 17 ints — hash-build
+        // it instead of sort-merge, which would re-sort the E-row edge
+        // side every round (measured 5x slower on the 1M-edge bipartite
+        // graph at sf0.1)
+        val succ = edges.join(sk.hint("shuffle_hash"), col("dst") === col("node"))
+          .select(col("src").as("node") +: regNames.map(col) :+
+            lit(null).cast("long").as("before"): _*)
+        succ.unionByName(frame(sk).withColumn("before", bits))
+          .groupBy(col("node")).agg(aggsN.head, aggsN.tail :+ max(col("before")).as("before"): _*)
+          .select(col("node") +: regNames.map(col) :+
+            (bits > coalesce(col("before"), lit(0L))).as("grew"): _*)
     }
+    frames += frame(last)
     val built = frames.result()
     built ++ Seq.fill(Rounds - built.size)(built.last)
   }

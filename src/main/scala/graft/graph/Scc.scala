@@ -1,5 +1,9 @@
 package graft.graph
 
+import scala.collection.mutable
+
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,12 +54,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every step is a frontier equi-join / semi-join keyed
   * by (part, node) — hash-uniform, nothing broadcast, nothing
-  * driver-sized (the loop conditions are `isEmpty` probes, the
-  * per-round lineage is truncated by localCheckpoint exactly like
-  * g03/g14's loops). Rounds: expected O(log n) on random/power-law
-  * graphs; the classic pivot-only worst case (a bare path: trim peels
-  * 2 nodes per pass, pivots split 1 off per round → O(n) rounds) is
-  * capped by CHAIN CONTRACTION below.
+  * driver-sized (the loop conditions are row counts taken by the
+  * jobs that checkpoint each round, which truncates its lineage
+  * exactly like g03/g14's loops). Rounds: expected O(log n) on
+  * random/power-law graphs; the classic pivot-only worst case (a bare
+  * path: trim peels 2 nodes per pass, pivots split 1 off per round →
+  * O(n) rounds) is capped by CHAIN CONTRACTION below.
   *
   * Reference behavior re-expressed: the reference engine has no SCC
   * op (its graphs are its clients' adjacency files); this is part of
@@ -164,7 +168,6 @@ object Scc {
     // contracted chain nodes awaiting endpoint labels: (node, head, tail)
     var chainAcc = active.select(col("node"), col("node").as("head"), col("node").as("tail"))
       .filter(lit(false)).toDF("node", "head", "tail").localCheckpoint()
-    var chainAccN = 0L
     var anyChains = false
     lastPeelPasses = 0; lastDoublingRounds = 0; lastPivotRounds = 0
 
@@ -174,32 +177,25 @@ object Scc {
     // leads to a node some earlier round already labeled or split away
     // — following it would break the FW-BW invariant)
     def reach(pivots: DataFrame, act: DataFrame): DataFrame = {
-      // the seed's size comes from the same job that materializes it:
-      // empty pivots leave the loop before its first round
-      val (seed, seedN) = Fixpoint.checkpointWithCount(
-        pivots.select(col("part"), col("pivot").as("node"),
-          explode(array(lit(1), lit(2))).as("d")),
-        lit(true))
-      var visited = seed
-      var frontier = seed
-      var frontierN = seedN
-      while (frontierN > 0) {
+      // the state is the hop's new nodes; empty pivots leave the loop
+      // before its first round. The visited set is a lazy union of the
+      // checkpointed hops — the anti-join reads it as a cheap union
+      // scan; one checkpoint at return, not one job per hop
+      val hops = mutable.ArrayBuffer.empty[DataFrame]
+      val (last, _) = Fixpoint.iterate(
+          pivots.select(col("part"), col("pivot").as("node"),
+            explode(array(lit(1), lit(2))).as("d")),
+          Until.Empty(lit(true))) { (frontier, _) =>
+        hops += frontier
+        val visited = hops.reduce(_ unionAll _)
         val dirE = dirAll
-        val (next, n) = Fixpoint.checkpointWithCount(
-          frontier.join(dirE,
-              frontier("node") === dirE("src") && frontier("d") === dirE("d"))
-            .select(frontier("part"), dirE("dst").as("node"), frontier("d")).distinct()
-            .join(act, Seq("part", "node"), "left_semi")
-            .join(visited, Seq("part", "node", "d"), "left_anti"),
-          lit(true))
-        // lazy union of checkpointed hops — the anti-join above reads
-        // it as a cheap union scan; one checkpoint at return, not one
-        // job per hop
-        visited = visited.unionAll(next)
-        frontier = next
-        frontierN = n
+        frontier.join(dirE,
+            frontier("node") === dirE("src") && frontier("d") === dirE("d"))
+          .select(frontier("part"), dirE("dst").as("node"), frontier("d")).distinct()
+          .join(act, Seq("part", "node"), "left_semi")
+          .join(visited, Seq("part", "node", "d"), "left_anti")
       }
-      visited.localCheckpoint()
+      (hops :+ last).reduce(_ unionAll _).localCheckpoint()
     }
 
     var activeCount = active.count()
@@ -281,31 +277,31 @@ object Scc {
             .join(isIntr, Seq("node"), "left_anti")
             .select(col("node"), col("node").as("nh"), col("node").as("nt"),
               col("node").as("m"))
-          var dt = intr.select(col("node"), col("pred").as("nh"), col("succ").as("nt"),
+          val seed = intr.select(col("node"), col("pred").as("nh"), col("succ").as("nt"),
               col("node").as("m"))
             .unionAll(absorb).toDF("node", "nh", "nt", "m").localCheckpoint()
-          var r = 0
-          while (r < rounds) {
+          // stats barrier: each round joins dt against TWO projections
+          // of itself, so the estimated sizeInBytes CUBES per round
+          // and a checkpoint carries the BigInt forward — after ~15
+          // rounds the stat is a 3^15-digit number and the driver
+          // hangs multiplying it. A fresh createDataFrame over the
+          // checkpointed RDD resets stats (and constraints) to leaf
+          // defaults; the lineage stays truncated.
+          def leaf(ck: DataFrame) = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+          // (the seed's own statistics are still small)
+          val (doubled, _) = Fixpoint.iterate(seed, Until.Rounds, rounds) { (ck, r) =>
+            val dt = if (r == 1) ck else leaf(ck)
             val jh = dt.select(col("node").as("h_node"), col("nh").as("h_nh"),
               col("m").as("h_m"))
             val jt = dt.select(col("node").as("t_node"), col("nt").as("t_nt"))
-            val ck = dt.join(jh, dt("nh") === jh("h_node"))
+            dt.join(jh, dt("nh") === jh("h_node"))
               .join(jt, dt("nt") === jt("t_node"))
               .select(dt("node"), col("h_nh").as("nh"), col("t_nt").as("nt"),
                 least(dt("m"), col("h_m")).as("m"))
-              .toDF("node", "nh", "nt", "m").localCheckpoint()
-            // stats barrier: each round joins dt against TWO projections
-            // of itself, so the estimated sizeInBytes CUBES per round
-            // and localCheckpoint carries the BigInt forward — after
-            // ~15 rounds the stat is a 3^15-digit number and the
-            // driver hangs multiplying it. A fresh createDataFrame
-            // over the checkpointed RDD resets stats (and constraints)
-            // to leaf defaults; the lineage stays truncated.
-            dt = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-            r += 1
-            lastDoublingRounds += 1
+              .toDF("node", "nh", "nt", "m")
           }
-          val fin = dt.join(isIntr, Seq("node"), "left_semi")
+          lastDoublingRounds += rounds
+          val fin = leaf(doubled).join(isIntr, Seq("node"), "left_semi")
           // head pointer still internal after the budget ⟺ pure
           // cycle: one whole SCC, labeled by the doubled min
           val cyc = fin.join(isIntr.select(col("node").as("nh")), Seq("nh"), "left_semi")
@@ -315,12 +311,9 @@ object Scc {
             .select(col("node"), col("nh").as("head"), col("nt").as("tail"))
             .toDF("node", "head", "tail").localCheckpoint()
           labeled = labeled.unionAll(cyc)
-          // checkpoint + size fused into one job: the size is the
-          // chain-resolution loop's seed count
-          val (acc, accN) = Fixpoint.checkpointWithCount(
-            chainAcc.unionAll(chains).toDF("node", "head", "tail"), lit(true))
-          chainAcc = acc
-          chainAccN = accN
+          // lazy accumulate — the chain-resolution loop checkpoints
+          // and sizes it once, in its seed's job
+          chainAcc = chainAcc.unionAll(chains).toDF("node", "head", "tail")
           extraE = extraE.unionAll(
               chains.select(col("head").as("src"), col("tail").as("dst")).distinct())
             .distinct().toDF("src", "dst").localCheckpoint()
@@ -370,9 +363,7 @@ object Scc {
       // endpoint labels (iteratively: nested chains wait for their
       // endpoints' own resolution; strict pass-order dependency
       // guarantees progress)
-      var pending = chainAcc
-      var pendingN = chainAccN
-      while (pendingN > 0) {
+      Fixpoint.iterate(chainAcc, Until.Empty(lit(true))) { (pending, _) =>
         val lh = labeled.select(col("node").as("head"), col("scc_id").as("h_scc"))
         val lt = labeled.select(col("node").as("tail"), col("scc_id").as("t_scc"))
         val resolved = pending.join(lh, Seq("head")).join(lt, Seq("tail"))
@@ -380,14 +371,10 @@ object Scc {
             when(col("h_scc") === col("t_scc"), col("h_scc")).otherwise(col("node"))
               .as("scc_id"))
           .toDF("node", "scc_id").localCheckpoint()
-        val (pend2, pend2N) = Fixpoint.checkpointWithCount(
-          pending.join(resolved.select(col("node")), Seq("node"), "left_anti")
-            .toDF("node", "head", "tail"),
-          lit(true))
-        pending = pend2
-        pendingN = pend2N
         labeled = labeled.unionAll(resolved)
           .toDF("node", "scc_id").localCheckpoint()
+        pending.join(resolved.select(col("node")), Seq("node"), "left_anti")
+          .toDF("node", "head", "tail")
       }
       // group-min relabel: a chain member's id can undercut the
       // contracted SCC's min, and g24's contract is min over ALL

@@ -4,7 +4,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import graft.Op
-import graft.util.Par
+import graft.util.{Fixpoint, Par}
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,7 +26,8 @@ import org.apache.spark.sql.types._
   * a distinct + anti-join + union cascade: two exchanges per round
   * (frontier into the join, the min-combine), and the edge table is
   * never re-shuffled. On a cluster AQE broadcasts the frontier once it
-  * shrinks below the threshold.
+  * shrinks below the threshold. `unfoldPaths`' pointer-doubling walk
+  * has no frontier and runs on [[Fixpoint.iterate]].
   *
   * The exception is the reference's own request. GraphX pays a
   * scheduling cost per iteration of its join chain too, and on a
@@ -161,12 +163,17 @@ object Traversals {
     * the deterministic re-expression of the reference's DFS
     * deepest-node output (reference op 3; SURVEY.md §6).
     */
-  private def g04(s: SparkSession, dir: String): DataFrame = {
-    val dag = TradeGraph.dagEdges(TradeGraph.edgesTable(s, dir)).localCheckpoint()
-    val reach = reachableFrom(dag, source = 0)
-    reach.join(dag.select(col("src")).distinct(),
-        reach("node") === col("src"), "left_anti")
-      .select(col("node")).orderBy(col("node"))
+  private def g04(s: SparkSession, dir: String): DataFrame =
+    reachableSinks(TradeGraph.dagEdges(TradeGraph.edgesTable(s, dir)).localCheckpoint(), 0)
+      .orderBy(col("node"))
+
+  /** (node) for every node reachable from `source` over `edges` that
+    * has no out-edge: the DFS-terminal answer of g04 and g23.
+    */
+  private[graft] def reachableSinks(edges: DataFrame, source: Int): DataFrame = {
+    val reach = reachableFrom(edges, source)
+    reach.join(edges.select(col("src")).distinct(), reach("node") === col("src"), "left_anti")
+      .select(col("node"))
   }
 
   private val g04Sql = s"""
@@ -192,10 +199,7 @@ object Traversals {
     val dag = TradeGraph.dagEdges(TradeGraph.edgesTable(s, dir)).localCheckpoint()
     val hub = dag.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("src")).head().getInt(0)
-    val reach = reachableFrom(dag, source = hub)
-    reach.join(dag.select(col("src")).distinct(),
-        reach("node") === col("src"), "left_anti")
-      .select(col("node")).orderBy(col("node"))
+    reachableSinks(dag, hub).orderBy(col("node"))
   }
 
   private val g23Sql = s"""
@@ -585,38 +589,33 @@ object Traversals {
         when(col("node") === lit(source), array().cast("array<long>"))
           .otherwise(array(col("pred"))).as("seg"))
       .localCheckpoint()
-    // checkpoint + active probe fused into one job, here and per
-    // round below
-    val (start, startActiveN) = Fixpoint.checkpointWithCount(
-      dist.select(col("node"), col("cost"), col("node").as("cur"),
-        array(col("node")).as("path")),
-      col("cur") =!= lit(source))
-    var done = List(start.filter(col("cur") === lit(source)))
-    var active = start.filter(col("cur") =!= lit(source))
-    var activeEmpty = startActiveN == 0
-    while (!activeEmpty) {
-      val j = jump
-      val (stepped, activeN) = Fixpoint.checkpointWithCount(
-        active.join(j, active("cur") === j("jn"))
-          .select(col("node"), col("cost"), j("jp").as("cur"),
-            concat(j("seg"), col("path")).as("path"))
-          .toDF("node", "cost", "cur", "path"),
-        col("cur") =!= lit(source))
-      done ::= stepped.filter(col("cur") === lit(source))
-      active = stepped.filter(col("cur") =!= lit(source))
-      activeEmpty = activeN == 0
-      if (!activeEmpty) {
+    // the state is a round's rows, finished (cur = source) and walking
+    // alike; each round's finished rows are kept here as it passes
+    val done = List.newBuilder[DataFrame]
+    val walking = col("cur") =!= lit(source)
+    val (last, _) = Fixpoint.iterate(
+        dist.select(col("node"), col("cost"), col("node").as("cur"),
+          array(col("node")).as("path")),
+        Until.Empty(walking)) { (rows, round) =>
+      done += rows.filter(!walking)
+      if (round > 1) {
         // double the jump table: 2^(k+1) ancestor = 2^k ancestor of
         // the 2^k ancestor; segments concatenate ancestor-side first
-        val j2 = j.select(col("jn").as("jn2"), col("jp").as("jp2"),
+        val j2 = jump.select(col("jn").as("jn2"), col("jp").as("jp2"),
           col("seg").as("seg2"))
-        jump = j.join(j2, j("jp") === col("jn2"))
-          .select(j("jn"), col("jp2").as("jp"),
-            concat(col("seg2"), j("seg")).as("seg"))
+        jump = jump.join(j2, jump("jp") === col("jn2"))
+          .select(jump("jn"), col("jp2").as("jp"),
+            concat(col("seg2"), jump("seg")).as("seg"))
           .toDF("jn", "jp", "seg").localCheckpoint()
       }
+      val active = rows.filter(walking)
+      active.join(jump, active("cur") === jump("jn"))
+        .select(col("node"), col("cost"), jump("jp").as("cur"),
+          concat(jump("seg"), col("path")).as("path"))
+        .toDF("node", "cost", "cur", "path")
     }
-    done.reduce(_ unionAll _)
+    done += last.filter(!walking)
+    done.result().reduce(_ unionAll _)
       .select(col("node"), col("cost"),
         (size(col("path")) - 1).cast("long").as("hops"),
         concat_ws("->", expr("transform(path, x -> cast(x as string))"))

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   *
   * AQE's skew-join splitting (on by default) handles most hot keys at
   * the sort-merge layer; explicit salting remains the tool for extreme
-  * single-key skew (one key = 30% of a 100 TB fact table) or skewed
-  * aggregations, where splitting a partition isn't enough because a
-  * single grouping key must still meet on one reducer.
+  * single-key skew (one key = 30% of a 100 TB fact table), where
+  * splitting a partition isn't enough because every row of the hot key
+  * would still meet on one reducer.
   */
 object Skew {
 
@@ -25,14 +25,4 @@ object Skew {
       explode(sequence(lit(0), lit(salt - 1))))
     bigS.join(smallS, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Two-phase skew-safe aggregation: count per (key, salt) partials
-    * first (spreading a hot key across reducers), then combine.
-    * Equivalent to groupBy(key).count() for any input.
-    */
-  def saltedCount(df: DataFrame, key: String, salt: Int): DataFrame =
-    df.withColumn("_salt",
-        pmod(hash(col(key), monotonically_increasing_id()), lit(salt)))
-      .groupBy(col(key), col("_salt")).agg(count(lit(1)).as("_partial"))
-      .groupBy(col(key)).agg(sum(col("_partial")).as("n"))
 }

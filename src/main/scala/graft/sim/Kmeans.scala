@@ -1,5 +1,7 @@
 package graft.sim
 
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -68,9 +70,8 @@ object Kmeans {
     * (cell, centroid: array<double>). Fixed iteration count (not a
     * convergence probe) so the oracle can unroll it exactly.
     */
-  def fit(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    var cents = seed(emb, k).localCheckpoint()
-    for (_ <- 1 to iters) {
+  def fit(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    Fixpoint.iterate(seed(emb, k).localCheckpoint(), Until.Rounds, iters) { (cents, _) =>
       val asg = assign(emb, cents, k)
       val updated = asg.join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -79,11 +80,8 @@ object Kmeans {
         .groupBy(col("cell"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), x -> x.cv)")
           .as("centroid"))
-      cents = cents.select(col("cell"), col("centroid").as("prev"))
+      cents.select(col("cell"), col("centroid").as("prev"))
         .join(updated, Seq("cell"), "left")
         .select(col("cell"), coalesce(col("centroid"), col("prev")).as("centroid"))
-        .localCheckpoint()
-    }
-    cents
-  }
+    }._1
 }

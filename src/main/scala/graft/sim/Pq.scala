@@ -1,5 +1,7 @@
 package graft.sim
 
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -104,8 +106,7 @@ object Pq {
     */
   def fit(emb: DataFrame): DataFrame = {
     val sl = sliced(emb).localCheckpoint()
-    var cents = seed(emb).localCheckpoint()
-    for (_ <- 1 to ITERS) {
+    Fixpoint.iterate(seed(emb).localCheckpoint(), Until.Rounds, ITERS) { (cents, _) =>
       val asg = assign(sl, cents)
       val updated = asg.join(sl, Seq("vec_id", "m"))
         .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
@@ -114,13 +115,11 @@ object Pq {
         .groupBy(col("m"), col("code"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), x -> x.cv)")
           .as("centroid"))
-      cents = cents.select(col("m"), col("code"), col("centroid").as("prev"))
+      cents.select(col("m"), col("code"), col("centroid").as("prev"))
         .join(updated, Seq("m", "code"), "left")
         .select(col("m"), col("code"),
           coalesce(col("centroid"), col("prev")).as("centroid"))
-        .localCheckpoint()
-    }
-    cents
+    }._1
   }
 
   /** (vec_id, m, code) codes of the whole corpus — the 4-bytes/vector

@@ -1,16 +1,16 @@
-package graft.graph
+package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
-/** The round every data-dependent graph loop shares, written once.
+/** The rounds every iterative loop shares, written once.
   *
-  * A graph loop is Pregel-shaped (GraphX builds the same pattern as one
-  * operator over dataflow joins): a state table, a frontier of rows the
-  * last round changed, one `frontier ⋈ edges` expansion per round, and
-  * a probe that decides whether another round is needed. The three
-  * pieces here own the decisions those loops used to restate by hand:
+  * A loop is Pregel-shaped (GraphX builds the same pattern as one
+  * operator over dataflow joins): a state table, one join round per
+  * iteration, and a probe that decides whether another round is
+  * needed. The pieces here own the decisions those loops used to
+  * restate by hand:
   *   - [[checkpointWithCount]]: truncate the round's lineage and answer
   *     its continue-probe in ONE Spark job;
   *   - [[resident]]: the edge table partitioned on the round's join key
@@ -19,7 +19,11 @@ import org.apache.spark.sql.functions._
   *   - [[frontier]]: the tagged round — the state carries the round a
   *     row last changed in a tag column, so the next frontier is
   *     exactly `tag === round` and its size comes from the same job
-  *     that materializes the state.
+  *     that materializes the state;
+  *   - [[iterate]]: the round of a loop with no frontier — the step
+  *     sees the whole state, and the loop runs a fixed number of
+  *     rounds or stops on a count the round's own checkpoint job takes
+  *     ([[Until]]).
   *
   * On [[frontier]]: `bfsLevels` (and `reachableFrom`, its uncapped
   * form) over an edge table too large to broadcast, `closurePairs`,
@@ -27,20 +31,32 @@ import org.apache.spark.sql.functions._
   * and `labelPropagate` (hash-min with a `min(struct(comp, tag))`
   * merge).
   *
-  * Keep their own bodies:
-  *   - Betweenness' forward pass: ported to `frontier`, the
-  *     union-merged state piles up partitions (measured at sf0.01: g29
-  *     jobs 90 → 91, tasks 122 → 288, shuffle rows +16);
-  *   - `Scc.reach`: ported, the anti-join form's tasks grow with
-  *     hops² and the min-merge form shuffles more (g25 shuffle rows
-  *     975 → 1079 at sf0.01);
-  *   - no frontier at all: fixed-iteration PageRank and LPA,
-  *     ReachSketch's capped bit-OR rounds, the peeling loops (`kCore`,
-  *     `kCoreBipartite`, Scc's trim), Borůvka and the pointer-doubling
-  *     walks (`unfoldPaths`, Scc's chain resolution). Their count
-  *     probes ride [[checkpointWithCount]].
+  * On [[iterate]]:
+  *   - fixed rounds: PageRank (g09, g16), LPA (g27), both Lloyd fits
+  *     (`Kmeans.fit`, `Pq.fit`), Betweenness' backward pass and Scc's
+  *     pointer-doubling walk;
+  *   - count unchanged: `kCoreBipartite` (g12);
+  *   - count zero: `OrderStats`' selection (open ranges),
+  *     ReachSketch's rounds (nodes whose registers grew), Betweenness'
+  *     forward pass (the new level), `unfoldPaths` (walking rows),
+  *     `Scc.reach` (the new hop) and Scc's chain resolution (pending
+  *     chain nodes).
+  * Loops that read older rounds keep those frames themselves:
+  * ReachSketch's per-round registers, Betweenness' levels, the
+  * visited hops of `Scc.reach`, `unfoldPaths`' jump table and
+  * finished walks. Betweenness' forward pass and `Scc.reach` measured
+  * worse on [[frontier]] (its union-merged state piled up partitions:
+  * g29 tasks 122 → 288; g25 shuffle rows 975 → 1079 at sf0.01); on
+  * [[iterate]] their state is the new level or hop alone, the plan
+  * they had by hand.
   *
-  * [[graft.util.Par.broadcastSized]] is the one size test behind
+  * Hand-written still: Scc's peel pass and its FW-BW outer round. A
+  * pass updates four tables (live nodes, labels, the chain
+  * accumulator, bypass edges), continues on either of two probes (trim
+  * progress or a chain found), and takes the chain probe only when
+  * trim stalls; no single state and count describe it.
+  *
+  * [[Par.broadcastSized]] is the one size test behind
   * [[keyedResident]]'s layout, `bfsLevels`' choice of its driver-side
   * path and `GraphStore.put`'s one-file write.
   */
@@ -104,6 +120,69 @@ object Fixpoint {
     (state, round)
   }
 
+  /** When an [[iterate]] loop stops. */
+  sealed abstract class Until
+
+  object Until {
+    /** Exactly `maxRounds` rounds, with no probe. The seed is taken as
+      * given, and each round's state is checkpointed eagerly: one job
+      * that materializes it. Two probed forms measured worse: the lazy
+      * checkpoint of [[checkpointWithCount]] under an always-true probe
+      * planned g29's backward joins into 2 more jobs and 185.5k
+      * shuffled rows against 152.9k (sf0.01), and an always-false probe
+      * materializes nothing — the optimizer folds its filter into an
+      * empty relation, so the count never computes the checkpoint.
+      */
+    case object Rounds extends Until
+
+    /** A rule on the count of state rows matching `probe`, which the
+      * job that checkpoints each round's state takes.
+      */
+    sealed abstract class Counted(val probe: Column) extends Until {
+      private[Fixpoint] def done(previous: Long, count: Long): Boolean
+    }
+
+    /** Until a round's count equals the one before it — a peel, whose
+      * state only shrinks, has then stopped shrinking.
+      */
+    final case class Unchanged(p: Column) extends Counted(p) {
+      private[Fixpoint] def done(previous: Long, count: Long) = count == previous
+    }
+
+    /** Until a round's count is zero. */
+    final case class Empty(p: Column) extends Counted(p) {
+      private[Fixpoint] def done(previous: Long, count: Long) = count == 0
+    }
+  }
+
+  /** Iterate `step(state, round)` from `seed` until `until` holds or
+    * `maxRounds` rounds ran, one job per round. Under a count rule the
+    * seed is checkpointed and probed in one job first, so an
+    * [[Until.Empty]] seed runs no round. Only the current state is
+    * held, so no old checkpoint stays pinned; a loop that reads older
+    * rounds keeps those frames itself. Returns the final state and the
+    * number of rounds run.
+    */
+  private[graft] def iterate(seed: DataFrame, until: Until, maxRounds: Int = Int.MaxValue)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Int) = until match {
+    case Until.Rounds =>
+      require(maxRounds < Int.MaxValue, "a fixed-round loop needs maxRounds")
+      ((1 to maxRounds).foldLeft(seed)((state, round) => step(state, round).localCheckpoint()),
+        maxRounds)
+    case rule: Until.Counted =>
+      var (state, count) = checkpointWithCount(seed, rule.probe)
+      var previous = -1L
+      var round = 0
+      while (round < maxRounds && !rule.done(previous, count)) {
+        round += 1
+        previous = count
+        val (next, n) = checkpointWithCount(step(state, round), rule.probe)
+        state = next
+        count = n
+      }
+      (state, round)
+  }
+
   private val scopes = new java.util.concurrent.atomic.AtomicLong
 
   /** The edge table of one [[resident]] scope. Two measured choices:
@@ -115,9 +194,9 @@ object Fixpoint {
     *     rows); a cached plan keeps both, since AQE may not change a
     *     cached plan's output partitioning;
     *   - size-adaptive, the same runtime-statistics decision AQE makes
-    *     for joins, by the shared size test
-    *     [[graft.util.Par.broadcastSized]]: a table under the broadcast
-    *     threshold is cached as-is and re-broadcast per round
+    *     for joins, by the shared size test [[Par.broadcastSized]]: a
+    *     table under the broadcast threshold is cached as-is and
+    *     re-broadcast per round
     *     (repartitioning it measured +0.1-0.3 s per query on the
     *     25-node nation spine); a larger one is partitioned on `key`
     *     into the session's shuffle-partition count, so each round
@@ -138,7 +217,7 @@ object Fixpoint {
   private def keyedResident(df: DataFrame, key: String): DataFrame = {
     val scope = lit(scopes.incrementAndGet())
     val own = df.where(scope === scope)
-    if (graft.util.Par.broadcastSized(df)) return own.persist()
+    if (Par.broadcastSized(df)) return own.persist()
     // also sorted within partitions: the cached plan's outputOrdering
     // survives (like its partitioning), so a sort-merge round join at
     // the wavefront peak never re-sorts the edge side; one sort at
@@ -146,7 +225,7 @@ object Fixpoint {
     // to AQE: small frontiers convert to broadcast at runtime (the
     // measured local winner — a forced SHUFFLE_HASH was 2.4x slower),
     // big frontiers stay sort-merge against the pre-sorted cache.
-    own.repartition(graft.util.Par.shufflePartitions(df.sparkSession), col(key))
+    own.repartition(Par.shufflePartitions(df.sparkSession), col(key))
       .sortWithinPartitions(key).persist()
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.DoubleOrderBits.orderBits
+import graft.util.Fixpoint.Until
 
 /** Distributed EXACT order statistics (selection) — the scale-safe
   * replacement for `percentile_cont`, whose physical plan buffers
@@ -163,9 +164,10 @@ object OrderStats {
     // holding all of it is both a bottleneck and an OOM point, so it
     // stays spread at ~64k rows/partition (coalesce is a narrow
     // dependency: no shuffle of the state either way). The probe is a
-    // count() in both regimes: exactly one job at any partition count,
-    // where isEmpty degrades to take(1)'s partition-wave escalation on
-    // a spread state.
+    // count in both regimes, taken by the job that checkpoints the
+    // round's state ([[Fixpoint.iterate]]): one job per round at any
+    // partition count, where isEmpty degrades to take(1)'s
+    // partition-wave escalation on a spread state.
     val statePartitions =
       if (broadcastState) 1
       else math.max(1L, math.min(stateRows / 65536L + 1L, 100000L)).toInt
@@ -178,11 +180,8 @@ object OrderStats {
     def spread(df: DataFrame): DataFrame =
       if (statePartitions <= df.rdd.getNumPartitions) df.coalesce(statePartitions)
       else df.repartition(statePartitions)
-    var state = spread(state0).localCheckpoint()
-    var rounds = 0
-    while (state.filter(openCond).count() > 0) {
-      rounds += 1
-      require(rounds <= maxRounds, s"selection exceeded the structural " +
+    val (state, _) = Fixpoint.iterate(spread(state0), Until.Empty(openCond)) { (state, round) =>
+      require(round <= maxRounds, s"selection exceeded the structural " +
         s"round bound ($maxRounds for B=$buckets): bit-space ranges must " +
         "shrink B-fold per round — this indicates a bucket-arithmetic bug, " +
         "not an input property")
@@ -219,7 +218,7 @@ object OrderStats {
         .select(col("gk"), col("rank"), col("bmn").as("lo"),
           col("bmx").as("hi"), (col("t") - col("cum")).as("t"),
           col("bcnt").as("cnt"))
-      state = spread(rest.unionByName(picked)).localCheckpoint()
+      spread(rest.unionByName(picked))
     }
 
     val direct = state.filter(col("lo") === col("hi"))

@@ -1,15 +1,18 @@
 package graft
 
 import graft.SparkJobs.{jobsOf, withConf}
-import graft.graph.{Fixpoint, Traversals}
+import graft.graph.Traversals
+import graft.util.Fixpoint
+import graft.util.Fixpoint.Until
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared loop machinery: one job per frontier round, probes that
-  * carry a SQL execution id, and resident edge tables that belong to
-  * their scope alone and are released however the scope ends.
+/** The shared loop machinery: one job per frontier or iterate round,
+  * probes that carry a SQL execution id, and resident edge tables that
+  * belong to their scope alone and are released however the scope
+  * ends.
   */
 class FixpointSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -54,6 +57,65 @@ class FixpointSpec extends AnyFunSuite {
           assert(reach.collect().map(_.getInt(0)).sorted.toSeq == (src until 10))
         }
       }
+    }
+  }
+
+  test("iterate: one Spark job per round, plus one for the seed under a count rule") {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val seed = spark.range(0, 10, 1, 2).toDF("v")
+      def values(df: DataFrame) = df.collect().map(_.getLong(0)).sorted.toSeq
+
+      // count zero: each round lowers every positive value by one, so
+      // the count of positives reaches 0 after 9 rounds — or the cap
+      for ((cap, rounds) <- Seq((Int.MaxValue, 9), (4, 4))) {
+        val ((out, n), jobs) = jobsOf(Fixpoint.iterate(seed, Until.Empty(col("v") > 0), cap) {
+          (st, _) => st.select(greatest(col("v") - 1, lit(0L)).as("v"))
+        })
+        assert(n == rounds)
+        assert(jobs.size == rounds + 1, s"Empty, cap $cap: ${jobs.size} jobs for $n rounds")
+        assert(values(out) == (0L until 10L).map(v => math.max(v - rounds, 0L)))
+      }
+      // an empty seed runs no round: its probe is the only job
+      val ((_, n0), jobs0) = jobsOf(
+        Fixpoint.iterate(seed.filter(col("v") > 100), Until.Empty(lit(true))) {
+          (_, _) => fail("a round ran on an empty seed")
+        })
+      assert(n0 == 0 && jobs0.size == 1)
+
+      // count unchanged: a peel that stops shrinking at 6 rows; the
+      // round that removes nothing is the last
+      val ((core, nu), jobsU) = jobsOf(Fixpoint.iterate(seed, Until.Unchanged(lit(true))) {
+        (st, r) => st.filter(col("v") < math.max(10 - r, 6))
+      })
+      assert(nu == 5)
+      assert(jobsU.size == nu + 1, s"Unchanged: ${jobsU.size} jobs for $nu rounds")
+      assert(values(core) == (0L until 6L))
+
+      // fixed rounds: the seed is taken as given, so the rounds are
+      // the only jobs
+      val ((fixed, nr), jobsR) = jobsOf(Fixpoint.iterate(seed, Until.Rounds, 3) {
+        (st, _) => st.select((col("v") + 10).as("v"))
+      })
+      assert(nr == 3 && jobsR.size == 3, s"Rounds: ${jobsR.size} jobs for $nr rounds")
+      assert(values(fixed) == (30L until 40L))
+    }
+  }
+
+  test("iterate: a fixed-round loop materializes every round in that round's job") {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val calls = spark.sparkContext.longAccumulator("iterate-calls")
+      val bump = udf((v: Long) => { calls.add(1); v + 1 }).asNondeterministic()
+      val seed = spark.range(0, 20, 1, 4).toDF("v")
+      val ((out, rounds), jobs) = jobsOf(Fixpoint.iterate(seed, Until.Rounds, 5) {
+        (st, _) => st.select(bump(col("v")).as("v"))
+      })
+      assert(rounds == 5 && jobs.size == 5)
+      // every round ran its step over all 20 rows before iterate returned
+      // (a lazy checkpoint that no job computes would leave this at 0) ...
+      assert(calls.value == 20L * 5)
+      // ... and reading the result recomputes none of them
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq == (5L until 25L))
+      assert(calls.value == 20L * 5)
     }
   }
 

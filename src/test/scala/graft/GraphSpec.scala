@@ -135,10 +135,13 @@ class GraphSpec extends AnyFunSuite {
 
   test("adjacency matrix text roundtrip matches G.txt format") {
     val e = edgeDf((0, 1), (1, 2), (2, 0))
-    val text = AdjacencyCodec.toText(AdjacencyCodec.toMatrix(e, 3), 3)
-    assert(text == "3\n0 1 0\n0 0 1\n1 0 0")
-    val back = AdjacencyCodec.fromMatrix(AdjacencyCodec.parseText(spark, text))
-      .orderBy("src", "dst").collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    val path = java.nio.file.Files.createTempDirectory("gtxt").resolve("G1.txt")
+    sources.GraphTextIO.write(e, 3, path.toString)
+    assert(new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+      == "3\n0 1 0\n0 0 1\n1 0 0\n")
+    val back = sources.GraphTextIO.read(spark, path.toString)
+      .select("src", "dst").orderBy("src", "dst")
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
     assert(back == Seq((0, 1), (1, 2), (2, 0)))
   }
 
@@ -305,59 +308,24 @@ class GraphSpec extends AnyFunSuite {
     assert(got.toMap.apply(14L) == 7L)
   }
 
-  test("kCore peels low-degree tails, cascading") {
-    // triangle 0-1-2 with a chain 2-3-4: peeling 4 then 3 leaves the triangle
-    val und = Seq((0, 1), (1, 2), (0, 2), (2, 3), (3, 4))
-    val sym = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val core = Components.kCore(sym, 2).orderBy("node")
-      .collect().map(_.getInt(0)).toSeq
-    assert(core == Seq(0, 1, 2))
-  }
-
-  test("Boruvka spanning forest matches Prim's total cost on the trade graph") {
-    // undirected unique edges with integral cost (min over directions)
-    val e = TradeGraph.symEdges(TradeGraph.edgesTable(spark, "/root/testdata/sf0.001"))
-      .join(TradeGraph.edgesTable(spark, "/root/testdata/sf0.001")
-        .select(col("src").as("s2"), col("dst").as("d2"),
-          (floor(lit(1000000.0) / col("weight")) + 1).cast("long").as("c2")),
-        col("src") === col("s2") && col("dst") === col("d2"))
-      .filter(col("src") < col("dst"))
-      .groupBy(col("src"), col("dst")).agg(min(col("c2")).as("cost"))
-    val nodes = TradeGraph.nodes(spark, "/root/testdata/sf0.001")
-    val forest = Mst.boruvka(nodes, e).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-
-    // reference: in-test Prim over the collected edge list
-    val edges = e.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    val verts = nodes.collect().map(_.getInt(0)).toSet
-    val adj: Map[Int, Seq[(Int, Long)]] =
-      edges.flatMap { case (a, b, c) => Seq(a -> (b, c), b -> (a, c)) }
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    var primCost = 0L
-    var nTreeEdges = 0
-    val seen = scala.collection.mutable.Set.empty[Int]
-    verts.toSeq.sorted.foreach { start =>
-      if (!seen.contains(start)) {
-        seen += start
-        val pq = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
-          Ordering.by[(Long, Int), (Long, Int)](identity).reverse)
-        adj.getOrElse(start, Seq.empty[(Int, Long)]).foreach { case (n, c) => pq.enqueue((c, n)) }
-        while (pq.nonEmpty) {
-          val (c, n) = pq.dequeue()
-          if (!seen.contains(n)) {
-            seen += n; primCost += c; nTreeEdges += 1
-            adj.getOrElse(n, Seq.empty[(Int, Long)]).foreach { case (m, c2) =>
-              if (!seen.contains(m)) pq.enqueue((c2, m))
-            }
-          }
-        }
-      }
+  test("kCoreBipartite peels a pendant chain over several rounds, like a driver-side peel") {
+    // customers c0, c1 and suppliers s0, s1 form a 2-core; the chain
+    // c1-s2-c2-s3-c3-s4 hangs off it and peels one pair per round from
+    // the s4 end (5 rounds), so a loop that stops early keeps some of it
+    val pairs = Seq((0, 0), (0, 1), (1, 0), (1, 1),
+      (1, 2), (2, 2), (2, 3), (3, 3), (3, 4))
+    def peel(ps: Set[(Int, Int)], k: Int): Set[(Int, Int)] = {
+      val dc = ps.toSeq.groupBy(_._1).view.mapValues(_.size).toMap
+      val ds = ps.toSeq.groupBy(_._2).view.mapValues(_.size).toMap
+      val kept = ps.filter { case (c, s) => dc(c) >= k && ds(s) >= k }
+      if (kept == ps) ps else peel(kept, k)
     }
-    // all MSTs of a graph share the same total cost; the forest must
-    // also have exactly V - C edges (spanning, acyclic)
-    assert(forest.map(_._3).sum == primCost)
-    assert(forest.length == nTreeEdges)
-    assert(forest.toSet.subsetOf(edges.toSet))
+    val want = peel(pairs.toSet, 2)
+    assert(want == Set((0, 0), (0, 1), (1, 0), (1, 1)))
+    // duplicate pairs must not inflate degrees
+    val got = Components.kCoreBipartite((pairs :+ ((3, 4))).toDF("cust", "supp"), 2)
+      .select("cust", "supp").collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    assert(got == want)
   }
 
   test("triangle counting on a known graph") {

@@ -1,7 +1,7 @@
 package graft
 
-import graft.graph.AdjacencyCodec
 import graft.functions.VectorFunctions
+import graft.sources.GraphTextIO
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -25,8 +25,9 @@ class PropertySpec extends AnyFunSuite {
       val df =
         if (edges.isEmpty) Seq((0, 0)).toDF("src", "dst").limit(0)
         else edges.toDF("src", "dst")
-      val text = AdjacencyCodec.toText(AdjacencyCodec.toMatrix(df, n), n)
-      val back = AdjacencyCodec.fromMatrix(AdjacencyCodec.parseText(spark, text))
+      val path = s"${java.nio.file.Files.createTempDirectory("gtxt")}/G.txt"
+      GraphTextIO.write(df, n, path)
+      val back = GraphTextIO.read(spark, path).select("src", "dst")
         .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
       assert(back == edges.toSet, s"n=$n edges=$edges")
     }
@@ -90,7 +91,7 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("saltedJoin and saltedCount match their unsalted equivalents on skewed data") {
+  test("saltedJoin matches its unsalted equivalent on skewed data") {
     // 90% of rows share one hot key
     val big = (1 to 2000).map(i => (if (i % 10 == 0) i.toLong else 7L, i)).toDF("k", "v")
     val small = Seq((7L, "hot"), (100L, "cold"), (999L, "unused")).toDF("k", "name")
@@ -99,9 +100,6 @@ class PropertySpec extends AnyFunSuite {
     assert(salted.count() == plain.count())
     assert(salted.agg(sum("v")).collect()(0).getLong(0) ==
       plain.agg(sum("v")).collect()(0).getLong(0))
-    val counts = ops.Skew.saltedCount(big, "k", salt = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(counts(7L) == 1800L)
   }
 
   test("TopKBuffer selection equals sort-take-k under arbitrary insert/merge splits") {

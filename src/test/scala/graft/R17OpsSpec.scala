@@ -99,7 +99,7 @@ class R17OpsSpec extends AnyFunSuite
     import spark.implicits._
     val df = (1 to 1000).map(i => (i.toLong, i % 7)).toDF("id", "m")
       .repartition(8)
-    val (ck, n) = graph.Fixpoint.checkpointWithCount(df, col("m") === 3)
+    val (ck, n) = util.Fixpoint.checkpointWithCount(df, col("m") === 3)
     assert(n == (1 to 1000).count(_ % 7 == 3))
     // lineage is checkpoint-truncated: the returned frame is backed by
     // a LogicalRDD leaf, exactly like the eager localCheckpoint form

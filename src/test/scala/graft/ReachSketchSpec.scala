@@ -1,5 +1,7 @@
 package graft
 
+import graft.SparkJobs.{jobsOf, withConf}
+import graft.graph.ReachSketch
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -80,5 +82,61 @@ class ReachSketchSpec extends AnyFunSuite {
       .toSeq
     assert(rows.nonEmpty, "fixture has no component of size >= 8")
     assertWithinFactor(rows, 3.0)
+  }
+
+  /** Node `w`'s own bit in register `r`: the lowest set bit of the
+    * sketch's two-round Lehmer hash, with bit 30 forced on.
+    */
+  private def ownBit(w: Long, r: Int): Long = {
+    val m = 2147483647L
+    val h1 = 16807L * (w + r * 1000003L + 1) % m
+    val h2 = 48271L * h1 % m
+    1L << java.lang.Long.numberOfTrailingZeros(h2 | (1L << 30))
+  }
+
+  /** Round d's registers per source node, from the exact set of nodes
+    * its walks of 1..d edges reach.
+    */
+  private def expectedFrames(edges: Seq[(Int, Int)]): Seq[Map[Long, Seq[Long]]] = {
+    val succ = edges.groupBy(_._1).view.mapValues(_.map(_._2.toLong).toSet).toMap
+    val reach = Iterator.iterate(succ.map { case (v, s) => v.toLong -> s }) { prev =>
+      succ.map { case (v, s) => v.toLong -> (s ++ s.flatMap(w => prev.getOrElse(w, Set.empty))) }
+    }.take(ReachSketch.Rounds).toSeq
+    reach.map(_.map { case (v, ws) =>
+      v -> (0 until ReachSketch.R).map(r => ws.foldLeft(0L)((acc, w) => acc | ownBit(w, r))) })
+  }
+
+  private def sketchFrames(edges: Seq[(Int, Int)]): (Seq[Map[Long, Seq[Long]]], Int) = {
+    import spark.implicits._
+    val df = edges.toDF("src", "dst").localCheckpoint()
+    // AQE off: then each round is exactly one job
+    val (frames, jobs) = withConf("spark.sql.adaptive.enabled" -> "false") {
+      jobsOf(ReachSketch.sketchRegisterRounds(df))
+    }
+    (frames.map(_.collect().map(r => r.getInt(0).toLong ->
+      (1 to ReachSketch.R).map(r.getLong)).toMap), jobs.size)
+  }
+
+  test("each round-d sketch frame is the bit_or of own bits over the exact <=d-hop reach " +
+      "set: the round cap binds on a 15-vertex path, the early exit fires by round 4") {
+    assert(ReachSketch.Rounds == 10)
+    // 0 -> 1 -> ... -> 14: round 10 still adds a node to every source
+    // below 5, so all nine rounds after the first run
+    val path = (0 until 14).map(i => (i, i + 1))
+    val wantPath = expectedFrames(path)
+    assert(wantPath(9) != wantPath(8), "the path fixture does not grow in round 10")
+    val (gotPath, pathJobs) = sketchFrames(path)
+    assert(gotPath == wantPath)
+    assert(pathJobs == ReachSketch.Rounds, s"$pathJobs jobs on the path")
+
+    // depth 3 from node 0: round 3 is the last that grows, round 4
+    // finds no node grew and ends the loop; frames 5..10 repeat it
+    val tree = Seq((0, 1), (0, 2), (1, 3), (2, 4), (3, 5), (4, 6))
+    val wantTree = expectedFrames(tree)
+    assert(wantTree(2) != wantTree(1), "the tree fixture does not grow in round 3")
+    assert(wantTree.drop(3).forall(_ == wantTree(2)))
+    val (gotTree, treeJobs) = sketchFrames(tree)
+    assert(gotTree == wantTree)
+    assert(treeJobs == 4, s"$treeJobs jobs: the early exit did not fire after round 4")
   }
 }
