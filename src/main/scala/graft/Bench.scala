@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every registered operator at the
   * driver-chosen scale factor and emits one JSON line.
   *
@@ -229,28 +227,9 @@ object Bench {
     // Optional first arg: comma-separated query subset, mirroring
     // Verify's — for dev-side scale runs (e.g. the SF-growing family at
     // sf1). The driver passes no args, so its artifact covers everything.
-    val only: Option[Set[String]] =
-      if (args.nonEmpty) Some(args(0).split(",").map(_.trim).toSet) else None
-    // a typo'd subset must fail loudly, not emit a value:0 artifact
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown quer${if (unknown.size == 1) "y" else "ies"}: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val only = SparkEntry.subset(args.headOption)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep top_k_scored on the object-hash path (its per-key state is
-      // ~16k bytes; the 128-key default would sort-fallback every task)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("spark.sql.adaptive.enabled" -> "true")
     val counters = new CounterListener
     spark.sparkContext.addSparkListener(counters)
     val loadStart = loadavg()

@@ -19,4 +19,36 @@ object SparkEntry {
   /** DuckDB-runnable oracle SQL per query (same parquet tables). */
   def oracleSql: Map[String, String] =
     Registry.all.flatMap(op => op.oracle.map(op.name -> _)).toMap
+
+  /** The mains' optional query subset: a comma-separated list of
+    * registered names. A typo'd name fails loudly instead of running
+    * (and reporting) nothing for it.
+    */
+  private[graft] def subset(arg: Option[String]): Option[Set[String]] = arg.map { a =>
+    val names = a.split(",").map(_.trim).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown quer${if (unknown.size == 1) "y" else "ies"}: " +
+        unknown.toSeq.sorted.mkString(", "))
+    names
+  }
+
+  /** The mains' session: `local[SPARK_GRAFT_CPUS]` (default 4) with one
+    * shuffle partition per core, UTC, no UI, and `extra` confs.
+    */
+  private[graft] def localSession(extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // keep top_k_scored on the object-hash path (its per-key state is
+      // ~16k bytes; the 128-key default would sort-fallback every task)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
+      .config(extra.toMap)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

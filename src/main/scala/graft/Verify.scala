@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,26 +12,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    // a typo'd subset must fail loudly, not write an empty dump
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown quer${if (unknown.size == 1) "y" else "ies"}: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep top_k_scored on the object-hash path (its per-key state is
-      // ~16k bytes; the 128-key default would sort-fallback every task)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = SparkEntry.subset(args.lift(2))
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

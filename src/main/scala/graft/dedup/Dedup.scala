@@ -923,16 +923,22 @@ object Dedup {
     // by the eval set, not the corpus
     val evalGrams = docGrams8(docs.filter(splitNib.isin("e", "f")))
     // train side: the materialized index's corpus-lifetime gram set
-    val train = trainGramIndex(s, dir).grams().withColumn("hit", lit(1L))
-    evalGrams
-      .join(train, Seq("g64"), "left")
+    contamination(evalGrams, trainGramIndex(s, dir).grams()).orderBy(col("doc_id"))
+  }
+
+  /** d13's audit: per doc of `grams` (doc_id, g64), its distinct gram
+    * count, how many of them the `train` gram set (g64) holds, and
+    * their ratio. The streaming decontamination audits each
+    * micro-batch with it.
+    */
+  private[graft] def contamination(grams: DataFrame, train: DataFrame): DataFrame =
+    grams
+      .join(train.withColumn("hit", lit(1L)), Seq("g64"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
       .withColumn("contamination_frac",
         col("n_contaminated").cast("double") / col("n_grams").cast("double"))
-      .orderBy(col("doc_id"))
-  }
 
   private val d13Sql = {
     val toksDuck = "list_filter(string_split(text, ' '), t -> t != '')"

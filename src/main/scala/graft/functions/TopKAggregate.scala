@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{least, lit, when}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -240,4 +241,15 @@ object TopKAggregate {
       TopKScored(ColumnBridge.expression(score),
         ColumnBridge.expression(payload), k,
         distinctPayloads = true).toAggregateExpression())
+
+  /** The KMV distinct-count estimate of a min-k sketch over uniform
+    * 32-bit hashes, as the columns (n_kept, `estName`): `kept` is the
+    * sketch's distinct-hash count and `kth` its k-th smallest hash.
+    * Below k hashes the count is exact; otherwise (k−1)·2³²/(kth+1).
+    */
+  def kmvEstimate(kept: Column, kth: Column, k: Int, estName: String): Seq[Column] = Seq(
+    least(kept.cast("long"), lit(k.toLong)).as("n_kept"),
+    when(kept < k, kept.cast("double"))
+      .otherwise(lit((k - 1).toDouble) * lit(4294967296.0) / (kth.cast("double") + lit(1.0)))
+      .as(estName))
 }

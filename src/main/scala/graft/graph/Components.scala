@@ -109,10 +109,9 @@ object Components {
     */
   /** Directed star-contraction edges of the supplier projection: each
     * customer's suppliers connected through the customer's min
-    * supplier (the g11 contraction; exposed so Profile's decomposition
-    * measures THIS code, not a copy).
+    * supplier (the g11 contraction).
     */
-  private[graft] def supplierStar(pairs: DataFrame): DataFrame = {
+  private def supplierStar(pairs: DataFrame): DataFrame = {
     val minSupp = pairs.groupBy(col("cust")).agg(min(col("supp")).as("msupp"))
     pairs.join(minSupp, Seq("cust"))
       .filter(col("supp") =!= col("msupp"))

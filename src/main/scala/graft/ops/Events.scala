@@ -457,12 +457,8 @@ object Events {
     daily
       .withColumn("u", array_sort(array_distinct(flatten(collect_list(col("sk")).over(w)))))
       .withColumn("nu", size(col("u")).cast("long"))
-      .select(col("event_type"), col("day_idx"),
-        least(col("nu"), lit(rkK.toLong)).as("n_kept"),
-        when(col("nu") < rkK, col("nu").cast("double"))
-          .otherwise(lit((rkK - 1).toDouble) * lit(4294967296.0) /
-            (element_at(col("u"), rkK).cast("double") + lit(1.0)))
-          .as("kmv_est_7d"))
+      .select(Seq(col("event_type"), col("day_idx")) ++ TopKAggregate.kmvEstimate(
+        col("nu"), element_at(col("u"), rkK), rkK, "kmv_est_7d"): _*)
   }
 
   private def e11(s: SparkSession, dir: String): DataFrame = {

@@ -650,12 +650,9 @@ object Olap {
         TopKAggregate.topKScoredDistinct(negate(col("h32").cast("double")), col("h32"), kmvK)
           .as("mins"),
         count(lit(1)).as("n_exact"))
-      .select(col("l_returnflag"), col("n_exact"),
-        least(size(col("mins")).cast("long"), lit(kmvK.toLong)).as("n_kept"),
-        when(size(col("mins")) < kmvK, size(col("mins")).cast("double"))
-          .otherwise(lit((kmvK - 1).toDouble) * lit(4294967296.0) /
-            (element_at(col("mins"), kmvK).getField("payload").cast("double") + lit(1.0)))
-          .as("kmv_est"))
+      .select(Seq(col("l_returnflag"), col("n_exact")) ++ TopKAggregate.kmvEstimate(
+        size(col("mins")), element_at(col("mins"), kmvK).getField("payload"), kmvK,
+        "kmv_est"): _*)
       .orderBy(col("l_returnflag"))
   }
 

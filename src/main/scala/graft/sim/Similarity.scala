@@ -488,7 +488,7 @@ object Similarity {
     * ~p (the corpus' per-bit sign-agreement), so L must grow
     * geometrically (classic LSH L ~ n^ρ) to hold Σ-table recall.
     * Anchors are MEASURED recall@3 vs the exact graph on the real
-    * embeddings (Profile's ann probe / SimilaritySpec):
+    * embeddings (s07 and SimilaritySpec's recall tests):
     * 8/24 → 0.87–0.89 (n=500, both small corpora), 9/32 → 0.873
     * (n=2000), 13/128 → 0.824 (n=20000), 14/192 → 0.832 (n=60000);
     * in-between L values interpolate the same ~1.4×/bit growth.

@@ -147,6 +147,65 @@ object StreamOps {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(processWatermarked)
   }
 
+  /** The one trigger skeleton of the micro-batch streams: an empty
+    * batch is skipped (an idle stream writes no segment and calls no
+    * sink), a non-empty one runs `trigger`, and `after` runs after
+    * every trigger — an index's maintenance cadence
+    * ([[graft.util.SegmentedIndex.maintain]]).
+    */
+  private def eachBatch(in: DataFrame, after: Long => Unit = _ => ())(
+      trigger: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    in.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!batch.isEmpty) trigger(batch.toDF(), batchId)
+        after(batchId)
+      }
+
+  /** [[eachBatch]] for a stream whose triggers go through [[journal]],
+    * with `index`'s maintenance after every trigger: compact after
+    * every `compactEvery`-th trigger, AFTER the sink completes — never
+    * between an append and its emission, and the tag journal survives
+    * compaction — and vacuum to `vacuumKeep` versions after every
+    * trigger. `vacuumKeep` must be 0 (off) or ≥ 2: a crash can land
+    * between a trigger's vacuum and its checkpoint commit, and the
+    * replayed batch's tagged version is then the newest or (past an
+    * interleaved compaction) one behind it.
+    */
+  private def journaled(in: DataFrame, index: graft.util.SegmentedIndex,
+      compactEvery: Int, vacuumKeep: Int)(
+      trigger: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    require(vacuumKeep == 0 || vacuumKeep >= 2,
+      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
+    eachBatch(in, index.maintain(_, compactEvery, vacuumKeep))(trigger)
+  }
+
+  /** The journal of the index-fed streams: the batch with duplicate
+    * `key`s collapsed (one decision per key) and materialized, and its
+    * tag `<kind>_batch_<batchId>_<rows>_<hash>`.
+    *
+    * Contract, AT-LEAST-ONCE to an idempotent sink: a trigger publishes
+    * its tag atomically with its append, and a replayed batch whose tag
+    * is already journaled ([[graft.util.SegmentedIndex.versionTagged]])
+    * recomputes its emission from the tagged version — every decision
+    * input is versioned state — so it re-emits identical rows instead
+    * of re-appending. The tag carries the batch's CONTENT identity (row
+    * count + order-insensitive xor-hash of key AND payload) beside the
+    * batchId: batchId alone collides when a stream restarts with a
+    * fresh checkpoint against the same index (batchIds restart at 0 and
+    * the new batch would be swallowed as a replay), and hashing the
+    * payload means a reset batch that re-crawls known keys with updated
+    * content is not mistaken for one either. A true engine replay
+    * re-delivers the same rows, so it matches.
+    */
+  private def journal(kind: String, batch: DataFrame, batchId: Long,
+      key: String = "doc_id", payload: String = "text"): (DataFrame, String) = {
+    val b = batch.dropDuplicates(key).localCheckpoint()
+    val idRow = b.agg(count(lit(1)),
+      bit_xor(xxhash64(col(key), col(payload)))).head()
+    (b, s"${kind}_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}")
+  }
+
   /** Continuous maintenance of a [[graft.sim.SignLshIndex]] — the
     * daily-crawl ingestion path run as a stream: every micro-batch of
     * newly-crawled vectors (vec_id, embedding) becomes one delta
@@ -156,8 +215,7 @@ object StreamOps {
     * exactly append's first-writer-wins contract: foreachBatch is
     * at-least-once, and a replayed batch's ids are already stored, so
     * the replay degrades to an empty delta and the served graph is
-    * unchanged. Empty triggers are skipped — an idle crawl writes no
-    * segment (and so causes no version churn for vacuum to sweep).
+    * unchanged.
     *
     * @param compactEvery when > 0, run `index.compact()` after every
     *   N-th trigger — the lifecycle cadence that stops per-trigger
@@ -172,12 +230,9 @@ object StreamOps {
     */
   def indexMaintenance(vecs: DataFrame, index: graft.sim.SignLshIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0): DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) index.append(batch.toDF())
-        index.maintain(batchId, compactEvery, vacuumKeep)
-      }
+    eachBatch(vecs, index.maintain(_, compactEvery, vacuumKeep)) { (batch, _) =>
+      index.append(batch)
+    }
 
   /** [[indexMaintenance]] with a live CONSUMER: after every non-empty
     * trigger the refreshed index serves its QUANTIZED top-3 ANN graph
@@ -208,62 +263,35 @@ object StreamOps {
   def indexMaintenanceServed(vecs: DataFrame, index: graft.sim.SignLshIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
       serve: DataFrame => Unit): DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          index.append(batch.toDF())
-          val graph = index.annGraphQuantized()
-          serve(if (compactEvery > 0 || vacuumKeep > 0)
-            graph.localCheckpoint() else graph)
-        }
-        index.maintain(batchId, compactEvery, vacuumKeep)
-      }
+    eachBatch(vecs, index.maintain(_, compactEvery, vacuumKeep)) { (batch, _) =>
+      index.append(batch)
+      val graph = index.annGraphQuantized()
+      serve(if (compactEvery > 0 || vacuumKeep > 0) graph.localCheckpoint() else graph)
+    }
 
-  /** A journaled stream's replay needs its tagged version retained:
-    * vacuum off (0) or keeping at least 2 versions.
-    */
-  private def requireReplaySlack(vacuumKeep: Int): Unit =
-    require(vacuumKeep == 0 || vacuumKeep >= 2,
-      s"vacuumKeep must be 0 (off) or >= 2 (replay-window slack), got $vacuumKeep")
-
-  /** Streaming decontamination against the HISTORICAL gram store —
-    * the third incremental-index streaming driver ([[crawlDedup]]
-    * maintains the MinHash index, [[indexMaintenanceServed]] the ANN
-    * index; this maintains [[graft.dedup.GramIndex]]): each
-    * micro-batch of crawled documents (doc_id, text) is audited
-    * against the PRE-batch train gram set — per doc, how many of its
-    * distinct 8-gram digests the corpus has already seen (d13's
-    * contract; docs with < 8 tokens have no grams and emit no row,
-    * exactly as in d13) — the audit rows flow to `sink`, and the
-    * batch's own new grams are appended as one delta segment so the
-    * NEXT batch is audited against history that includes this one.
-    * Per-trigger reads are O(batch + bloom sidecars): the append's
-    * membership probe is bloom-pruned ([[graft.dedup.GramIndex
-    * .knownGrams]]), and the audit join reads the stored gram
-    * segments by path, never re-shingling old documents.
+  /** Streaming decontamination against the HISTORICAL gram store,
+    * maintaining [[graft.dedup.GramIndex]]: each micro-batch of crawled
+    * documents (doc_id, text) is audited against the PRE-batch train
+    * gram set with d13's audit ([[graft.dedup.Dedup.contamination]]:
+    * per doc, how many of its distinct 8-gram digests the corpus has
+    * already seen; docs with < 8 tokens emit no row), the audit rows
+    * flow to `sink`, and the batch's own new grams are appended as one
+    * delta segment so the NEXT batch is audited against history that
+    * includes this one. Per-trigger reads are O(batch + bloom
+    * sidecars): the append's membership probe is bloom-pruned
+    * ([[graft.dedup.GramIndex.knownGrams]]), and the audit join reads
+    * the stored gram segments by path, never re-shingling old
+    * documents.
     *
-    * Restart-safe, AT-LEAST-ONCE to an idempotent sink, the
-    * [[crawlDedup]] journal contract: the batch's content-identity
-    * tag is published atomically with its append, and a replayed
-    * batch whose tag is already journaled re-audits the SAME rows
-    * against [[graft.dedup.GramIndex.gramsBefore]] of the tagged
-    * version — every decision input is versioned state — and
-    * re-emits the identical audit instead of re-appending (or worse,
-    * auditing its own grams as "contamination"). An idle trigger
-    * appends nothing and emits nothing.
+    * Replay ([[journal]]): re-audits the same rows against
+    * [[graft.dedup.GramIndex.gramsBefore]] of the tagged version
+    * instead of re-appending (or worse, auditing its own grams as
+    * "contamination").
     */
   def decontamStream(docs: DataFrame, index: graft.dedup.GramIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    requireReplaySlack(vacuumKeep)
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) decontamBatch(index, batch.toDF(), batchId)(sink)
-        index.maintain(batchId, compactEvery, vacuumKeep)
-      }
-  }
+      sink: DataFrame => Unit): DataStreamWriter[Row] =
+    journaled(docs, index, compactEvery, vacuumKeep)(decontamBatch(index, _, _)(sink))
 
   /** One [[decontamStream]] trigger — factored out so the replay path
     * is directly testable (StreamingSpec drives it with a repeated
@@ -271,38 +299,19 @@ object StreamOps {
     */
   private[graft] def decontamBatch(index: graft.dedup.GramIndex,
       batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = {
-    val b = batch.dropDuplicates("doc_id").localCheckpoint()
-    // content-identity tag: batchId alone collides across checkpoint
-    // resets (see crawlDedupBatch), and the hash must cover the TEXT,
-    // not just doc_id — a reset batch that re-crawls the same ids
-    // with updated text would otherwise match the old tag, be
-    // swallowed as a replay, and its new grams never enter the store
-    val idRow = b.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id"), col("text")))).head()
-    val tag = s"decontam_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}"
+    val (b, tag) = journal("decontam", batch, batchId)
     val v = index.versionTagged(tag).getOrElse(
       index.append(b.select(col("doc_id"), col("text")), Some(tag)))
-    // audit against the PRE-batch gram set — versioned, so a replay
-    // (append journaled, sink never ran) recomputes identical rows
-    val train = index.gramsBefore(v).withColumn("hit", lit(1L))
-    sink(graft.dedup.Dedup.docGrams8(b)
-      .join(train, Seq("g64"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
-      .withColumn("contamination_frac",
-        col("n_contaminated").cast("double") / col("n_grams").cast("double")))
+    sink(graft.dedup.Dedup.contamination(graft.dedup.Dedup.docGrams8(b), index.gramsBefore(v)))
   }
 
-  /** Streaming duplicated-span EXCISION against the HISTORICAL corpus
-    * — the fourth incremental-index streaming driver, maintaining
-    * [[graft.text.WinnowIndex]]: each micro-batch of crawled documents
-    * (doc_id, text) is audited t16-style — a winnowing window is
-    * flagged when its fingerprint's holder count across (pre-batch
-    * history + this batch's fresh docs) is ≥ 2, flagged windows merge
-    * into maximal spans, and the batch's per-doc excision rows
-    * (doc_id, tokens_before, tokens_removed, tokens_after, n_spans,
-    * cleaned_text — exactly t16's columns) flow to `sink`; then the
+  /** Streaming duplicated-span EXCISION against the HISTORICAL corpus,
+    * maintaining [[graft.text.WinnowIndex]]: each micro-batch of
+    * crawled documents (doc_id, text) is audited t16-style — a
+    * winnowing window is flagged when its fingerprint's holder count
+    * across (pre-batch history + this batch's fresh docs) is ≥ 2,
+    * flagged windows merge into maximal spans, and the batch's per-doc
+    * excision rows (exactly t16's columns) flow to `sink`; then the
     * fresh docs' census delta is appended so the NEXT batch sees this
     * one as history. Per-trigger reads are O(batch + bloom sidecars):
     * the historical census probe is bloom-pruned per fingerprint
@@ -311,48 +320,28 @@ object StreamOps {
     *
     * Streaming semantics, stated honestly: a doc is cleaned against
     * duplication KNOWN AT ITS ARRIVAL — an earlier doc is not
-    * re-excised when a later crawl repeats its spans (the crawlDedup
-    * rule: history is immutable). A single-batch ingest of a whole
-    * corpus therefore equals batch t16 exactly (StreamingSpec pins
-    * this), and a later batch repeating an earlier batch's span is
-    * excised on arrival.
+    * re-excised when a later crawl repeats its spans (history is
+    * immutable). A single-batch ingest of a whole corpus therefore
+    * equals batch t16 exactly, and a later batch repeating an earlier
+    * batch's span is excised on arrival.
     *
-    * Restart-safe, AT-LEAST-ONCE to an idempotent sink — the shared
-    * journal contract: the batch's content-identity tag publishes
-    * atomically with its append; a replayed batch recomputes its
-    * fresh set from the tagged version's OWN delta
-    * ([[graft.text.WinnowIndex.idsAddedAt]]) and audits against
-    * [[graft.text.WinnowIndex.censusBefore]] of that version — every
-    * decision input is versioned — so it re-emits identical rows
-    * instead of re-appending (or auditing itself as duplication).
-    * Duplicate in-trigger doc_ids collapse first; an idle trigger
-    * appends nothing and emits nothing.
+    * Replay ([[journal]]): recovers the fresh set from the tagged
+    * version's OWN delta ([[graft.text.WinnowIndex.idsAddedAt]]) and
+    * audits against [[graft.text.WinnowIndex.censusBefore]] of that
+    * version, so it never audits itself as duplication.
     */
   def spanDedupStream(docs: DataFrame, index: graft.text.WinnowIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    requireReplaySlack(vacuumKeep)
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) spanDedupBatch(index, batch.toDF(), batchId)(sink)
-        index.maintain(batchId, compactEvery, vacuumKeep)
-      }
-  }
+      sink: DataFrame => Unit): DataStreamWriter[Row] =
+    journaled(docs, index, compactEvery, vacuumKeep)(spanDedupBatch(index, _, _)(sink))
 
   /** One [[spanDedupStream]] trigger — factored out so the replay path
-    * is directly testable (StreamingSpec drives it with a repeated
+    * is directly testable (WinnowIndexSpec drives it with a repeated
     * batchId to simulate the crash between append and sink).
     */
   private[graft] def spanDedupBatch(index: graft.text.WinnowIndex,
       batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = {
-    val b = batch.dropDuplicates("doc_id").localCheckpoint()
-    // content-identity tag — covers TEXT, not just ids (the
-    // decontamBatch rule: a checkpoint-reset batch re-crawling the
-    // same ids with new text must not be swallowed as a replay)
-    val idRow = b.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id"), col("text")))).head()
-    val tag = s"spandedup_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}"
+    val (b, tag) = journal("spandedup", batch, batchId)
     // the audited set is the batch's FRESH docs; the batch is shingled
     // exactly ONCE — the same localCheckpointed window table feeds the
     // index append (its census delta) and the duplication audit below.
@@ -385,62 +374,44 @@ object StreamOps {
     sink(graft.text.TextOps.exciseSpans(docsToks, marked))
   }
 
-  /** Streaming LM coherence scoring at ingest — the SIXTH incremental-
-    * index streaming driver, maintaining [[graft.text.BigramLmIndex]]:
-    * each micro-batch of crawled documents (doc_id, text) is scored
-    * t20-style — per doc, mean/max inverse conditional bigram
-    * probability against the census as of ARRIVAL (pre-batch history
-    * plus the batch's own fresh docs, t20's self-inclusive census, so
-    * every ratio is well-defined with no smoothing) — and the batch's
-    * census delta is appended so the NEXT batch sees this one as
-    * history. Emitted rows are exactly t20's columns (doc_id,
-    * n_bigrams, surprise, max_surprise). Per-trigger reads are
-    * O(batch + bloom sidecars): both count probes are bloom-pruned
-    * partial sums ([[graft.text.BigramLmIndex.censusAtFor]]/
+  /** Streaming LM coherence scoring at ingest, maintaining
+    * [[graft.text.BigramLmIndex]]: each micro-batch of crawled
+    * documents (doc_id, text) is scored with t20's per-doc aggregate
+    * ([[graft.text.TextOps.surprise]]) against the census as of
+    * ARRIVAL (pre-batch history plus the batch's own fresh docs, t20's
+    * self-inclusive census, so every ratio is well-defined with no
+    * smoothing), and the batch's census delta is appended so the NEXT
+    * batch sees this one as history. Per-trigger reads are O(batch +
+    * bloom sidecars): both count probes are bloom-pruned partial sums
+    * ([[graft.text.BigramLmIndex.censusAtFor]]/
     * [[graft.text.BigramLmIndex.leftsAtFor]]) and id freshness runs
     * through per-segment id blooms; only the batch is tokenized.
     *
     * Streaming semantics, stated honestly: a doc is scored against the
     * distribution KNOWN AT ITS ARRIVAL and never re-scored as later
-    * crawls shift it (the crawlDedup rule: history is immutable) — a
-    * single-batch ingest of a whole corpus therefore equals batch t20
-    * exactly (StreamingSpec pins it bit-for-bit), and the per-batch
+    * crawls shift it — a single-batch ingest of a whole corpus
+    * therefore equals batch t20 exactly, and the per-batch
     * mean-surprise trajectory is the live domain-drift signal.
     *
-    * Restart-safe, AT-LEAST-ONCE to an idempotent sink — the shared
-    * journal contract: the content-identity tag publishes atomically
-    * with the append; a replayed batch recovers its fresh set from the
-    * tagged version's own delta ([[graft.text.BigramLmIndex.idsAddedAt]])
-    * and probes the census AS OF that version — every decision input
-    * is versioned — so it re-emits identical rows instead of
-    * re-appending (counts are occurrences: an unguarded replay would
-    * double them). Duplicate in-trigger doc_ids collapse first; an
-    * idle trigger appends nothing and emits nothing. The index must be
+    * Replay ([[journal]]): recovers the fresh set from the tagged
+    * version's own delta ([[graft.text.BigramLmIndex.idsAddedAt]]) and
+    * probes the census AS OF that version (counts are occurrences: an
+    * unguarded replay would double them). The index must be
     * [[graft.text.BigramLmIndex.build]]-published first (an empty
     * build is the cold-start form).
     */
   def lmScoreStream(docs: DataFrame, index: graft.text.BigramLmIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    requireReplaySlack(vacuumKeep)
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) lmScoreBatch(index, batch.toDF(), batchId)(sink)
-        index.maintain(batchId, compactEvery, vacuumKeep)
-      }
-  }
+      sink: DataFrame => Unit): DataStreamWriter[Row] =
+    journaled(docs, index, compactEvery, vacuumKeep)(lmScoreBatch(index, _, _)(sink))
 
   /** One [[lmScoreStream]] trigger — factored out so the replay path is
-    * directly testable (StreamingSpec drives it with a repeated batchId
-    * to simulate the crash between append and sink).
+    * directly testable (BigramLmIndexSpec drives it with a repeated
+    * batchId to simulate the crash between append and sink).
     */
   private[graft] def lmScoreBatch(index: graft.text.BigramLmIndex,
       batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = {
-    val b = batch.dropDuplicates("doc_id").localCheckpoint()
-    val idRow = b.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id"), col("text")))).head()
-    val tag = s"lmscore_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}"
+    val (b, tag) = journal("lmscore", batch, batchId)
     // the scored set is the batch's FRESH docs, tokenized exactly ONCE —
     // the same localCheckpointed bigram stream feeds the index append
     // (its census delta) and the scoring joins below
@@ -459,15 +430,10 @@ object StreamOps {
     val c1 = index.leftsAtFor(v,
         big.select(expr("split_part(bigram, ' ', 1)").as("w1")))
       .withColumnRenamed("c", "c1")
-    val ratio = col("c1").cast("double") / col("c12").cast("double")
-    sink(big
+    sink(graft.text.TextOps.surprise(big
       .withColumn("w1", expr("split_part(bigram, ' ', 1)"))
       .join(c12.hint("SHUFFLE_HASH"), Seq("bigram"))
-      .join(c1.hint("SHUFFLE_HASH"), Seq("w1"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        (graft.par.dsum(ratio, 6) / count(lit(1))).as("surprise"),
-        max(ratio).as("max_surprise")))
+      .join(c1.hint("SHUFFLE_HASH"), Seq("w1"))))
   }
 
   /** Streaming quality filtering at ingest — t21's deployment shape:
@@ -490,11 +456,7 @@ object StreamOps {
     */
   def qualityScoreStream(docs: DataFrame, weights: Array[Double])(
       sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) qualityScoreBatch(batch.toDF(), weights)(sink)
-      }
+    eachBatch(docs)((batch, _) => qualityScoreBatch(batch, weights)(sink))
 
   /** One [[qualityScoreStream]] trigger, factored for direct spec
     * drive (the lmScoreBatch pattern).
@@ -525,44 +487,57 @@ object StreamOps {
     * stricter signature-similarity verification composes downstream
     * of the candidate filter, exactly as in the batch pipeline.
     *
-    * Restart-safe, AT-LEAST-ONCE to an idempotent sink. The batch's
-    * index version is journaled with a batchId + content-identity tag
-    * atomically with the append, so the crash window between append
-    * and sink is closed: a replayed batch whose tag is already published
-    * recomputes its survivor set from the stored delta (same rows —
-    * the decision inputs are all versioned) and re-emits it, instead
-    * of silently dropping the batch's survivors because its ids are
-    * "already seen". Duplicate doc_ids WITHIN a trigger are collapsed
-    * before any decision (two copies of one id would otherwise both
-    * survive the drop rule — the (a,a) self-pair is excluded — and
-    * violate the index's one-row-per-doc_id invariant). An idle
-    * trigger writes no segment and calls no sink; a batch with no
-    * fresh ids (all ingested by EARLIER batches) appends nothing and
-    * emits nothing.
-    *
-    * @param compactEvery when > 0, compact the index after every N-th
-    *   trigger, AFTER the sink completes — never between an append
-    *   and its emission, so the replay contract is untouched (and
-    *   [[graft.dedup.MinHashIndex.versionTagged]] finds a batch's
-    *   journal entry across compaction versions regardless).
-    * @param vacuumKeep when > 0 (must be ≥ 2), vacuum after every
-    *   trigger — bounds version-history metadata (and so
-    *   `versionTagged`'s scan) on a stream that adds a version per
-    *   trigger. ≥ 2 because a crash can land between a trigger's
-    *   vacuum and its checkpoint commit: the replayed batch's tagged
-    *   version is then the newest or (past an interleaved compaction)
-    *   one behind it, and vacuuming it away would break re-emission.
+    * Replay ([[journal]]): recomputes the survivor set from the stored
+    * delta and re-emits it, instead of silently dropping the batch's
+    * survivors because its ids are "already seen". Duplicate doc_ids
+    * WITHIN a trigger must collapse first: two copies of one id would
+    * otherwise both survive the drop rule (the (a,a) self-pair is
+    * excluded) and violate the index's one-row-per-doc_id invariant.
+    * A batch with no fresh ids (all ingested by EARLIER batches)
+    * appends nothing and emits nothing.
     */
   def crawlDedup(docs: DataFrame, index: graft.dedup.MinHashIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    requireReplaySlack(vacuumKeep)
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) crawlDedupBatch(index, batch.toDF(), batchId)(sink)
-        index.maintain(batchId, compactEvery, vacuumKeep)
+      sink: DataFrame => Unit): DataStreamWriter[Row] =
+    journaled(docs, index, compactEvery, vacuumKeep)(crawlDedupBatch(index, _, _)(sink))
+
+  /** One [[crawlDedup]] trigger — factored out so the replay path is
+    * directly testable (StreamingSpec drives it with a repeated
+    * batchId to simulate the crash-between-append-and-sink window).
+    */
+  private[graft] def crawlDedupBatch(index: graft.dedup.MinHashIndex,
+      batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = {
+    val (b, tag) = journal("crawl", batch, batchId)
+    // a reset batch re-crawling known ids with new text is no replay: it
+    // takes the fresh path, where the doc_id-keyed index drops it
+    val appendedV = index.versionTagged(tag).orElse {
+      val fresh = b.join(index.knownIds(b.select(col("doc_id"))),
+        Seq("doc_id"), "left_anti").localCheckpoint()
+      if (fresh.isEmpty) None
+      else {
+        // appendFresh: the membership probe above is the trigger's one
+        // — b is already id-deduped, so fresh meets its contract
+        Some(index.appendFresh(fresh, Some(tag)))
       }
+    }
+    appendedV.foreach { v =>
+      // every decision input below is versioned state, so a replay
+      // recomputes the identical survivor set
+      val freshIds = index.idsAddedAt(v).localCheckpoint()
+      val delta = index.candidatesAddedAt(v)
+      val fb = freshIds.withColumnRenamed("doc_id", "doc_b")
+      // pair (a < b), ≥1 endpoint fresh by segment disjointness:
+      // b fresh -> b drops (if a is old, b dups history; if both
+      // fresh, the min id a stays as the canonical representative);
+      // b old -> a is fresh and dups history
+      val drops = delta.join(fb, Seq("doc_b"), "left_semi")
+          .select(col("doc_b").as("doc_id"))
+        .unionAll(delta.join(fb, Seq("doc_b"), "left_anti")
+          .select(col("doc_a").as("doc_id")))
+        .distinct()
+      sink(b.join(freshIds, Seq("doc_id"), "left_semi")
+        .join(drops, Seq("doc_id"), "left_anti"))
+    }
   }
 
   /** Streaming IVFADC ingest: each micro-batch of crawled embeddings
@@ -572,38 +547,21 @@ object StreamOps {
     * corpus is never touched, let alone re-encoded), and the batch's
     * fresh (vec_id, cell) assignments flow to `sink` — the live
     * maintenance path for the code store the s12/s13 serving layout
-    * reads, completing the incremental-index family's streaming
-    * coverage at five. Model staleness accrues visibly: each segment
-    * carries its reconstruction-error stats, so
+    * reads. Model staleness accrues visibly: each segment carries its
+    * reconstruction-error stats, so
     * [[graft.sim.PqIndex.reconstructionDrift]] after any trigger
     * reports how far the crawl has drifted from the frozen codebooks.
     *
-    * Restart-safe, AT-LEAST-ONCE to an idempotent sink — the shared
-    * journal contract of the sibling streams: the batch's
-    * content-identity tag (covers vec_id AND embedding bits, the
-    * decontamBatch rule) publishes atomically with its append, and a
-    * replayed batch re-emits the tagged version's own delta
+    * Replay ([[journal]], keyed by vec_id, hashing the embedding
+    * bits): re-emits the tagged version's own delta
     * ([[graft.sim.PqIndex.cellsAddedAt]]) instead of re-appending.
-    * Duplicate in-trigger vec_ids collapse first; cross-batch repeats
-    * are first-writer-wins (empty delta, empty emission).
-    *
-    * @param compactEvery when > 0, compact after every N-th trigger,
-    *   AFTER the sink completes (the tag journal survives compaction
-    *   — versionTagged scans all retained versions).
-    * @param vacuumKeep when > 0 (must be ≥ 2 — the replay-window
-    *   slack), vacuum after every trigger.
+    * Cross-batch repeats are first-writer-wins (empty delta, empty
+    * emission).
     */
   def pqIngestStream(vecs: DataFrame, index: graft.sim.PqIndex,
       compactEvery: Int = 0, vacuumKeep: Int = 0)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] = {
-    requireReplaySlack(vacuumKeep)
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) pqIngestBatch(index, batch.toDF(), batchId)(sink)
-        index.maintain(batchId, compactEvery, vacuumKeep)
-      }
-  }
+      sink: DataFrame => Unit): DataStreamWriter[Row] =
+    journaled(vecs, index, compactEvery, vacuumKeep)(pqIngestBatch(index, _, _)(sink))
 
   /** One [[pqIngestStream]] trigger — factored out so the replay path
     * is directly testable (the spec drives it with a repeated batchId
@@ -611,10 +569,7 @@ object StreamOps {
     */
   private[graft] def pqIngestBatch(index: graft.sim.PqIndex,
       batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = {
-    val b = batch.dropDuplicates("vec_id").localCheckpoint()
-    val idRow = b.agg(count(lit(1)),
-      bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
-    val tag = s"pqingest_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}"
+    val (b, tag) = journal("pqingest", batch, batchId, "vec_id", "embedding")
     val v = index.versionTagged(tag).getOrElse(
       index.append(b.select(col("vec_id"), col("embedding")), Some(tag)))
     sink(index.cellsAddedAt(v))
@@ -661,12 +616,9 @@ object StreamOps {
     keys.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.TopKAggregate.topKScoredDistinct(
         negate(col(keyCol).cast("double")), col(keyCol), k).as("mins"))
-      .select(groupCols.map(col) ++ Seq(
-        least(size(col("mins")).cast("long"), lit(k.toLong)).as("n_kept"),
-        when(size(col("mins")) < k, size(col("mins")).cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(4294967296.0) /
-            (element_at(col("mins"), k).getField("payload").cast("double") + lit(1.0)))
-          .as("kmv_est")): _*)
+      .select(groupCols.map(col) ++ graft.functions.TopKAggregate.kmvEstimate(
+        size(col("mins")), element_at(col("mins"), k).getField("payload"), k,
+        "kmv_est"): _*)
 
   /** Watermarked 7-day ROLLING distinct-count sketch per event type —
     * the streaming face of the batch e11/e12 rolling distinct, and the
@@ -717,70 +669,9 @@ object StreamOps {
           negate(col("h32").cast("double")), col("h32"), k).as("mins"),
         max(col("is_anchor")).as("anchored"))
       .filter(col("anchored") === 1)
-      .select(col("event_type"),
-        date_format(col("wts"), "yyyy-MM-dd").as("day"),
-        least(size(col("mins")).cast("long"), lit(k.toLong)).as("n_kept"),
-        when(size(col("mins")) < k, size(col("mins")).cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(4294967296.0) /
-            (element_at(col("mins"), k).getField("payload").cast("double") + lit(1.0)))
-          .as("kmv_est_7d"))
-  }
-
-  /** One [[crawlDedup]] trigger — factored out so the replay path is
-    * directly testable (StreamingSpec drives it with a repeated
-    * batchId to simulate the crash-between-append-and-sink window).
-    */
-  private[graft] def crawlDedupBatch(index: graft.dedup.MinHashIndex,
-      batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = {
-    val b = batch.dropDuplicates("doc_id").localCheckpoint()
-    // The journal tag carries the batch's CONTENT identity (row count
-    // + order-insensitive xor-hash of doc_id AND text) alongside the
-    // batchId: batchId alone collides when a stream restarts with a
-    // fresh checkpoint against the same index — batchIds restart at
-    // 0, the old run's "batch 0" tag matches, and the brand-new batch
-    // would be silently swallowed as a replay. Hashing the text too
-    // means a reset batch that re-crawls known ids with UPDATED text
-    // is also not mistaken for a replay (it then takes the fresh
-    // path, where id-level dedup drops it — the index is doc_id-
-    // keyed — rather than re-emitting the stale survivor set). A
-    // true engine replay re-delivers the same rows, so it matches.
-    val idRow = b.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id"), col("text")))).head()
-    val tag = s"crawl_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}"
-    // Replay detection: batches commit in order, so a replayed batch's
-    // append — if it happened at all — is at or near the newest
-    // version; versionTagged scans retained versions newest-first
-    // (tiny manifest reads, count bounded by vacuum retention) so a
-    // maintenance compaction published in between cannot hide it.
-    val replayed = index.versionTagged(tag)
-    val appendedV = replayed.orElse {
-      val fresh = b.join(index.knownIds(b.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti").localCheckpoint()
-      if (fresh.isEmpty) None
-      else {
-        // appendFresh: the membership probe above is the trigger's one
-        // — b is already id-deduped, so fresh meets its contract
-        Some(index.appendFresh(fresh, Some(tag)))
-      }
-    }
-    appendedV.foreach { v =>
-      // every decision input below is versioned state, so a replay
-      // recomputes the identical survivor set
-      val freshIds = index.idsAddedAt(v).localCheckpoint()
-      val delta = index.candidatesAddedAt(v)
-      val fb = freshIds.withColumnRenamed("doc_id", "doc_b")
-      // pair (a < b), ≥1 endpoint fresh by segment disjointness:
-      // b fresh -> b drops (if a is old, b dups history; if both
-      // fresh, the min id a stays as the canonical representative);
-      // b old -> a is fresh and dups history
-      val drops = delta.join(fb, Seq("doc_b"), "left_semi")
-          .select(col("doc_b").as("doc_id"))
-        .unionAll(delta.join(fb, Seq("doc_b"), "left_anti")
-          .select(col("doc_a").as("doc_id")))
-        .distinct()
-      sink(b.join(freshIds, Seq("doc_id"), "left_semi")
-        .join(drops, Seq("doc_id"), "left_anti"))
-    }
+      .select(Seq(col("event_type"), date_format(col("wts"), "yyyy-MM-dd").as("day")) ++
+        graft.functions.TopKAggregate.kmvEstimate(size(col("mins")),
+          element_at(col("mins"), k).getField("payload"), k, "kmv_est_7d"): _*)
   }
 
   private def emitSorted(user: Long, last0: Option[TLast],
@@ -824,22 +715,13 @@ object StreamOps {
 
   private[streaming] def processTransitions(user: Long, events: Iterator[TEvent],
       state: GroupState[TLast]): Iterator[Transition] = {
-    val sorted = events.toArray.sortBy(e => (e.es, e.event_id))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-    var last = state.getOption.orNull
-    sorted.foreach { e =>
-      // Late events (es older than the saved state) are dropped: with
-      // no watermark to bound disorder, emitting them would produce a
-      // time-reversed transition and regress the state to an older
-      // event — an output the batch e08 (which sorts globally per
-      // user) can never produce. Dropping keeps the per-user output a
-      // subsequence of the batch answer under any arrival order.
-      if (last == null || e.es >= last.es) {
-        if (last != null) out += Transition(user, last.event_type, e.event_type)
-        last = TLast(e.es, e.event_type)
-      }
-    }
-    if (last != null) state.update(last)
+    // emitSorted drops late events (es older than the saved state):
+    // with no watermark to bound disorder, emitting them would produce
+    // a time-reversed transition and regress the state to an older
+    // event — an output the batch e08 (which sorts globally per user)
+    // can never produce
+    val (out, last) = emitSorted(user, state.getOption, events.toSeq)
+    last.foreach(state.update)
     out.iterator
   }
 

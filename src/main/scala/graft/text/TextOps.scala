@@ -945,15 +945,21 @@ object TextOps {
       .withColumn("w1", expr("split_part(bigram, ' ', 1)"))
       .join(c1.hint("SHUFFLE_HASH"), Seq("w1"))
       .select(col("bigram"), col("c12"), col("c1"))
+    surprise(big.join(probs.hint("SHUFFLE_HASH"), Seq("bigram")))
+      .orderBy(col("doc_id"))
+  }
+
+  /** t20's per-doc score over a bigram stream carrying its counts
+    * (doc_id, c12, c1): n_bigrams, and the mean and max of the inverse
+    * conditional probability c1/c12. The streaming LM scorer scores
+    * each micro-batch with it.
+    */
+  private[graft] def surprise(counted: DataFrame): DataFrame = {
     val ratio = col("c1").cast("double") / col("c12").cast("double")
-    big.join(probs.hint("SHUFFLE_HASH"), Seq("bigram"))
-      .groupBy(col("doc_id"))
+    counted.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         (graft.par.dsum(ratio, 6) / count(lit(1))).as("surprise"),
         max(ratio).as("max_surprise"))
-      .select(col("doc_id"), col("n_bigrams"), col("surprise"),
-        col("max_surprise"))
-      .orderBy(col("doc_id"))
   }
 
   private val t20Sql = s"""

@@ -139,4 +139,19 @@ class ReachSketchSpec extends AnyFunSuite {
     assert(gotTree == wantTree)
     assert(treeJobs == 4, s"$treeJobs jobs: the early exit did not fire after round 4")
   }
+
+  test("a last growing round that adds a single bit still counts as growth: " +
+      "the loop runs the round after it") {
+    // 0 -> {1, 2, 3} and 3 -> 25: round 2 adds node 25 to node 0's
+    // reach, and all but one of 25's own bits are already set there
+    val star = Seq((0, 1), (0, 2), (0, 3), (3, 25))
+    val want = expectedFrames(star)
+    def bitCount(f: Map[Long, Seq[Long]]) =
+      f.valuesIterator.flatten.map(java.lang.Long.bitCount).sum
+    assert(bitCount(want(1)) - bitCount(want(0)) == 1, "round 2 does not add exactly one bit")
+    assert(want.drop(2).forall(_ == want(1)), "round 2 is not the last growing round")
+    val (got, jobs) = sketchFrames(star)
+    assert(got == want)
+    assert(jobs == 3, s"$jobs jobs: round 2's one-bit growth did not run round 3")
+  }
 }

@@ -892,4 +892,67 @@ class StreamingSpec extends AnyFunSuite {
     assert(idx.grams().collect().map(_.getString(0)).toSet ==
       rebuilt.grams().collect().map(_.getString(0)).toSet)
   }
+
+  test("decontam, span-dedup, LM-score and quality streams emit their *Batch twins' rows " +
+      "per trigger; an empty trigger emits nothing") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.dedup.GramIndex
+    import graft.text.{BigramLmIndex, WinnowIndex}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.DataStreamWriter
+    type Sink = DataFrame => Unit
+    // 10-token docs; every third one is the same boilerplate, so audits,
+    // excisions and bigram counts see repeats within and across batches
+    def doc(id: Long): (Long, String) = (id, (0 until 10)
+      .map(t => if (id % 3 == 0) s"common$t" else s"d${id}t$t").mkString(" "))
+    val batches = Seq((0L until 4L).map(doc), (4L until 8L).map(doc) :+ doc(1L))
+    def docsDf(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+
+    // the two batches, then an empty one, through a MemoryStream
+    def streamed(start: (DataFrame, Sink) => DataStreamWriter[Row]): Seq[Seq[Row]] = {
+      val in = MemoryStream[(Long, String)]
+      val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Row]]
+      val q = start(in.toDF().toDF("doc_id", "text"), df => out += sorted(df)).start()
+      try {
+        (batches :+ Seq.empty).foreach { b => in.addData(b); q.processAllAvailable() }
+        assert(q.lastProgress.batchId == 2L, "the empty batch did not trigger")
+      } finally q.stop()
+      out.toSeq
+    }
+    def twins(run: (DataFrame, Long, Sink) => Unit): Seq[Seq[Row]] =
+      batches.zipWithIndex.map { case (b, i) =>
+        var got = Seq.empty[Row]
+        run(docsDf(b), i.toLong, df => got = sorted(df))
+        got
+      }
+    def check(name: String, got: Seq[Seq[Row]], want: Seq[Seq[Row]]): Unit = {
+      assert(want.forall(_.nonEmpty), s"$name: the fixture emits nothing")
+      assert(got == want, s"$name: stream emissions != *Batch emissions")
+    }
+
+    val base = docsDf(Seq(doc(99L)))
+    val (gs, gb) = (new GramIndex(spark, tmp("gram_s")), new GramIndex(spark, tmp("gram_b")))
+    Seq(gs, gb).foreach(_.build(base))
+    check("decontam", streamed(StreamOps.decontamStream(_, gs)(_)),
+      twins(StreamOps.decontamBatch(gb, _, _)(_)))
+    assert(gs.version == gb.version, "decontam: the empty trigger changed the index")
+
+    val (ws, wb) = (new WinnowIndex(spark, tmp("win_s")), new WinnowIndex(spark, tmp("win_b")))
+    Seq(ws, wb).foreach(_.build(docsDf(Nil)))
+    check("span dedup", streamed(StreamOps.spanDedupStream(_, ws)(_)),
+      twins(StreamOps.spanDedupBatch(wb, _, _)(_)))
+    assert(ws.version == wb.version, "span dedup: the empty trigger changed the index")
+
+    val (ls, lb) = (new BigramLmIndex(spark, tmp("lm_s")), new BigramLmIndex(spark, tmp("lm_b")))
+    Seq(ls, lb).foreach(_.build(docsDf(Nil)))
+    check("lm score", streamed(StreamOps.lmScoreStream(_, ls)(_)),
+      twins(StreamOps.lmScoreBatch(lb, _, _)(_)))
+    assert(ls.version == lb.version, "lm score: the empty trigger changed the index")
+
+    val w = Array(0.5, -0.25, 0.75, 1.0)
+    check("quality", streamed(StreamOps.qualityScoreStream(_, w)(_)),
+      twins((b, _, sink) => StreamOps.qualityScoreBatch(b, w)(sink)))
+  }
 }
