@@ -229,7 +229,7 @@ object Bench {
     // sf1). The driver passes no args, so its artifact covers everything.
     val only = SparkEntry.subset(args.headOption)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkEntry.localSession("spark.sql.adaptive.enabled" -> "true")
+    val spark = SparkEntry.localSession()
     val counters = new CounterListener
     spark.sparkContext.addSparkListener(counters)
     val loadStart = loadavg()

@@ -34,19 +34,20 @@ object SparkEntry {
   }
 
   /** The mains' session: `local[SPARK_GRAFT_CPUS]` (default 4) with one
-    * shuffle partition per core, UTC, no UI, and `extra` confs.
+    * shuffle partition per core, AQE on (Spark's default, stated because
+    * Bench's counters depend on it), UTC and no UI.
     */
-  private[graft] def localSession(extra: (String, String)*): SparkSession = {
+  private[graft] def localSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // keep top_k_scored on the object-hash path (its per-key state is
       // ~16k bytes; the 128-key default would sort-fallback every task)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config(extra.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

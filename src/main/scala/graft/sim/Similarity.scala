@@ -775,14 +775,14 @@ object Similarity {
     * must grow with bits (classic LSH L ~ n^ρ) — the candidate-pair
     * cost L·probes·n²/2^bits still falls because 2^bits outruns L.
     */
-  def annCandidates(s: SparkSession, dir: String, bits: Int,
+  private[graft] def annCandidates(s: SparkSession, dir: String, bits: Int,
       tables: Int = 16): DataFrame = {
     val e = embWithNorm(s, dir)
     signCandidates(e, scaledDimGroups(bits, tables), scaledProbeMasks(bits))
   }
 
   /** Top-3 ANN KNN graph for the bits-parametrized family. */
-  def annKnnGraphAt(s: SparkSession, dir: String, bits: Int,
+  private[graft] def annKnnGraphAt(s: SparkSession, dir: String, bits: Int,
       tables: Int = 16): DataFrame = {
     val e = embWithNorm(s, dir)
     rerankTop3(e, signCandidatesRaw(e, scaledDimGroups(bits, tables), scaledProbeMasks(bits)))
