@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.util.{BloomSidecars, SegmentedIndex}
+import graft.util.SegmentedIndex
 
 /** Incrementally-maintained train-gram decontamination index — the
   * third member of the incremental-index family ([[MinHashIndex]] for
@@ -24,12 +24,11 @@ import graft.util.{BloomSidecars, SegmentedIndex}
   * (`seg/s<k>/grams` — the batch's grams NOT present in any earlier
   * segment) plus a delta-sized g64 bloom sidecar, and publishes a tiny
   * manifest. READS during append are O(batch + bloom bytes): the
-  * already-known probe runs through the per-segment blooms
-  * ([[BloomSidecars.knownStringKeys]] — no false negatives, exact
-  * confirm against only the claiming segments), never a scan of the
-  * corpus-lifetime gram column. Segment contents are therefore
-  * DISJOINT by construction, so the multi-path read needs no distinct
-  * and chained appends equal a full rebuild exactly (GramIndexSpec).
+  * already-known probe ([[knownGrams]]) runs through the per-segment
+  * blooms, never a scan of the corpus-lifetime gram column. Segment
+  * contents are therefore DISJOINT by construction, so the multi-path
+  * read needs no distinct and chained appends equal a full rebuild
+  * exactly (GramIndexSpec).
   *
   * Versioning, crash behavior, [[compact]] and [[vacuum]] are the
   * shared [[graft.util.SegmentedIndex]] lifecycle, as in the sibling
@@ -57,35 +56,21 @@ final class GramIndex(spark: SparkSession, indexDir: String)
   }
 
   /** The subset of `g64s` (a g64 column) ALREADY in the store — the
-    * bloom-pruned membership probe: per-segment sidecars rule segments
-    * out with no false negatives, so a quiet crawl batch against a
+    * bloom-pruned membership probe, so a quiet crawl batch against a
     * year of gram history reads blooms plus only the truly-colliding
     * segments.
     */
-  def knownGrams(g64s: DataFrame): DataFrame = {
-    val segs = segmentsOf(requireVersion())
-    BloomSidecars.knownStringKeys(spark, g64s, "g64", fs,
-      segs.map(segPath(_, "grams_bloom")), segs.map(segPath(_, "grams")))
-  }
+  def knownGrams(g64s: DataFrame): DataFrame = known(g64s, "g64", "grams", "grams_bloom")
 
   /** Claim a version and write its delta segment (grams parquet +
     * delta-sized bloom), then publish it as the previous segments plus
     * it — segment first, manifest+marker last, the shared crash
     * contract.
-    *
-    * `grams` must be materialized by the caller (it is consumed twice:
-    * parquet write + bloom build over the written parquet).
     */
   private def writeDelta(grams: DataFrame, prevSegments: Seq[String],
       tag: Option[String] = None): Long =
     publishSegment(prevSegments, tag) { seg =>
-      val gramsPath = segPath(seg, "grams").toString
-      grams.select(col("g64")).write.mode("overwrite").parquet(gramsPath)
-      // bloom from the just-written parquet: stable storage, no second
-      // evaluation of the (possibly expensive) delta plan
-      val written = spark.read.parquet(gramsPath)
-      BloomSidecars.write(fs, segPath(seg, "grams_bloom"),
-        BloomSidecars.build(written, "g64", written.count()))
+      writeBloomed(seg, "grams", grams.select(col("g64")), "g64", "grams_bloom"): Unit
     }
 
   /** Full build from a corpus (docs: doc_id, text) — the once-per-

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat_ws, explode, greatest, least}
+import org.apache.spark.sql.functions.{col, concat_ws, greatest, least}
 
 import graft.util.{BloomSidecars, SegmentedIndex}
 
@@ -25,10 +25,10 @@ import graft.util.{BloomSidecars, SegmentedIndex}
   * to the segments whose band-key bloom might contain one of the
   * delta's keys, so a quiet day's crawl against a year of history
   * reads sidecar blooms plus the truly colliding segments, not the
-  * year's signature store (no false negatives, so the candidate set
-  * is exactly the unpruned join's). Old-vs-old collisions are already
-  * in `cand` by induction, so the refreshed index equals a full
-  * rebuild on the appended corpus (spec-proven).
+  * year's signature store (the candidate set is exactly the unpruned
+  * join's). Old-vs-old collisions are already in `cand` by induction,
+  * so the refreshed index equals a full rebuild on the appended corpus
+  * (spec-proven).
   *
   * WRITES are O(delta) too, not just compute: each append persists only
   * a delta SEGMENT (`seg/s<k>/{sig,cand}` — the new docs' signatures
@@ -76,61 +76,30 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     */
   def idsAddedAt(v: Long): DataFrame = addedAt(v, "sig").select(col("doc_id"))
 
-  // ---- bloom sidecars: O(batch)-read membership ----------------------
-  // (machinery shared with SignLshIndex via graft.util.BloomSidecars;
-  // fpp trade documented there — the 0.001 setting measured 1-2
-  // false-positive segment reads per trigger as spikes in the
-  // read-flatness spec, 1e-4 retires them)
-
   /** The subset of `ids` (a doc_id column) ALREADY in the signature
-    * store — the first-writer-wins membership probe, reading O(batch +
-    * bloom bytes) instead of the store's full doc_id column: each
-    * segment's id bloom is delta-sized (~2.4 B/doc) and rules the
-    * segment out with no false negatives; only ids some bloom claims
-    * (true re-ingestions plus ~fpp false positives) pay an exact
-    * semi-join, against ONLY the claiming segments.
+    * store — the first-writer-wins membership probe over the
+    * per-segment doc_id sidecars (~2.4 B/doc), reading O(batch + bloom
+    * bytes) instead of the store's full doc_id column.
     */
-  def knownIds(ids: DataFrame): DataFrame = {
-    val segs = segmentsOf(requireVersion())
-    BloomSidecars.knownKeys(spark, ids, "doc_id", fs,
-      segs.map(segPath(_, "ids_bloom")), segs.map(segPath(_, "sig")))
-  }
+  def knownIds(ids: DataFrame): DataFrame = known(ids, "doc_id", "sig", "ids_bloom")
 
   /** Combined LSH band key (band || bkey) as one bloom-able string. */
   private def bandKey = concat_ws(":", col("band"), col("bkey"))
 
-  /** Indices (into `segs`) of segments whose band bloom might contain
-    * any of `nb`'s band keys — the segments a delta's candidate join
-    * must actually read. No false negatives: a segment whose bloom
-    * rejects every delta band key cannot hold a band collision.
-    */
-  private def bandHitSegments(nb: DataFrame, segs: Seq[String]): Seq[Int] = {
-    val bc = spark.sparkContext.broadcast(segs.map(s =>
-      BloomSidecars.read(fs, segPath(s, "bands_bloom"))).toArray)
-    nb.select(explode(BloomSidecars.stringHits(bc)(bandKey)).as("i"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-  }
-
   /** Claim a version and write its delta segment (sig + cand parquet
-    * plus the two bloom sidecars — `ids_bloom` over the delta's
-    * doc_ids, `bands_bloom` over its LSH band keys, both delta-sized),
-    * then publish it as `prevSegments` plus the segment.
-    *
-    * `sig` must be materialized (checkpointed) by the caller: it is
-    * consumed three times here (parquet write, two bloom builds).
+    * plus the two sidecars — `ids_bloom` over the delta's doc_ids,
+    * `bands_bloom` over its LSH band keys, both delta-sized), then
+    * publish it as `prevSegments` plus the segment.
     */
   private def writeDelta(sig: DataFrame, cand: DataFrame,
       prevSegments: Seq[String], tag: Option[String]): Long =
     publishSegment(prevSegments, tag) { seg =>
-      sig.write.mode("overwrite").parquet(segPath(seg, "sig").toString)
+      val (written, n) = writeBloomed(seg, "sig", sig, "doc_id", "ids_bloom")
       cand.select(col("doc_a"), col("doc_b"))
         .write.mode("overwrite").parquet(segPath(seg, "cand").toString)
-      val n = sig.count()
-      BloomSidecars.write(fs, segPath(seg, "ids_bloom"),
-        BloomSidecars.build(sig, "doc_id", n))
       BloomSidecars.write(fs, segPath(seg, "bands_bloom"),
         BloomSidecars.build(
-          Dedup.bands(sig).select(bandKey.as("bk")), "bk", n * Dedup.BANDS))
+          Dedup.bands(written).select(bandKey.as("bk")), "bk", n * Dedup.BANDS))
     }
 
   /** Full build from a corpus (docs: doc_id, text) — initialization.
@@ -149,11 +118,10 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     *  - first-writer-wins membership runs through [[knownIds]]
     *    (per-segment id blooms), not a full doc_id column scan;
     *  - the new-vs-all band join reads ONLY the segments whose band
-    *    bloom might contain one of the delta's band keys
-    *    ([[bandHitSegments]] — no false negatives, so the candidate
-    *    set equals the unpruned join's exactly). A quiet day's crawl
-    *    against a year of history reads blooms plus the few truly
-    *    colliding segments, not the year's signature store.
+    *    bloom might contain one of the delta's band keys, so the
+    *    candidate set equals the unpruned join's exactly. A quiet
+    *    day's crawl against a year of history reads blooms plus the
+    *    few truly colliding segments, not the year's signature store.
     *
     * Only the delta segment (plus its blooms) is written.
     *
@@ -183,10 +151,10 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     val nb = Dedup.bands(newSig)
       .select(col("doc_id").as("doc_n"), col("band"), col("bkey"))
       .localCheckpoint()
-    val hit = bandHitSegments(nb, segs)
+    val hit = claimingSegments(segs, "bands_bloom", nb, bandKey)
     val oldRelevant =
       if (hit.isEmpty) newSig.limit(0)
-      else readSegments(hit.map(segs), "sig")
+      else readSegments(hit, "sig")
     val ab = Dedup.bands(oldRelevant.unionByName(newSig))
       .select(col("doc_id").as("doc_o"), col("band").as("band_o"), col("bkey").as("bkey_o"))
     val newCand = nb.join(ab,
@@ -221,11 +189,8 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     */
   def compact(): Long = {
     requireVersion(): Unit
-    // No pin (cf. writeDelta's materialization contract, which is for
-    // COMPUTED deltas): signatures() is a parquet read over the old
-    // segments, which stay on disk until a later vacuum() — the
-    // multiple consumptions re-scan stable storage instead of holding
-    // a full-store localCheckpoint copy alongside the rewrite.
+    // No pin: signatures() is a parquet read over the old segments,
+    // which stay on disk until a later vacuum().
     writeDelta(signatures(), candidates(), Seq.empty, Some("compaction"))
   }
 }

@@ -46,9 +46,8 @@ import graft.functions.VectorFunctions.floatNorm
   *   - `seg/s<v>/cells` (vec_id, cell): coarse inverted-list
   *     assignment;
   *   - `seg/s<v>/codes` (vec_id, m, code): the 4 B/vec PQ codes;
-  *   - `seg/s<v>/ids_bloom`: delta-sized vec_id bloom sidecar (the
-  *     [[graft.util.BloomSidecars]] membership probe — per-append
-  *     freshness reads are O(batch + bloom bytes), never a
+  *   - `seg/s<v>/ids_bloom`: delta-sized vec_id bloom sidecar (per-
+  *     append freshness reads are O(batch + bloom bytes), never a
   *     store-lifetime id scan);
   *   - `seg/s<v>/err`: "sumSqErr n" — the segment's exact decimal
   *     summed squared reconstruction error and row count.
@@ -102,13 +101,9 @@ final class PqIndex(spark: SparkSession, indexDir: String)
   def codes(): DataFrame = readTable("codes")
 
   /** The subset of `ids` (a vec_id column) ALREADY ingested —
-    * bloom-pruned, exact-confirmed first-writer-wins membership.
+    * bloom-pruned first-writer-wins membership.
     */
-  def knownIds(ids: DataFrame): DataFrame = {
-    val segs = segmentsOf(requireVersion())
-    graft.util.BloomSidecars.knownKeys(spark, ids, "vec_id", fs,
-      segs.map(segPath(_, "ids_bloom")), segs.map(segPath(_, "cells")))
-  }
+  def knownIds(ids: DataFrame): DataFrame = known(ids, "vec_id", "cells", "ids_bloom")
 
   private def withNorm(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"), col("embedding"))
@@ -157,14 +152,10 @@ final class PqIndex(spark: SparkSession, indexDir: String)
       errLine: String, prevSegments: Seq[String], k: Int,
       tag: Option[String] = None): Long =
     publishSegment(prevSegments, tag, Seq("params" -> k.toString)) { seg =>
-      val cellsPath = segPath(seg, "cells").toString
-      cellsDf.select(col("vec_id"), col("cell"))
-        .write.mode("overwrite").parquet(cellsPath)
+      writeBloomed(seg, "cells", cellsDf.select(col("vec_id"), col("cell")),
+        "vec_id", "ids_bloom"): Unit
       codesDf.select(col("vec_id"), col("m"), col("code"))
         .write.mode("overwrite").parquet(segPath(seg, "codes").toString)
-      val wc = spark.read.parquet(cellsPath)
-      graft.util.BloomSidecars.write(fs, segPath(seg, "ids_bloom"),
-        graft.util.BloomSidecars.build(wc, "vec_id", wc.count()))
       snaps.writeTextFile(segPath(seg, "err"), errLine)
     }
 

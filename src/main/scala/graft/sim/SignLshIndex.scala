@@ -124,16 +124,11 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
 
   /** The subset of `ids` (a vec_id column) ALREADY in the vector
     * store — the first-writer-wins membership probe through the
-    * per-segment id bloom sidecars ([[graft.util.BloomSidecars]]):
-    * per-append reads are O(batch + bloom bytes), never the store's
-    * full vec_id column (which grows with corpus lifetime — the same
-    * per-trigger scan the crawl-dedup index retired).
+    * per-segment id sidecars: per-append reads are O(batch + bloom
+    * bytes), never the store's full vec_id column (which grows with
+    * corpus lifetime).
     */
-  def knownIds(ids: DataFrame): DataFrame = {
-    val segs = segmentsOf(requireVersion())
-    graft.util.BloomSidecars.knownKeys(spark, ids, "vec_id", fs,
-      segs.map(segPath(_, "ids_bloom")), segs.map(segPath(_, "vec")))
-  }
+  def knownIds(ids: DataFrame): DataFrame = known(ids, "vec_id", "vec", "ids_bloom")
 
   /** Claim a version and write its delta segment (vec + sig parquet
     * plus the delta-sized vec_id bloom sidecar), then publish it as the
@@ -144,10 +139,8 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
       prevSegments: Seq[String], paramsLine: String): Long =
     publishSegment(prevSegments,
         extra = Seq("params" -> paramsLine, "format" -> CurrentFormat.toString)) { seg =>
-      vec.write.mode("overwrite").parquet(segPath(seg, "vec").toString)
+      writeBloomed(seg, "vec", vec, "vec_id", "ids_bloom"): Unit
       sig.write.mode("overwrite").parquet(segPath(seg, "sig").toString)
-      graft.util.BloomSidecars.write(fs, segPath(seg, "ids_bloom"),
-        graft.util.BloomSidecars.build(vec, "vec_id", vec.count()))
     }
 
   /** Full build from a corpus (vecs: vec_id, embedding) —
@@ -210,8 +203,7 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
     val (bits, tables) = params
     // No pin: vectors()/signatures() are plain parquet reads over the
     // old segments, which stay on disk until a LATER vacuum() retires
-    // them — writeDelta's multiple consumptions (write, count, bloom)
-    // just re-scan stable storage. A localCheckpoint here would copy
+    // them. A localCheckpoint here would copy
     // the FULL store into executor memory/disk first, doubling the
     // compaction's peak footprint for no correctness gain.
     //
@@ -241,7 +233,7 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
   }
 
   /** The top-3 ANN KNN graph served from the stored tables — bit-exact
-    * with [[Similarity.annKnnGraphAt]] on the same corpus and family.
+    * with [[Similarity.annGraphBroadcast]] on the same corpus and family.
     *
     * Probe signatures derive from the STORED tsig (sig = low `bits`,
     * table = high bits), so candidate generation touches only the

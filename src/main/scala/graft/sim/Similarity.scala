@@ -206,8 +206,8 @@ object Similarity {
     * vector set, so this exact build stops at Spark's 8 GB broadcast
     * ceiling (~10M 64-d vectors). That is the documented envelope of
     * the EXACT oracle — beyond it, the recall denominator runs on a
-    * sampled query set (s07's doc) against the s06/annKnnGraphAt
-    * bucketed path, which never broadcasts the corpus. The hint is
+    * sampled query set (s07's doc) against s06's bucketed path
+    * ([[annGraphBucketed]]), which never broadcasts the corpus. The hint is
     * deliberate: without it the planner may build the other side and
     * stream `b`'s single input partition, recreating the one-task n²
     * tail the repartition below exists to prevent.
@@ -271,11 +271,8 @@ object Similarity {
     * same deterministic `count()` the family calibration already
     * needs — changes the PLAN, never the answer: the same
     * adaptive-envelope pattern as [[graft.util.OrderStats]].
-    * Overridable for tests via -Dgraft.ann.broadcastEnvelopeRows.
     */
-  private[graft] def annBroadcastEnvelopeRows: Long =
-    sys.props.get("graft.ann.broadcastEnvelopeRows").map(_.toLong)
-      .getOrElse(1L * 1000 * 1000)
+  private[graft] val annBroadcastEnvelopeRows: Long = 1000L * 1000
 
   /** The in-envelope plan: broadcast index + broadcast rerank (see
     * [[signCandidatesRaw]] / [[rerankTop3]]).
@@ -705,13 +702,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
   }
 
-  /** Distinct candidate pairs — the probe/spec-facing contract; the
-    * registered queries consume the raw stream directly.
-    */
-  private def signCandidates(e: DataFrame, groups: Seq[Seq[Int]],
-      masks: Seq[Int]): DataFrame =
-    signCandidatesRaw(e, groups, masks).distinct()
-
   /** Exact cosine re-rank of the RAW candidate stream to a top-3
     * graph: vectors join map-side (both sides broadcast), duplicate
     * pairs are absorbed by the distinct-payload top-k buffer, and —
@@ -768,25 +758,6 @@ object Similarity {
 
   /** 0-flip + every 1-flip probe, query side. */
   private[graft] def scaledProbeMasks(bits: Int): Seq[Int] = 0 +: (0 until bits).map(1 << _)
-
-  /** Distinct LSH candidate pairs for the bits-parametrized family.
-    * `tables` is the companion knob: a longer signature lowers each
-    * table's collision probability for true neighbors (p^bits), so L
-    * must grow with bits (classic LSH L ~ n^ρ) — the candidate-pair
-    * cost L·probes·n²/2^bits still falls because 2^bits outruns L.
-    */
-  private[graft] def annCandidates(s: SparkSession, dir: String, bits: Int,
-      tables: Int = 16): DataFrame = {
-    val e = embWithNorm(s, dir)
-    signCandidates(e, scaledDimGroups(bits, tables), scaledProbeMasks(bits))
-  }
-
-  /** Top-3 ANN KNN graph for the bits-parametrized family. */
-  private[graft] def annKnnGraphAt(s: SparkSession, dir: String, bits: Int,
-      tables: Int = 16): DataFrame = {
-    val e = embWithNorm(s, dir)
-    rerankTop3(e, signCandidatesRaw(e, scaledDimGroups(bits, tables), scaledProbeMasks(bits)))
-  }
 
   /** Oracle mirror of the calibrated family. The family must be a pure
     * function of the corpus so BOTH engines rederive it at any scale

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{BloomSidecars, SegmentedIndex}
+import graft.util.SegmentedIndex
 
 /** Incrementally-maintained bigram language-model census — the SIXTH
   * member of the incremental-index family ([[graft.dedup.MinHashIndex]]:
@@ -35,12 +35,11 @@ import graft.util.{BloomSidecars, SegmentedIndex}
   * WRITES are O(batch): one delta segment (census + lefts + ids,
   * Heaps'-bounded in the batch) + three delta-sized blooms + a tiny
   * manifest. The scoring probes ([[censusAtFor]]/[[leftsAtFor]]) are
-  * bloom-pruned partial sums: per-segment sidecars rule segments out
-  * with no false negatives — so the per-key sum over claiming
-  * segments is the complete count — and only claiming segments'
-  * parquet is opened. A batch's own keys always claim its own
-  * segment, so every probed ratio has c ≥ 1 (the self-inclusive
-  * census t20's self-scoring defines; no smoothing needed).
+  * bloom-pruned partial sums: the per-key sum over the claiming
+  * segments is the complete count, and only their parquet is opened.
+  * A batch's own keys always claim its own segment, so every probed
+  * ratio has c ≥ 1 (the self-inclusive census t20's self-scoring
+  * defines; no smoothing needed).
   *
   * Drift note: the census is FROZEN history — an earlier doc's score
   * is never revised when later crawls shift the distribution (the
@@ -71,27 +70,13 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String)
 
   /** Bloom-pruned partial-sum probe of `table` (keyed by `key`) as of
     * version `v` — INCLUDING v's own delta (the self-inclusive census
-    * scoring reads). Complete per key: blooms have no false negatives,
-    * so non-claiming segments contribute zero by proof, not by hope.
+    * scoring reads). Complete per key: non-claiming segments hold none
+    * of the keys.
     */
   private def countsAtFor(v: Long, table: String, key: String,
-      keys: DataFrame): DataFrame = {
-    val segs = segmentsOf(v)
-    if (segs.isEmpty) return emptyCounts(key)
-    val bc = spark.sparkContext.broadcast(
-      segs.map(s => BloomSidecars.read(fs, segPath(s, s"${table}_bloom")))
-        .toArray)
-    val suspects = keys.select(col(key)).distinct()
-      .withColumn("segi", BloomSidecars.stringHits(bc)(col(key)))
-      .filter(size(col("segi")) > 0)
-      .localCheckpoint()
-    val segIdx = suspects.select(explode(col("segi")).as("i"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    if (segIdx.isEmpty) emptyCounts(key)
-    else readSegments(segIdx.toSeq.map(segs), table)
-      .join(suspects.select(col(key)), Seq(key), "left_semi")
-      .groupBy(col(key)).agg(sum(col("c")).as("c"))
-  }
+      keys: DataFrame): DataFrame =
+    probe(segmentsOf(v), table, s"${table}_bloom", keys, key)
+      .fold(emptyCounts(key))(_.groupBy(col(key)).agg(sum(col("c")).as("c")))
 
   /** (bigram, c) as of version `v`, restricted to the probe bigrams. */
   def censusAtFor(v: Long, bigrams: DataFrame): DataFrame =
@@ -106,14 +91,10 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String)
     */
   def idsAddedAt(v: Long): DataFrame = addedAt(v, "docs")
 
-  /** The subset of `ids` ALREADY ingested — bloom-pruned, exact-
-    * confirmed (first-writer-wins membership).
+  /** The subset of `ids` ALREADY ingested — bloom-pruned
+    * first-writer-wins membership.
     */
-  def knownDocs(ids: DataFrame): DataFrame = {
-    val segs = segmentsOf(requireVersion())
-    BloomSidecars.knownKeys(spark, ids, "doc_id", fs,
-      segs.map(segPath(_, "docs_bloom")), segs.map(segPath(_, "docs")))
-  }
+  def knownDocs(ids: DataFrame): DataFrame = known(ids, "doc_id", "docs", "docs_bloom")
 
   /** The id-FRESH subset of `newDocs` (duplicate ids collapsed, then
     * already-ingested ids dropped) — [[append]]'s freshness rule,
@@ -126,28 +107,20 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String)
   }
 
   /** Claim a version and write its delta segment (census + lefts +
-    * ids, blooms built from the written parquet so the delta plan
-    * evaluates once), then publish it — segment first, manifest+marker
-    * last, the crash contract.
+    * ids, each with its bloom), then publish it — segment first,
+    * manifest+marker last, the crash contract.
     */
   private def writeDelta(census: DataFrame, docIds: DataFrame,
       prevSegments: Seq[String], tag: Option[String] = None): Long =
     publishSegment(prevSegments, tag) { seg =>
-      def writeBloomed(df: DataFrame, table: String, key: String): DataFrame = {
-        val p = segPath(seg, table).toString
-        df.write.mode("overwrite").parquet(p)
-        val w = spark.read.parquet(p)
-        BloomSidecars.write(fs, segPath(seg, s"${table}_bloom"),
-          BloomSidecars.build(w, key, w.count()))
-        w
-      }
       // lefts derive from the WRITTEN census parquet — stable storage, so
       // the (possibly expensive) delta plan evaluates exactly once
-      val wc = writeBloomed(census.select(col("bigram"), col("c")), "census", "bigram")
-      writeBloomed(wc
+      val (wc, _) = writeBloomed(seg, "census", census.select(col("bigram"), col("c")),
+        "bigram", "census_bloom")
+      writeBloomed(seg, "lefts", wc
         .groupBy(expr("split_part(bigram, ' ', 1)").as("w1"))
-        .agg(sum(col("c")).as("c")), "lefts", "w1")
-      writeBloomed(docIds.select(col("doc_id")), "docs", "doc_id")
+        .agg(sum(col("c")).as("c")), "w1", "lefts_bloom"): Unit
+      writeBloomed(seg, "docs", docIds.select(col("doc_id")), "doc_id", "docs_bloom"): Unit
     }
 
   private def censusFromBigrams(big: DataFrame): DataFrame =

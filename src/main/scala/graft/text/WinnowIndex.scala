@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{BloomSidecars, SegmentedIndex}
+import graft.util.SegmentedIndex
 
 /** Incrementally-maintained duplicated-span census — the fourth member
   * of the incremental-index family ([[graft.dedup.MinHashIndex]]:
@@ -28,8 +28,7 @@ import graft.util.{BloomSidecars, SegmentedIndex}
   * WRITES are O(batch): one delta segment (census + ingested ids) +
   * two delta-sized bloom sidecars + a tiny manifest. READS during a
   * trigger are O(batch + bloom bytes): id freshness and the
-  * historical census probe both run through per-segment blooms (no
-  * false negatives; exact reads touch only claiming segments), never
+  * historical census probe both run through per-segment blooms, never
   * a corpus-lifetime column scan.
   *
   * Versioning, crash behavior, [[compact]]/[[vacuum]], and the tag
@@ -58,29 +57,14 @@ final class WinnowIndex(spark: SparkSession, indexDir: String)
     censusOf(segmentsOf(v).filterNot(_ == s"s$v"))
 
   /** [[censusBefore]] restricted to the probe fingerprints, read
-    * bloom-pruned: per-segment fp blooms rule segments out with no
-    * false negatives (so the per-fp SUM over claiming segments is the
-    * complete pre-batch count), and only claiming segments' census
-    * parquet is opened — O(batch + bloom bytes) per trigger against a
-    * year of history.
+    * bloom-pruned: the per-fp SUM over the claiming segments is the
+    * complete pre-batch count, and only their census parquet is
+    * opened — O(batch + bloom bytes) per trigger against a year of
+    * history.
     */
-  def censusBeforeFor(v: Long, fps: DataFrame): DataFrame = {
-    val segs = segmentsOf(v).filterNot(_ == s"s$v")
-    if (segs.isEmpty) return emptyCensus()
-    val bc = spark.sparkContext.broadcast(
-      segs.map(s => BloomSidecars.read(fs, segPath(s, "census_bloom")))
-        .toArray)
-    val suspects = fps.select(col("fp")).distinct()
-      .withColumn("segi", BloomSidecars.longHits(bc)(col("fp")))
-      .filter(size(col("segi")) > 0)
-      .localCheckpoint()
-    val segIdx = suspects.select(explode(col("segi")).as("i"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    if (segIdx.isEmpty) emptyCensus()
-    else readSegments(segIdx.toSeq.map(segs), "census")
-      .join(suspects.select(col("fp")), Seq("fp"), "left_semi")
-      .groupBy(col("fp")).agg(sum(col("n_docs")).as("n_docs"))
-  }
+  def censusBeforeFor(v: Long, fps: DataFrame): DataFrame =
+    probe(segmentsOf(v).filterNot(_ == s"s$v"), "census", "census_bloom", fps, "fp")
+      .fold(emptyCensus())(_.groupBy(col("fp")).agg(sum(col("n_docs")).as("n_docs")))
 
   /** The doc_ids first ingested at version `v` — the version's delta
     * segment, an O(batch) read (the replay path's fresh set).
@@ -88,33 +72,20 @@ final class WinnowIndex(spark: SparkSession, indexDir: String)
   def idsAddedAt(v: Long): DataFrame = addedAt(v, "docs")
 
   /** The subset of `ids` (a doc_id column) ALREADY ingested —
-    * bloom-pruned, exact-confirmed (first-writer-wins membership).
+    * bloom-pruned first-writer-wins membership.
     */
-  def knownDocs(ids: DataFrame): DataFrame = {
-    val segs = segmentsOf(requireVersion())
-    BloomSidecars.knownKeys(spark, ids, "doc_id", fs,
-      segs.map(segPath(_, "docs_bloom")), segs.map(segPath(_, "docs")))
-  }
+  def knownDocs(ids: DataFrame): DataFrame = known(ids, "doc_id", "docs", "docs_bloom")
 
   /** Claim a version and write its delta segment (census + ids
-    * parquet, blooms built from the written files so the delta plan
-    * evaluates once), then publish it — segment first, manifest+marker
-    * last, the shared crash contract.
+    * parquet, each with its bloom), then publish it — segment first,
+    * manifest+marker last, the shared crash contract.
     */
   private def writeDelta(census: DataFrame, docIds: DataFrame,
       prevSegments: Seq[String], tag: Option[String] = None): Long =
     publishSegment(prevSegments, tag) { seg =>
-      val censusPath = segPath(seg, "census").toString
-      census.select(col("fp"), col("n_docs"))
-        .write.mode("overwrite").parquet(censusPath)
-      val docsPath = segPath(seg, "docs").toString
-      docIds.select(col("doc_id")).write.mode("overwrite").parquet(docsPath)
-      val wc = spark.read.parquet(censusPath)
-      BloomSidecars.write(fs, segPath(seg, "census_bloom"),
-        BloomSidecars.build(wc, "fp", wc.count()))
-      val wd = spark.read.parquet(docsPath)
-      BloomSidecars.write(fs, segPath(seg, "docs_bloom"),
-        BloomSidecars.build(wd, "doc_id", wd.count()))
+      writeBloomed(seg, "census", census.select(col("fp"), col("n_docs")), "fp",
+        "census_bloom"): Unit
+      writeBloomed(seg, "docs", docIds.select(col("doc_id")), "doc_id", "docs_bloom"): Unit
     }
 
   private def censusFrom(docs: DataFrame): DataFrame =

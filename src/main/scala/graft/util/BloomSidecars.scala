@@ -1,21 +1,15 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, explode, size, udf}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{struct, udf}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Per-segment bloom sidecar machinery shared by the incremental
-  * indexes ([[graft.dedup.MinHashIndex]]: doc_id + band-key blooms;
-  * [[graft.sim.SignLshIndex]]: vec_id blooms) — ONE implementation so
-  * a sizing or probe fix lands in every index (the same
-  * drift-by-duplication risk the shared ANN pipeline closed).
-  *
-  * Contract: a segment's bloom has NO false negatives over the keys
-  * it was built from, so "no bloom claims this key" proves absence
-  * from the whole store, and per-trigger membership reads collapse to
-  * the delta-sized sidecars plus an exact confirm against only the
-  * CLAIMING segments (true hits + ~fpp false positives).
+/** The format of the per-segment bloom sidecars of the incremental
+  * indexes: one false-positive rate, the build, the file round trip and
+  * the probe column. [[SegmentedIndex]] owns how sidecars are written
+  * and probed, and states their contract.
   *
   * Envelope, priced honestly: sidecar TOTAL is ~2.4 B/key — 100-odd
   * times under the rows they stand in for, but still linear in corpus
@@ -33,7 +27,9 @@ object BloomSidecars {
   /** False-positive rate. Expected spurious segment reads per trigger
     * are ~fpp × probe keys × segments — at 1e-4 and a 10^3-key
     * trigger against a year of segments, ~0.04; the sidecar costs
-    * 19.2 bits ≈ 2.4 B per key.
+    * 19.2 bits ≈ 2.4 B per key. At 0.001, StreamingSpec's crawl-dedup
+    * read-flatness case measured 1-2 false-positive segment reads per
+    * trigger as spikes.
     */
   val Fpp: Double = 0.0001
 
@@ -50,10 +46,7 @@ object BloomSidecars {
     try bf.writeTo(out) finally out.close()
   }
 
-  /** null when the sidecar is missing (a segment predating blooms) —
-    * callers treat that segment as always-suspect, preserving the
-    * no-false-negative contract.
-    */
+  /** null when the sidecar is missing (a segment predating blooms). */
   def read(fs: FileSystem, p: Path): BloomFilter =
     if (!fs.exists(p)) null
     else {
@@ -61,88 +54,18 @@ object BloomSidecars {
       try BloomFilter.readFrom(in) finally in.close()
     }
 
-  /** The subset of `ids` (one LONG `keyCol` column) present in a
-    * segmented store — the shared membership probe behind
-    * `MinHashIndex.knownIds` and `SignLshIndex.knownIds` (one
-    * implementation, so a probe fix cannot land in one index and not
-    * the other): per-segment blooms rule segments out with no false
-    * negatives; only keys some bloom claims (true members plus ~fpp
-    * false positives) pay an exact semi-join, against ONLY the
-    * claiming segments' key columns.
-    *
-    * @param bloomPaths segment bloom sidecars, parallel to
-    *                   `tablePaths` (missing sidecar = that segment is
-    *                   always suspect)
-    * @param tablePaths the segments' parquet tables carrying `keyCol`
+  /** Column of the indices into `bc`'s blooms that may hold the key
+    * in `key`, an integral or string column (a null key matches none;
+    * a missing, null, bloom matches every key). The blooms ride a
+    * broadcast: shipped once per executor, not per task closure.
     */
-  def knownKeys(spark: org.apache.spark.sql.SparkSession, ids: DataFrame,
-      keyCol: String, fs: FileSystem, bloomPaths: Seq[Path],
-      tablePaths: Seq[Path]): DataFrame =
-    knownKeysBy(spark, ids, keyCol, fs, bloomPaths, tablePaths, longHits)
-
-  /** [[knownKeys]] for a STRING `keyCol` (e.g. [[graft.dedup.GramIndex]]'s
-    * 16-hex gram digests) — same contract, probed via [[stringHits]].
-    */
-  def knownStringKeys(spark: org.apache.spark.sql.SparkSession, ids: DataFrame,
-      keyCol: String, fs: FileSystem, bloomPaths: Seq[Path],
-      tablePaths: Seq[Path]): DataFrame =
-    knownKeysBy(spark, ids, keyCol, fs, bloomPaths, tablePaths, stringHits)
-
-  private def knownKeysBy(spark: org.apache.spark.sql.SparkSession, ids: DataFrame,
-      keyCol: String, fs: FileSystem, bloomPaths: Seq[Path], tablePaths: Seq[Path],
-      hits: org.apache.spark.broadcast.Broadcast[Array[BloomFilter]] => Column => Column)
-      : DataFrame = {
-    require(bloomPaths.size == tablePaths.size, "segment lists must align")
-    val bc = spark.sparkContext.broadcast(
-      bloomPaths.map(read(fs, _)).toArray)
-    val suspects = ids.select(col(keyCol)).distinct()
-      .withColumn("segi", hits(bc)(col(keyCol)))
-      .filter(size(col("segi")) > 0)
-      .localCheckpoint()
-    val segIdx = suspects.select(explode(col("segi")).as("i"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    if (segIdx.isEmpty) suspects.select(col(keyCol)).limit(0)
-    else {
-      val segTable = spark.read.parquet(segIdx.map(tablePaths(_).toString).toSeq: _*)
-      suspects.select(col(keyCol))
-        .join(segTable.select(col(keyCol)), Seq(keyCol), "left_semi")
-    }
-  }
-
-  /** Column of segment indices whose bloom might contain the LONG key
-    * in `key` (missing blooms always match). Blooms ride a broadcast
-    * — shipped once per executor, not per task closure.
-    */
-  def longHits(bc: org.apache.spark.broadcast.Broadcast[Array[BloomFilter]])(
-      key: Column): Column = {
-    val f = udf((id: Long) => {
+  def hits(bc: Broadcast[Array[BloomFilter]])(key: Column): Column = {
+    val f = udf((r: Row) => {
+      val k = r.get(0)
       val a = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var i = 0
-      while (i < a.length) {
-        if (a(i) == null || a(i).mightContainLong(id)) out += i
-        i += 1
-      }
-      out.toSeq
+      if (k == null) Seq.empty[Int]
+      else a.indices.filter(i => a(i) == null || a(i).mightContain(k))
     })
-    f(key)
-  }
-
-  /** Column of segment indices whose bloom might contain the STRING
-    * key in `key` (missing blooms always match).
-    */
-  def stringHits(bc: org.apache.spark.broadcast.Broadcast[Array[BloomFilter]])(
-      key: Column): Column = {
-    val f = udf((k: String) => {
-      val a = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var i = 0
-      while (i < a.length) {
-        if (a(i) == null || a(i).mightContainString(k)) out += i
-        i += 1
-      }
-      out.toSeq
-    })
-    f(key)
+    f(struct(key))
   }
 }

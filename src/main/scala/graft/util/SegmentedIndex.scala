@@ -1,7 +1,8 @@
 package graft.util
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, explode, lit, size}
 
 /** The lifecycle every incremental segment index shares
   * ([[graft.dedup.MinHashIndex]], [[graft.dedup.GramIndex]],
@@ -24,6 +25,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * newest claim and sweeps it once a newer version completes.
   * Appends, compactions and vacuums of one directory are single-writer
   * (see [[VersionedTableStore]]).
+  *
+  * Bloom sidecars ([[BloomSidecars]]) let a probe skip segments. A
+  * segment's sidecar over a key column of one of its tables has no
+  * false negatives over that table's keys, so a segment whose sidecar
+  * claims none of the probe keys holds none of them; a segment with no
+  * sidecar is always suspect. [[writeBloomed]] is the one sidecar
+  * write: the table's row count n, which sizes the bloom, comes from
+  * the write itself. [[probe]] is the one bloom-pruned read: an exact
+  * semi-join against only the claiming segments.
   */
 abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
   protected val snaps = new VersionedTableStore(spark, indexDir, "_INDEX_OK")
@@ -101,6 +111,71 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
     }
     v
   }
+
+  /** Write `df` as `table` of segment `seg`, then the bloom sidecar
+    * `sidecar` over the written `key` column. The row count is observed
+    * on the write's own job, and the bloom is built from the written
+    * files read back with the schema just written, so `df`'s plan runs
+    * once and no count or schema-inference job runs. Returns the
+    * written table and its row count.
+    */
+  protected def writeBloomed(seg: String, table: String, df: DataFrame,
+      key: String, sidecar: String): (DataFrame, Long) = {
+    val p = segPath(seg, table).toString
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n")).write.mode("overwrite").parquet(p)
+    val n = rows.get("n").asInstanceOf[Long]
+    val written = spark.read.schema(df.schema).parquet(p)
+    BloomSidecars.write(fs, segPath(seg, sidecar), BloomSidecars.build(written, key, n))
+    (written, n)
+  }
+
+  /** `key` as a column of the indices into `segs` whose sidecar
+    * `sidecar` may hold it.
+    */
+  private def claims(segs: Seq[String], sidecar: String, key: Column): Column =
+    BloomSidecars.hits(spark.sparkContext.broadcast(
+      segs.map(s => BloomSidecars.read(fs, segPath(s, sidecar))).toArray))(key)
+
+  /** The segments named in the `segi` column of `claimed`: one job. */
+  private def claimedSegments(segs: Seq[String], claimed: DataFrame): Seq[String] =
+    claimed.select(explode(col("segi")).as("i")).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq.map(segs)
+
+  /** The segments of `segs` whose sidecar `sidecar` may hold some value
+    * of `key` over `keys`: one job, nothing materialized.
+    */
+  protected def claimingSegments(segs: Seq[String], sidecar: String,
+      keys: DataFrame, key: Column): Seq[String] =
+    claimedSegments(segs, keys.select(claims(segs, sidecar, key).as("segi")))
+
+  /** The bloom-pruned probe: the rows of `table` over `segs` whose `key`
+    * is one of `keys`' `key` values, read from only the segments whose
+    * sidecar `sidecar` claims one of them. The claimed keys are
+    * checkpointed once, then confirmed by an exact semi-join. None when
+    * no segment claims any key.
+    */
+  protected def probe(segs: Seq[String], table: String, sidecar: String,
+      keys: DataFrame, key: String): Option[DataFrame] =
+    if (segs.isEmpty) None
+    else {
+      val suspects = keys.select(col(key)).distinct()
+        .withColumn("segi", claims(segs, sidecar, col(key)))
+        .filter(size(col("segi")) > 0)
+        .localCheckpoint()
+      val hit = claimedSegments(segs, suspects)
+      if (hit.isEmpty) None
+      else Some(readSegments(hit, table)
+        .join(suspects.select(col(key)), Seq(key), "left_semi"))
+    }
+
+  /** The `key` values of `keys` already in `table` as of the newest
+    * complete version, by [[probe]].
+    */
+  protected def known(keys: DataFrame, key: String, table: String,
+      sidecar: String): DataFrame =
+    probe(segmentsOf(requireVersion()), table, sidecar, keys, key)
+      .fold(keys.select(col(key)).limit(0))(_.select(col(key)))
 
   /** Merge the current version's segments into one and publish it as a
     * new version; returns that version.

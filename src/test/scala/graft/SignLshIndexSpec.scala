@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.VectorFunctions.floatNorm
 import graft.sim.{Similarity, SignLshIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -68,7 +69,8 @@ class SignLshIndexSpec extends AnyFunSuite {
     assertEqualsRebuild(vecs)
     val (bits, tables) = pinned
     assert(rowSet(idx.annGraph()) ==
-      rowSet(Similarity.annKnnGraphAt(spark, sf, bits, tables)),
+      rowSet(Similarity.annGraphBroadcast(Tables(spark, sf, "embeddings")
+        .withColumn("nrm", floatNorm(col("embedding"))), bits, tables)),
       "index-served graph != the library's graph for the same family")
 
     // replaying an overlapping batch is idempotent (first-writer-wins)

@@ -17,6 +17,18 @@ class SimilaritySpec extends AnyFunSuite {
   // exercise 8/24 (n=500), 9/32 (n=2000) — measured 0.87–0.89.
   private val RecallTarget = 0.80
 
+  private def embeddingsWithNorm(sf: String) =
+    Tables(spark, sf, "embeddings")
+      .withColumn("nrm", graft.functions.VectorFunctions.floatNorm(col("embedding")))
+
+  // Distinct sign-LSH candidate pairs of the bits-parametrized family.
+  // `tables` is the companion knob: a longer signature lowers each
+  // table's collision probability for true neighbors (p^bits), so L
+  // must grow with bits (classic LSH L ~ n^rho).
+  private def candidates(e: org.apache.spark.sql.DataFrame, bits: Int, tables: Int) =
+    sim.Similarity.signCandidatesRaw(e, sim.Similarity.scaledDimGroups(bits, tables),
+      sim.Similarity.scaledProbeMasks(bits)).distinct()
+
   // sf0.1 included: 4x the vectors of sf0.01 — the gate must hold as n
   // grows, not just on the calibration corpus (measured 0.88 at sf0.1)
   Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1").foreach { sf =>
@@ -110,10 +122,11 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("bits is the scale knob: +log2(n growth) bits cuts candidates, holds recall") {
     val sf = "/root/testdata/sf0.1" // 2000 vectors = 4x sf0.01's 500
+    val e = embeddingsWithNorm(sf)
     val exact = SparkEntry.queries("s04_knn_graph")(spark, sf)
       .select(col("query_id"), col("neighbor_id"))
     def recallAt(bits: Int, tables: Int): Double = {
-      val approx = sim.Similarity.annKnnGraphAt(spark, sf, bits, tables)
+      val approx = sim.Similarity.annGraphBroadcast(e, bits, tables)
         .select(col("query_id").as("q2"), col("neighbor_id").as("n2"))
       exact.join(approx,
           col("query_id") === col("q2") && col("neighbor_id") === col("n2"), "left")
@@ -129,8 +142,8 @@ class SimilaritySpec extends AnyFunSuite {
     // grows linearly. Measured intermediate points that pin this
     // calibration: 10-bit/16t recall 0.495, 10-bit/24t 0.678 (theory
     // 0.680) — bits is NOT a standalone knob.
-    val cands8 = sim.Similarity.annCandidates(spark, sf, 8, 16).count()
-    val cands10 = sim.Similarity.annCandidates(spark, sf, 10, 40).count()
+    val cands8 = candidates(e, 8, 16).count()
+    val cands10 = candidates(e, 10, 40).count()
     val recall10 = recallAt(10, 40)
     info(f"sf0.1: candidates 8-bit/16t=$cands8%d, 10-bit/40t=$cands10%d, recall@3(10-bit/40t)=$recall10%.3f")
     assert(cands10 < cands8,
@@ -172,7 +185,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(exact.count() == 1000 * 3)
 
     def recallAt(bits: Int, tables: Int): Double = {
-      val approx = sim.Similarity.annKnnGraphAt(spark, sf, bits, tables)
+      val approx = sim.Similarity.annGraphBroadcast(e, bits, tables)
         .filter(isSampled)
         .select(col("query_id").as("q2"), col("neighbor_id").as("n2"))
       exact.join(approx,
@@ -183,14 +196,14 @@ class SimilaritySpec extends AnyFunSuite {
     }
     // per-sampled-query candidate volume, the quantity the bits knob
     // controls (counted on the same 1000 queries for both configs)
-    val cands8 = sim.Similarity.annCandidates(spark, sf, 8, 16)
+    val cands8 = candidates(e, 8, 16)
       .filter(isSampled).count()
     // 128 tables from the measured per-table retention at this n:
     // 96t gave recall 0.757 => per-table retention 0.0146, so
     // L >= ln(0.2)/-ln(1-0.0146) ~ 110 for the 0.80 gate; 128 adds
     // margin (predicted ~0.85) while candidates stay ~3x under the
     // fixed 8-bit family's
-    val cands13 = sim.Similarity.annCandidates(spark, sf, 13, 128)
+    val cands13 = candidates(e, 13, 128)
       .filter(isSampled).count()
     val recall13 = recallAt(13, 128)
     exact.unpersist()
@@ -223,8 +236,7 @@ class SimilaritySpec extends AnyFunSuite {
   // every join in the bucketed tree is proven to run on the bucketed
   // layouts (the BucketingSpec pattern).
   private def assertBucketedEqualsBroadcast(sf: String): Unit = {
-    import graft.functions.VectorFunctions.floatNorm
-    val e = Tables(spark, sf, "embeddings").withColumn("nrm", floatNorm(col("embedding")))
+    val e = embeddingsWithNorm(sf)
     val (bits, tables) = sim.Similarity.annParams(e.count())
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
