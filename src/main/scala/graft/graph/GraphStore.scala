@@ -1,7 +1,12 @@
 package graft.graph
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 import graft.util.{Par, VersionedTableStore}
@@ -14,7 +19,8 @@ import graft.util.{Par, VersionedTableStore}
   * secondary_server.c:229-303). Here each graph name is one
   * [[graft.util.VersionedTableStore]] at `<baseDir>/<name>`: every
   * add/modify claims a fresh `v<k>` directory, writes the edges there
-  * as parquet, and the committer's `_SUCCESS` marks it complete.
+  * as parquet, and the store's `_SUCCESS` marker, created after the
+  * write, marks it complete.
   * Readers serve the newest complete version: no locks, any number of
   * concurrent readers, and old snapshots stay valid mid-query. The
   * claim keeps writers in separate processes off each other's
@@ -24,14 +30,19 @@ import graft.util.{Par, VersionedTableStore}
   * Two choices keep the reference's request path (graphs of N ≤ 30)
   * cheap:
   *   - a snapshot small enough to broadcast
-  *     ([[graft.util.Par.broadcastSized]]) is written as ONE part file,
-  *     not one per input partition: fewer files to create, commit and
-  *     list on every later read;
-  *   - the schema of the version a name was last read at is memoized,
-  *     so a repeat read plans no footer-inference job. The memo is
-  *     keyed by the version AND its directory's modification time: a
-  *     drop followed by a new put can reuse `v1` with another schema,
-  *     in a new directory. It holds one entry per name.
+  *     ([[graft.util.Par.broadcastSized]]) is written by the driver as
+  *     ONE part file, through Spark's own parquet writer: no Spark job
+  *     for a local relation, no committer and no `_temporary` rename,
+  *     one file to list on every later read. A larger snapshot is a
+  *     plain Spark write;
+  *   - the schema of the newest version a name was put or read at is
+  *     memoized, so neither a read of this instance's own small put
+  *     (also one racing the put's last step) nor a repeat read plans
+  *     a footer-inference job. The memo is keyed by the version AND
+  *     its directory's modification time: a drop followed by a new put
+  *     can reuse `v1` with another schema, in a new directory. It
+  *     holds one entry per name, so a time-travel read of an older
+  *     version infers its schema.
   */
 final class GraphStore(spark: SparkSession, baseDir: String) {
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -60,10 +71,25 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
   private val published =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  // (version, directory mtime) -> inferred schema of the version each
-  // name was last read at (see the class doc).
+  // (version, directory mtime) -> schema of the newest version each
+  // name was read (inferred) or put (written) at (see the class doc). A
+  // read with a given schema makes every field nullable, as inference
+  // does, so both kinds read back alike.
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), StructType)]()
+
+  // Version and schema of this instance's driver write in flight per
+  // name: a read that lists the version after its marker appears but
+  // before `schemas` is seeded takes the schema from here. An entry
+  // lives from before the marker until after the seed.
+  private val writing =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
+
+  // Keep the entry of the newer directory: a slow inference of an older
+  // version must not evict the schema of a newer one. A drop and a new
+  // put make a newer directory, so they replace the entry.
+  private def remember(name: String, key: (Long, Long), schema: StructType): Unit =
+    schemas.merge(name, key -> schema, (old, in) => if (in._1._2 >= old._1._2) in else old): Unit
 
   /** Store a graph's edge DataFrame under `name` (create or overwrite —
     * reference ops "add graph" and "modify graph" share this path).
@@ -71,9 +97,41 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
   def put(name: String, edges: DataFrame): Unit = writerLock(name).synchronized {
     val s = snaps(name)
     val v = s.claim()
-    val out = if (Par.broadcastSized(edges)) edges.coalesce(1) else edges
-    s.publish(v)(v => out.write.mode("overwrite").parquet(s.tablePath(v, "").toString))
+    val dir = s.versionPath(v)
+    if (Par.broadcastSized(edges)) {
+      writing.put(name, v -> edges.schema)
+      try {
+        s.publish(v)(_ => writeOnDriver(edges, dir))
+        remember(name, (v, fs(dir).getFileStatus(dir).getModificationTime), edges.schema)
+      } finally writing.remove(name)
+    } else s.publish(v)(_ => edges.write.mode("overwrite").parquet(dir.toString))
     published.put(name, v): Unit
+  }
+
+  /** Write `edges` as one parquet file in `dir` from the driver. The
+    * rows come from one `executeCollect` of the frame's own plan (no
+    * job for a local relation) and the file from Spark's own parquet
+    * writer factory, so the footer schema, codec and every other
+    * parquet session setting are those of a Spark write of the frame.
+    * No committer runs: the caller's marker alone makes the version
+    * visible.
+    */
+  private def writeOnDriver(edges: DataFrame, dir: Path): Unit = {
+    val schema = edges.schema
+    val format = new ParquetFileFormat()
+    DataSourceUtils.verifySchema(format, schema)
+    DataSourceUtils.checkFieldNames(format, schema)
+    val qe = edges.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("GraphStore.put"))(
+      qe.executedPlan.executeCollect())
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID("", 0, TaskType.MAP, 0), 0))
+    val file = new Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(task)}")
+    val out = factory.newInstance(file.toString, schema, task)
+    try rows.foreach(out.write) finally out.close()
   }
 
   def add(name: String, edges: DataFrame): Unit = put(name, edges)
@@ -121,11 +179,13 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     val key = try (version, fs(dir).getFileStatus(dir).getModificationTime)
       catch { case _: java.io.FileNotFoundException =>
         throw new java.util.NoSuchElementException(s"no version $version of $name") }
-    val schema = Option(schemas.get(name)).filter(_._1 == key).map(_._2).getOrElse {
-      val inferred = spark.read.parquet(dir.toString).schema
-      schemas.put(name, key -> inferred)
-      inferred
-    }
+    // `writing` first: its entry is removed only after `schemas` is seeded
+    val schema = Option(writing.get(name)).collect { case (`version`, s) => s }
+      .orElse(Option(schemas.get(name)).collect { case (`key`, s) => s }).getOrElse {
+        val inferred = spark.read.parquet(dir.toString).schema
+        remember(name, key, inferred)
+        inferred
+      }
     spark.read.schema(schema).parquet(dir.toString)
   }
 

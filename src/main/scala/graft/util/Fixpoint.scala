@@ -58,7 +58,7 @@ import org.apache.spark.sql.functions._
   *
   * [[Par.broadcastSized]] is the one size test behind
   * [[keyedResident]]'s layout, `bfsLevels`' choice of its driver-side
-  * path and `GraphStore.put`'s one-file write.
+  * path and `GraphStore.put`'s choice of its driver-side write.
   */
 object Fixpoint {
 

@@ -18,8 +18,8 @@ object Par {
     * plan's size estimate is within `spark.sql.autoBroadcastJoinThreshold`
     * (and broadcasting is on). A table that passes is one the driver
     * already collects whole for every broadcast, so an operator may
-    * collect it once itself, or write it as one file. Planning only:
-    * no job runs.
+    * collect it once itself, or write it from the driver. Planning
+    * only: no job runs.
     */
   def broadcastSized(df: DataFrame): Boolean = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold

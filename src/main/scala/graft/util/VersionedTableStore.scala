@@ -14,8 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - Layout. A snapshot is an immutable directory `baseDir/v<k>`;
   *     its tables live at `v<k>/<table>`, and the table name `""`
   *     means the snapshot directory itself is the single parquet table
-  *     (the GraphStore and DistinctPairView layout, where the parquet
-  *     committer's own `_SUCCESS` doubles as the marker).
+  *     (the GraphStore and DistinctPairView layout, with `_SUCCESS` as
+  *     the marker: a Spark write's committer creates it, and [[publish]]
+  *     creates it after a write that ran no committer, such as
+  *     GraphStore's driver-side write of a small snapshot).
   *   - Claim. A writer that allocates its own version takes it with
   *     [[claim]]: an exclusive create of `baseDir/_claim.v<k>`, for the
   *     first free k above the newest complete version. Exclusive create
@@ -140,8 +142,8 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
   /** Publish snapshot `v`: run `write` (which must commit every table
     * under [[tablePath]](v, _)), then create the marker. If `write`
     * throws, no marker is created and the partial `v<k>` stays
-    * invisible. A marker the parquet committer already wrote (the
-    * `""`-table `_SUCCESS` layout) is left as it is.
+    * invisible. A marker a Spark write's committer already created
+    * (the `""`-table `_SUCCESS` layout) is left as it is.
     */
   def publish(v: Long)(write: Long => Unit): Unit = {
     write(v)

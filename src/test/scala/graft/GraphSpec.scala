@@ -87,12 +87,14 @@ class GraphSpec extends AnyFunSuite {
     val store = new GraphStore(spark, dir.toString)
     val rnd = new scala.util.Random(3)
     val tree = (1 until 30).flatMap { v => val p = rnd.nextInt(v); Seq((p, v), (v, p)) }
-    store.put("T", edgeDf(tree: _*))
+    val (_, putJobs) = jobsOf(store.put("T", edgeDf(tree: _*)))
+    assert(putJobs.isEmpty, s"a small put ran ${putJobs.size} jobs")
     val parts = java.nio.file.Files.list(dir.resolve("T").resolve("v1"))
     try assert(parts.filter(_.getFileName.toString.startsWith("part-")).count() == 1)
     finally parts.close()
 
-    store.read("T")
+    val (_, firstJobs) = jobsOf(store.read("T"))
+    assert(firstJobs.isEmpty, s"the first read after a put ran ${firstJobs.size} jobs")
     val (edges, readJobs) = jobsOf(store.read("T"))
     assert(readJobs.isEmpty, s"a repeat read ran ${readJobs.size} jobs")
     val (levels, bfsJobs) = jobsOf(Traversals.bfsLevels(edges, 0, 30).collect())
@@ -113,6 +115,72 @@ class GraphSpec extends AnyFunSuite {
     assert(store.currentVersion("T").contains(1L))
     assert(store.read("T").schema.fieldNames.toSeq == Seq("src", "dst", "weight"))
     assert(store.read("T").filter(col("weight") === 1.5).count() == tree.size)
+  }
+
+  test("GraphStore: a driver-written version equals a Spark-written one") {
+    import SparkJobs.{jobsOf, withConf}
+    val dir = java.nio.file.Files.createTempDirectory("graphwrite").toString
+    val frames = Seq(
+      "ints" -> Seq[(Int, Option[Int])]((0, Some(1)), (1, Some(2)), (2, None)).toDF("src", "dst"),
+      "longs" -> Seq[(Long, Long, Option[Double], Option[String])](
+        (0L, 1L, Some(1.5), Some("a")), (1L, 2L, None, None), (3L, 0L, Some(-2.25), Some("")))
+        .toDF("src", "dst", "weight", "label"),
+      "empty" -> Seq.empty[(Int, Int, Double, String)].toDF("src", "dst", "weight", "label"))
+    val store = new GraphStore(spark, dir)
+    frames.foreach { case (n, df) =>
+      val (_, driverJobs) = jobsOf(store.put(s"$n-driver", df))
+      assert(driverJobs.isEmpty, s"$n: the driver write ran ${driverJobs.size} jobs")
+      val (_, sparkJobs) = jobsOf(withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+        store.put(s"$n-spark", df)))
+      assert(sparkJobs.nonEmpty, s"$n: the Spark write ran no job")
+    }
+    // the footers carry the same Spark schema (non-null columns stay
+    // REQUIRED, as in Spark's own write)
+    def footerSchemas(v1: String) = {
+      val parts = new java.io.File(v1).listFiles().filter(_.getName.startsWith("part-"))
+      parts.map { p =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toString), spark.sparkContext.hadoopConfiguration)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getFooter.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")
+        finally r.close()
+      }.toSet
+    }
+    // another process: a second store instance and a plain parquet read
+    val other = new GraphStore(spark, dir)
+    def rows(r: org.apache.spark.sql.DataFrame) = r.collect().map(_.toString).sorted.toSeq
+    frames.foreach { case (n, df) =>
+      assert(footerSchemas(s"$dir/$n-driver/v1") == footerSchemas(s"$dir/$n-spark/v1"), n)
+      val reads = Seq(store.read(s"$n-driver"), store.read(s"$n-spark"),
+        other.read(s"$n-driver"), other.read(s"$n-spark"),
+        spark.read.parquet(s"$dir/$n-driver/v1"), spark.read.parquet(s"$dir/$n-spark/v1"))
+      assert(reads.head.schema.map(f => f.name -> f.dataType) == df.schema.map(f => f.name -> f.dataType))
+      assert(reads.head.schema.forall(_.nullable), s"$n: ${reads.head.schema}")
+      reads.foreach { r =>
+        assert(r.schema == reads.head.schema, n)
+        assert(rows(r) == rows(df), n)
+      }
+    }
+  }
+
+  test("GraphStore: a failed small put publishes nothing, and its claim is skipped and swept") {
+    val dir = java.nio.file.Files.createTempDirectory("graphfail")
+    val store = new GraphStore(spark, dir.toString)
+    store.put("G", edgeDf((0, 1)))
+    val bad = spark.range(3).select(col("id").as("src"), raise_error(lit("boom")).cast("long").as("dst"))
+    assert(graft.util.Par.broadcastSized(bad))
+    val failed = intercept[Exception](store.put("G", bad))
+    assert(failed.getMessage.contains("boom"), failed.toString)
+    def edges(s: GraphStore) = s.read("G").collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    val other = new GraphStore(spark, dir.toString)
+    assert(store.currentVersion("G").contains(1L) && other.currentVersion("G").contains(1L))
+    assert(edges(store) == Seq((0, 1)) && edges(other) == Seq((0, 1)))
+    store.put("G", edgeDf((1, 2)))
+    assert(store.currentVersion("G").contains(3L) && other.currentVersion("G").contains(3L))
+    assert(edges(other) == Seq((1, 2)))
+    assert(store.vacuum("G", keepLast = 2) == Seq(2L))
+    assert(!java.nio.file.Files.exists(dir.resolve("G").resolve("_claim.v2")))
+    assert(store.versions("G") == Seq(1L, 3L))
   }
 
   test("labelPropagate separates two components") {
