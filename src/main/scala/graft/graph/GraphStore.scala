@@ -3,10 +3,15 @@ package graft.graph
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftshim.LocalRelationBridge
 import org.apache.spark.sql.types.StructType
 
 import graft.util.{Par, VersionedTableStore}
@@ -27,22 +32,32 @@ import graft.util.{Par, VersionedTableStore}
   * directories, and a per-name lock serializes this instance's own
   * writers.
   *
-  * Two choices keep the reference's request path (graphs of N ≤ 30)
-  * cheap:
+  * Two choices keep the store's part of the reference's request path
+  * (graphs of N ≤ 30) free of Spark jobs:
   *   - a snapshot small enough to broadcast
   *     ([[graft.util.Par.broadcastSized]]) is written by the driver as
   *     ONE part file, through Spark's own parquet writer: no Spark job
   *     for a local relation, no committer and no `_temporary` rename,
   *     one file to list on every later read. A larger snapshot is a
   *     plain Spark write;
-  *   - the schema of the newest version a name was put or read at is
-  *     memoized, so neither a read of this instance's own small put
-  *     (also one racing the put's last step) nor a repeat read plans
-  *     a footer-inference job. The memo is keyed by the version AND
-  *     its directory's modification time: a drop followed by a new put
-  *     can reuse `v1` with another schema, in a new directory. It
-  *     holds one entry per name, so a time-travel read of an older
-  *     version infers its schema.
+  *   - the newest version a name was put or read at is memoized: its
+  *     schema, and for a broadcast-sized version its rows as catalyst
+  *     `InternalRow`s. A read of a memoized version with rows returns
+  *     a local-relation frame over them, which runs no job to scan or
+  *     collect; a larger version reads as a plain parquet frame. A put
+  *     seeds the memo with the rows it wrote (a read racing the put's
+  *     last step takes them too); the first read of a version this
+  *     instance did not write takes its schema from one footer, read
+  *     on the driver, and collects a broadcast-sized version's rows in
+  *     one job. The memo is keyed by the version AND its directory's
+  *     modification time: a drop followed by a new put can reuse `v1`
+  *     with other rows, in a new directory. Its bound: one entry per
+  *     name put or read since that name's last drop, and rows only
+  *     for a broadcast-sized version, so at most about
+  *     `spark.sql.autoBroadcastJoinThreshold` bytes per name. A
+  *     time-travel read of an older version does not displace the
+  *     newest one's entry; it reads its footer and, if it is small,
+  *     collects its rows again.
   */
 final class GraphStore(spark: SparkSession, baseDir: String) {
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -71,25 +86,25 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
   private val published =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  // (version, directory mtime) -> schema of the newest version each
-  // name was read (inferred) or put (written) at (see the class doc). A
-  // read with a given schema makes every field nullable, as inference
-  // does, so both kinds read back alike.
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), StructType)]()
+  // (version, directory mtime) -> snapshot of the newest version each
+  // name was read or put at (see the class doc).
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), GraphStore.Snapshot)]()
 
-  // Version and schema of this instance's driver write in flight per
+  // Version and snapshot of this instance's driver write in flight per
   // name: a read that lists the version after its marker appears but
-  // before `schemas` is seeded takes the schema from here. An entry
+  // before `memo` is seeded takes the snapshot from here. An entry
   // lives from before the marker until after the seed.
   private val writing =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, GraphStore.Snapshot)]()
 
-  // Keep the entry of the newer directory: a slow inference of an older
-  // version must not evict the schema of a newer one. A drop and a new
-  // put make a newer directory, so they replace the entry.
-  private def remember(name: String, key: (Long, Long), schema: StructType): Unit =
-    schemas.merge(name, key -> schema, (old, in) => if (in._1._2 >= old._1._2) in else old): Unit
+  // Keep the entry of the newer directory: a slow first read of an
+  // older version must not evict the snapshot of a newer one. A drop
+  // and a new put make a newer directory, so they replace the entry.
+  private def remember(name: String, key: (Long, Long), snap: GraphStore.Snapshot): Unit =
+    memo.merge(name, key -> snap, (old, in) => if (in._1._2 >= old._1._2) in else old): Unit
+
+  private def versionKey(dir: Path): Long = fs(dir).getFileStatus(dir).getModificationTime
 
   /** Store a graph's edge DataFrame under `name` (create or overwrite —
     * reference ops "add graph" and "modify graph" share this path).
@@ -99,31 +114,28 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     val v = s.claim()
     val dir = s.versionPath(v)
     if (Par.broadcastSized(edges)) {
-      writing.put(name, v -> edges.schema)
       try {
-        s.publish(v)(_ => writeOnDriver(edges, dir))
-        remember(name, (v, fs(dir).getFileStatus(dir).getModificationTime), edges.schema)
+        s.publish(v)(_ => writing.put(name, v -> writeOnDriver(edges, dir)): Unit)
+        remember(name, (v, versionKey(dir)), writing.get(name)._2)
       } finally writing.remove(name)
     } else s.publish(v)(_ => edges.write.mode("overwrite").parquet(dir.toString))
     published.put(name, v): Unit
   }
 
-  /** Write `edges` as one parquet file in `dir` from the driver. The
-    * rows come from one `executeCollect` of the frame's own plan (no
-    * job for a local relation) and the file from Spark's own parquet
-    * writer factory, so the footer schema, codec and every other
-    * parquet session setting are those of a Spark write of the frame.
-    * No committer runs: the caller's marker alone makes the version
-    * visible.
+  /** Write `edges` as one parquet file in `dir` from the driver and
+    * return it as a snapshot. The rows come from one `executeCollect`
+    * of the frame's own plan (no job for a local relation) and the file
+    * from Spark's own parquet writer factory, so the footer schema,
+    * codec and every other parquet session setting are those of a
+    * Spark write of the frame. No committer runs: the caller's marker
+    * alone makes the version visible.
     */
-  private def writeOnDriver(edges: DataFrame, dir: Path): Unit = {
+  private def writeOnDriver(edges: DataFrame, dir: Path): GraphStore.Snapshot = {
     val schema = edges.schema
     val format = new ParquetFileFormat()
     DataSourceUtils.verifySchema(format, schema)
     DataSourceUtils.checkFieldNames(format, schema)
-    val qe = edges.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("GraphStore.put"))(
-      qe.executedPlan.executeCollect())
+    val rows = Par.collectRows(edges, "GraphStore.put")
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val factory = format.prepareWrite(spark, job, Map.empty, schema)
     val task = new TaskAttemptContextImpl(job.getConfiguration,
@@ -132,6 +144,7 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
       s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(task)}")
     val out = factory.newInstance(file.toString, schema, task)
     try rows.foreach(out.write) finally out.close()
+    GraphStore.Snapshot(schema.toNullable, Some(rows.toSeq))
   }
 
   def add(name: String, edges: DataFrame): Unit = put(name, edges)
@@ -156,6 +169,7 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     */
   def drop(name: String): Unit = {
     published.remove(name)
+    memo.remove(name)
     val dir = graphDir(name)
     val f = fs(dir)
     if (f.exists(dir)) f.delete(dir, true)
@@ -176,17 +190,40 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     */
   def readVersion(name: String, version: Long): DataFrame = {
     val dir = new Path(graphDir(name), s"v$version")
-    val key = try (version, fs(dir).getFileStatus(dir).getModificationTime)
+    val key = try (version, versionKey(dir))
       catch { case _: java.io.FileNotFoundException =>
         throw new java.util.NoSuchElementException(s"no version $version of $name") }
-    // `writing` first: its entry is removed only after `schemas` is seeded
-    val schema = Option(writing.get(name)).collect { case (`version`, s) => s }
-      .orElse(Option(schemas.get(name)).collect { case (`key`, s) => s }).getOrElse {
-        val inferred = spark.read.parquet(dir.toString).schema
-        remember(name, key, inferred)
-        inferred
+    // `writing` first: its entry is removed only after `memo` is seeded
+    val snap = Option(writing.get(name)).collect { case (`version`, s) => s }
+      .orElse(Option(memo.get(name)).collect { case (`key`, s) => s }).getOrElse {
+        val loaded = load(dir)
+        remember(name, key, loaded)
+        loaded
       }
-    spark.read.schema(schema).parquet(dir.toString)
+    snap.rows.fold(spark.read.schema(snap.schema).parquet(dir.toString))(
+      LocalRelationBridge.frame(spark, snap.schema, _))
+  }
+
+  /** The snapshot in `dir`: its schema from one footer, read on the
+    * driver (every part file of a version holds the one frame's
+    * schema), and a broadcast-sized version's rows from one collect.
+    * The schema is the one Spark's inference gives, without the
+    * inference job: Spark's own footer conversion under the session's
+    * parquet confs, every field nullable.
+    */
+  private def load(dir: Path): GraphStore.Snapshot = {
+    val part = fs(dir).listStatus(dir).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .minByOption(_.getName)
+    val schema = part.fold(spark.read.parquet(dir.toString).schema) { p =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(p, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(p, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+    val scan = spark.read.schema(schema).parquet(dir.toString)
+    GraphStore.Snapshot(scan.schema,
+      Option.when(Par.broadcastSized(scan))(Par.collectRows(scan, "GraphStore.read").toSeq))
   }
 
   /** Drop old snapshot versions of `name` by the store's vacuum rule:
@@ -224,4 +261,12 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     if (!f.exists(base)) Seq.empty
     else f.listStatus(base).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
   }
+}
+
+object GraphStore {
+
+  /** One version as the store serves it: the schema it reads with
+    * (every field nullable), and its rows when it is broadcast-sized.
+    */
+  private final case class Snapshot(schema: StructType, rows: Option[Seq[InternalRow]])
 }

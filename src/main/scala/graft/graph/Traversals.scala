@@ -1,14 +1,15 @@
 package graft.graph
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import graft.Op
 import graft.util.{Fixpoint, Par}
 import graft.util.Fixpoint.Until
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.LocalRelationBridge
 import org.apache.spark.sql.types._
 
 /** Frontier-join traversals: the Spark re-expression of the
@@ -35,7 +36,9 @@ import org.apache.spark.sql.types._
   * about 0.33 s on a 4-core host, 0.2 s of it driver gap between jobs
   * and 0.02 s executor CPU. So [[bfsLevels]] (and [[reachableFrom]])
   * over an edge table Spark would broadcast anyway runs one collect
-  * and a driver-side BFS instead.
+  * and a driver-side BFS instead. Over a local input, such as a small
+  * [[GraphStore]] version's read, that collect is answered from the
+  * driver's own rows, so the driver path runs no Spark job at all.
   */
 object Traversals {
 
@@ -47,26 +50,30 @@ object Traversals {
     * and the 25-nation trade graph) is collected once and walked level
     * by level on the driver: the frontier path's broadcast join
     * collects the same table in every round, so this is one job
-    * instead of about 3.5 per hop. Any other table runs
-    * [[Fixpoint.frontier]] rounds over a resident edge table.
+    * instead of about 3.5 per hop, and none over a local relation.
+    * Any other table runs [[Fixpoint.frontier]] rounds over a resident
+    * edge table.
     *
-    * The driver path returns a local frame with the frontier path's
-    * rows and schema: the schema is taken from the analysis of the
-    * same round ([[bfsRound]]; the seed's own when no round runs), an
-    * edge with a null `src` is never followed, and a null `dst` yields
-    * one `(null, hop)` row, as the join and the `min` merge do.
+    * The driver path returns a local relation with the frontier path's
+    * rows and schema: the schema is that of the analysis of the same
+    * round ([[bfsRound]]; the seed's own when no round runs), memoized
+    * per key types and nullability, an edge with a null `src` is never
+    * followed, and a null `dst` yields one `(null, hop)` row, as the
+    * join and the `min` merge do.
     */
   def bfsLevels(edges: DataFrame, source: Int, maxHops: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val seed = Seq((source, 0)).toDF("node", "dist")
     val e = edges.select(col("src"), col("dst"))
     if (e.schema.forall(f => integralKeys(f.dataType)) && Par.broadcastSized(e))
-      bfsOnDriver(seed, e, source, maxHops)
+      bfsOnDriver(e, source, maxHops)
     else Fixpoint.resident(e, "src") { r =>
-      Fixpoint.frontier(seed, "dist", maxHops)((visited, front, hop) =>
+      Fixpoint.frontier(seed(e.sparkSession, source), "dist", maxHops)((visited, front, hop) =>
         bfsRound(visited, front, r, hop))._1
     }
+  }
+
+  private def seed(s: SparkSession, source: Int): DataFrame = {
+    import s.implicits._
+    Seq((source, 0)).toDF("node", "dist")
   }
 
   /** One frontier round of [[bfsLevels]]: reach the frontier's
@@ -79,17 +86,29 @@ object Traversals {
 
   private val integralKeys: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
 
+  // The frontier path's output schema, per (whether a round runs, the
+  // edge keys' types and nullability): the analysis of one round, or
+  // the seed's own schema when none runs. At most 2 × 8 × 8 entries.
+  private val driverSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(Boolean, Seq[(DataType, Boolean)]), StructType]()
+
   /** [[bfsLevels]] over one collect of an integer-keyed `e`. Keys are
     * compared as longs, exactly as the round's join compares them after
     * widening, and written back in the node column's widened type.
     */
-  private def bfsOnDriver(seed: DataFrame, e: DataFrame, source: Int, maxHops: Int): DataFrame = {
-    val schema = if (maxHops > 0) bfsRound(seed, seed, e, 1).schema else seed.schema
+  private def bfsOnDriver(e: DataFrame, source: Int, maxHops: Int): DataFrame = {
+    val schema = driverSchemas.computeIfAbsent((maxHops > 0, e.schema.map(f => f.dataType -> f.nullable)),
+      _ => {
+        val s = seed(e.sparkSession, source)
+        if (maxHops > 0) bfsRound(s, s, e, 1).schema else s.schema
+      })
     val longNodes = schema("node").dataType == LongType
     def node(v: Long): Any = if (longNodes) Long.box(v) else Int.box(v.toInt)
-    def key(v: Any): Option[Long] = Option(v).map(_.asInstanceOf[Number].longValue)
-    val adj = e.collect().toSeq
-      .flatMap(r => key(r.get(0)).map(_ -> key(r.get(1))))
+    val get = e.schema.map(f => InternalRow.getAccessor(f.dataType))
+    def key(r: InternalRow, i: Int): Option[Long] =
+      Option(get(i)(r, i)).map(_.asInstanceOf[Number].longValue)
+    val adj = Par.collectRows(e, "Traversals.bfsLevels").toSeq
+      .flatMap(r => key(r, 0).map(_ -> key(r, 1)))
       .groupMap(_._1)(_._2)
     val dist = mutable.LinkedHashMap(source.toLong -> 0)
     var nullDist = Option.empty[Int]
@@ -103,8 +122,8 @@ object Traversals {
         case _ => None
       }
     }
-    val rows = dist.map { case (v, d) => Row(node(v), d) } ++ nullDist.map(Row(null, _))
-    e.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
+    val rows = dist.map { case (v, d) => InternalRow(node(v), d) } ++ nullDist.map(InternalRow(null, _))
+    LocalRelationBridge.frame(e.sparkSession, schema, rows.toSeq)
   }
 
   /** Nodes reachable from `source` (source included): [[bfsLevels]]

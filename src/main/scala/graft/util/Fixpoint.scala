@@ -58,7 +58,8 @@ import org.apache.spark.sql.functions._
   *
   * [[Par.broadcastSized]] is the one size test behind
   * [[keyedResident]]'s layout, `bfsLevels`' choice of its driver-side
-  * path and `GraphStore.put`'s choice of its driver-side write.
+  * path, `GraphStore.put`'s choice of its driver-side write and
+  * `GraphStore`'s choice of the versions whose rows it keeps.
   */
 object Fixpoint {
 

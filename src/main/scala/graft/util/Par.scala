@@ -1,6 +1,8 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 
 /** Session parallelism lookup shared by every operator that sizes an
   * explicit repartition or bucket count from the shuffle-partition
@@ -24,6 +26,20 @@ object Par {
   def broadcastSized(df: DataFrame): Boolean = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     threshold > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+  }
+
+  /** `df`'s rows as its physical plan produces them: one
+    * `executeCollect`, with no encoder. A local relation's scan is
+    * answered from the driver's own rows, so it runs no job and takes
+    * no SQL execution id; any other plan runs under a new execution id
+    * named `name`, as an action would.
+    */
+  def collectRows(df: DataFrame, name: String): Array[InternalRow] = {
+    val qe = df.queryExecution
+    qe.executedPlan match {
+      case local: LocalTableScanExec => local.executeCollect()
+      case plan => SQLExecution.withNewExecutionId(qe, Some(name))(plan.executeCollect())
+    }
   }
 
   private val schemaConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",

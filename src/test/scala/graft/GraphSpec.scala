@@ -67,21 +67,32 @@ class GraphSpec extends AnyFunSuite {
       "long tree, null dst" -> longsWithNull(tree(16)),
       "int digraph, null dst" -> intsWithNull(digraph(12, 24)),
       "long digraph" -> longs(digraph(12, 24)))
-    for ((label, e) <- inputs) {
+    // each graph also as a GraphStore version's read: a local relation
+    // over the stored rows, every column nullable
+    val store = new GraphStore(spark, java.nio.file.Files.createTempDirectory("bfspaths").toString)
+    val frames = inputs.zipWithIndex.flatMap { case ((label, e), i) =>
+      store.put(s"g$i", e)
+      Seq(label -> e, s"$label, stored" -> store.read(s"g$i"))
+    }
+    def sorted(df: DataFrame) = (df.schema, df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq)
+    def frontierPath[T](body: => T) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+    for ((label, e) <- frames) {
       assert(graft.util.Par.broadcastSized(e), s"$label would not take the driver path")
       for (source <- Seq(0, 5, 999); hops <- Seq(0, 1, 3, Int.MaxValue)) {
-        def run() = {
-          val df = Traversals.bfsLevels(e, source, hops)
-          (df.schema, df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq)
-        }
-        val driver = run()
-        val frontier = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
-        assert(driver == frontier, s"$label from $source, maxHops $hops")
+        def run() = sorted(Traversals.bfsLevels(e, source, hops))
+        assert(run() == frontierPath(run()), s"$label from $source, maxHops $hops")
+      }
+      // the DFS-terminal composition of g04, g23 and the serve benchmark
+      val dag = TradeGraph.dagEdges(e).localCheckpoint()
+      assert(graft.util.Par.broadcastSized(dag), s"$label: the DAG would not take the driver path")
+      for (source <- Seq(0, 5)) {
+        def sinks() = sorted(Traversals.reachableSinks(dag, source))
+        assert(sinks() == frontierPath(sinks()), s"$label: sinks from $source")
       }
     }
   }
 
-  test("serve path cost: one job per traversal, one file per small put, no job per repeat read") {
+  test("serve path cost: no job per small read or traversal, one file per small put") {
     import SparkJobs.jobsOf
     val dir = java.nio.file.Files.createTempDirectory("graphserve")
     val store = new GraphStore(spark, dir.toString)
@@ -93,28 +104,41 @@ class GraphSpec extends AnyFunSuite {
     try assert(parts.filter(_.getFileName.toString.startsWith("part-")).count() == 1)
     finally parts.close()
 
-    val (_, firstJobs) = jobsOf(store.read("T"))
-    assert(firstJobs.isEmpty, s"the first read after a put ran ${firstJobs.size} jobs")
-    val (edges, readJobs) = jobsOf(store.read("T"))
-    assert(readJobs.isEmpty, s"a repeat read ran ${readJobs.size} jobs")
-    val (levels, bfsJobs) = jobsOf(Traversals.bfsLevels(edges, 0, 30).collect())
-    assert(bfsJobs.size == 1, s"bfsLevels ran ${bfsJobs.size} jobs")
-    val (reach, reachJobs) = jobsOf(Traversals.reachableFrom(edges, 0).collect())
-    assert(reachJobs.size == 1, s"reachableFrom ran ${reachJobs.size} jobs")
     // the tree's own levels: a vertex is one hop below its parent
     val parent = tree.filter { case (p, v) => p < v }.map(_.swap).toMap
     def depth(v: Int): Int = parent.get(v).map(depth(_) + 1).getOrElse(0)
-    assert(levels.map(r => r.getInt(0) -> r.getInt(1)).toMap == (0 until 30).map(v => v -> depth(v)).toMap)
-    assert(reach.map(_.getInt(0)).sorted.toSeq == (0 until 30))
+    val levels = (0 until 30).map(v => v -> depth(v)).toMap
+    // one request of each traversal kind over one read
+    def serve(s: GraphStore) = {
+      val edges = s.read("T")
+      (Traversals.bfsLevels(edges, 0, 30).collect().map(r => r.getInt(0) -> r.getInt(1)).toMap,
+        Traversals.reachableFrom(edges, 0).collect().map(_.getInt(0)).sorted.toSeq)
+    }
+    def pin(s: GraphStore, label: String, jobs: Int): Unit = {
+      val (got, ran) = jobsOf(serve(s))
+      assert(ran.size == jobs, s"$label ran ${ran.size} jobs")
+      assert(got == (levels -> (0 until 30)), label)
+    }
+    pin(store, "the first read after the store's own put, with its traversals", 0)
+    pin(store, "a repeat read, with its traversals", 0)
+    // another instance collects a version it did not write once
+    val other = new GraphStore(spark, dir.toString)
+    pin(other, "another instance's first read, with its traversals", 1)
+    pin(other, "another instance's repeat read, with its traversals", 0)
 
     // a drop and a new put, from another store instance, reuse v1: the
-    // read must not serve the old schema
-    val other = new GraphStore(spark, dir.toString)
+    // read must serve the new version's schema and rows, not the memo's
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    val path = (0 until 29).map(v => (v, v + 1, 1.5))
     other.drop("T")
-    other.put("T", tree.map { case (a, b) => (a, b, 1.5) }.toDF("src", "dst", "weight"))
+    other.put("T", path.toDF("src", "dst", "weight"))
     assert(store.currentVersion("T").contains(1L))
     assert(store.read("T").schema.fieldNames.toSeq == Seq("src", "dst", "weight"))
-    assert(store.read("T").filter(col("weight") === 1.5).count() == tree.size)
+    assert(rows(store.read("T")) == rows(path.toDF()))
+    val star = (1 until 30).map(v => (0, v, 2.5))
+    other.drop("T")
+    other.put("T", star.toDF("src", "dst", "weight"))
+    assert(rows(store.read("T")) == rows(star.toDF()))
   }
 
   test("GraphStore: a driver-written version equals a Spark-written one") {
