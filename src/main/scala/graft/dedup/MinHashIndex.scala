@@ -95,11 +95,9 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
       prevSegments: Seq[String], tag: Option[String]): Long =
     publishSegment(prevSegments, tag) { seg =>
       val (written, n) = writeBloomed(seg, "sig", sig, "doc_id", "ids_bloom")
-      cand.select(col("doc_a"), col("doc_b"))
-        .write.mode("overwrite").parquet(segPath(seg, "cand").toString)
-      BloomSidecars.write(fs, segPath(seg, "bands_bloom"),
-        BloomSidecars.build(
-          Dedup.bands(written).select(bandKey.as("bk")), "bk", n * Dedup.BANDS))
+      writeTable(seg, "cand", cand.select(col("doc_a"), col("doc_b"))): Unit
+      writeSidecar(seg, "bands_bloom", BloomSidecars.build(
+        Dedup.bands(written).select(bandKey.as("bk")), "bk", n * Dedup.BANDS))
     }
 
   /** Full build from a corpus (docs: doc_id, text) — initialization.

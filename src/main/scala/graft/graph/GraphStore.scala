@@ -1,16 +1,8 @@
 package graft.graph
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.DataSourceUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
-  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graftshim.LocalRelationBridge
 import org.apache.spark.sql.types.StructType
 
@@ -34,12 +26,12 @@ import graft.util.{Par, VersionedTableStore}
   *
   * Two choices keep the store's part of the reference's request path
   * (graphs of N ≤ 30) free of Spark jobs:
-  *   - a snapshot small enough to broadcast
-  *     ([[graft.util.Par.broadcastSized]]) is written by the driver as
-  *     ONE part file, through Spark's own parquet writer: no Spark job
-  *     for a local relation, no committer and no `_temporary` rename,
-  *     one file to list on every later read. A larger snapshot is a
-  *     plain Spark write;
+  *   - every snapshot goes through the store's one table write,
+  *     [[graft.util.VersionedTableStore.writeTable]]: a snapshot small
+  *     enough to broadcast is written by the driver as ONE part file,
+  *     with no Spark job for a local relation and no committer, one
+  *     file to list on every later read. A larger snapshot is a plain
+  *     Spark write;
   *   - the newest version a name was put or read at is memoized: its
   *     schema, and for a broadcast-sized version its rows as catalyst
   *     `InternalRow`s. A read of a memoized version with rows returns
@@ -108,59 +100,45 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
 
   /** Store a graph's edge DataFrame under `name` (create or overwrite —
     * reference ops "add graph" and "modify graph" share this path).
+    * Returns the version it published.
     */
-  def put(name: String, edges: DataFrame): Unit = writerLock(name).synchronized {
+  def put(name: String, edges: DataFrame): Long = writerLock(name).synchronized {
     val s = snaps(name)
     val v = s.claim()
     val dir = s.versionPath(v)
-    if (Par.broadcastSized(edges)) {
-      try {
-        s.publish(v)(_ => writing.put(name, v -> writeOnDriver(edges, dir)): Unit)
-        remember(name, (v, versionKey(dir)), writing.get(name)._2)
-      } finally writing.remove(name)
-    } else s.publish(v)(_ => edges.write.mode("overwrite").parquet(dir.toString))
-    published.put(name, v): Unit
+    try {
+      s.publish(v)(_ => s.writeTable(edges, dir)._2.foreach(rows =>
+        writing.put(name, v -> GraphStore.Snapshot(edges.schema.toNullable, Some(rows.toSeq)))))
+      Option(writing.get(name)).foreach(w => remember(name, (v, versionKey(dir)), w._2))
+    } finally writing.remove(name)
+    published.put(name, v)
+    v
   }
 
-  /** Write `edges` as one parquet file in `dir` from the driver and
-    * return it as a snapshot. The rows come from one `executeCollect`
-    * of the frame's own plan (no job for a local relation) and the file
-    * from Spark's own parquet writer factory, so the footer schema,
-    * codec and every other parquet session setting are those of a
-    * Spark write of the frame. No committer runs: the caller's marker
-    * alone makes the version visible.
-    */
-  private def writeOnDriver(edges: DataFrame, dir: Path): GraphStore.Snapshot = {
-    val schema = edges.schema
-    val format = new ParquetFileFormat()
-    DataSourceUtils.verifySchema(format, schema)
-    DataSourceUtils.checkFieldNames(format, schema)
-    val rows = Par.collectRows(edges, "GraphStore.put")
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val factory = format.prepareWrite(spark, job, Map.empty, schema)
-    val task = new TaskAttemptContextImpl(job.getConfiguration,
-      new TaskAttemptID(new TaskID("", 0, TaskType.MAP, 0), 0))
-    val file = new Path(dir,
-      s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(task)}")
-    val out = factory.newInstance(file.toString, schema, task)
-    try rows.foreach(out.write) finally out.close()
-    GraphStore.Snapshot(schema.toNullable, Some(rows.toSeq))
-  }
-
-  def add(name: String, edges: DataFrame): Unit = put(name, edges)
-  def modify(name: String, edges: DataFrame): Unit = put(name, edges)
+  def add(name: String, edges: DataFrame): Long = put(name, edges)
+  def modify(name: String, edges: DataFrame): Long = put(name, edges)
 
   /** Incremental modify: publish a new snapshot = (current ∖ deletions)
     * ∪ additions, keyed by (src, dst). The reference's "modify graph"
     * rewrites the whole matrix (≤30 nodes); at billions of edges the
     * delta form is the only one that scales — one anti-join + union,
-    * still an atomic snapshot publish.
+    * still an atomic snapshot publish. Returns the version it published.
     */
-  def applyDelta(name: String, additions: DataFrame, deletions: DataFrame): Unit = {
-    val current = read(name)
-    val keep = current.join(
+  def applyDelta(name: String, additions: DataFrame, deletions: DataFrame): Long =
+    deltaFrom(name, additions, deletions)._2
+
+  /** [[applyDelta]], returning (the version the delta was applied to,
+    * the version it published). The read and the put run under the
+    * name's writer lock, so two deltas on one name never both apply to
+    * the same version.
+    */
+  private[graph] def deltaFrom(name: String, additions: DataFrame,
+      deletions: DataFrame): (Long, Long) = writerLock(name).synchronized {
+    val base = currentVersion(name).getOrElse(
+      throw new java.util.NoSuchElementException(s"no graph named $name"))
+    val keep = readVersion(name, base).join(
       deletions.select(deletions("src"), deletions("dst")), Seq("src", "dst"), "left_anti")
-    put(name, keep.unionByName(additions, allowMissingColumns = true))
+    (base, put(name, keep.unionByName(additions, allowMissingColumns = true)))
   }
 
   /** Remove a graph entirely (reference cleanup.c broadcast shutdown —
@@ -196,7 +174,7 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
     // `writing` first: its entry is removed only after `memo` is seeded
     val snap = Option(writing.get(name)).collect { case (`version`, s) => s }
       .orElse(Option(memo.get(name)).collect { case (`key`, s) => s }).getOrElse {
-        val loaded = load(dir)
+        val loaded = load(name, dir)
         remember(name, key, loaded)
         loaded
       }
@@ -205,23 +183,11 @@ final class GraphStore(spark: SparkSession, baseDir: String) {
   }
 
   /** The snapshot in `dir`: its schema from one footer, read on the
-    * driver (every part file of a version holds the one frame's
-    * schema), and a broadcast-sized version's rows from one collect.
-    * The schema is the one Spark's inference gives, without the
-    * inference job: Spark's own footer conversion under the session's
-    * parquet confs, every field nullable.
+    * driver ([[graft.util.VersionedTableStore.footerSchema]]), and a
+    * broadcast-sized version's rows from one collect.
     */
-  private def load(dir: Path): GraphStore.Snapshot = {
-    val part = fs(dir).listStatus(dir).map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .minByOption(_.getName)
-    val schema = part.fold(spark.read.parquet(dir.toString).schema) { p =>
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromPath(p, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(
-        new Footer(p, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    }
-    val scan = spark.read.schema(schema).parquet(dir.toString)
+  private def load(name: String, dir: Path): GraphStore.Snapshot = {
+    val scan = spark.read.schema(snaps(name).footerSchema(dir)).parquet(dir.toString)
     GraphStore.Snapshot(scan.schema,
       Option.when(Par.broadcastSized(scan))(Par.collectRows(scan, "GraphStore.read").toSeq))
   }

@@ -26,11 +26,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class DistinctPairView(spark: SparkSession, store: GraphStore,
     graph: String, viewDir: String) {
   // (companion aggregate view with multiplicity: [[DegreeView]] below)
-  // Snapshot layout: parquet at the v<k> root, so the committer's own
-  // _SUCCESS doubles as the completion marker — a writer that crashed
-  // mid-write leaves a markerless v<k> that is invisible, version()
-  // keeps serving the previous snapshot, and the next applyDelta sees
-  // stale (view version < graph version) and takes the rebuild path.
+  // Snapshot layout: parquet at the v<k> root with _SUCCESS as the
+  // completion marker — a writer that crashed mid-write leaves a
+  // markerless v<k> that is invisible, version() keeps serving the
+  // previous snapshot, and the next applyDelta finds its delta applied
+  // to a version the view does not reflect and takes the rebuild path.
   private val snaps = new graft.util.VersionedTableStore(spark, viewDir, "_SUCCESS")
 
   /** Graph version the newest COMPLETE materialized view reflects. */
@@ -41,36 +41,35 @@ final class DistinctPairView(spark: SparkSession, store: GraphStore,
   def read(): DataFrame = snaps.readTable("", s"view of $graph never built")
 
   private def write(df: DataFrame, v: Long): Unit = snaps.publish(v) { v =>
-    df.select(df("src"), df("dst"))
-      .write.mode("overwrite").parquet(snaps.tablePath(v, "").toString)
+    snaps.writeTable(df.select(df("src"), df("dst")), snaps.tablePath(v, "")): Unit
   }
 
   /** Full build from the current graph snapshot — initialization and
     * the recovery path when the store was modified behind the view's
     * back (version mismatch).
     */
-  def rebuild(): Unit = {
-    val v = store.currentVersion(graph).getOrElse(
-      throw new java.util.NoSuchElementException(s"no graph named $graph"))
-    write(store.read(graph).select("src", "dst").distinct(), v)
-  }
+  def rebuild(): Unit = rebuildAt(store.currentVersion(graph).getOrElse(
+    throw new java.util.NoSuchElementException(s"no graph named $graph")))
+
+  private def rebuildAt(v: Long): Unit =
+    write(store.readVersion(graph, v).select("src", "dst").distinct(), v)
 
   /** Publish the delta to the store AND refresh the view from its own
     * previous materialization plus the delta only — the base table is
-    * never rescanned. Falls back to [[rebuild]] if the view is stale
-    * (someone wrote the graph without going through this view).
+    * never rescanned. Falls back to a rebuild when the delta was not
+    * applied to the version the view reflects (someone wrote the graph
+    * without going through this view). Returns the graph version the
+    * view now reflects: the one the delta published.
     */
-  def applyDelta(additions: DataFrame, deletions: DataFrame): Unit = {
-    val wasFresh = isFresh
-    store.applyDelta(graph, additions, deletions)
-    if (!wasFresh) { rebuild(); return }
-    val prev = read()
-    val next = prev
+  def applyDelta(additions: DataFrame, deletions: DataFrame): Long = {
+    val (base, v) = store.deltaFrom(graph, additions, deletions)
+    if (!version.contains(base)) rebuildAt(v)
+    else write(read()
       .join(deletions.select(deletions("src"), deletions("dst")).distinct(),
         Seq("src", "dst"), "left_anti")
       .unionByName(additions.select(additions("src"), additions("dst")).distinct())
-      .distinct()
-    write(next, store.currentVersion(graph).get)
+      .distinct(), v)
+    v
   }
 
   /** Drop all but the newest `keepLast` complete view snapshots (the
@@ -134,10 +133,10 @@ final class DegreeView(spark: SparkSession, store: GraphStore,
 
   private def write(kcnt: DataFrame, deg: DataFrame, v: Long): Unit =
     snaps.publish(v) { v =>
-      kcnt.select(col("src"), col("dst"), col("cnt"))
-        .write.mode("overwrite").parquet(snaps.tablePath(v, "kcnt").toString)
-      deg.select(col("node"), col("out_deg"), col("in_deg"), col("deg"))
-        .write.mode("overwrite").parquet(snaps.tablePath(v, "deg").toString)
+      snaps.writeTable(kcnt.select(col("src"), col("dst"), col("cnt")),
+        snaps.tablePath(v, "kcnt")): Unit
+      snaps.writeTable(deg.select(col("node"), col("out_deg"), col("in_deg"), col("deg")),
+        snaps.tablePath(v, "deg")): Unit
     }
 
   private def degreesOf(kcnt: DataFrame): DataFrame = {
@@ -154,34 +153,37 @@ final class DegreeView(spark: SparkSession, store: GraphStore,
     * the recovery path when the store was modified behind the view's
     * back (version mismatch).
     */
-  def rebuild(): Unit = {
-    val v = store.currentVersion(graph).getOrElse(
-      throw new java.util.NoSuchElementException(s"no graph named $graph"))
-    val kcnt = store.read(graph)
+  def rebuild(): Unit = rebuildAt(store.currentVersion(graph).getOrElse(
+    throw new java.util.NoSuchElementException(s"no graph named $graph")))
+
+  private def rebuildAt(v: Long): Unit = {
+    val kcnt = store.readVersion(graph, v)
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
     write(kcnt, degreesOf(kcnt), v)
   }
 
   /** Publish the delta to the store AND refresh the view from its own
     * previous materialization plus the delta only — the base table is
-    * never rescanned. Falls back to [[rebuild]] if the view is stale.
+    * never rescanned. Falls back to a rebuild when the delta was not
+    * applied to the version the view reflects. Returns the graph
+    * version the view now reflects: the one the delta published.
     */
-  def applyDelta(additions: DataFrame, deletions: DataFrame): Unit = {
-    val wasFresh = isFresh
-    store.applyDelta(graph, additions, deletions)
-    if (!wasFresh) { rebuild(); return }
-    refreshIncremental(additions, deletions)
+  def applyDelta(additions: DataFrame, deletions: DataFrame): Long = {
+    val (base, v) = store.deltaFrom(graph, additions, deletions)
+    if (!version.contains(base)) rebuildAt(v) else refreshIncremental(additions, deletions, v)
+    v
   }
 
   /** The incremental half of [[applyDelta]]: fold a delta the store
-    * has ALREADY published into the view's previous materialization.
-    * Precondition: the view reflects the store version immediately
-    * before that publish. Reads only the view's own `kcnt`/`deg`
-    * snapshots and the delta — never the base edge table (the spec
-    * proves it by deleting the base parquet before calling this).
+    * has ALREADY published, as graph version `v`, into the view's
+    * previous materialization. Precondition: the delta was applied to
+    * the version the view reflects. Reads only the view's own
+    * `kcnt`/`deg` snapshots and the delta — never the base edge table
+    * (the spec proves it by deleting the base parquet before calling
+    * this).
     */
   private[graft] def refreshIncremental(
-      additions: DataFrame, deletions: DataFrame): Unit = {
+      additions: DataFrame, deletions: DataFrame, v: Long): Unit = {
     val delKeys = deletions.select(col("src"), col("dst")).distinct()
     val addCnt = additions.groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("acnt"))
@@ -223,7 +225,7 @@ final class DegreeView(spark: SparkSession, store: GraphStore,
     // Compute both BEFORE publishing: newDeg reads the previous `deg`
     // parquet, which an eager overwrite of the same version dir would
     // corrupt mid-plan. New version dir = new files; no such hazard.
-    write(newK, newDeg, store.currentVersion(graph).get)
+    write(newK, newDeg, v)
   }
 
   /** Drop all but the newest `keepLast` complete view snapshots plus

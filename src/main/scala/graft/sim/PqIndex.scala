@@ -154,8 +154,7 @@ final class PqIndex(spark: SparkSession, indexDir: String)
     publishSegment(prevSegments, tag, Seq("params" -> k.toString)) { seg =>
       writeBloomed(seg, "cells", cellsDf.select(col("vec_id"), col("cell")),
         "vec_id", "ids_bloom"): Unit
-      codesDf.select(col("vec_id"), col("m"), col("code"))
-        .write.mode("overwrite").parquet(segPath(seg, "codes").toString)
+      writeTable(seg, "codes", codesDf.select(col("vec_id"), col("m"), col("code"))): Unit
       snaps.writeTextFile(segPath(seg, "err"), errLine)
     }
 

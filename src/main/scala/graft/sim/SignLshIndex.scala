@@ -140,7 +140,7 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
     publishSegment(prevSegments,
         extra = Seq("params" -> paramsLine, "format" -> CurrentFormat.toString)) { seg =>
       writeBloomed(seg, "vec", vec, "vec_id", "ids_bloom"): Unit
-      sig.write.mode("overwrite").parquet(segPath(seg, "sig").toString)
+      writeTable(seg, "sig", sig): Unit
     }
 
   /** Full build from a corpus (vecs: vec_id, embedding) —

@@ -3,7 +3,9 @@ package graft.util
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{struct, udf}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.functions.{col, struct, udf}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** The format of the per-segment bloom sidecars of the incremental
@@ -35,11 +37,22 @@ object BloomSidecars {
 
   /** Bloom over `column` of `df` (`n` = row estimate; `n == 0` yields
     * an empty never-matching bloom — the sketch aggregate returns
-    * null on zero rows).
+    * null on zero rows). A frame Spark would broadcast is collected in
+    * one `executeCollect` (no job over a local relation) and hashed on
+    * the driver into the buffer of Spark's own `bloom_filter_agg`
+    * aggregate, so its sizing caps and per-type hashing (integral keys
+    * as longs, strings as UTF-8 bytes, nulls skipped) are the
+    * aggregate's; a larger frame runs the aggregate.
     */
   def build(df: DataFrame, column: String, n: Long): BloomFilter =
     if (n == 0) BloomFilter.create(1, Fpp)
-    else df.stat.bloomFilter(column, n, Fpp)
+    else if (Par.broadcastSized(df)) {
+      val keys = df.select(col(column))
+      val agg = new BloomFilterAggregate(
+        BoundReference(0, keys.schema.head.dataType, nullable = true),
+        Literal(n), Literal(BloomFilter.optimalNumOfBits(n, Fpp)))
+      Par.collectRows(keys, s"bloom $column").foldLeft(agg.createAggregationBuffer())(agg.update)
+    } else df.stat.bloomFilter(column, n, Fpp)
 
   def write(fs: FileSystem, p: Path, bf: BloomFilter): Unit = {
     val out = fs.create(p, true)

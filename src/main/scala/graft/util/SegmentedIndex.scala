@@ -1,8 +1,12 @@
 package graft.util
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, explode, lit, size}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, explode, size}
+import org.apache.spark.sql.graftshim.LocalRelationBridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.sketch.BloomFilter
 
 /** The lifecycle every incremental segment index shares
   * ([[graft.dedup.MinHashIndex]], [[graft.dedup.GramIndex]],
@@ -12,10 +16,11 @@ import org.apache.spark.sql.functions.{col, count, explode, lit, size}
   * Layout under `indexDir`:
   *   - `seg/s<k>/`: one immutable delta SEGMENT per build, append or
   *     compaction — the index's parquet tables plus their sidecars;
-  *   - `v<k>/{segments, tag, <extra>, _INDEX_OK}`: version k's
-  *     manifest (the segments it is the union of), its optional
-  *     journal tag, per-index manifest files, and the completion
-  *     marker of the [[VersionedTableStore]] protocol.
+  *   - `v<k>/{segments, stats, tag, <extra>, _INDEX_OK}`: version
+  *     k's manifest (the segments it is the union of), their
+  *     [[stats]], its optional journal tag, per-index manifest files,
+  *     and the completion marker of the [[VersionedTableStore]]
+  *     protocol.
   *
   * [[publishSegment]] claims version k, writes segment `s<k>` (so two
   * writers never share a segment name either), then publishes the
@@ -24,21 +29,35 @@ import org.apache.spark.sql.functions.{col, count, explode, lit, size}
   * no complete version references; [[vacuum]] keeps it while it is the
   * newest claim and sweeps it once a newer version completes.
   * Appends, compactions and vacuums of one directory are single-writer
-  * (see [[VersionedTableStore]]).
+  * (see [[VersionedTableStore]]). Every segment table goes through the
+  * store's one table write ([[writeTable]]): a broadcast-sized table is
+  * written by the driver from one collect, with no committer. Reads
+  * take each table's schema from a per-instance memo, seeded by this
+  * instance's writes or else by one footer read on the driver, so no
+  * read runs a schema-inference job.
   *
   * Bloom sidecars ([[BloomSidecars]]) let a probe skip segments. A
   * segment's sidecar over a key column of one of its tables has no
   * false negatives over that table's keys, so a segment whose sidecar
   * claims none of the probe keys holds none of them; a segment with no
-  * sidecar is always suspect. [[writeBloomed]] is the one sidecar
-  * write: the table's row count n, which sizes the bloom, comes from
-  * the write itself. [[probe]] is the one bloom-pruned read: an exact
-  * semi-join against only the claiming segments.
+  * sidecar is always suspect. [[writeBloomed]] is the one bloomed
+  * table write: the bloom is sized for the table's row count n and
+  * built from the rows the driver wrote, or, for a larger table, by
+  * Spark's bloom aggregate over the written table. [[probe]] is the
+  * one bloom-pruned read: an exact semi-join against only the claiming
+  * segments.
   */
 abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
   protected val snaps = new VersionedTableStore(spark, indexDir, "_INDEX_OK")
   protected def segRoot = new Path(snaps.dir, "seg")
   protected def fs = snaps.fs
+
+  // table -> read schema (see the class doc)
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  // segment -> the stats entries of its tables and sidecars, while
+  // publishSegment writes it
+  private val pending = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Newest COMPLETE index version (manifest + marker), if any. */
   def version: Option[Long] = snaps.version
@@ -59,9 +78,13 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
   protected def segPath(seg: String, file: String): Path =
     new Path(segRoot, s"$seg/$file")
 
-  /** One multi-path parquet scan of `table` over `segs`. */
+  /** One multi-path parquet scan of `table` over `segs`, with the
+    * memoized schema: no inference job.
+    */
   protected def readSegments(segs: Seq[String], table: String): DataFrame =
-    spark.read.parquet(segs.map(segPath(_, table).toString): _*)
+    spark.read.schema(schemas.computeIfAbsent(table,
+      _ => snaps.footerSchema(segPath(segs.head, table))))
+      .parquet(segs.map(segPath(_, table).toString): _*)
 
   /** `table` as of the newest complete version. */
   protected def readTable(table: String): DataFrame =
@@ -70,7 +93,7 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
   /** `table` of version `v`'s own delta segment — an O(batch) read. */
   protected def addedAt(v: Long, table: String): DataFrame = {
     require(snaps.isComplete(v), s"no complete version $v")
-    spark.read.parquet(segPath(s"s$v", table).toString)
+    readSegments(Seq(s"s$v"), table)
   }
 
   /** Read a small text file of the index (manifest, sidecar stats). */
@@ -95,15 +118,24 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
 
   /** Claim a version k, write its segment `s<k>` with `writeSegment`
     * (given the segment's name), then publish k as `prev :+ s<k>` with
-    * `tag` and the `extra` manifest files (name -> content). Returns k.
+    * `tag` and the `extra` manifest files (name -> content). The
+    * `stats` manifest carries `prev`'s lines from the newest complete
+    * version and adds the new segment's: what its writes recorded, and
+    * the bytes of its files. Returns k.
     */
   protected def publishSegment(prev: Seq[String], tag: Option[String] = None,
       extra: Seq[(String, String)] = Nil)(writeSegment: String => Unit): Long = {
     val v = snaps.claim()
     val seg = s"s$v"
-    writeSegment(seg)
+    val line = try {
+      writeSegment(seg)
+      (seg +: Option(pending.get(seg)).toSeq :+
+        s"bytes=${fs.getContentSummary(new Path(segRoot, seg)).getLength}").mkString(" ")
+    } finally pending.remove(seg)
+    val carried = snaps.version.fold(Map.empty[String, String])(statsLines)
     snaps.publish(v) { v =>
       val files = ("segments" -> (prev :+ seg).mkString("\n")) +:
+        ("stats" -> (prev.flatMap(carried.get) :+ line).mkString("\n")) +:
         (tag.map("tag" -> _).toSeq ++ extra)
       files.foreach { case (name, content) =>
         snaps.writeTextFile(new Path(snaps.versionPath(v), name), content)
@@ -112,22 +144,70 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
     v
   }
 
-  /** Write `df` as `table` of segment `seg`, then the bloom sidecar
-    * `sidecar` over the written `key` column. The row count is observed
-    * on the write's own job, and the bloom is built from the written
-    * files read back with the schema just written, so `df`'s plan runs
-    * once and no count or schema-inference job runs. Returns the
-    * written table and its row count.
+  private def record(seg: String, entry: String): Unit =
+    pending.merge(seg, entry, (a, b) => s"$a $b"): Unit
+
+  /** Write `df` as `table` of segment `seg` with the store's one table
+    * write ([[VersionedTableStore.writeTable]]), seed the table's read
+    * schema and record its row count in the segment's stats. Returns
+    * the row count and, for a driver write, the rows.
+    */
+  protected def writeTable(seg: String, table: String,
+      df: DataFrame): (Long, Option[Array[InternalRow]]) = {
+    val written = snaps.writeTable(df, segPath(seg, table))
+    schemas.put(table, df.schema.toNullable)
+    record(seg, s"$table.rows=${written._1}")
+    written
+  }
+
+  /** Write `bf` as sidecar `sidecar` of segment `seg` and record its
+    * expected false-positive rate in the segment's stats.
+    */
+  protected def writeSidecar(seg: String, sidecar: String, bf: BloomFilter): Unit = {
+    BloomSidecars.write(fs, segPath(seg, sidecar), bf)
+    record(seg, s"$sidecar.fpp=${bf.expectedFpp()}")
+  }
+
+  /** Write `df` as `table` of segment `seg` ([[writeTable]]), then the
+    * bloom sidecar `sidecar` over its `key` column, sized for its row
+    * count n. The table is the written one: a local relation over the
+    * rows the driver wrote, whose bloom is hashed with no job, else the
+    * parquet table. `df`'s plan runs once. Returns the table and n.
     */
   protected def writeBloomed(seg: String, table: String, df: DataFrame,
       key: String, sidecar: String): (DataFrame, Long) = {
-    val p = segPath(seg, table).toString
-    val rows = Observation()
-    df.observe(rows, count(lit(1)).as("n")).write.mode("overwrite").parquet(p)
-    val n = rows.get("n").asInstanceOf[Long]
-    val written = spark.read.schema(df.schema).parquet(p)
-    BloomSidecars.write(fs, segPath(seg, sidecar), BloomSidecars.build(written, key, n))
+    val (n, rows) = writeTable(seg, table, df)
+    val written = rows.fold(readSegments(Seq(seg), table))(
+      r => LocalRelationBridge.frame(spark, df.schema, r.toSeq))
+    writeSidecar(seg, sidecar, BloomSidecars.build(written, key, n))
     (written, n)
+  }
+
+  /** Version `v`'s `stats` manifest lines by segment. */
+  private def statsLines(v: Long): Map[String, String] = {
+    val p = new Path(snaps.versionPath(v), "stats")
+    if (!fs.exists(p)) Map.empty
+    else readText(p).split("\n").map(l => l.takeWhile(_ != ' ') -> l).toMap
+  }
+
+  /** What the newest complete version holds, per segment: each table's
+    * rows, the bytes of the segment's files and each sidecar's expected
+    * false-positive rate. Read from the version's manifest files alone:
+    * no Spark action. A segment written before stats were recorded
+    * reports no numbers.
+    */
+  def stats(): SegmentedIndex.Stats = {
+    val v = requireVersion()
+    val lines = statsLines(v)
+    SegmentedIndex.Stats(v, segmentsOf(v).map { seg =>
+      val kv = lines.get(seg).toSeq.flatMap(_.split(" ").drop(1))
+        .map(_.split("=", 2)).collect { case Array(k, x) => k -> x }
+      def by[T](suffix: String, f: String => T) = kv.collect {
+        case (k, x) if k.endsWith(suffix) => k.stripSuffix(suffix) -> f(x) }.toMap
+      SegmentedIndex.SegmentStats(seg, by(".rows", _.toLong),
+        kv.collectFirst { case ("bytes", b) => b.toLong }.getOrElse(0L),
+        by(".fpp", _.toDouble))
+    })
   }
 
   /** `key` as a column of the indices into `segs` whose sidecar
@@ -208,5 +288,20 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
       compact(): Unit
     if (vacuumKeep > 0) vacuum(vacuumKeep): Unit
+  }
+}
+
+object SegmentedIndex {
+
+  /** One segment's [[SegmentedIndex.stats]]: rows per table, bytes of
+    * its files, expected false-positive rate per sidecar.
+    */
+  final case class SegmentStats(segment: String, rows: Map[String, Long], bytes: Long,
+      fpp: Map[String, Double])
+
+  /** An index version's segments and their numbers. */
+  final case class Stats(version: Long, segments: Seq[SegmentStats]) {
+    def rows(table: String): Long = segments.flatMap(_.rows.get(table)).sum
+    def bytes: Long = segments.map(_.bytes).sum
   }
 }

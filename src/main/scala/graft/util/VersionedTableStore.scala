@@ -1,7 +1,18 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** The one snapshot protocol of every persistent artifact in the engine:
   * [[graft.graph.GraphStore]] (one store per graph name), the graph
@@ -16,8 +27,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     means the snapshot directory itself is the single parquet table
   *     (the GraphStore and DistinctPairView layout, with `_SUCCESS` as
   *     the marker: a Spark write's committer creates it, and [[publish]]
-  *     creates it after a write that ran no committer, such as
-  *     GraphStore's driver-side write of a small snapshot).
+  *     creates it after a write that ran no committer).
+  *   - Write. [[writeTable]] is the one table write of every store. A
+  *     frame Spark would broadcast ([[Par.broadcastSized]]) is
+  *     collected once and written by the driver as ONE part file: no
+  *     Spark job for a local relation and no committer; the marker
+  *     alone publishes it. A larger frame is a plain Spark write.
   *   - Claim. A writer that allocates its own version takes it with
   *     [[claim]]: an exclusive create of `baseDir/_claim.v<k>`, for the
   *     first free k above the newest complete version. Exclusive create
@@ -108,8 +123,55 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
   def readTable(table: String, missing: => String): DataFrame = {
     val v = version.getOrElse(
       throw new java.util.NoSuchElementException(missing))
-    spark.read.parquet(tablePath(v, table).toString)
+    val p = tablePath(v, table)
+    spark.read.schema(footerSchema(p)).parquet(p.toString)
   }
+
+  /** Write `df` as the parquet table at `p` (see Write in the class
+    * doc). Returns the row count and, for the driver write, the rows it
+    * collected, so a caller derives from the table (a bloom, a read
+    * memo) without reading it back. The driver's file comes from
+    * Spark's own parquet writer factory: the footer schema, codec and
+    * other parquet settings are those of a Spark write of `df`.
+    */
+  def writeTable(df: DataFrame, p: Path): (Long, Option[Array[InternalRow]]) =
+    if (Par.broadcastSized(df)) {
+      val schema = df.schema
+      val format = new ParquetFileFormat()
+      DataSourceUtils.verifySchema(format, schema)
+      DataSourceUtils.checkFieldNames(format, schema)
+      val rows = Par.collectRows(df, s"write ${p.getName}")
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = format.prepareWrite(spark, job, Map.empty, schema)
+      val task = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID("", 0, TaskType.MAP, 0), 0))
+      val file = new Path(p,
+        s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(task)}")
+      val out = factory.newInstance(file.toString, schema, task)
+      try rows.foreach(out.write) finally out.close()
+      (rows.length.toLong, Some(rows))
+    } else {
+      val n = Observation()
+      df.observe(n, count(lit(1)).as("n")).write.mode("overwrite").parquet(p.toString)
+      (n.get("n").asInstanceOf[Long], None)
+    }
+
+  /** The schema of the parquet table at `p` as Spark's inference gives
+    * it, without the inference job: one part file's footer, read on the
+    * driver and converted by Spark's own footer conversion under the
+    * session's parquet confs, every field nullable. Every part file of
+    * a table holds the one frame's schema.
+    */
+  def footerSchema(p: Path): StructType =
+    fs.listStatus(p).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .minByOption(_.getName)
+      .fold(spark.read.parquet(p.toString).schema) { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)).toNullable
+      }
 
   /** Take the next version for a new snapshot: exclusive-create
     * `_claim.v<k>` for the first free k above the newest complete

@@ -301,6 +301,32 @@ class GraphSpec extends AnyFunSuite {
     intercept[java.util.NoSuchElementException](store.read("G"))
   }
 
+  test("GraphStore: concurrent deltas on one name both land; a view publishes at its own delta's version") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val base = java.nio.file.Files.createTempDirectory("graphdeltarace").toString
+    val store = new GraphStore(spark, s"$base/store")
+    val view = new DistinctPairView(spark, store, "G", s"$base/view")
+    def edges(v: Long) = store.readVersion("G", v).collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    store.add("G", edgeDf((0, 1)))
+    view.rebuild()
+    for (round <- 1 to 4) {
+      val (a, b) = ((100 + round, 1), (200 + round, 2))
+      // both deltas start together, one through the view
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val fa = Future { gate.await(); view.applyDelta(edgeDf(a), edgeDf()) }
+      val fb = Future { gate.await(); store.applyDelta("G", edgeDf(b), edgeDf()) }
+      val (va, vb) = (Await.result(fa, 2.minutes), Await.result(fb, 2.minutes))
+      assert(va != vb)
+      val newest = store.currentVersion("G").get
+      assert(newest == math.max(va, vb))
+      assert(edges(newest).contains(a) && edges(newest).contains(b), s"round $round lost a delta")
+      assert(view.version.contains(va))
+      assert(view.read().collect().map(r => (r.getInt(0), r.getInt(1))).toSet == edges(va))
+    }
+  }
+
   test("GraphStore vacuum retains newest versions and the current pointer") {
     val dir = java.nio.file.Files.createTempDirectory("graphvacuum").toString
     val store = new GraphStore(spark, dir)
@@ -676,7 +702,7 @@ class GraphSpec extends AnyFunSuite {
     val expected = Map(
       1 -> ((3L, 0L, 3L)), 2 -> ((1L, 3L, 4L)),
       3 -> ((1L, 1L, 2L)), 4 -> ((0L, 1L, 1L)))
-    store.applyDelta("G", adds, dels) // view now one version behind
+    val published = store.applyDelta("G", adds, dels) // view now one version behind
     // scorched earth: no base data left to scan
     store.versions("G").foreach { v =>
       val d = java.nio.file.Paths.get(s"$base/store/G/v$v")
@@ -684,7 +710,7 @@ class GraphSpec extends AnyFunSuite {
       java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.delete)
     }
-    view.refreshIncremental(adds, dels)
+    view.refreshIncremental(adds, dels, published)
     assert(view.isFresh && view.version.contains(2L))
     val got = view.read().collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
