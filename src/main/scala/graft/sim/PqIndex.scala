@@ -155,7 +155,7 @@ final class PqIndex(spark: SparkSession, indexDir: String)
       writeBloomed(seg, "cells", cellsDf.select(col("vec_id"), col("cell")),
         "vec_id", "ids_bloom"): Unit
       writeTable(seg, "codes", codesDf.select(col("vec_id"), col("m"), col("code"))): Unit
-      snaps.writeTextFile(segPath(seg, "err"), errLine)
+      snaps.writeTextFile(segPath(seg.name, "err"), errLine)
     }
 
   /** Train the model on `vecs` (vec_id, embedding) and encode them —

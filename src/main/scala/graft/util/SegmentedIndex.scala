@@ -32,9 +32,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * (see [[VersionedTableStore]]). Every segment table goes through the
   * store's one table write ([[writeTable]]): a broadcast-sized table is
   * written by the driver from one collect, with no committer. Reads
-  * take each table's schema from a per-instance memo, seeded by this
-  * instance's writes or else by one footer read on the driver, so no
-  * read runs a schema-inference job.
+  * take a table's schema from a per-instance memo keyed by the first
+  * segment read (immutable, so an entry never goes stale), seeded by
+  * this instance's writes or else by one footer read on the driver, so
+  * no read runs a schema-inference job.
   *
   * Bloom sidecars ([[BloomSidecars]]) let a probe skip segments. A
   * segment's sidecar over a key column of one of its tables has no
@@ -52,12 +53,9 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
   protected def segRoot = new Path(snaps.dir, "seg")
   protected def fs = snaps.fs
 
-  // table -> read schema (see the class doc)
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  // segment -> the stats entries of its tables and sidecars, while
-  // publishSegment writes it
-  private val pending = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // (segment, table) -> read schema (see the class doc)
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]()
 
   /** Newest COMPLETE index version (manifest + marker), if any. */
   def version: Option[Long] = snaps.version
@@ -79,10 +77,10 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
     new Path(segRoot, s"$seg/$file")
 
   /** One multi-path parquet scan of `table` over `segs`, with the
-    * memoized schema: no inference job.
+    * memoized schema of its first segment: no inference job.
     */
   protected def readSegments(segs: Seq[String], table: String): DataFrame =
-    spark.read.schema(schemas.computeIfAbsent(table,
+    spark.read.schema(schemas.computeIfAbsent((segs.head, table),
       _ => snaps.footerSchema(segPath(segs.head, table))))
       .parquet(segs.map(segPath(_, table).toString): _*)
 
@@ -116,26 +114,32 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
   def versionTagged(tag: String): Option[Long] =
     snaps.completeVersions.reverseIterator.find(tagOf(_).contains(tag))
 
-  /** Claim a version k, write its segment `s<k>` with `writeSegment`
-    * (given the segment's name), then publish k as `prev :+ s<k>` with
-    * `tag` and the `extra` manifest files (name -> content). The
-    * `stats` manifest carries `prev`'s lines from the newest complete
-    * version and adds the new segment's: what its writes recorded, and
-    * the bytes of its files. Returns k.
+  /** A segment [[publishSegment]] is writing: its name, and the
+    * numbers its table and sidecar writes record for its [[stats]].
+    */
+  protected final class Segment private[SegmentedIndex] (val name: String) {
+    private[SegmentedIndex] val rows = collection.mutable.LinkedHashMap.empty[String, Long]
+    private[SegmentedIndex] val fpp = collection.mutable.LinkedHashMap.empty[String, Double]
+  }
+
+  /** Claim a version k, write its segment `s<k>` with `writeSegment`,
+    * then publish k as `prev :+ s<k>` with `tag` and the `extra`
+    * manifest files (name -> content). The `stats` manifest carries
+    * `prev`'s entries from the newest complete version and adds the new
+    * segment's: what its writes recorded, and the bytes of its files.
+    * Returns k.
     */
   protected def publishSegment(prev: Seq[String], tag: Option[String] = None,
-      extra: Seq[(String, String)] = Nil)(writeSegment: String => Unit): Long = {
+      extra: Seq[(String, String)] = Nil)(writeSegment: Segment => Unit): Long = {
     val v = snaps.claim()
-    val seg = s"s$v"
-    val line = try {
-      writeSegment(seg)
-      (seg +: Option(pending.get(seg)).toSeq :+
-        s"bytes=${fs.getContentSummary(new Path(segRoot, seg)).getLength}").mkString(" ")
-    } finally pending.remove(seg)
-    val carried = snaps.version.fold(Map.empty[String, String])(statsLines)
+    val seg = new Segment(s"s$v")
+    writeSegment(seg)
+    val added = SegmentedIndex.SegmentStats(seg.name, seg.rows.toMap,
+      fs.getContentSummary(new Path(segRoot, seg.name)).getLength, seg.fpp.toMap)
+    val carried = snaps.version.fold(Map.empty[String, SegmentedIndex.SegmentStats])(statsOf)
     snaps.publish(v) { v =>
-      val files = ("segments" -> (prev :+ seg).mkString("\n")) +:
-        ("stats" -> (prev.flatMap(carried.get) :+ line).mkString("\n")) +:
+      val files = ("segments" -> (prev :+ seg.name).mkString("\n")) +:
+        ("stats" -> (prev.flatMap(carried.get) :+ added).map(_.line).mkString("\n")) +:
         (tag.map("tag" -> _).toSeq ++ extra)
       files.foreach { case (name, content) =>
         snaps.writeTextFile(new Path(snaps.versionPath(v), name), content)
@@ -144,28 +148,25 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
     v
   }
 
-  private def record(seg: String, entry: String): Unit =
-    pending.merge(seg, entry, (a, b) => s"$a $b"): Unit
-
   /** Write `df` as `table` of segment `seg` with the store's one table
     * write ([[VersionedTableStore.writeTable]]), seed the table's read
     * schema and record its row count in the segment's stats. Returns
     * the row count and, for a driver write, the rows.
     */
-  protected def writeTable(seg: String, table: String,
+  protected def writeTable(seg: Segment, table: String,
       df: DataFrame): (Long, Option[Array[InternalRow]]) = {
-    val written = snaps.writeTable(df, segPath(seg, table))
-    schemas.put(table, df.schema.toNullable)
-    record(seg, s"$table.rows=${written._1}")
+    val written = snaps.writeTable(df, segPath(seg.name, table))
+    schemas.put((seg.name, table), df.schema.toNullable)
+    seg.rows(table) = written._1
     written
   }
 
   /** Write `bf` as sidecar `sidecar` of segment `seg` and record its
     * expected false-positive rate in the segment's stats.
     */
-  protected def writeSidecar(seg: String, sidecar: String, bf: BloomFilter): Unit = {
-    BloomSidecars.write(fs, segPath(seg, sidecar), bf)
-    record(seg, s"$sidecar.fpp=${bf.expectedFpp()}")
+  protected def writeSidecar(seg: Segment, sidecar: String, bf: BloomFilter): Unit = {
+    BloomSidecars.write(fs, segPath(seg.name, sidecar), bf)
+    seg.fpp(sidecar) = bf.expectedFpp()
   }
 
   /** Write `df` as `table` of segment `seg` ([[writeTable]]), then the
@@ -174,20 +175,21 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
     * rows the driver wrote, whose bloom is hashed with no job, else the
     * parquet table. `df`'s plan runs once. Returns the table and n.
     */
-  protected def writeBloomed(seg: String, table: String, df: DataFrame,
+  protected def writeBloomed(seg: Segment, table: String, df: DataFrame,
       key: String, sidecar: String): (DataFrame, Long) = {
     val (n, rows) = writeTable(seg, table, df)
-    val written = rows.fold(readSegments(Seq(seg), table))(
+    val written = rows.fold(readSegments(Seq(seg.name), table))(
       r => LocalRelationBridge.frame(spark, df.schema, r.toSeq))
     writeSidecar(seg, sidecar, BloomSidecars.build(written, key, n))
     (written, n)
   }
 
-  /** Version `v`'s `stats` manifest lines by segment. */
-  private def statsLines(v: Long): Map[String, String] = {
+  /** Version `v`'s `stats` manifest by segment. */
+  private def statsOf(v: Long): Map[String, SegmentedIndex.SegmentStats] = {
     val p = new Path(snaps.versionPath(v), "stats")
     if (!fs.exists(p)) Map.empty
-    else readText(p).split("\n").map(l => l.takeWhile(_ != ' ') -> l).toMap
+    else readText(p).split("\n").map(SegmentedIndex.SegmentStats.parse)
+      .map(st => st.segment -> st).toMap
   }
 
   /** What the newest complete version holds, per segment: each table's
@@ -198,16 +200,9 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
     */
   def stats(): SegmentedIndex.Stats = {
     val v = requireVersion()
-    val lines = statsLines(v)
-    SegmentedIndex.Stats(v, segmentsOf(v).map { seg =>
-      val kv = lines.get(seg).toSeq.flatMap(_.split(" ").drop(1))
-        .map(_.split("=", 2)).collect { case Array(k, x) => k -> x }
-      def by[T](suffix: String, f: String => T) = kv.collect {
-        case (k, x) if k.endsWith(suffix) => k.stripSuffix(suffix) -> f(x) }.toMap
-      SegmentedIndex.SegmentStats(seg, by(".rows", _.toLong),
-        kv.collectFirst { case ("bytes", b) => b.toLong }.getOrElse(0L),
-        by(".fpp", _.toDouble))
-    })
+    val known = statsOf(v)
+    SegmentedIndex.Stats(v, segmentsOf(v).map(seg =>
+      known.getOrElse(seg, SegmentedIndex.SegmentStats(seg, Map.empty, 0L, Map.empty))))
   }
 
   /** `key` as a column of the indices into `segs` whose sidecar
@@ -297,7 +292,25 @@ object SegmentedIndex {
     * its files, expected false-positive rate per sidecar.
     */
   final case class SegmentStats(segment: String, rows: Map[String, Long], bytes: Long,
-      fpp: Map[String, Double])
+      fpp: Map[String, Double]) {
+
+    /** The segment's `stats` manifest line, read back by [[SegmentStats.parse]]:
+      * `<segment> <table>.rows=N … <sidecar>.fpp=X … bytes=B`.
+      */
+    def line: String = (segment +: (rows.map { case (t, n) => s"$t.rows=$n" } ++
+      fpp.map { case (sc, p) => s"$sc.fpp=$p" }).toSeq :+ s"bytes=$bytes").mkString(" ")
+  }
+
+  object SegmentStats {
+    def parse(line: String): SegmentStats = {
+      val fields = line.trim.split(" ")
+      val kv = fields.toSeq.tail.map(_.split("=", 2)).collect { case Array(k, x) => k -> x }
+      def by[T](suffix: String, f: String => T) = kv.collect {
+        case (k, x) if k.endsWith(suffix) => k.stripSuffix(suffix) -> f(x) }.toMap
+      SegmentStats(fields.head, by(".rows", _.toLong),
+        kv.collectFirst { case ("bytes", b) => b.toLong }.getOrElse(0L), by(".fpp", _.toDouble))
+    }
+  }
 
   /** An index version's segments and their numbers. */
   final case class Stats(version: Long, segments: Seq[SegmentStats]) {

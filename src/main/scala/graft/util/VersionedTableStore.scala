@@ -128,11 +128,14 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
   }
 
   /** Write `df` as the parquet table at `p` (see Write in the class
-    * doc). Returns the row count and, for the driver write, the rows it
-    * collected, so a caller derives from the table (a bloom, a read
-    * memo) without reading it back. The driver's file comes from
-    * Spark's own parquet writer factory: the footer schema, codec and
-    * other parquet settings are those of a Spark write of `df`.
+    * doc), replacing whatever is at `p` on both paths: a view that
+    * publishes again at a version it already wrote, or over a crashed
+    * writer's leftover, holds the new rows once. Returns the row count
+    * and, for the driver write, the rows it collected, so a caller
+    * derives from the table (a bloom, a read memo) without reading it
+    * back. The driver's file comes from Spark's own parquet writer
+    * factory: the footer schema, codec and other parquet settings are
+    * those of a Spark write of `df`.
     */
   def writeTable(df: DataFrame, p: Path): (Long, Option[Array[InternalRow]]) =
     if (Par.broadcastSized(df)) {
@@ -141,6 +144,7 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
       DataSourceUtils.verifySchema(format, schema)
       DataSourceUtils.checkFieldNames(format, schema)
       val rows = Par.collectRows(df, s"write ${p.getName}")
+      fs.delete(p, true)
       val job = Job.getInstance(spark.sessionState.newHadoopConf())
       val factory = format.prepareWrite(spark, job, Map.empty, schema)
       val task = new TaskAttemptContextImpl(job.getConfiguration,

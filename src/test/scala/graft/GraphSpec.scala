@@ -640,9 +640,9 @@ class GraphSpec extends AnyFunSuite {
     assert(view.version.contains(2L) && view.isFresh)
 
     // a writer that crashed between the kcnt and deg writes leaves a
-    // markerless v3: must not become the served version
-    val p = java.nio.file.Paths.get(s"$base/view/v3/kcnt")
-    java.nio.file.Files.createDirectories(p)
+    // markerless v3 whose kcnt holds a part file: must not become the
+    // served version
+    Seq((7, 8, 5L)).toDF("src", "dst", "cnt").write.parquet(s"$base/view/v3/kcnt")
     assert(view.version.contains(2L) && view.isFresh)
     assert(view.read().count() == 4) // v2 still serves (nodes 0,1,2,3)
 
@@ -657,6 +657,29 @@ class GraphSpec extends AnyFunSuite {
     val got = view.read().collect()
       .map(r => r.getInt(0) -> r.getLong(3)).toMap
     assert(got == Map(1 -> 1L, 2 -> 2L, 3 -> 1L, 5 -> 1L, 6 -> 1L))
+    // the recovery publish at v3 replaced the crashed writer's kcnt
+    assert(spark.read.parquet(s"$base/view/v3/kcnt").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet ==
+      Set((1, 2, 1L), (2, 3, 1L), (5, 6, 1L)))
+  }
+
+  test("a view rebuilt twice at one graph version holds its rows once") {
+    val base = java.nio.file.Files.createTempDirectory("viewrebuild").toString
+    val store = new GraphStore(spark, s"$base/store")
+    val pv = new DistinctPairView(spark, store, "G", s"$base/pv")
+    val dv = new DegreeView(spark, store, "G", s"$base/dv")
+    store.add("G", edgeDf((0, 1), (1, 2), (1, 2)))
+    pv.rebuild(); dv.rebuild()
+    pv.rebuild(); dv.rebuild()
+    assert(pv.version.contains(1L) && dv.version.contains(1L))
+    def pairs() = pv.read().collect().map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
+    def degs() = dv.read().collect().map(r => r.getInt(0) -> r.getLong(3)).toSeq.sorted
+    assert(pairs() == Seq((0, 1), (1, 2)))
+    assert(degs() == Seq(0 -> 1L, 1 -> 3L, 2 -> 2L))
+    // the next incremental refresh folds the delta into kcnt and deg
+    // once each
+    dv.applyDelta(additions = edgeDf((2, 0)), deletions = edgeDf((0, 1)))
+    assert(degs() == Seq(0 -> 1L, 1 -> 2L, 2 -> 3L))
   }
 
   test("view vacuum retains the served snapshot and drops history + crash leftovers") {

@@ -179,6 +179,9 @@ class SignLshIndexSpec extends AnyFunSuite {
     intercept[IllegalStateException](old.append(dayOne))
     // the float paths read a UNIFORM old layout and still serve
     assert(old.annGraph().count() > 0)
+    // a second instance that read the old layout before the upgrade
+    val reader = new SignLshIndex(spark, idxDir)
+    assert(reader.annGraph().count() > 0)
 
     // compact() is the upgrade: backfill-quantize + restamp, then the
     // index appends and serves exactly like one built by current code
@@ -191,6 +194,8 @@ class SignLshIndexSpec extends AnyFunSuite {
     def rowSet(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rowSet(old.annGraphQuantized()) == rowSet(rebuilt.annGraphQuantized()),
       "upgraded index must serve the bit-exact quantized graph")
+    assert(rowSet(reader.annGraphQuantized()) == rowSet(rebuilt.annGraphQuantized()),
+      "an instance that read the old layout must serve the upgraded one")
   }
 
   test("quantized serve path: stored int8 scores are bit-exact vs a driver recount") {
