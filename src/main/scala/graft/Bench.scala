@@ -166,7 +166,7 @@ object Bench {
     * tools/bench_diff.py compares them FIRST and treats a wall delta
     * with identical counters as host noise, not regression.
     */
-  private final class CounterListener
+  private final class CounterListener(context: org.apache.spark.SparkContext)
       extends org.apache.spark.scheduler.SparkListener {
     import java.util.concurrent.atomic.AtomicLong
     val shufRowsW = new AtomicLong; val shufBytesW = new AtomicLong
@@ -188,37 +188,24 @@ object Bench {
     override def onStageCompleted(
         sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
       stages.incrementAndGet(): Unit
-    def reset(): Unit =
-      Seq(shufRowsW, shufBytesW, shufRowsR, jobs, stages, tasks).foreach(_.set(0))
-    def snapshot(): Seq[(String, Long)] = Seq(
-      "shuffle_rows_w" -> shufRowsW.get, "shuffle_bytes_w" -> shufBytesW.get,
-      "shuffle_rows_r" -> shufRowsR.get, "jobs" -> jobs.get,
-      "stages" -> stages.get, "tasks" -> tasks.get)
-    /** The listener bus is async — poll until two consecutive reads
-      * agree (≤ 2 s) so a lagging task-end event can't shear the
-      * numbers.
+    /** The counters once the async listener bus has delivered every
+      * event of the actions that returned, so a lagging task-end event
+      * can't shear the numbers.
       */
-    def stableSnapshot(): Seq[(String, Long)] = {
-      var prev = snapshot()
-      var i = 0
-      while (i < 40) {
-        Thread.sleep(50)
-        val cur = snapshot()
-        if (cur == prev) return cur
-        prev = cur
-        i += 1
-      }
-      prev
+    def drainedSnapshot(): Seq[(String, Long)] = {
+      org.apache.spark.graftshim.ListenerBusBridge.drain(context)
+      Seq("shuffle_rows_w" -> shufRowsW.get, "shuffle_bytes_w" -> shufBytesW.get,
+        "shuffle_rows_r" -> shufRowsR.get, "jobs" -> jobs.get,
+        "stages" -> stages.get, "tasks" -> tasks.get)
     }
-    /** Reset only after the bus has gone quiet: straggler task-end
-      * events from the PREVIOUS rep (rep 0 carries heavy one-time
-      * MatStore builds) would otherwise land after the reset and
-      * inflate the "deterministic" counters. stableSnapshot() is the
-      * quiescence wait; its value is discarded.
+    /** Reset only after the bus is drained: straggler task-end events
+      * from the PREVIOUS rep (rep 0 carries heavy one-time MatStore
+      * builds) would otherwise land after the reset and inflate the
+      * "deterministic" counters.
       */
     def quiesceAndReset(): Unit = {
-      stableSnapshot(): Unit
-      reset()
+      org.apache.spark.graftshim.ListenerBusBridge.drain(context)
+      Seq(shufRowsW, shufBytesW, shufRowsR, jobs, stages, tasks).foreach(_.set(0))
     }
   }
 
@@ -230,7 +217,7 @@ object Bench {
     val only = SparkEntry.subset(args.headOption)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     val spark = SparkEntry.localSession()
-    val counters = new CounterListener
+    val counters = new CounterListener(spark.sparkContext)
     spark.sparkContext.addSparkListener(counters)
     val loadStart = loadavg()
     val tStart = java.time.Instant.now().toString
@@ -288,7 +275,7 @@ object Bench {
           case e: Throwable => System.err.println(s"BENCH FAIL $name: $e"); false
         }
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        if (idx == counterRep && ok) qCounters = counters.stableSnapshot()
+        if (idx == counterRep && ok) qCounters = counters.drainedSnapshot()
         val c1 = cpuTicks()
         val fg = foreignShare(c0, c1)
         val io = iowaitShare(c0, c1)

@@ -37,42 +37,6 @@ final case class TBuf(last: Option[TLast], pending: Seq[TEvent])
   */
 object StreamOps {
 
-  /** Watermarked hourly tumbling aggregate (streaming analog of e02). */
-  def tumblingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n_events"), col("total_value"))
-
-  /** Native session windows (30-min gap), batch- and stream-capable. */
-  def sessionWindows(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("user_id"), col("sw.start").as("start_ts"),
-        col("sw.end").as("end_ts"), col("n_events"), col("total_value"))
-
-  /** Continuously-maintained vertex degrees over an edge stream — the
-    * reference's "add graph" reframed as ingest: every micro-batch of
-    * new edges updates the running degree view (complete/update-mode
-    * aggregation, state keyed by vertex so it scales with |V|, not
-    * |E|).
-    */
-  def streamingDegrees(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("out_deg"), sum(col("weight")).as("out_weight"))
-
-  /** Streaming exact dedup: keep the first arrival of each id, with
-    * state bounded by the watermark (the streaming half of d01 — a
-    * training-data ingest pipeline dedups at the door, not in a nightly
-    * batch).
-    */
-  def dedupStream(events: DataFrame, idCol: String): DataFrame =
-    events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(idCol)
-
   /** Custom-state sessionizer via flatMapGroupsWithState: emits a
     * session when a ≥30-min gap closes it; the open session rides in
     * [[GroupState]]. With `ProcessingTimeTimeout` (the production
@@ -327,7 +291,7 @@ object StreamOps {
     *
     * Replay ([[journal]]): recovers the fresh set from the tagged
     * version's OWN delta ([[graft.text.WinnowIndex.idsAddedAt]]) and
-    * audits against [[graft.text.WinnowIndex.censusBefore]] of that
+    * audits against [[graft.text.WinnowIndex.censusBeforeFor]] of that
     * version, so it never audits itself as duplication.
     */
   def spanDedupStream(docs: DataFrame, index: graft.text.WinnowIndex,

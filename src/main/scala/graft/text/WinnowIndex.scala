@@ -49,14 +49,10 @@ final class WinnowIndex(spark: SparkSession, indexDir: String)
   /** The corpus-lifetime census: (fp, n_docs) summed over segments. */
   def census(): DataFrame = censusOf(segmentsOf(requireVersion()))
 
-  /** The census as it stood BEFORE version `v`'s own delta — the
-    * versioned pre-batch state a replayed streaming trigger re-audits
-    * against (the [[graft.dedup.GramIndex.gramsBefore]] contract).
-    */
-  def censusBefore(v: Long): DataFrame =
-    censusOf(segmentsOf(v).filterNot(_ == s"s$v"))
-
-  /** [[censusBefore]] restricted to the probe fingerprints, read
+  /** The census of the probe fingerprints as it stood BEFORE version
+    * `v`'s own delta — the versioned pre-batch state a replayed
+    * streaming trigger re-audits against (the
+    * [[graft.dedup.GramIndex.gramsBefore]] contract), read
     * bloom-pruned: the per-fp SUM over the claiming segments is the
     * complete pre-batch count, and only their census parquet is
     * opened — O(batch + bloom bytes) per trigger against a year of

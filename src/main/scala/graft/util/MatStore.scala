@@ -16,25 +16,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * PERSISTENT mode (opt-in via `SPARK_GRAFT_INDEX_DIR` env or the
   * `graft.index.dir` system property): index tables built through
   * [[table]] whose key follows the `"<name>:<srcDir>"` convention are
-  * published under `<root>/<name>_<md5(key)>/<content-fingerprint>` and
-  * survive the JVM — a fresh session's first touch reads the published
-  * index instead of repaying the build (the entire bench cold-vs-warm
-  * gap for MatStore-backed operators). Staleness is content-addressed:
-  * the fingerprint hashes every source file's (relative path, size,
-  * mtime), so ANY change to the source corpus resolves to a new
-  * subdirectory and triggers a rebuild; parquet rewrites also rename
-  * part files, so even same-size rewrites change the fingerprint. The
-  * publish is build-into-hidden-tmp + atomic directory rename: racing
-  * JVMs can both build, but exactly one rename wins and the loser
-  * reads the winner's table.
-  * Stale fingerprints are swept after a successful publish —
-  * retention contract: don't run queries against a corpus while
-  * overwriting that corpus.
+  * published in a [[VersionedTableStore]], one store per key at
+  * `<root>/<name>_<md5(key)>`, and survive the JVM — a fresh session's
+  * first touch reads the published index instead of repaying the build
+  * (the entire bench cold-vs-warm gap for MatStore-backed operators).
+  * A version holds one table, named after the content fingerprint of
+  * the source it was built from, and a lookup serves the newest
+  * complete version whose table is the source's current fingerprint.
+  * Staleness is content-addressed: the fingerprint hashes every source
+  * file's (relative path, size, mtime), so ANY change to the source
+  * corpus misses and triggers a rebuild into a newly claimed version;
+  * parquet rewrites also rename part files, so even same-size rewrites
+  * change the fingerprint. Racing JVMs each build into their own
+  * claimed version. Each publish vacuums the store to its newest two
+  * complete versions, which also drops a markerless version below the
+  * newest complete one: a racer whose version a newer publish dropped
+  * mid-build loses the race and serves the winner's table instead. A
+  * reader of a superseded index is protected for one more rebuild —
+  * retention contract: a query must finish before its index is rebuilt
+  * twice. A build whose source changed under it is never published:
+  * its frame reads the claimed version, which the key's next resolve
+  * rebuilds past and vacuums, so that frame is valid only until then.
   *
-  * At 100 TB the same structure holds with two substitutions: the
+  * At 100 TB the same structure holds with one substitution: the
   * fingerprint comes from the table format's snapshot id (e.g. a
-  * GraphStore snapshot version) instead of a file walk, and the rename
-  * becomes the store's versioned publish (claim, write, marker).
+  * GraphStore snapshot version) instead of a file walk.
   */
 object MatStore {
   private def persistRoot: Option[String] =
@@ -77,7 +83,9 @@ object MatStore {
     md5hex(lines.mkString("\n"))
   }
   private val sessionIds = new java.util.WeakHashMap[SparkSession, String]()
-  private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   private def sessionId(s: SparkSession): String = sessionIds.synchronized {
     Option(sessionIds.get(s)).getOrElse {
@@ -88,8 +96,42 @@ object MatStore {
   }
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    dirs.values().forEach(d => deleteRecursively(new java.io.File(d)))
+    tempDirs.forEach(d => deleteRecursively(new java.io.File(d)))
   }))
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(): Unit
+  }
+
+  /** A fresh temp dir, deleted by the shutdown hook. */
+  private def tempDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs.add(p)
+    p
+  }
+
+  /** `init`'s result for `key`, computed at most once.
+    *
+    * `init` runs under a per-key lock, NOT inside a ConcurrentHashMap
+    * mapping function: builds here are nested (clustersTable →
+    * candidatesTable → minhashTable all re-enter [[table]]), and CHM's
+    * computeIfAbsent contract forbids the mapping function touching
+    * other mappings — a nested key landing in the in-flight bin throws
+    * IllegalStateException("Recursive update"). The lock map's own
+    * computeIfAbsent is safe: its mapping function allocates a plain
+    * Object and never touches the map.
+    */
+  private def once(key: String)(init: => String): String =
+    Option(memo.get(key)).getOrElse {
+      locks.computeIfAbsent(key, _ => new Object).synchronized {
+        Option(memo.get(key)).getOrElse {
+          val v = init
+          memo.put(key, v)
+          v
+        }
+      }
+    }
 
   /** A per-(session, key) scratch DIRECTORY created and initialized at
     * most once, reclaimed at JVM exit — for stateful on-disk artifacts
@@ -98,41 +140,16 @@ object MatStore {
     * guarantees `init` ran exactly once for this session and key.
     */
   private[graft] def scratchDir(s: SparkSession, key: String, prefix: String)(
-      init: String => Unit): String = {
-    val k = s"${sessionId(s)}:dir:$key"
-    var path = dirs.get(k)
-    if (path == null) {
-      locks.computeIfAbsent(k, _ => new Object).synchronized {
-        path = dirs.get(k)
-        if (path == null) {
-          val p = java.nio.file.Files.createTempDirectory(prefix).toString
-          init(p)
-          dirs.put(k, p)
-          path = p
-        }
-      }
+      init: String => Unit): String =
+    once(s"${sessionId(s)}:dir:$key") {
+      val p = tempDir(prefix)
+      init(p)
+      p
     }
-    path
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** The materialized table for (session, key); `build` runs at most
-    * once per key per session and its result is persisted as parquet.
-    *
-    * `build` runs under a per-key lock, NOT inside a ConcurrentHashMap
-    * mapping function: builds here are nested (clustersTable →
-    * candidatesTable → minhashTable all re-enter `table`), and CHM's
-    * computeIfAbsent contract forbids the mapping function touching
-    * other mappings — a nested key landing in the in-flight bin throws
-    * IllegalStateException("Recursive update"). The lock map's own
-    * computeIfAbsent is safe: its mapping function allocates a plain
-    * Object and never touches the map.
+    * once per key per session (see [[once]]) and its result is
+    * persisted as parquet.
     */
   def table(s: SparkSession, key: String, prefix: String)(build: => DataFrame): DataFrame = {
     persistRoot match {
@@ -143,18 +160,10 @@ object MatStore {
         if (src.isDirectory) return persistentTable(s, root, key, src)(build)
       case _ =>
     }
-    val k = s"${sessionId(s)}:$key"
-    var path = dirs.get(k)
-    if (path == null) {
-      locks.computeIfAbsent(k, _ => new Object).synchronized {
-        path = dirs.get(k)
-        if (path == null) {
-          val p = java.nio.file.Files.createTempDirectory(prefix).toString
-          build.write.mode("overwrite").parquet(p)
-          dirs.put(k, p)
-          path = p
-        }
-      }
+    val path = once(s"${sessionId(s)}:$key") {
+      val p = tempDir(prefix)
+      build.write.mode("overwrite").parquet(p)
+      p
     }
     // schema-memoized read (Par.readParquet): the dir is write-once for
     // this (session, key), and consumers re-read it dozens of times per
@@ -162,76 +171,62 @@ object MatStore {
     Par.readParquet(s, path)
   }
 
-  /** Cross-JVM index table (see object doc): resolve the content
-    * fingerprint of the source dir, read the published table if it
-    * exists, else build into a hidden tmp dir and atomically rename it
-    * into place. No in-session memo on purpose: re-resolving per call
-    * is a directory listing, and it is what detects a source change
-    * MID-session (the staleness spec covers both).
+  /** Complete versions each persistent store keeps (see the object
+    * doc): the newest index and the one it superseded.
     */
-  /** Stale-fingerprint sweep grace period: a concurrent query in
-    * another JVM (or an earlier lazily-evaluated frame in this one)
-    * may still be reading a superseded fingerprint dir mid-plan, and
-    * deleting it at publish time would fail that query with
-    * FileNotFoundException. Only dirs untouched for this long are
-    * reclaimed — any plan that started against the old index has
-    * finished (or deserves to fail) by then.
-    */
-  private def sweepGraceMs: Long =
-    sys.props.get("graft.index.sweepGraceMs").map(_.toLong)
-      .getOrElse(30L * 60 * 1000)
+  private val PersistKeepLast = 2
 
+  /** Cross-JVM index table (see object doc): serve the newest complete
+    * version of the key's store whose table is the source's current
+    * fingerprint, else build one. No in-session memo on purpose:
+    * re-resolving per call is a directory listing, and it is what
+    * detects a source change MID-session (MatStoreSpec covers both).
+    */
   private def persistentTable(s: SparkSession, root: String, key: String,
       src: java.io.File)(build: => DataFrame): DataFrame = {
     val name = key.takeWhile(_ != ':').replaceAll("[^A-Za-z0-9_-]", "_")
-    val keyDir = new java.io.File(root, s"${name}_${md5hex(key)}")
+    val store = new VersionedTableStore(s,
+      new java.io.File(root, s"${name}_${md5hex(key)}").toString, "_SUCCESS")
     val fp = fingerprint(src)
-    val target = new java.io.File(keyDir, fp)
-    def published = new java.io.File(target, "_SUCCESS").exists()
-    var sessionScoped: String = null
-    if (!published) {
+    def resolve = store.allVersions.reverseIterator
+      .find(v => store.isComplete(v) && store.fs.exists(store.tablePath(v, fp)))
+    // a version's table is never rewritten, and its path names the
+    // fingerprint, so the schema-memoized read can't serve a stale schema
+    def read(v: Long) = Par.readParquet(s, store.tablePath(v, fp).toString)
+    resolve.map(read).getOrElse {
       locks.computeIfAbsent(s"persist:$key", _ => new Object).synchronized {
-        if (!published) {
-          keyDir.mkdirs()
-          val tmp = java.nio.file.Files
-            .createTempDirectory(keyDir.toPath, s".build_").toFile
-          build.write.mode("overwrite").parquet(tmp.toString)
-          if (fingerprint(src) != fp) {
-            // the source changed WHILE the build was reading it:
-            // publishing the new (or mixed) content under the
-            // pre-build fingerprint would serve it as fresh forever.
-            // Serve this build session-scoped instead (reclaimed at
-            // JVM exit); the next call re-resolves and publishes.
-            dirs.put(s"exit:${java.util.UUID.randomUUID()}", tmp.toString)
-            sessionScoped = tmp.toString
+        resolve.map(read).getOrElse {
+          val v = store.claim()
+          // A source changed WHILE the build read it must not be
+          // published under the pre-build fingerprint, which would serve
+          // the new (or mixed) content as fresh forever. This call reads
+          // the claimed, markerless version instead: no lookup serves it,
+          // and the vacuum rule drops it once a newer version completes,
+          // so the frame is valid only until the key's next resolve.
+          val published = scala.util.Try {
+            store.writeTable(build, store.tablePath(v, fp))
+            fingerprint(src) == fp && { store.publish(v)(_ => ()); true }
+          }
+          // A build that failed while it still holds its claim rethrows
+          // (`published.get`). Without the claim it lost a race: another
+          // JVM claimed a later version, published it first, and its
+          // vacuum dropped ours (markerless, below the newest complete
+          // version) mid-build, so our write failed or left no table.
+          // The loser discards its version and resolves again, which
+          // serves the winner when it holds the current source.
+          if (store.isClaimed(v) &&
+              (published.isFailure || store.fs.exists(store.tablePath(v, fp)))) {
+            if (published.get) store.vacuum(PersistKeepLast): Unit
+            read(v)
           } else {
-            try
-              java.nio.file.Files.move(tmp.toPath, target.toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              case e: java.io.IOException =>
-                // a racing JVM published first: discard ours, read theirs
-                deleteRecursively(tmp)
-                if (!published) throw e
-            }
-            // sweep stale fingerprints of this key (in-flight .build_*
-            // tmp dirs of other processes excluded), age-gated so a
-            // reader mid-query on the superseded index is not yanked
-            val cutoff = System.currentTimeMillis() - sweepGraceMs
-            Option(keyDir.listFiles()).foreach(_.filter(d => d.isDirectory &&
-                d.getName != fp && !d.getName.startsWith(".build_") &&
-                d.lastModified < cutoff)
-              .foreach(deleteRecursively))
+            store.fs.delete(store.versionPath(v), true)
+            persistentTable(s, root, key, src)(build)
           }
         }
       }
     }
-    // content-addressed target dirs are immutable once published, so
-    // the schema-memoized read can never serve a stale schema
-    Par.readParquet(s, if (sessionScoped != null) sessionScoped else target.toString)
   }
 
-  private val tableNames = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val nameSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Like [[table]], but persisted as a catalog table bucketed (and
@@ -242,24 +237,12 @@ object MatStore {
     * catalog entry itself is session-scoped.
     */
   def bucketedTable(s: SparkSession, key: String, prefix: String,
-      bucketCol: String, nBuckets: Int)(build: => DataFrame): DataFrame = {
-    val k = s"${sessionId(s)}:$key"
-    var name = tableNames.get(k)
-    if (name == null) {
-      locks.computeIfAbsent(k, _ => new Object).synchronized {
-        name = tableNames.get(k)
-        if (name == null) {
-          val n = s"graft_bkt_${nameSeq.incrementAndGet()}"
-          val p = java.nio.file.Files.createTempDirectory(prefix).toString
-          build.write.mode("overwrite").option("path", p)
-            .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
-            .saveAsTable(n)
-          dirs.put(k, p)
-          tableNames.put(k, n)
-          name = n
-        }
-      }
-    }
-    s.table(name)
-  }
+      bucketCol: String, nBuckets: Int)(build: => DataFrame): DataFrame =
+    s.table(once(s"${sessionId(s)}:bkt:$key") {
+      val n = s"graft_bkt_${nameSeq.incrementAndGet()}"
+      build.write.mode("overwrite").option("path", tempDir(prefix))
+        .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
+        .saveAsTable(n)
+      n
+    })
 }

@@ -60,9 +60,9 @@ object Par {
     * legacy-nanos flag decides what type `events.ts` infers to,
     * binaryAsString whether a BINARY column is a string); both base
     * corpora and MatStore dirs are write-once under a given path, so
-    * a cached schema cannot go
-    * stale within a process (a rewritten corpus lands under a new
-    * MatStore fingerprint path by construction).
+    * a cached schema cannot go stale within a process (a persistent
+    * MatStore table rebuilt from a rewritten corpus lands in a new
+    * version, under a table named by the new fingerprint).
     */
   def readParquet(s: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
     val key = (path +: schemaConfs.map(c => s.conf.getOption(c).orNull)).mkString("#")

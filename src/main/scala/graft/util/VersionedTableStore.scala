@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.StructType
 
 /** The one snapshot protocol of every persistent artifact in the engine:
   * [[graft.graph.GraphStore]] (one store per graph name), the graph
-  * views ([[graft.graph.DistinctPairView]], [[graft.graph.DegreeView]])
-  * and the six segment indexes ([[SegmentedIndex]]). It re-expresses
+  * views ([[graft.graph.DistinctPairView]], [[graft.graph.DegreeView]]),
+  * the six segment indexes ([[SegmentedIndex]]) and [[MatStore]]'s
+  * persistent index tables (one store per key). It re-expresses
   * the reference's consistency contract, one exclusive writer per graph
   * and any number of concurrent readers (primary_server.c:60,150,
   * secondary_server.c:229-303), as immutable versioned directories.

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graftshim.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Test helpers that pin what a call costs in Spark jobs, on the
@@ -15,10 +16,8 @@ object SparkJobs {
   private val groups = new AtomicInteger
 
   /** `body`'s result and the properties of every Spark job it started.
-    * The jobs are told apart by a job group; a marker job in a second
-    * group is submitted after `body`, and the listener bus delivers
-    * events in order, so once the marker's start is seen every job of
-    * `body` has been seen too.
+    * The jobs are told apart by a job group; the listener bus is
+    * drained after `body`, so every job start it posted has been seen.
     */
   def jobsOf[T](body: => T): (T, Seq[Properties]) = {
     val sc = spark.sparkContext
@@ -27,18 +26,12 @@ object SparkJobs {
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = seen.add(js.properties): Unit
     }
-    def inGroup(p: Properties, g: String) = p.getProperty("spark.jobGroup.id") == g
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, group)
-      val out = try body finally sc.setJobGroup(s"$group-end", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(inGroup(_, s"$group-end")) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.asScala.exists(inGroup(_, s"$group-end")), "marker job never seen")
-      (out, seen.asScala.filter(inGroup(_, group)).toSeq)
+      val out = try body finally sc.clearJobGroup()
+      ListenerBusBridge.drain(sc)
+      (out, seen.asScala.filter(_.getProperty("spark.jobGroup.id") == group).toSeq)
     } finally sc.removeSparkListener(listener)
   }
 

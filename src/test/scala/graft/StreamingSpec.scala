@@ -13,163 +13,6 @@ class StreamingSpec extends AnyFunSuite {
   private def ts(minute: Int): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
 
-  test("watermarked tumbling agg finalizes windows on a MemoryStream") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = in.toDF().toDF("ts", "event_type", "value")
-    val q = StreamOps.tumblingCounts(df).writeStream
-      .format("memory").queryName("tumbling_out").outputMode("append").start()
-    try {
-      in.addData((ts(5), "click", 1.0), (ts(20), "click", 2.0), (ts(65), "view", 3.0))
-      q.processAllAvailable()
-      // advance watermark past hour 0+2h so the first windows finalize
-      in.addData((ts(300), "late", 0.0))
-      q.processAllAvailable()
-      val out = spark.table("tumbling_out")
-        .select("window_start", "event_type", "n_events", "total_value")
-        .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
-        .toSet
-      assert(out == Set(
-        ("2024-01-01 00:00:00.0", "click", 2L, 3.0),
-        ("2024-01-01 01:00:00.0", "view", 1L, 3.0)))
-    } finally q.stop()
-  }
-
-  test("session_window groups by 30-min gaps on a MemoryStream") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val df = in.toDF().toDF("ts", "user_id", "value")
-    val q = StreamOps.sessionWindows(df).writeStream
-      .format("memory").queryName("session_out").outputMode("append").start()
-    try {
-      // user 7: events at 0 and 10 min (one session), then 120 min (new session)
-      in.addData((ts(0), 7L, 1.0), (ts(10), 7L, 1.0), (ts(120), 7L, 1.0))
-      q.processAllAvailable()
-      in.addData((ts(600), 99L, 0.0)) // push watermark
-      q.processAllAvailable()
-      val out = spark.table("session_out")
-        .filter(col("user_id") === 7L)
-        .select("n_events").collect().map(_.getLong(0)).sorted.toSeq
-      assert(out == Seq(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("streaming degrees update as edge batches arrive") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Int, Int, Long)]
-    val q = StreamOps.streamingDegrees(in.toDF().toDF("src", "dst", "weight"))
-      .writeStream.format("memory").queryName("deg_out").outputMode("complete").start()
-    try {
-      in.addData((0, 1, 10L), (0, 2, 5L), (1, 2, 1L))
-      q.processAllAvailable()
-      in.addData((0, 3, 2L)) // node 0 gains an edge
-      q.processAllAvailable()
-      val deg = spark.table("deg_out")
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(deg(0) == (3L, 17L) && deg(1) == (1L, 1L))
-    } finally q.stop()
-  }
-
-  test("streaming degrees converge to DegreeView after the same deltas") {
-    // Ties the streaming half to the stored half: the same edge batches
-    // fed (a) as micro-batches through streamingDegrees and (b) as
-    // GraphStore deltas through the incremental DegreeView must agree
-    // at quiescence — the continuous and the materialized degree views
-    // are two consumers of one delta stream, not two definitions.
-    import graft.graph.{DegreeView, GraphStore}
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Int, Int, Long)]
-    val q = StreamOps.streamingDegrees(in.toDF().toDF("src", "dst", "weight"))
-      .writeStream.format("memory").queryName("deg_conv")
-      .outputMode("complete").start()
-    val base = java.nio.file.Files.createTempDirectory("degconv").toString
-    val store = new GraphStore(spark, s"$base/store")
-    val view = new DegreeView(spark, store, "G", s"$base/view")
-    def streamed() = spark.table("deg_conv")
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    def viewed() = view.read().filter(col("out_deg") > 0)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    try {
-      val b1 = Seq((0, 1, 1L), (0, 2, 1L), (1, 2, 1L))
-      in.addData(b1: _*)
-      store.add("G", b1.map(t => (t._1, t._2)).toDF("src", "dst"))
-      view.rebuild()
-      q.processAllAvailable()
-      assert(streamed() == viewed() && streamed() == Map(0 -> 2L, 1 -> 1L))
-      // second batch stacks a multi-edge (0,1) and a new key — streamed
-      // as a micro-batch, stored as an incremental delta
-      val b2 = Seq((0, 3, 1L), (0, 1, 1L))
-      in.addData(b2: _*)
-      view.applyDelta(
-        additions = b2.map(t => (t._1, t._2)).toDF("src", "dst"),
-        deletions = Seq.empty[(Int, Int)].toDF("src", "dst"))
-      q.processAllAvailable()
-      assert(streamed() == viewed() && streamed() == Map(0 -> 4L, 1 -> 1L))
-    } finally q.stop()
-  }
-
-  test("file-source streaming matches the batch tumbling aggregate on finalized windows") {
-    import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = "/root/testdata/sf0.001"
-    // events.ts has shipped as both TIMESTAMP(NANOS) (reads as BIGINT
-    // under the legacy flag) and TIMESTAMP(MICROS)/NTZ — sniff which
-    // corpus generation this host has and adapt schema + cast.
-    val tsIsLong =
-      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType == LongType
-    val schema = new StructType()
-      .add("event_id", LongType)
-      .add("ts", if (tsIsLong) LongType else TimestampNTZType)
-      .add("user_id", LongType)
-      .add("event_type", StringType).add("value", DoubleType).add("props", StringType)
-    def withTs(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("ts",
-        if (tsIsLong) expr("timestamp_micros(ts div 1000)")
-        else expr("cast(ts as timestamp)"))
-    // FileStreamSource wants a directory to watch
-    val streamDir = java.nio.file.Files.createTempDirectory("events_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val stream = withTs(spark.readStream.schema(schema).parquet(streamDir.toString))
-    val q = StreamOps.tumblingCounts(stream).writeStream
-      .format("memory").queryName("file_tumbling").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("file_tumbling")
-        .select("window_start", "event_type", "n_events")
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-      assert(got.nonEmpty) // no-data batch finalized the pre-watermark windows
-      // batch reference: same transform, keep only windows whose end is
-      // at or before the final watermark (max ts - 2h)
-      val batchDf = withTs(spark.read.schema(schema).parquet(s"$dir/events.parquet"))
-      val maxTs = batchDf.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-      val exp = StreamOps.tumblingCounts(batchDf)
-        .filter(col("window_start") + expr("INTERVAL 1 HOUR") <=
-          lit(maxTs) - expr("INTERVAL 2 HOURS"))
-        .select("window_start", "event_type", "n_events")
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-      assert(got == exp)
-    } finally q.stop()
-  }
-
-  test("streaming dedup keeps first arrival within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(java.sql.Timestamp, Long)]
-    val df = in.toDF().toDF("ts", "doc_id")
-    val q = StreamOps.dedupStream(df, "doc_id").writeStream
-      .format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      in.addData((ts(0), 1L), (ts(1), 2L), (ts(2), 1L)) // dup in-batch
-      q.processAllAvailable()
-      in.addData((ts(10), 1L), (ts(11), 3L)) // dup across batches
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").select("doc_id")
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(ids == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
   test("stateful sessionizer matches the batch sessionization on closed sessions") {
     // fixture: user 1 has two sessions (gap 31 min), user 2 one session
     val evs = Seq(
