@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.floatNorm
+import graft.util.NioLocalFileSystem
 
 /** Incrementally-maintained IVFADC code store — the FIFTH member of
   * the incremental-index family ([[graft.dedup.MinHashIndex]],
@@ -170,7 +171,8 @@ final class PqIndex(spark: SparkSession, indexDir: String)
     try {
       val cents = Kmeans.fit(e, k, iters)
       cents.select(col("cell"), col("centroid"))
-        .write.mode("overwrite").parquet(new Path(modelRoot, "cents").toString)
+        .write.options(NioLocalFileSystem.writeOptions).mode("overwrite")
+        .parquet(new Path(modelRoot, "cents").toString)
       val storedCents = spark.read.parquet(new Path(modelRoot, "cents").toString)
       val asg = Kmeans.assign(e, storedCents, k).localCheckpoint()
       val residuals = e.join(asg, Seq("vec_id"))
@@ -179,7 +181,8 @@ final class PqIndex(spark: SparkSession, indexDir: String)
           expr("zip_with(embedding, centroid, (x, c) -> cast(x as double) - c)")
             .as("embedding"))
       Pq.fit(residuals)
-        .write.mode("overwrite").parquet(new Path(modelRoot, "books").toString)
+        .write.options(NioLocalFileSystem.writeOptions).mode("overwrite")
+        .parquet(new Path(modelRoot, "books").toString)
       val storedBooks = spark.read.parquet(new Path(modelRoot, "books").toString)
       val (cellsDf, codesDf, errLine) = encodeDelta(e, storedCents, storedBooks, k)
       snaps.writeTextFile(new Path(modelRoot, "err"), errLine)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.graph.AdjacencyCodec
+import graft.util.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,8 +40,8 @@ object GraphTextIO {
   def write(edges: DataFrame, n: Int, path: String): Unit = {
     val text = AdjacencyCodec.toText(AdjacencyCodec.toMatrix(edges, n), n)
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(edges.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val out = NioLocalFileSystem.get(p, edges.sparkSession.sparkContext.hadoopConfiguration)
+      .create(p, true)
     out.write((text + "\n").getBytes("UTF-8"))
     out.close()
   }

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Materialized parquet tables (derived "index" stores — MinHash
   * signatures, trade-graph edge lists).
@@ -162,7 +163,7 @@ object MatStore {
     }
     val path = once(s"${sessionId(s)}:$key") {
       val p = tempDir(prefix)
-      build.write.mode("overwrite").parquet(p)
+      build.write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(p)
       p
     }
     // schema-memoized read (Par.readParquet): the dir is write-once for
@@ -240,9 +241,18 @@ object MatStore {
       bucketCol: String, nBuckets: Int)(build: => DataFrame): DataFrame =
     s.table(once(s"${sessionId(s)}:bkt:$key") {
       val n = s"graft_bkt_${nameSeq.incrementAndGet()}"
-      build.write.mode("overwrite").option("path", tempDir(prefix))
+      build.write.options(NioLocalFileSystem.writeOptions).mode("overwrite")
+        .option("path", tempDir(prefix))
         .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
         .saveAsTable(n)
+      // saveAsTable keeps write options as the table's storage
+      // properties, and every scan passes those to its Hadoop conf:
+      // with them, each file a scan opens would build an uncached file
+      // system. They were for the write alone.
+      val catalog = s.sessionState.catalog
+      val t = catalog.getTableMetadata(TableIdentifier(n))
+      catalog.alterTable(t.copy(storage = t.storage.copy(
+        properties = t.storage.properties -- NioLocalFileSystem.writeOptions.keys)))
       n
     })
 }

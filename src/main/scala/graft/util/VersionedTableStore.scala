@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -28,12 +28,20 @@ import org.apache.spark.sql.types.StructType
   *     means the snapshot directory itself is the single parquet table
   *     (the GraphStore and DistinctPairView layout, with `_SUCCESS` as
   *     the marker: a Spark write's committer creates it, and [[publish]]
-  *     creates it after a write that ran no committer).
+  *     creates it after a write that ran no committer). A `file://`
+  *     store's files and directories are those of Hadoop's local file
+  *     system: the same `.crc` sidecars and the same permissions.
   *   - Write. [[writeTable]] is the one table write of every store. A
   *     frame Spark would broadcast ([[Par.broadcastSized]]) is
   *     collected once and written by the driver as ONE part file: no
   *     Spark job for a local relation and no committer; the marker
-  *     alone publishes it. A larger frame is a plain Spark write.
+  *     alone publishes it. A larger frame is a plain Spark write. A
+  *     `file://` store does every file operation, its own and both
+  *     writes' (the driver write's part file, the Spark write's
+  *     committer and tasks), through [[NioLocalFileSystem]]: Hadoop's
+  *     local file system without a forked `chmod` per directory and
+  *     file created, which would otherwise cost a small put more than
+  *     its write.
   *   - Claim. A writer that allocates its own version takes it with
   *     [[claim]]: an exclusive create of `baseDir/_claim.v<k>`, for the
   *     first free k above the newest complete version. Exclusive create
@@ -76,7 +84,7 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
     marker: String) {
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
   def dir = new Path(baseDir)
-  def fs = dir.getFileSystem(hadoopConf)
+  val fs: FileSystem = NioLocalFileSystem.get(dir, hadoopConf)
 
   private val VersionDir = "v(\\d+)".r
   private val ClaimFile = "_claim\\.v(\\d+)".r
@@ -136,7 +144,8 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
     * derives from the table (a bloom, a read memo) without reading it
     * back. The driver's file comes from Spark's own parquet writer
     * factory: the footer schema, codec and other parquet settings are
-    * those of a Spark write of `df`.
+    * those of a Spark write of `df`. Both paths create their files
+    * through [[NioLocalFileSystem.writeOptions]].
     */
   def writeTable(df: DataFrame, p: Path): (Long, Option[Array[InternalRow]]) =
     if (Par.broadcastSized(df)) {
@@ -146,7 +155,8 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
       DataSourceUtils.checkFieldNames(format, schema)
       val rows = Par.collectRows(df, s"write ${p.getName}")
       fs.delete(p, true)
-      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val job = Job.getInstance(
+        spark.sessionState.newHadoopConfWithOptions(NioLocalFileSystem.writeOptions))
       val factory = format.prepareWrite(spark, job, Map.empty, schema)
       val task = new TaskAttemptContextImpl(job.getConfiguration,
         new TaskAttemptID(new TaskID("", 0, TaskType.MAP, 0), 0))
@@ -157,7 +167,8 @@ final class VersionedTableStore(spark: SparkSession, baseDir: String,
       (rows.length.toLong, Some(rows))
     } else {
       val n = Observation()
-      df.observe(n, count(lit(1)).as("n")).write.mode("overwrite").parquet(p.toString)
+      df.observe(n, count(lit(1)).as("n")).write.options(NioLocalFileSystem.writeOptions)
+        .mode("overwrite").parquet(p.toString)
       (n.get("n").asInstanceOf[Long], None)
     }
 

@@ -52,6 +52,22 @@ class BucketingSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("MatStore.bucketedTable's write forks no chmod and leaves no write option on the table") {
+    // the catalog's first use creates the warehouse directory, once per JVM
+    val catalog = spark.sessionState.catalog
+    catalog.listTables("default"): Unit
+    val (n, forks) = SparkJobs.forksOf(graft.util.MatStore.bucketedTable(spark, "bktspec:forks",
+        "graft_bktspec", "k", 4) {
+      (1 to 100).map(i => (i.toLong, s"f$i")).toDF("k", "fv")
+    }.count())
+    assert(n == 100)
+    assert(forks == 0, s"the bucketed write forked $forks processes")
+    val tables = catalog.listTables("default", "graft_bkt_*").map(catalog.getTableMetadata)
+    assert(tables.nonEmpty)
+    val leaked = tables.filter(_.storage.properties.keySet.exists(_.startsWith("fs.file.")))
+    assert(leaked.isEmpty, leaked.map(t => t.identifier -> t.storage.properties).mkString("; "))
+  }
+
   test("registered fact-fact joins consume the bucketed layout: zero shuffle exchanges") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // forcing broadcasts OFF makes the assertion strict: without the

@@ -93,13 +93,15 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("serve path cost: no job per small read or traversal, one file per small put") {
-    import SparkJobs.jobsOf
+    import SparkJobs.{forksOf, jobsOf}
     val dir = java.nio.file.Files.createTempDirectory("graphserve")
     val store = new GraphStore(spark, dir.toString)
     val rnd = new scala.util.Random(3)
     val tree = (1 until 30).flatMap { v => val p = rnd.nextInt(v); Seq((p, v), (v, p)) }
-    val (_, putJobs) = jobsOf(store.put("T", edgeDf(tree: _*)))
+    val ((_, putJobs), putForks) = forksOf(jobsOf(store.put("T", edgeDf(tree: _*))))
     assert(putJobs.isEmpty, s"a small put ran ${putJobs.size} jobs")
+    // no chmod process per directory or file it creates
+    assert(putForks == 0, s"a small put forked $putForks processes")
     val parts = java.nio.file.Files.list(dir.resolve("T").resolve("v1"))
     try assert(parts.filter(_.getFileName.toString.startsWith("part-")).count() == 1)
     finally parts.close()

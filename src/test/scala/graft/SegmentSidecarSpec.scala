@@ -59,13 +59,16 @@ class SegmentSidecarSpec extends AnyFunSuite {
     idx.build(docs((1L, words("a")), (2L, words("b")), (3L, words("c"))))
     // a near copy of doc 1 (a band collision with segment s1), a fresh
     // doc, and a re-ingested id
-    val jobs = jobsOf(idx.append(docs((4L, words("a", 11)), (5L, words("d")), (2L, words("b")))))
+    val (jobs, forks) = SparkJobs.forksOf(
+      jobsOf(idx.append(docs((4L, words("a", 11)), (5L, words("d")), (2L, words("b"))))))
     // an append whose ids are all known writes an empty segment
     val replayJobs = jobsOf(idx.append(docs((5L, words("d")))))
-    info(s"jobs: append $jobs, replay $replayJobs")
+    info(s"jobs: append $jobs, replay $replayJobs; forks: append $forks")
     assert(idx.candidates().collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 4L)))
     assert(jobs == 16)
     assert(replayJobs == 12)
+    // no chmod process per segment directory, table, sidecar or marker
+    assert(forks == 0)
     assertSidecarsCover(dir, mhBlooms)
   }
 
