@@ -16,26 +16,15 @@ import graft.util.SegmentedIndex
   * once per session/corpus through the MatStore memo); the flat
   * recompute remains the DuckDB oracle.
   *
-  * One logical table: `grams` (g64) — the corpus-lifetime DISTINCT
-  * gram digest set, 16-hex md5 prefixes ([[Dedup.docGrams8]], the same
-  * digest d13 keys its audit join on).
-  *
-  * WRITES are O(batch): each append persists one delta SEGMENT
-  * (`seg/s<k>/grams` — the batch's grams NOT present in any earlier
-  * segment) plus a delta-sized g64 bloom sidecar, and publishes a tiny
-  * manifest. READS during append are O(batch + bloom bytes): the
-  * already-known probe ([[knownGrams]]) runs through the per-segment
-  * blooms, never a scan of the corpus-lifetime gram column. Segment
-  * contents are therefore DISJOINT by construction, so the multi-path
-  * read needs no distinct and chained appends equal a full rebuild
-  * exactly (GramIndexSpec).
-  *
-  * Versioning, crash behavior, [[compact]] and [[vacuum]] are the
-  * shared [[graft.util.SegmentedIndex]] lifecycle, as in the sibling
-  * indexes. Single writer per index dir.
+  * One logical table, its identity table: `grams` (g64) — the
+  * corpus-lifetime DISTINCT gram digest set, 16-hex md5 prefixes
+  * ([[Dedup.docGrams8]], the same digest d13 keys its audit join on),
+  * with sidecar `grams_bloom`. An append writes one delta segment of
+  * the batch's grams no earlier segment holds, so chained appends
+  * equal a full rebuild exactly (GramIndexSpec).
   */
 final class GramIndex(spark: SparkSession, indexDir: String)
-    extends SegmentedIndex(spark, indexDir) {
+    extends SegmentedIndex(spark, indexDir, "g64", "grams", "grams_bloom") {
 
   /** The corpus-lifetime distinct gram digest set: (g64). */
   def grams(): DataFrame = readTable("grams")
@@ -55,13 +44,6 @@ final class GramIndex(spark: SparkSession, indexDir: String)
     else readSegments(segs, "grams")
   }
 
-  /** The subset of `g64s` (a g64 column) ALREADY in the store — the
-    * bloom-pruned membership probe, so a quiet crawl batch against a
-    * year of gram history reads blooms plus only the truly-colliding
-    * segments.
-    */
-  def knownGrams(g64s: DataFrame): DataFrame = known(g64s, "g64", "grams", "grams_bloom")
-
   /** Claim a version and write its delta segment (grams parquet +
     * delta-sized bloom), then publish it as the previous segments plus
     * it — segment first, manifest+marker last, the shared crash
@@ -70,7 +52,7 @@ final class GramIndex(spark: SparkSession, indexDir: String)
   private def writeDelta(grams: DataFrame, prevSegments: Seq[String],
       tag: Option[String] = None): Long =
     publishSegment(prevSegments, tag) { seg =>
-      writeBloomed(seg, "grams", grams.select(col("g64")), "g64", "grams_bloom"): Unit
+      writeIdentity(seg, grams.select(col("g64"))): Unit
     }
 
   /** Full build from a corpus (docs: doc_id, text) — the once-per-
@@ -80,16 +62,13 @@ final class GramIndex(spark: SparkSession, indexDir: String)
     writeDelta(Dedup.docGrams8(docs).select(col("g64")).distinct(), Seq.empty)
 
   /** Delta refresh for appended documents: shingle the NEW docs only,
-    * keep only grams absent from every earlier segment (bloom-pruned
-    * membership, exact-confirmed), write one delta segment. Replaying
+    * keep only the [[fresh]] grams, write one delta segment. Replaying
     * an overlapping batch appends the empty set — idempotent. Returns
     * the published version.
     */
   def append(newDocs: DataFrame, tag: Option[String] = None): Long = {
     val v = requireVersion()
-    val batch = Dedup.docGrams8(newDocs).select(col("g64")).distinct()
-    val fresh = batch.join(knownGrams(batch), Seq("g64"), "left_anti")
-    writeDelta(fresh, segmentsOf(v), tag)
+    writeDelta(fresh(Dedup.docGrams8(newDocs).select(col("g64"))), segmentsOf(v), tag)
   }
 
   /** Merge the current version's segments into ONE and publish it as a

@@ -32,29 +32,22 @@ import graft.util.{BloomSidecars, SegmentedIndex}
   *
   * WRITES are O(delta) too, not just compute: each append persists only
   * a delta SEGMENT (`seg/s<k>/{sig,cand}` — the new docs' signatures
-  * and the new candidate pairs), and a version publishes a tiny
-  * manifest (`v<k>/segments`) listing the segments it is the union of.
-  * Reading a table is a multi-path parquet scan over the manifest's
-  * segments — no distinct needed, because segment contents are provably
-  * disjoint: signatures by the first-writer-wins anti-join, candidate
-  * pairs because every pair emitted at version k involves ≥ 1 doc first
-  * ingested at k (an old-vs-old pair can never re-surface). Without
-  * this, a daily 100 TB crawl would rewrite the whole candidate table
-  * per ingest — the exact bottleneck the operator exists to avoid.
+  * and the new candidate pairs). Candidate pairs are disjoint across
+  * segments like signatures: every pair emitted at version k involves
+  * ≥ 1 doc first ingested at k (an old-vs-old pair can never
+  * re-surface). Without this, a daily 100 TB crawl would rewrite the
+  * whole candidate table per ingest — the exact bottleneck the
+  * operator exists to avoid.
   *
   * At sf0.1 the full d02 index build is the bench's biggest cold cost
   * (~9.5 s); this is the delta path that amortizes it across ingests.
   *
-  * Versioning, the tag journal, crash behavior and retention are the
-  * shared [[graft.util.SegmentedIndex]] lifecycle. Single writer per
-  * index dir.
-  *
-  * Append is first-writer-wins per doc_id: a re-ingested doc_id keeps
-  * its original signature (the delta is anti-joined against the stored
-  * store), so replaying an overlapping crawl batch is idempotent.
+  * Identity table: `sig` keyed by `doc_id` (sidecar `ids_bloom`); a
+  * re-ingested doc_id keeps its first signature, and a batch that
+  * repeats a doc_id stores one of its texts' signatures.
   */
 final class MinHashIndex(spark: SparkSession, indexDir: String)
-    extends SegmentedIndex(spark, indexDir) {
+    extends SegmentedIndex(spark, indexDir, "doc_id", "sig", "ids_bloom") {
 
   /** The signature store: (doc_id, mh0..mh8). */
   def signatures(): DataFrame = readTable("sig")
@@ -71,18 +64,6 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     */
   def candidatesAddedAt(v: Long): DataFrame = addedAt(v, "cand")
 
-  /** The doc_ids first ingested at version `v` — the version's delta
-    * segment, an O(batch) read.
-    */
-  def idsAddedAt(v: Long): DataFrame = addedAt(v, "sig").select(col("doc_id"))
-
-  /** The subset of `ids` (a doc_id column) ALREADY in the signature
-    * store — the first-writer-wins membership probe over the
-    * per-segment doc_id sidecars (~2.4 B/doc), reading O(batch + bloom
-    * bytes) instead of the store's full doc_id column.
-    */
-  def knownIds(ids: DataFrame): DataFrame = known(ids, "doc_id", "sig", "ids_bloom")
-
   /** Combined LSH band key (band || bkey) as one bloom-able string. */
   private def bandKey = concat_ws(":", col("band"), col("bkey"))
 
@@ -94,17 +75,18 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
   private def writeDelta(sig: DataFrame, cand: DataFrame,
       prevSegments: Seq[String], tag: Option[String]): Long =
     publishSegment(prevSegments, tag) { seg =>
-      val (written, n) = writeBloomed(seg, "sig", sig, "doc_id", "ids_bloom")
+      val (written, n) = writeIdentity(seg, sig)
       writeTable(seg, "cand", cand.select(col("doc_a"), col("doc_b"))): Unit
       writeSidecar(seg, "bands_bloom", BloomSidecars.build(
         Dedup.bands(written).select(bandKey.as("bk")), "bk", n * Dedup.BANDS))
     }
 
   /** Full build from a corpus (docs: doc_id, text) — initialization.
-    * Returns the published version.
+    * Duplicate doc_ids collapse as in [[fresh]]. Returns the published
+    * version.
     */
   def build(docs: DataFrame): Long = {
-    val sig = Dedup.minhashes(docs).localCheckpoint()
+    val sig = Dedup.minhashes(docs.dropDuplicates(idKey)).localCheckpoint()
     writeDelta(sig, Dedup.candidates(sig), Seq.empty, None)
   }
 
@@ -113,7 +95,7 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     * candidate set by new-vs-all band matches. The old corpus text is
     * never touched, and the INDEX-sized reads are bloom-pruned too:
     *
-    *  - first-writer-wins membership runs through [[knownIds]]
+    *  - first-writer-wins membership runs through [[fresh]]
     *    (per-segment id blooms), not a full doc_id column scan;
     *  - the new-vs-all band join reads ONLY the segments whose band
     *    bloom might contain one of the delta's band keys, so the
@@ -128,14 +110,12 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     * @return the published version
     */
   def append(newDocs: DataFrame, tag: Option[String] = None): Long =
-    // first-writer-wins: drop re-ingested doc_ids before shingling
-    appendFresh(newDocs.join(knownIds(newDocs.select(col("doc_id"))),
-      Seq("doc_id"), "left_anti"), tag)
+    appendFresh(fresh(newDocs), tag)
 
-  /** [[append]] minus the membership probe — for callers (the
-    * streaming crawl) that already ran [[knownIds]] this trigger and
-    * hold the anti-joined result. `fresh` MUST contain no stored
-    * doc_id and no duplicate doc_id, or segment disjointness breaks.
+  /** [[append]] of a batch already passed through [[fresh]] — for the
+    * streaming crawl, which needs the fresh docs itself. `fresh` MUST
+    * contain no stored doc_id and no duplicate doc_id, or segment
+    * disjointness breaks.
     */
   private[graft] def appendFresh(fresh: DataFrame,
       tag: Option[String] = None): Long = {
@@ -168,8 +148,7 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
   }
 
   /** Merge the current version's segments into ONE and publish it as
-    * a new version (tagged `compaction`, which no crawl batch tag can
-    * collide with). Read-equality is free — segments are disjoint, so
+    * a new version. Read-equality is free — segments are disjoint, so
     * the merged tables are exactly the union the old manifest served —
     * and the rewrite is O(corpus), amortized: a per-trigger append
     * adds a segment, and segment COUNT is what grows per-trigger
@@ -189,6 +168,6 @@ final class MinHashIndex(spark: SparkSession, indexDir: String)
     requireVersion(): Unit
     // No pin: signatures() is a parquet read over the old segments,
     // which stay on disk until a later vacuum().
-    writeDelta(signatures(), candidates(), Seq.empty, Some("compaction"))
+    writeDelta(signatures(), candidates(), Seq.empty, None)
   }
 }

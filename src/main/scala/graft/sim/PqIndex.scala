@@ -1,12 +1,10 @@
 package graft.sim
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.floatNorm
-import graft.util.NioLocalFileSystem
 
 /** Incrementally-maintained IVFADC code store — the FIFTH member of
   * the incremental-index family ([[graft.dedup.MinHashIndex]],
@@ -19,14 +17,19 @@ import graft.util.NioLocalFileSystem
   * quantizer and re-encode ALL of history per ingest. This index
   * trains ONCE and thereafter appends only per-batch deltas.
   *
-  * MODEL (frozen at [[build]], immutable for the index lifetime):
-  *   - `model/cents` (cell, centroid): the trained coarse quantizer
+  * MODEL (trained at [[build]], frozen until the next build), tables
+  * of the version's FIRST segment, which [[compact]] copies and
+  * appends carry forward:
+  *   - `cents` (cell, centroid): the trained coarse quantizer
   *     ([[Kmeans.fit]] over the build corpus);
-  *   - `model/books` (m, code, centroid): the PQ codebooks trained on
-  *     the build corpus' RESIDUALS ([[Pq.fit]] — the IVFADC layout,
-  *     Jégou et al. 2011 §III);
-  *   - `model/err`: the build corpus' mean squared ADC reconstruction
-  *     error — the drift baseline (see [[reconstructionDrift]]).
+  *   - `books` (m, code, centroid): the PQ codebooks trained on the
+  *     build corpus' RESIDUALS ([[Pq.fit]] — the IVFADC layout, Jégou
+  *     et al. 2011 §III);
+  *   - the `params` manifest: "k sumSqErr n", the coarse k and the
+  *     build corpus' summed squared ADC reconstruction error — the
+  *     drift baseline (see [[reconstructionDrift]]).
+  * A rebuild trains its model before it claims a version, so the
+  * served version keeps its own model until the rebuild publishes.
   *
   * Freezing is the same trade [[SignLshIndex]] pins its (bits, tables)
   * family on: codes quantized under different codebooks cannot share
@@ -41,25 +44,17 @@ import graft.util.NioLocalFileSystem
   * are in hand). Past ~2× the baseline, rebuild with a retrained
   * model, amortized across the ingests in between.
   *
-  * SEGMENTS (one per build/append, provably disjoint by the
-  * first-writer-wins anti-join, so multi-segment reads need no
-  * distinct):
-  *   - `seg/s<v>/cells` (vec_id, cell): coarse inverted-list
-  *     assignment;
-  *   - `seg/s<v>/codes` (vec_id, m, code): the 4 B/vec PQ codes;
-  *   - `seg/s<v>/ids_bloom`: delta-sized vec_id bloom sidecar (per-
-  *     append freshness reads are O(batch + bloom bytes), never a
-  *     store-lifetime id scan);
-  *   - `seg/s<v>/err`: "sumSqErr n" — the segment's exact decimal
-  *     summed squared reconstruction error and row count.
+  * SEGMENT tables (one segment per build/append/compaction):
+  *   - `cells` (vec_id, cell), the identity table (sidecar
+  *     `ids_bloom`): coarse inverted-list assignment;
+  *   - `codes` (vec_id, m, code): the 4 B/vec PQ codes;
+  *   - `err`: "sumSqErr n" — the segment's exact decimal summed
+  *     squared reconstruction error and row count.
   *
   * The index stores NO float vectors anywhere — that is the point of
   * the layout: [[adcTopK]] serves the ANN shortlist reading only the
   * code store, the cell assignment, and the frozen model (a few KB);
   * per-query work is the 64-entry LUT plus the probed cells' codes.
-  * Versioning, crash behavior, [[compact]]/[[vacuum]] and
-  * single-writer-per-dir are the shared [[graft.util.SegmentedIndex]]
-  * lifecycle.
   *
   * Append==rebuild contract (PqIndexSpec): under the frozen model,
   * encoding is per-vector and deterministic ([[Kmeans.assign]] /
@@ -69,66 +64,67 @@ import graft.util.NioLocalFileSystem
   * appends the empty delta.
   */
 final class PqIndex(spark: SparkSession, indexDir: String)
-    extends graft.util.SegmentedIndex(spark, indexDir) {
-  private def modelRoot = new Path(snaps.dir, "model")
+    extends graft.util.SegmentedIndex(spark, indexDir, "vec_id", "cells", "ids_bloom") {
+
+  /** Model table `table` of the newest complete version: a table of
+    * its first segment.
+    */
+  private def modelTable(table: String): DataFrame =
+    readSegments(segmentsOf(requireVersion()).take(1), table)
 
   /** The frozen coarse quantizer (cell, centroid). */
-  def coarseCentroids(): DataFrame = {
-    requireVersion(): Unit
-    spark.read.parquet(new Path(modelRoot, "cents").toString)
-  }
+  def coarseCentroids(): DataFrame = modelTable("cents")
 
   /** The frozen residual PQ codebooks (m, code, centroid). */
-  def codebooks(): DataFrame = {
-    requireVersion(): Unit
-    spark.read.parquet(new Path(modelRoot, "books").toString)
-  }
+  def codebooks(): DataFrame = modelTable("books")
+
+  /** The pinned `params` manifest: "k sumSqErr n". */
+  private def params: Array[String] = readText(manifestFile("params")).split("\\s+")
 
   /** The number of coarse cells k, from the pinned params manifest. */
-  def coarseK: Int =
-    readText(manifestFile("params")).split("\\s+")(0).toInt
+  def coarseK: Int = params(0).toInt
 
   /** The coarse inverted-list assignment: (vec_id, cell). */
   def cells(): DataFrame = readTable("cells")
 
   /** The (vec_id, cell) rows first ingested at version `v` — the
     * version's delta segment, an O(batch) read (the streaming replay
-    * path's re-emission set, the [[graft.text.WinnowIndex.idsAddedAt]]
-    * contract).
+    * path's re-emission set).
     */
   def cellsAddedAt(v: Long): DataFrame = addedAt(v, "cells")
 
   /** The 4 B/vec code store: (vec_id, m, code). */
   def codes(): DataFrame = readTable("codes")
 
-  /** The subset of `ids` (a vec_id column) ALREADY ingested —
-    * bloom-pruned first-writer-wins membership.
-    */
-  def knownIds(ids: DataFrame): DataFrame = known(ids, "vec_id", "cells", "ids_bloom")
-
   private def withNorm(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", floatNorm(col("embedding")))
 
-  /** Encode `e` (vec_id, embedding, nrm) under the FROZEN model:
-    * coarse-assign (broadcast centroids, map-side argmax), subtract
-    * the cell centroid, PQ-assign the residual slices (broadcast
-    * codebooks) — per-vector work, O(delta), no corpus access. Also
-    * measures the delta's squared reconstruction error while the
-    * floats are in hand: x̂ = c_cell + concat_m(books[m][code_m]), and
-    * since the subspace slices partition the vector, ‖x − x̂‖² is the
-    * sum of per-subspace ‖sv_m − books[m][code_m]‖².
-    * Returns (cells, codes, "sumSqErr n").
+  /** The one residual step: `e`'s (vec_id, embedding, nrm) coarse
+    * assignment under `cents` (broadcast centroids, map-side argmax),
+    * checkpointed, and its residuals x − c_cell (vec_id, embedding) —
+    * what [[build]] trains the codebooks on and what every build and
+    * append encodes.
     */
-  private def encodeDelta(e: DataFrame, cents: DataFrame, books: DataFrame,
-      k: Int): (DataFrame, DataFrame, String) = {
+  private def residuals(e: DataFrame, cents: DataFrame, k: Int): (DataFrame, DataFrame) = {
     val asg = Kmeans.assign(e, cents, k).localCheckpoint()
-    val residuals = e.join(asg, Seq("vec_id"))
+    (asg, e.join(asg, Seq("vec_id"))
       .join(broadcast(cents), Seq("cell"))
       .select(col("vec_id"),
         expr("zip_with(embedding, centroid, (x, c) -> cast(x as double) - c)")
-          .as("embedding"))
-    val sl = Pq.sliced(residuals).localCheckpoint()
+          .as("embedding")))
+  }
+
+  /** PQ-encode residuals `res` under `books` (broadcast codebooks) —
+    * per-vector work, O(delta), no corpus access. Also measures the
+    * delta's squared reconstruction error while the floats are in
+    * hand: x̂ = c_cell + concat_m(books[m][code_m]), and since the
+    * subspace slices partition the vector, ‖x − x̂‖² is the sum of
+    * per-subspace ‖sv_m − books[m][code_m]‖². Returns (codes,
+    * "sumSqErr n").
+    */
+  private def encode(res: DataFrame, books: DataFrame): (DataFrame, String) = {
+    val sl = Pq.sliced(res).localCheckpoint()
     val codes = Pq.assign(sl, books).localCheckpoint()
     val errRow = sl.join(codes, Seq("vec_id", "m"))
       .join(broadcast(books), Seq("m", "code"))
@@ -141,73 +137,60 @@ final class PqIndex(spark: SparkSession, indexDir: String)
     val errLine =
       if (errRow.isNullAt(0)) "0 0"
       else s"${errRow.get(0)} ${errRow.getLong(1) / Pq.M}"
-    (asg, codes, errLine)
+    (codes, errLine)
   }
 
-  /** Claim a version and write its delta segment (cells + codes
-    * parquet, the delta-sized id bloom, the err stats), then publish it
-    * with the coarse k in the manifest — segment first,
-    * manifest+marker last, the shared crash contract.
+  /** Claim a version and publish its delta segment: cells (with the id
+    * bloom) + codes + the err stats, plus the `model` (cents, books)
+    * when the segment is a version's first, with `params` in the
+    * manifest.
     */
-  private def writeDelta(cellsDf: DataFrame, codesDf: DataFrame,
-      errLine: String, prevSegments: Seq[String], k: Int,
-      tag: Option[String] = None): Long =
-    publishSegment(prevSegments, tag, Seq("params" -> k.toString)) { seg =>
-      writeBloomed(seg, "cells", cellsDf.select(col("vec_id"), col("cell")),
-        "vec_id", "ids_bloom"): Unit
+  private def writeDelta(cellsDf: DataFrame, codesDf: DataFrame, errLine: String,
+      prevSegments: Seq[String], paramsLine: String,
+      model: Option[(DataFrame, DataFrame)], tag: Option[String] = None): Long =
+    publishSegment(prevSegments, tag, Seq("params" -> paramsLine)) { seg =>
+      writeIdentity(seg, cellsDf.select(col("vec_id"), col("cell"))): Unit
       writeTable(seg, "codes", codesDf.select(col("vec_id"), col("m"), col("code"))): Unit
+      model.foreach { case (cents, books) =>
+        writeTable(seg, "cents", cents.select(col("cell"), col("centroid"))): Unit
+        writeTable(seg, "books", books.select(col("m"), col("code"), col("centroid"))): Unit
+      }
       snaps.writeTextFile(segPath(seg.name, "err"), errLine)
     }
 
   /** Train the model on `vecs` (vec_id, embedding) and encode them —
     * the once-per-index materialization that freezes the coarse
-    * quantizer and the residual codebooks. `k`/`iters` default to the
-    * registered s10/s12 parameters, so an index built over a corpus
-    * serves bit-exactly what the registered s12 computes on it. Returns
-    * the published version.
+    * quantizer and the residual codebooks. Duplicate ids collapse as
+    * in [[fresh]]. `k`/`iters` default to the registered s10/s12
+    * parameters, so an index built over a corpus serves bit-exactly
+    * what the registered s12 computes on it. Returns the published
+    * version.
     */
   def build(vecs: DataFrame, k: Int = 10, iters: Int = 3): Long = {
-    val e = withNorm(vecs.dropDuplicates("vec_id")).persist()
+    val e = withNorm(vecs.dropDuplicates(idKey)).persist()
     try {
       val cents = Kmeans.fit(e, k, iters)
-      cents.select(col("cell"), col("centroid"))
-        .write.options(NioLocalFileSystem.writeOptions).mode("overwrite")
-        .parquet(new Path(modelRoot, "cents").toString)
-      val storedCents = spark.read.parquet(new Path(modelRoot, "cents").toString)
-      val asg = Kmeans.assign(e, storedCents, k).localCheckpoint()
-      val residuals = e.join(asg, Seq("vec_id"))
-        .join(broadcast(storedCents), Seq("cell"))
-        .select(col("vec_id"),
-          expr("zip_with(embedding, centroid, (x, c) -> cast(x as double) - c)")
-            .as("embedding"))
-      Pq.fit(residuals)
-        .write.options(NioLocalFileSystem.writeOptions).mode("overwrite")
-        .parquet(new Path(modelRoot, "books").toString)
-      val storedBooks = spark.read.parquet(new Path(modelRoot, "books").toString)
-      val (cellsDf, codesDf, errLine) = encodeDelta(e, storedCents, storedBooks, k)
-      snaps.writeTextFile(new Path(modelRoot, "err"), errLine)
-      writeDelta(cellsDf, codesDf, errLine, Seq.empty, k)
+      val (asg, r) = residuals(e, cents, k)
+      // read three times: by the training's slicing and seeding, and by the encode
+      val res = r.localCheckpoint()
+      val books = Pq.fit(res)
+      val (codesDf, errLine) = encode(res, books)
+      writeDelta(asg, codesDf, errLine, Seq.empty, s"$k $errLine", Some((cents, books)))
     } finally { e.unpersist(): Unit }
   }
 
-  /** Delta refresh: encode only the id-FRESH vectors of the batch
-    * under the frozen model, write their codes as one segment.
-    * First-writer-wins per vec_id; replaying an overlapping batch
-    * appends the empty delta — idempotent. Returns the published
-    * version.
+  /** Delta refresh: encode only the [[fresh]] vectors of the batch
+    * under the frozen model, write their codes as one segment after
+    * the version's segments. Returns the published version.
     */
   def append(newVecs: DataFrame, tag: Option[String] = None): Long = {
-    val v = requireVersion()
-    val k = coarseK
-    val batch = newVecs.dropDuplicates("vec_id")
-    val fresh = withNorm(batch
-      .join(knownIds(batch.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
-      .persist()
+    val segs = segmentsOf(requireVersion())
+    val delta = withNorm(fresh(newVecs)).persist()
     try {
-      val (cellsDf, codesDf, errLine) =
-        encodeDelta(fresh, coarseCentroids(), codebooks(), k)
-      writeDelta(cellsDf, codesDf, errLine, segmentsOf(v), k, tag)
-    } finally { fresh.unpersist(): Unit }
+      val (asg, res) = residuals(delta, coarseCentroids(), coarseK)
+      val (codesDf, errLine) = encode(res, codebooks())
+      writeDelta(asg, codesDf, errLine, segs, params.mkString(" "), None, tag)
+    } finally { delta.unpersist(): Unit }
   }
 
   /** Pooled mean squared reconstruction error of the CURRENT corpus
@@ -220,8 +203,8 @@ final class PqIndex(spark: SparkSession, indexDir: String)
     * (compact sums the err stats), so the signal survives compaction.
     */
   def reconstructionDrift(): Double = {
-    val base = readText(new Path(modelRoot, "err")).split("\\s+")
-    val baseMse = base(0).toDouble / math.max(base(1).toLong, 1L)
+    val p = params
+    val baseMse = p(1).toDouble / math.max(p(2).toLong, 1L)
     val pooled = errStats(segmentsOf(requireVersion()))
     val n = pooled.map(_._2).sum
     if (n == 0 || baseMse == 0.0) 1.0
@@ -284,16 +267,18 @@ final class PqIndex(spark: SparkSession, indexDir: String)
         col("rank"))
       .orderBy(col("query_id"), col("rank"))
 
-  /** Merge the current version's segments into ONE (model untouched —
-    * compaction never retrains) and publish as a new version; the
-    * amortized bound on per-append sidecar/footer reads. Err stats sum
-    * (exact decimal strings), so [[reconstructionDrift]] is unchanged
-    * by compaction. Old segments are retired by [[vacuum]].
+  /** Merge the current version's segments into ONE, the model copied
+    * unchanged (compaction never retrains), and publish as a new
+    * version; the amortized bound on per-append sidecar/footer reads.
+    * Err stats sum (exact decimal strings), so [[reconstructionDrift]]
+    * is unchanged by compaction. Old segments are retired by
+    * [[vacuum]].
     */
   def compact(): Long = {
-    val summed = errStats(segmentsOf(requireVersion()))
-    val errLine = s"${summed.map(_._1).sum} ${summed.map(_._2).sum}"
-    writeDelta(cells(), codes(), errLine, Seq.empty, coarseK)
+    val segErr = errStats(segmentsOf(requireVersion()))
+    val errLine = s"${segErr.map(_._1).sum} ${segErr.map(_._2).sum}"
+    writeDelta(cells(), codes(), errLine, Seq.empty, params.mkString(" "),
+      Some((coarseCentroids(), codebooks())))
   }
 
   /** Per-segment (summed squared error, row count) from `err` files. */

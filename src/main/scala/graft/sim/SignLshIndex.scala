@@ -41,16 +41,12 @@ import graft.functions.VectorFunctions.floatNorm
   * family — the same envelope logic as the registered query's
   * per-corpus calibration, amortized across the ingests in between).
   *
-  * WRITES are O(delta): each append persists only a delta SEGMENT
-  * (`seg/s<k>/{vec,sig}` — the new vectors and their signatures), and
-  * a version publishes a tiny manifest (`v<k>/segments`) listing the
-  * segments it is the union of, plus the pinned `params`. Segment
-  * contents are provably disjoint — appends are first-writer-wins per
-  * vec_id (the delta is anti-joined against the stored vectors), so a
-  * replayed or overlapping crawl batch is idempotent and a multi-path
-  * read needs no distinct. Versioning, crash behavior and retention
-  * are the shared [[graft.util.SegmentedIndex]] lifecycle. Single
-  * writer per index dir.
+  * Identity table: `vec` keyed by `vec_id` (sidecar `ids_bloom`); each
+  * append writes the delta SEGMENT `seg/s<k>/{vec,sig}` of its
+  * [[fresh]] vectors, and the manifest pins `params` and `format`.
+  * One row per vec_id matters beyond idempotence: two stored rows for
+  * one id would multiply annGraph's hydration joins and could seat the
+  * same neighbor twice in a query's top-3.
   *
   * [[annGraph]] serves the top-3 ANN graph straight off the stored
   * tables: probe signatures derive from the STORED `tsig` by bit
@@ -62,7 +58,7 @@ import graft.functions.VectorFunctions.floatNorm
   * rebuild would (SignLshIndexSpec).
   */
 final class SignLshIndex(spark: SparkSession, indexDir: String)
-    extends graft.util.SegmentedIndex(spark, indexDir) {
+    extends graft.util.SegmentedIndex(spark, indexDir, "vec_id", "vec", "ids_bloom") {
 
   /** Segment-layout format this code writes: 2 = vec segments carry
     * the int8 quantized form (qv, qn2). Pre-quantization indexes (no
@@ -122,14 +118,6 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
         (col("ts.t").cast("long") * p2 + col("ts.sig")).as("tsig"))
   }
 
-  /** The subset of `ids` (a vec_id column) ALREADY in the vector
-    * store — the first-writer-wins membership probe through the
-    * per-segment id sidecars: per-append reads are O(batch + bloom
-    * bytes), never the store's full vec_id column (which grows with
-    * corpus lifetime).
-    */
-  def knownIds(ids: DataFrame): DataFrame = known(ids, "vec_id", "vec", "ids_bloom")
-
   /** Claim a version and write its delta segment (vec + sig parquet
     * plus the delta-sized vec_id bloom sidecar), then publish it as the
     * previous segments plus it, with the pinned family and the segment
@@ -139,7 +127,7 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
       prevSegments: Seq[String], paramsLine: String): Long =
     publishSegment(prevSegments,
         extra = Seq("params" -> paramsLine, "format" -> CurrentFormat.toString)) { seg =>
-      writeBloomed(seg, "vec", vec, "vec_id", "ids_bloom"): Unit
+      writeIdentity(seg, vec): Unit
       writeTable(seg, "sig", sig): Unit
     }
 
@@ -159,13 +147,10 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
     } finally e.unpersist()
   }
 
-  /** Delta refresh for appended vectors: norm + sign the NEW vectors
-    * only under the pinned family — the only corpus-shaped work is
-    * linear in the delta, and only the delta segment is written.
-    * First-writer-wins per vec_id (membership via the bloom-pruned
-    * [[knownIds]], not a store-lifetime id scan): re-ingested ids keep
-    * their original vector and signatures, so replaying an overlapping
-    * batch is idempotent. Returns the published version.
+  /** Delta refresh for appended vectors: norm + sign the [[fresh]]
+    * vectors only under the pinned family — the only corpus-shaped work
+    * is linear in the delta, and only the delta segment is written.
+    * Returns the published version.
     */
   def append(newVecs: DataFrame): Long = {
     val v = requireVersion()
@@ -174,19 +159,10 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
     // mixed-schema read the format guard exists to prevent
     requireFormat("append")
     val (bits, tables) = params
-    // one row per vec_id even WITHIN a batch: an at-least-once source
-    // can repeat an id in one trigger, and two stored rows for one id
-    // would multiply annGraph's hydration joins and could seat the
-    // same neighbor twice in a query's top-3. Arbitrary winner among
-    // in-batch copies — the same semantics as cross-batch
-    // first-writer-wins.
-    val batch = newVecs.dropDuplicates("vec_id")
-    val fresh = withNorm(batch
-      .join(knownIds(batch.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
-      .persist()
-    try writeDelta(fresh, sigOf(fresh, bits, tables), segmentsOf(v),
+    val delta = withNorm(fresh(newVecs)).persist()
+    try writeDelta(delta, sigOf(delta, bits, tables), segmentsOf(v),
       s"$bits $tables")
-    finally fresh.unpersist()
+    finally delta.unpersist()
   }
 
   /** Merge the current version's segments into ONE and publish it as

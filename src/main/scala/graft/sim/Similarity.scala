@@ -577,13 +577,10 @@ object Similarity {
     * map's integer CASEs) are untouched: past 2^17 the library path is
     * self-calibrating and its exactness evidence is the probe-anchor
     * spec plus the recall gate, not a DuckDB mirror of the solver.
-    * Overridable for tests via -Dgraft.ann.calibratedMaxRows.
     */
-  private[graft] def annCalibratedMaxRows: Long =
-    sys.props.get("graft.ann.calibratedMaxRows").map(_.toLong)
-      .getOrElse(1L << 17)
+  private[graft] val AnnCalibratedMaxRows: Long = 1L << 17
 
-  /** The family for a corpus of n vectors, routed by [[annCalibratedMaxRows]]:
+  /** The family for a corpus of n vectors, routed by [[AnnCalibratedMaxRows]]:
     * the anchor map below the threshold (free — no extra pass), the
     * measured-retention solver above it. This is the ONE resolution
     * path every index entry point uses ([[annGraphTable]] behind
@@ -592,7 +589,7 @@ object Similarity {
     * showed under-provisioning turns into worse-than-brute-force.
     */
   private[graft] def annParamsFor(e: DataFrame, n: Long): (Int, Int) =
-    if (n <= annCalibratedMaxRows) annParams(n)
+    if (n <= AnnCalibratedMaxRows) annParams(n)
     else annParamsProbedOf(e, n, 0.80)
 
   /** [[annParamsProbed]] on an already-normed (vec_id, embedding, nrm)

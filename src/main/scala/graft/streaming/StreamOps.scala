@@ -170,6 +170,21 @@ object StreamOps {
     (b, s"${kind}_batch_${batchId}_${idRow.getLong(0)}_${idRow.getLong(1)}")
   }
 
+  /** A journaled trigger's fresh rows of `b`, materialized, and the
+    * version that already holds them if the trigger is a replay. A
+    * replay (`tag` is journaled) recovers the rows whose key the tagged
+    * version added ([[graft.util.SegmentedIndex.idsAddedAt]]), so first
+    * run and replay decide over the same rows; a first run takes the
+    * index's first-writer-wins [[graft.util.SegmentedIndex.fresh]] rows,
+    * which the caller appends with the tag.
+    */
+  private def freshRows(index: graft.util.SegmentedIndex, b: DataFrame,
+      tag: String): (Option[Long], DataFrame) = {
+    val tagged = index.versionTagged(tag)
+    (tagged, tagged.fold(index.fresh(b))(v =>
+      b.join(index.idsAddedAt(v), Seq(index.idKey), "left_semi")).localCheckpoint())
+  }
+
   /** Continuous maintenance of a [[graft.sim.SignLshIndex]] — the
     * daily-crawl ingestion path run as a stream: every micro-batch of
     * newly-crawled vectors (vec_id, embedding) becomes one delta
@@ -243,7 +258,7 @@ object StreamOps {
     * delta segment so the NEXT batch is audited against history that
     * includes this one. Per-trigger reads are O(batch + bloom
     * sidecars): the append's membership probe is bloom-pruned
-    * ([[graft.dedup.GramIndex.knownGrams]]), and the audit join reads
+    * ([[graft.dedup.GramIndex.fresh]]), and the audit join reads
     * the stored gram segments by path, never re-shingling old
     * documents.
     *
@@ -306,23 +321,12 @@ object StreamOps {
   private[graft] def spanDedupBatch(index: graft.text.WinnowIndex,
       batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = {
     val (b, tag) = journal("spandedup", batch, batchId)
-    // the audited set is the batch's FRESH docs; the batch is shingled
-    // exactly ONCE — the same localCheckpointed window table feeds the
-    // index append (its census delta) and the duplication audit below.
-    // On replay the fresh set is recovered from the tagged version's
-    // own delta (already-ingested ids were cleaned when first seen),
-    // so first run and replay audit the same rows.
-    val (v, fresh, wins) = index.versionTagged(tag) match {
-      case Some(v0) =>
-        val f = b.join(index.idsAddedAt(v0), Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-        (v0, f, graft.text.TextOps.winnowWindows(f).localCheckpoint())
-      case None =>
-        val f = index.freshDocs(b.select(col("doc_id"), col("text")))
-          .localCheckpoint()
-        val w = graft.text.TextOps.winnowWindows(f).localCheckpoint()
-        (index.appendShingled(f, w, Some(tag)), f, w)
-    }
+    // the audited set is the batch's FRESH docs, shingled exactly ONCE:
+    // the same localCheckpointed window table feeds the index append
+    // (its census delta) and the duplication audit below
+    val (tagged, fresh) = freshRows(index, b.select(col("doc_id"), col("text")), tag)
+    val wins = graft.text.TextOps.winnowWindows(fresh).localCheckpoint()
+    val v = tagged.getOrElse(index.appendShingled(fresh, wins, Some(tag)))
     val batchCensus = wins.select(col("doc_id"), col("fp")).distinct()
       .groupBy(col("fp")).agg(count(lit(1)).as("bn"))
     val hist = index.censusBeforeFor(v, batchCensus.select(col("fp")))
@@ -379,16 +383,9 @@ object StreamOps {
     // the scored set is the batch's FRESH docs, tokenized exactly ONCE —
     // the same localCheckpointed bigram stream feeds the index append
     // (its census delta) and the scoring joins below
-    val (v, big) = index.versionTagged(tag) match {
-      case Some(v0) =>
-        val f = b.join(index.idsAddedAt(v0), Seq("doc_id"), "left_semi")
-        (v0, graft.text.TextOps.bigramStream(f).localCheckpoint())
-      case None =>
-        val f = index.freshDocs(b.select(col("doc_id"), col("text")))
-          .localCheckpoint()
-        val g = graft.text.TextOps.bigramStream(f).localCheckpoint()
-        (index.appendBigrams(f, g, Some(tag)), g)
-    }
+    val (tagged, fresh) = freshRows(index, b.select(col("doc_id"), col("text")), tag)
+    val big = graft.text.TextOps.bigramStream(fresh).localCheckpoint()
+    val v = tagged.getOrElse(index.appendBigrams(fresh, big, Some(tag)))
     val c12 = index.censusAtFor(v, big.select(col("bigram")))
       .withColumnRenamed("c", "c12")
     val c1 = index.leftsAtFor(v,
@@ -441,7 +438,7 @@ object StreamOps {
     * candidate DELTA ([[graft.dedup.MinHashIndex.candidatesAddedAt]])
     * and its own fresh-id segment; freshness/replay membership runs
     * through the per-segment id blooms
-    * ([[graft.dedup.MinHashIndex.knownIds]] — delta-sized sidecars,
+    * ([[graft.dedup.MinHashIndex.fresh]] — delta-sized sidecars,
     * exact-confirm reads only for claiming segments), never a
     * corpus-lifetime doc_id column scan. This is the dedup shape a
     * daily 100 TB crawl runs: "drop what we have already seen, across
@@ -474,22 +471,14 @@ object StreamOps {
     val (b, tag) = journal("crawl", batch, batchId)
     // a reset batch re-crawling known ids with new text is no replay: it
     // takes the fresh path, where the doc_id-keyed index drops it
-    val appendedV = index.versionTagged(tag).orElse {
-      val fresh = b.join(index.knownIds(b.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti").localCheckpoint()
-      if (fresh.isEmpty) None
-      else {
-        // appendFresh: the membership probe above is the trigger's one
-        // — b is already id-deduped, so fresh meets its contract
-        Some(index.appendFresh(fresh, Some(tag)))
-      }
-    }
+    val (tagged, fresh) = freshRows(index, b, tag)
+    val appendedV = tagged.orElse(
+      if (fresh.isEmpty) None else Some(index.appendFresh(fresh, Some(tag))))
     appendedV.foreach { v =>
       // every decision input below is versioned state, so a replay
       // recomputes the identical survivor set
-      val freshIds = index.idsAddedAt(v).localCheckpoint()
       val delta = index.candidatesAddedAt(v)
-      val fb = freshIds.withColumnRenamed("doc_id", "doc_b")
+      val fb = fresh.select(col("doc_id").as("doc_b"))
       // pair (a < b), ≥1 endpoint fresh by segment disjointness:
       // b fresh -> b drops (if a is old, b dups history; if both
       // fresh, the min id a stays as the canonical representative);
@@ -499,8 +488,7 @@ object StreamOps {
         .unionAll(delta.join(fb, Seq("doc_b"), "left_anti")
           .select(col("doc_a").as("doc_id")))
         .distinct()
-      sink(b.join(freshIds, Seq("doc_id"), "left_semi")
-        .join(drops, Seq("doc_id"), "left_anti"))
+      sink(fresh.join(drops, Seq("doc_id"), "left_anti"))
     }
   }
 

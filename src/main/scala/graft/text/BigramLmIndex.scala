@@ -15,100 +15,50 @@ import graft.util.SegmentedIndex
   * left-context marginal are materialized once, then APPENDED per
   * crawl batch — only the batch's documents are ever tokenized.
   *
-  * Two logical tables, both ADDITIVE over segments (the WinnowIndex
-  * census rule — no cross-segment dedup, the corpus count is the
-  * per-key SUM):
-  *  - `census` (bigram, c)  — occurrences of each adjacent token pair
-  *    across the corpus token stream ([[TextOps.bigramStream]], the
-  *    same extraction t20 registers);
-  *  - `lefts`  (w1, c)      — occurrences of each token as LEFT
-  *    context (= Σ census over its continuations), stored
-  *    pre-aggregated per segment because the left-context probe keys
-  *    by w1: a bigram-keyed bloom cannot prune a w1 probe, and
-  *    deriving c(w1·) at probe time would need EVERY segment's census
-  *    rows for that w1, not just the probed bigrams'.
-  * Counts are occurrences, so a document must be ingested exactly
-  * once: appends are restricted to id-FRESH docs (per-segment doc_id
-  * tables + blooms, the family's first-writer-wins rule) and a
-  * replayed batch appends the empty delta.
-  *
-  * WRITES are O(batch): one delta segment (census + lefts + ids,
-  * Heaps'-bounded in the batch) + three delta-sized blooms + a tiny
-  * manifest. The scoring probes ([[censusAtFor]]/[[leftsAtFor]]) are
-  * bloom-pruned partial sums: the per-key sum over the claiming
-  * segments is the complete count, and only their parquet is opened.
-  * A batch's own keys always claim its own segment, so every probed
-  * ratio has c ≥ 1 (the self-inclusive census t20's self-scoring
-  * defines; no smoothing needed).
+  * Tables:
+  *  - `census` (bigram, c), sidecar `census_bloom` — occurrences of
+  *    each adjacent token pair across the corpus token stream
+  *    ([[TextOps.bigramStream]], the same extraction t20 registers);
+  *  - `lefts` (w1, c), sidecar `lefts_bloom` — occurrences of each
+  *    token as LEFT context (= Σ census over its continuations),
+  *    stored pre-aggregated per segment because the left-context probe
+  *    keys by w1: a bigram-keyed bloom cannot prune a w1 probe;
+  *  - `docs` (doc_id), sidecar `docs_bloom` — the identity table.
+  * `census` and `lefts` are ADDITIVE over segments ([[summed]]). Counts
+  * are occurrences, so a document must be ingested exactly once: an
+  * append tokenizes only its [[fresh]] docs, and a replayed batch
+  * appends the empty delta. A batch's own keys always claim its own
+  * segment, so every probed ratio has c ≥ 1 (the self-inclusive census
+  * t20's self-scoring defines; no smoothing needed).
   *
   * Drift note: the census is FROZEN history — an earlier doc's score
   * is never revised when later crawls shift the distribution (the
   * crawlDedup arrival-time rule). The trajectory of per-batch mean
   * surprise over versions IS the domain-drift signal
   * (StreamingSpec exercises it through [[graft.streaming.StreamOps.lmScoreStream]]).
-  *
-  * Versioning, crash behavior, [[compact]]/[[vacuum]], and the tag
-  * journal are the shared [[graft.util.SegmentedIndex]] lifecycle of
-  * the five sibling indexes. Single writer per index dir.
   */
 final class BigramLmIndex(spark: SparkSession, indexDir: String)
-    extends SegmentedIndex(spark, indexDir) {
-
-  private def emptyCounts(key: String): DataFrame =
-    spark.range(0).select(col("id").cast("string").as(key), col("id").as("c"))
-
-  private def countsOf(segs: Seq[String], table: String, key: String): DataFrame =
-    if (segs.isEmpty) emptyCounts(key)
-    else readSegments(segs, table)
-      .groupBy(col(key)).agg(sum(col("c")).as("c"))
+    extends SegmentedIndex(spark, indexDir, "doc_id", "docs", "docs_bloom") {
 
   /** The corpus-lifetime bigram census: (bigram, c) summed over segments. */
-  def census(): DataFrame = countsOf(segmentsOf(requireVersion()), "census", "bigram")
+  def census(): DataFrame = summed(segmentsOf(requireVersion()), "census", "bigram", "c")
 
   /** The corpus-lifetime left-context marginal: (w1, c). */
-  def lefts(): DataFrame = countsOf(segmentsOf(requireVersion()), "lefts", "w1")
+  def lefts(): DataFrame = summed(segmentsOf(requireVersion()), "lefts", "w1", "c")
 
-  /** Bloom-pruned partial-sum probe of `table` (keyed by `key`) as of
-    * version `v` — INCLUDING v's own delta (the self-inclusive census
-    * scoring reads). Complete per key: non-claiming segments hold none
-    * of the keys.
+  /** (bigram, c) as of version `v` — INCLUDING v's own delta (the
+    * self-inclusive census scoring reads) — restricted to the probe
+    * bigrams.
     */
-  private def countsAtFor(v: Long, table: String, key: String,
-      keys: DataFrame): DataFrame =
-    probe(segmentsOf(v), table, s"${table}_bloom", keys, key)
-      .fold(emptyCounts(key))(_.groupBy(col(key)).agg(sum(col("c")).as("c")))
-
-  /** (bigram, c) as of version `v`, restricted to the probe bigrams. */
   def censusAtFor(v: Long, bigrams: DataFrame): DataFrame =
-    countsAtFor(v, "census", "bigram", bigrams)
+    summed(segmentsOf(v), "census", "bigram", "c", Some(bigrams))
 
   /** (w1, c) as of version `v`, restricted to the probe left tokens. */
   def leftsAtFor(v: Long, w1s: DataFrame): DataFrame =
-    countsAtFor(v, "lefts", "w1", w1s)
+    summed(segmentsOf(v), "lefts", "w1", "c", Some(w1s))
 
-  /** The doc_ids first ingested at version `v` — the version's delta
-    * segment, an O(batch) read (the replay path's fresh set).
-    */
-  def idsAddedAt(v: Long): DataFrame = addedAt(v, "docs")
-
-  /** The subset of `ids` ALREADY ingested — bloom-pruned
-    * first-writer-wins membership.
-    */
-  def knownDocs(ids: DataFrame): DataFrame = known(ids, "doc_id", "docs", "docs_bloom")
-
-  /** The id-FRESH subset of `newDocs` (duplicate ids collapsed, then
-    * already-ingested ids dropped) — [[append]]'s freshness rule,
-    * factored out so the streaming driver can tokenize the fresh docs
-    * ONCE and share the bigram stream with [[appendBigrams]].
-    */
-  def freshDocs(newDocs: DataFrame): DataFrame = {
-    val b = newDocs.dropDuplicates("doc_id")
-    b.join(knownDocs(b.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-  }
-
-  /** Claim a version and write its delta segment (census + lefts +
-    * ids, each with its bloom), then publish it — segment first,
-    * manifest+marker last, the crash contract.
+  /** Claim a version and publish its delta segment: census + lefts +
+    * ids, each with its bloom.
     */
   private def writeDelta(census: DataFrame, docIds: DataFrame,
       prevSegments: Seq[String], tag: Option[String] = None): Long =
@@ -120,7 +70,7 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String)
       writeBloomed(seg, "lefts", wc
         .groupBy(expr("split_part(bigram, ' ', 1)").as("w1"))
         .agg(sum(col("c")).as("c")), "w1", "lefts_bloom"): Unit
-      writeBloomed(seg, "docs", docIds.select(col("doc_id")), "doc_id", "docs_bloom"): Unit
+      writeIdentity(seg, docIds.select(col("doc_id"))): Unit
     }
 
   private def censusFromBigrams(big: DataFrame): DataFrame =
@@ -141,12 +91,13 @@ final class BigramLmIndex(spark: SparkSession, indexDir: String)
     * published version.
     */
   def append(newDocs: DataFrame, tag: Option[String] = None): Long = {
-    val fresh = freshDocs(newDocs).localCheckpoint()
-    appendBigrams(fresh, TextOps.bigramStream(fresh), tag)
+    val f = fresh(newDocs).localCheckpoint()
+    appendBigrams(f, TextOps.bigramStream(f), tag)
   }
 
-  /** [[append]] with tokenization already done: `big` MUST be
-    * `TextOps.bigramStream(fresh)` for `fresh` == [[freshDocs]] of the
+  /** [[append]] with tokenization already done, so the streaming
+    * driver tokenizes the fresh docs ONCE: `big` MUST be
+    * `TextOps.bigramStream(fresh)` for `fresh` == [[fresh]] of the
     * batch (package-private; the census is still derived here, so a
     * caller can only hand in mismatched streams, not a forged census).
     */

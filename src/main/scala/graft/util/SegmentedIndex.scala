@@ -3,7 +3,7 @@ package graft.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.{col, explode, size}
+import org.apache.spark.sql.functions.{col, explode, lit, size, sum}
 import org.apache.spark.sql.graftshim.LocalRelationBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
@@ -35,7 +35,21 @@ import org.apache.spark.util.sketch.BloomFilter
   * take a table's schema from a per-instance memo keyed by the first
   * segment read (immutable, so an entry never goes stale), seeded by
   * this instance's writes or else by one footer read on the driver, so
-  * no read runs a schema-inference job.
+  * no read runs a schema-inference job. A build or [[compact]] writes
+  * a version's first segment; an append adds a later one. State an
+  * index keeps once per version (PqIndex's trained model) is a table of
+  * the first segment, which appends carry forward.
+  *
+  * Identity. Every index has one identity table: the table holding its
+  * key column `idKey`, with the bloom sidecar `idSidecar` over that
+  * column. Keys are first-writer-wins: [[fresh]] collapses a batch's
+  * duplicate keys (an arbitrary copy wins) and drops the keys already
+  * stored ([[known]]), and an append writes only fresh rows, so
+  * segments hold disjoint keys, a multi-segment read needs no
+  * distinct, and a replayed batch appends the empty delta.
+  * [[idsAddedAt]] reads the keys one version added; [[writeIdentity]]
+  * is the identity table's write. Additive tables (a count per key,
+  * summed over segments) are read by [[summed]].
   *
   * Bloom sidecars ([[BloomSidecars]]) let a probe skip segments. A
   * segment's sidecar over a key column of one of its tables has no
@@ -48,7 +62,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * one bloom-pruned read: an exact semi-join against only the claiming
   * segments.
   */
-abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
+abstract class SegmentedIndex(spark: SparkSession, indexDir: String,
+    val idKey: String, idTable: String, idSidecar: String) {
   protected val snaps = new VersionedTableStore(spark, indexDir, "_INDEX_OK")
   protected def segRoot = new Path(snaps.dir, "seg")
   protected def fs = snaps.fs
@@ -244,13 +259,45 @@ abstract class SegmentedIndex(spark: SparkSession, indexDir: String) {
         .join(suspects.select(col(key)), Seq(key), "left_semi"))
     }
 
-  /** The `key` values of `keys` already in `table` as of the newest
-    * complete version, by [[probe]].
+  /** The `idKey` values of `keys` (an `idKey` column) already in the
+    * identity table as of the newest complete version, by [[probe]].
     */
-  protected def known(keys: DataFrame, key: String, table: String,
-      sidecar: String): DataFrame =
-    probe(segmentsOf(requireVersion()), table, sidecar, keys, key)
-      .fold(keys.select(col(key)).limit(0))(_.select(col(key)))
+  def known(keys: DataFrame): DataFrame =
+    probe(segmentsOf(requireVersion()), idTable, idSidecar, keys, idKey)
+      .fold(keys.select(col(idKey)).limit(0))(_.select(col(idKey)))
+
+  /** The first-writer-wins rule: `batch` with its duplicate keys
+    * collapsed (an arbitrary copy wins), then the [[known]] ones
+    * dropped. What an append writes.
+    */
+  def fresh(batch: DataFrame): DataFrame = {
+    val b = batch.dropDuplicates(idKey)
+    b.join(known(b.select(col(idKey))), Seq(idKey), "left_anti")
+  }
+
+  /** The keys version `v` first stored: its own segment's identity
+    * table, an O(batch) read.
+    */
+  def idsAddedAt(v: Long): DataFrame = addedAt(v, idTable).select(col(idKey))
+
+  /** Write `df` as the identity table of segment `seg`, with its
+    * sidecar ([[writeBloomed]]).
+    */
+  protected def writeIdentity(seg: Segment, df: DataFrame): (DataFrame, Long) =
+    writeBloomed(seg, idTable, df, idKey, idSidecar)
+
+  /** Additive `table` read: `value` summed per `key` over `segs`, or,
+    * given probe `keys`, over only the segments whose sidecar
+    * `<table>_bloom` claims one of them ([[probe]]). The probed sums
+    * are complete: no other segment holds a probed key.
+    */
+  protected def summed(segs: Seq[String], table: String, key: String, value: String,
+      keys: Option[DataFrame] = None): DataFrame = {
+    def sumOf(rows: DataFrame) = rows.groupBy(col(key)).agg(sum(col(value)).as(value))
+    keys.fold(sumOf(readSegments(segs, table)))(k =>
+      probe(segs, table, s"${table}_bloom", k, key)
+        .fold(k.select(col(key), lit(0L).as(value)).limit(0))(sumOf))
+  }
 
   /** Merge the current version's segments into one and publish it as a
     * new version; returns that version.

@@ -110,11 +110,53 @@ class PqIndexSpec extends AnyFunSuite {
       .iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
     val withFloats = parquets.filter { p =>
       val s = spark.read.parquet(p.toString).schema
-      s.exists(f => f.dataType.typeName == "array" &&
-        f.name == "embedding" && !p.toString.contains("/model/"))
+      s.exists(f => f.dataType.typeName == "array" && f.name == "embedding")
     }
     assert(withFloats.isEmpty,
       s"float vectors leaked into the code store: $withFloats")
+  }
+
+  test("build runs one residual step: its job count") {
+    val vecs = Tables(spark, sf, "embeddings").select("vec_id", "embedding")
+    val idx = new PqIndex(spark, java.nio.file.Files.createTempDirectory("pqidx_jobs").toString)
+    val n = SparkJobs.jobsOf(idx.build(vecs))._2.size
+    info(s"build: $n jobs")
+    assert(n == 66)
+  }
+
+  test("the model reads run no job, on the building instance and on a new one") {
+    val vecs = Tables(spark, sf, "embeddings").select("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("pqidx_model").toString
+    val idx = new PqIndex(spark, dir)
+    idx.build(vecs.filter(col("vec_id") % 2 === 0), k = 4, iters = 1)
+    for (i <- Seq(idx, new PqIndex(spark, dir))) {
+      val ((cents, books), jobs) = SparkJobs.jobsOf((i.coarseCentroids(), i.codebooks()))
+      val n = jobs.size
+      assert(n == 0)
+      assert(cents.count() == 4 && books.count() == sim.Pq.M * sim.Pq.K)
+    }
+  }
+
+  test("a rebuild that fails before it publishes leaves the served version's model") {
+    val vecs = Tables(spark, sf, "embeddings").select("vec_id", "embedding")
+    val queries = vecs.filter(col("vec_id") < 10)
+    val dir = java.nio.file.Files.createTempDirectory("pqidx_fail").toString
+    val idx = new PqIndex(spark, dir)
+    idx.build(vecs.filter(col("vec_id") % 2 === 0))
+    idx.append(vecs.filter(col("vec_id") % 2 === 1)): Unit
+    val v = idx.version.get
+    val served = rowList(idx.adcTopK(queries))
+    val drift = idx.reconstructionDrift()
+    // the rebuild trains another model on other vectors, then cannot
+    // write its segment: a file stands where its claimed version's
+    // segment directory goes
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "seg", s"s${v + 1}"))
+    intercept[Exception](idx.build(vecs.filter(col("vec_id") % 3 === 0), k = 5, iters = 1))
+    for (i <- Seq(idx, new PqIndex(spark, dir))) {
+      assert(i.version.contains(v))
+      assert(rowList(i.adcTopK(queries)) == served, "the failed rebuild changed the served shortlist")
+      assert(i.reconstructionDrift() == drift, "the failed rebuild changed the drift baseline")
+    }
   }
 
   test("pqIngestStream: streamed ingest equals batch appends bit-exact; emissions are the fresh deltas; replay re-emits identically without re-appending") {

@@ -140,46 +140,64 @@ class SegmentSidecarSpec extends AnyFunSuite {
     assert(!empty.mightContain(1L))
   }
 
+  private def vecRows(ids: Seq[Long], seed: Int = 7): DataFrame = {
+    import spark.implicits._
+    val r = new scala.util.Random(seed)
+    ids.map(i => (i, Array.fill(64)(r.nextFloat() - 0.5f))).toDF("vec_id", "embedding")
+  }
+
+  /** One of the six indexes under test: how to build it and append to
+    * it, its tables (`model` only in a version's first segment), its
+    * sidecars, and a canonical read of what it holds.
+    */
+  private case class Six(name: String, idx: SegmentedIndex, dir: String,
+      build: () => Long, append: DataFrame => Long, tables: Seq[String],
+      sidecars: Seq[String], model: Seq[String], content: () => DataFrame)
+
+  /** The six indexes, each in a new directory, built over `docs0` or
+    * `vecs0`.
+    */
+  private def sixIndexes(docs0: DataFrame, vecs0: DataFrame): Seq[Six] = {
+    def dir(name: String) = java.nio.file.Files.createTempDirectory(s"graft_six_$name").toString
+    Seq(
+      { val d = dir("mh"); val i = new dedup.MinHashIndex(spark, d)
+        Six("mh", i, d, () => i.build(docs0), i.append(_), Seq("sig", "cand"),
+          Seq("ids_bloom", "bands_bloom"), Nil, () => i.signatures()) },
+      { val d = dir("gram"); val i = new dedup.GramIndex(spark, d)
+        Six("gram", i, d, () => i.build(docs0), i.append(_), Seq("grams"), Seq("grams_bloom"),
+          Nil, () => i.grams()) },
+      { val d = dir("winnow"); val i = new text.WinnowIndex(spark, d)
+        Six("winnow", i, d, () => i.build(docs0), i.append(_), Seq("census", "docs"),
+          Seq("census_bloom", "docs_bloom"), Nil, () => i.census()) },
+      { val d = dir("lm"); val i = new text.BigramLmIndex(spark, d)
+        Six("lm", i, d, () => i.build(docs0), i.append(_), Seq("census", "lefts", "docs"),
+          Seq("census_bloom", "lefts_bloom", "docs_bloom"), Nil, () => i.census()) },
+      { val d = dir("lsh"); val i = new sim.SignLshIndex(spark, d)
+        Six("lsh", i, d, () => i.build(vecs0), i.append(_), Seq("vec", "sig"), Seq("ids_bloom"),
+          Nil, () => i.vectors().select(col("vec_id"), col("embedding"))) },
+      { val d = dir("pq"); val i = new sim.PqIndex(spark, d)
+        Six("pq", i, d, () => i.build(vecs0, k = 3, iters = 1), i.append(_), Seq("cells", "codes"),
+          Seq("ids_bloom"), Seq("cents", "books"), () => i.codes()) })
+  }
+
   test("stats() of all six indexes: rows, bytes and false-positive rates, no job") {
-    val vecs = {
-      import spark.implicits._
-      val r = new scala.util.Random(7)
-      (0L until 200L).map(i => (i, Array.fill(64)(r.nextFloat() - 0.5f))).toDF("vec_id", "embedding")
-    }
+    val vecs = vecRows(0L until 200L)
     val (vecs0, vecs1) = (vecs.filter(col("vec_id") % 3 =!= 0), vecs.filter(col("vec_id") % 3 === 0))
     val (docs0, docs1) = (docs((1L, words("a")), (2L, words("b")), (3L, words("c", 20))),
       docs((4L, words("a", 11)), (5L, words("d"))))
-    def dir(name: String) = java.nio.file.Files.createTempDirectory(s"graft_stats_$name").toString
-    // (index, its directory, build, append, its tables, its sidecars)
-    type Case = (SegmentedIndex, String, () => Long, () => Long, Seq[String], Seq[String])
-    val cases: Seq[Case] = Seq(
-      { val d = dir("mh"); val i = new dedup.MinHashIndex(spark, d)
-        (i, d, () => i.build(docs0), () => i.append(docs1), Seq("sig", "cand"),
-          Seq("ids_bloom", "bands_bloom")) },
-      { val d = dir("gram"); val i = new dedup.GramIndex(spark, d)
-        (i, d, () => i.build(docs0), () => i.append(docs1), Seq("grams"), Seq("grams_bloom")) },
-      { val d = dir("winnow"); val i = new text.WinnowIndex(spark, d)
-        (i, d, () => i.build(docs0), () => i.append(docs1), Seq("census", "docs"),
-          Seq("census_bloom", "docs_bloom")) },
-      { val d = dir("lm"); val i = new text.BigramLmIndex(spark, d)
-        (i, d, () => i.build(docs0), () => i.append(docs1), Seq("census", "lefts", "docs"),
-          Seq("census_bloom", "lefts_bloom", "docs_bloom")) },
-      { val d = dir("lsh"); val i = new sim.SignLshIndex(spark, d)
-        (i, d, () => i.build(vecs0), () => i.append(vecs1), Seq("vec", "sig"), Seq("ids_bloom")) },
-      { val d = dir("pq"); val i = new sim.PqIndex(spark, d)
-        (i, d, () => i.build(vecs0, k = 3, iters = 1), () => i.append(vecs1), Seq("cells", "codes"),
-          Seq("ids_bloom")) })
+    val cases = sixIndexes(docs0, vecs0)
 
-    def assertStats(c: Case, segments: Int): Unit = {
-      val (idx, d, _, _, tables, sidecars) = c
-      val (st, jobs) = SparkJobs.jobsOf(idx.stats())
-      assert(jobs.isEmpty, s"$d: stats() ran ${jobs.size} jobs")
-      assert(st.version == idx.version.get && st.segments.size == segments)
-      for (s <- st.segments) {
-        val segDir = java.nio.file.Paths.get(d, "seg", s.segment)
+    def assertStats(c: Six, segments: Int): Unit = {
+      val (st, jobs) = SparkJobs.jobsOf(c.idx.stats())
+      assert(jobs.isEmpty, s"${c.dir}: stats() ran ${jobs.size} jobs")
+      assert(st.version == c.idx.version.get && st.segments.size == segments)
+      for ((s, i) <- st.segments.zipWithIndex) {
+        val segDir = java.nio.file.Paths.get(c.dir, "seg", s.segment)
+        // a version's first segment also holds the model tables
+        val tables = if (i == 0) c.tables ++ c.model else c.tables
         assert(s.rows == tables.map(t =>
-          t -> spark.read.parquet(segDir.resolve(t).toString).count()).toMap, s"$d/${s.segment}")
-        assert(s.fpp == sidecars.map(b =>
+          t -> spark.read.parquet(segDir.resolve(t).toString).count()).toMap, s"${c.dir}/${s.segment}")
+        assert(s.fpp == c.sidecars.map(b =>
           b -> BloomSidecars.read(localFs, new Path(segDir.resolve(b).toString)).expectedFpp()).toMap)
         // the segment's files, not the local file system's checksums
         val files = java.nio.file.Files.walk(segDir)
@@ -188,20 +206,70 @@ class SegmentSidecarSpec extends AnyFunSuite {
           .mapToLong(java.nio.file.Files.size(_)).sum)
         finally files.close()
       }
-      tables.foreach(t => assert(st.rows(t) == st.segments.map(_.rows(t)).sum))
+      c.tables.foreach(t => assert(st.rows(t) == st.segments.map(_.rows(t)).sum))
       assert(st.bytes == st.segments.map(_.bytes).sum && st.bytes > 0)
     }
 
     for (c <- cases) {
-      c._3(): Unit
-      c._4(): Unit
+      c.build(): Unit
+      c.append(if (c.name == "lsh" || c.name == "pq") vecs1 else docs1): Unit
       // the append carries the build segment's line forward
       assertStats(c, segments = 2)
-      c._1.compact(): Unit
+      c.idx.compact(): Unit
       assertStats(c, segments = 1)
     }
-    val mh = cases.head._1.stats()
+    val mh = cases.head.idx.stats()
     assert(mh.rows("sig") == 5 && mh.rows("cand") == 1)
     assert(mh.segments.head.fpp.values.forall(p => p > 0 && p < 10 * BloomSidecars.Fpp))
+  }
+
+  test("first writer wins in all six indexes: a repeated fresh key is appended once, with one of its payloads") {
+    val docs0 = docs((1L, words("a")), (2L, words("b")), (3L, words("c", 20)))
+    val vecs0 = vecRows(0L until 60L)
+    // a fresh key twice, with two payloads that share some 8-grams (a
+    // fresh gram twice), and a stored key
+    val (e, f) = (words("e"), (words("e", 9).split(" ") ++ words("f", 3).split(" ")).mkString(" "))
+    val docBatch = Seq((6L, e), (6L, f), (1L, words("a")))
+    val (v1, v2) = (vecRows(Seq(500L), 1), vecRows(Seq(500L), 2))
+    val vecBatch = v1.unionByName(v2).unionByName(vecRows(Seq(1L)))
+    def rowSet(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case x => x
+    }).toSet
+
+    val cases = sixIndexes(docs0, vecs0)
+    // twins take only one copy of the fresh key: the appended index must
+    // hold what one of them holds
+    val twins = Seq(sixIndexes(docs0, vecs0), sixIndexes(docs0, vecs0))
+    for ((c, i) <- cases.zipWithIndex) {
+      val isVec = c.name == "lsh" || c.name == "pq"
+      val batch = if (isVec) vecBatch else docs(docBatch: _*)
+      val keysOf: DataFrame => DataFrame =
+        if (c.name == "gram") b => dedup.Dedup.docGrams8(b).select(col("g64"))
+        else _.select(col(c.idx.idKey))
+      c.build(): Unit
+      val stored = rowSet(c.idx.idsAddedAt(c.idx.version.get))
+      val v = c.append(batch)
+      val added = c.idx.idsAddedAt(v).collect().map(_.get(0)).toSeq
+      val expected = rowSet(keysOf(batch)).map(_.head) -- stored.map(_.head)
+      assert(expected.nonEmpty)
+      assert(added.size == added.distinct.size, s"${c.name}: a key appended twice: $added")
+      assert(added.toSet == expected, s"${c.name}: idsAddedAt $added, expected $expected")
+      val got = rowSet(c.content())
+      val onePayload = if (c.name == "gram") Nil else twins.zip(Seq(
+        if (isVec) v1 else docs((6L, e)), if (isVec) v2 else docs((6L, f)))).map { case (t, one) =>
+        val tc = t(i)
+        tc.build(): Unit
+        tc.append(one.unionByName(if (isVec) vecRows(Seq(1L)) else docs((1L, words("a"))))): Unit
+        rowSet(tc.content())
+      }
+      // the gram index keys on the grams themselves: both texts' grams are fresh
+      if (c.name != "gram")
+        assert(onePayload.contains(got), s"${c.name}: the stored rows match neither payload")
+      // the same batch again adds nothing
+      val again = c.append(batch)
+      assert(c.idx.idsAddedAt(again).isEmpty, s"${c.name}: a repeated batch appended keys")
+      assert(c.idx.stats().segments.last.rows.values.forall(_ == 0L), s"${c.name}: ${c.idx.stats()}")
+    }
   }
 }

@@ -287,16 +287,14 @@ class SimilaritySpec extends AnyFunSuite {
     val e = Tables(spark, sf, "embeddings").withColumn("nrm", floatNorm(col("embedding")))
     // below the threshold: the anchor map answers, no probe pass
     assert(sim.Similarity.annParamsFor(e, 500L) == sim.Similarity.annParams(500L))
-    // threshold lowered under the corpus: the SAME resolution path the
-    // registered entries call must route to the measured-retention
-    // solver and return its family
-    sys.props("graft.ann.calibratedMaxRows") = "400"
-    try {
-      val routed = sim.Similarity.annParamsFor(e, 500L)
-      val solved = sim.Similarity.annParamsProbed(spark, sf)
-      assert(routed == solved,
-        s"annParamsFor returned $routed, solver says $solved")
-    } finally { sys.props.remove("graft.ann.calibratedMaxRows"): Unit }
+    // n past the threshold: the SAME resolution path the registered
+    // entries call must route to the measured-retention solver and
+    // return its family
+    val n = sim.Similarity.AnnCalibratedMaxRows + 1
+    val routed = sim.Similarity.annParamsFor(e, n)
+    val solved = sim.Similarity.annParamsProbedOf(e, n, 0.80)
+    info(s"n = $n: map ${sim.Similarity.annParams(n)}, solver $solved")
+    assert(routed == solved, s"annParamsFor returned $routed, solver says $solved")
   }
 
   test("a >2^17 corpus routes through the probed solver in the registered build path") {
