@@ -350,50 +350,21 @@ object Events {
   /** Session-duration/engagement distribution — the product metric the
     * sessionizer feeds: exact interpolated percentiles of session
     * length and per-session event count, over a session-materialized
-    * sessions table. ADAPTIVE like q11 (r9): the built-in one-job
-    * aggregate under [[graft.util.OrderStats.BuiltinEnvelopeRows]],
-    * the distributed selection ([[graft.util.OrderStats]]) past it —
-    * the built-in buffers every session in one reduce task, the
-    * selection never buffers; both reproduce the `percentile_cont`
-    * interpolation bit-for-bit (oracle unchanged either way).
+    * sessions table, through [[graft.util.OrderStats.percentiles]]
+    * (its class doc holds the built-in/selection switch; the oracle is
+    * unchanged on either path).
     */
   private def e10(s: SparkSession, dir: String): DataFrame = {
-    val sess = sessionsTable(s, dir)
-    val tot = sess.agg(count(lit(1)).as("n"),
-      sum(col("n_events").cast(org.apache.spark.sql.types.DecimalType(18, 0)))
-        .cast("long").as("te")).head()
-    if (tot.getLong(0) <= graft.util.OrderStats.BuiltinEnvelopeRows) {
-      sess.createOrReplaceTempView("sess_e10")
-      s.sql(s"""
-        SELECT count(*) AS n_sessions,
-          percentile_cont(0.5) WITHIN GROUP (ORDER BY end_es - start_es) AS p50_duration_s,
-          percentile_cont(0.9) WITHIN GROUP (ORDER BY end_es - start_es) AS p90_duration_s,
-          percentile_cont(0.5) WITHIN GROUP (ORDER BY n_events) AS p50_events,
-          CAST(SUM(CAST(n_events AS DECIMAL(18,0))) AS BIGINT) AS total_events
-        FROM sess_e10""")
-    } else e10ViaSelection(s, sess, tot.getLong(0), tot.getLong(1))
-  }
-
-  /** e10's past-the-envelope plan, split out so the spec suite can pin
-    * it against the built-in aggregate at test scale (no corpus in the
-    * harness crosses the envelope, so inlined it would ship untested).
-    * One stacked selection call for both value columns (the q11
-    * pattern): the duration and event-count streams share every
-    * histogram round instead of paying the engine's fixed job count
-    * twice.
-    */
-  private[graft] def e10ViaSelection(s: SparkSession, sess: DataFrame,
-      nSessions: Long, totalEvents: Long): DataFrame = {
-    val stacked = sess.select(lit("d").as("g"),
-        (col("end_es") - col("start_es")).cast("double").as("v"))
-      .unionAll(sess.select(lit("e").as("g"),
-        col("n_events").cast("double").as("v")))
-    val r = graft.util.OrderStats.groupedPercentileCont(
-      stacked, "g", "v", Seq(0.5, 0.9))
-    s.createDataFrame(Seq(
-      (nSessions, r(("d", 0.5)), r(("d", 0.9)), r(("e", 0.5)), totalEvents)))
-      .toDF("n_sessions", "p50_duration_s", "p90_duration_s", "p50_events",
-        "total_events")
+    import graft.util.OrderStats.Percentile
+    val dur = col("end_es") - col("start_es")
+    graft.util.OrderStats.percentiles(sessionsTable(s, dir), Nil,
+        Seq(Percentile(dur, 0.5, "p50_duration_s"), Percentile(dur, 0.9, "p90_duration_s"),
+          Percentile(col("n_events"), 0.5, "p50_events")),
+        Seq(count(lit(1)).as("n_sessions"),
+          sum(col("n_events").cast(org.apache.spark.sql.types.DecimalType(18, 0)))
+            .cast("long").as("total_events")))
+      .select(col("n_sessions"), col("p50_duration_s"), col("p90_duration_s"),
+        col("p50_events"), col("total_events"))
   }
 
   private val e10Sql = s"""

@@ -255,53 +255,17 @@ object Olap {
     GROUP BY n_name
     ORDER BY n_name"""
 
-  /** Exact interpolated percentiles per group, ADAPTIVE on input
-    * size (r9): under [[graft.util.OrderStats.BuiltinEnvelopeRows]]
-    * the built-in one-job aggregate runs (its (value → count) buffer
-    * is safe at that scale and ~12× cheaper than multi-job selection
-    * at sf0.1); past the envelope — sf1's 6M lineitem and up — the
-    * distributed selection takes over, which never buffers a group's
-    * values anywhere (the built-in's buffer is O(distinct values per
-    * group): fine for 50 quantity levels, O(rows) for near-unique
-    * prices). Both paths are bit-equal and reproduce
-    * `percentile_cont` exactly, so the DuckDB oracle is unchanged
-    * either way.
+  /** Exact interpolated percentiles per group, through
+    * [[graft.util.OrderStats.percentiles]] (its class doc holds the
+    * built-in/selection switch), so the DuckDB oracle is unchanged on
+    * either path.
     */
   private def q11(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables(s, dir, "lineitem")
-    if (li.count() <= graft.util.OrderStats.BuiltinEnvelopeRows) {
-      li.createOrReplaceTempView("lineitem_q11")
-      s.sql("""
-        SELECT l_returnflag,
-          percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity) AS median_qty,
-          percentile_cont(0.9) WITHIN GROUP (ORDER BY l_extendedprice) AS p90_price
-        FROM lineitem_q11
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag""")
-    } else {
-      // ONE selection over BOTH value columns: the streams stack under
-      // a composite group key (value-tag ++ returnflag, non-null by
-      // the table's contract), so the two percentiles' histogram
-      // rounds share every pass over the data — half the
-      // driver-synchronized jobs of two separate engine calls
-      // (measured at sf1: 15.7 s as two calls, the stacked call + the
-      // auto-sized histogram bring it under the r9 selection plan).
-      // The off-diagonal ranks (quantity@0.9, price@0.5) ride along
-      // unused — a handful of extra broadcast state rows.
-      val stacked = li.select(
-          concat(lit("q"), col("l_returnflag")).as("g"),
-          col("l_quantity").cast("double").as("v"))
-        .unionAll(li.select(
-          concat(lit("p"), col("l_returnflag")).as("g"),
-          col("l_extendedprice").cast("double").as("v")))
-      val r = graft.util.OrderStats.groupedPercentileCont(
-        stacked, "g", "v", Seq(0.5, 0.9))
-      val flags = r.keys.collect { case (g, _) if g.startsWith("q") =>
-        g.substring(1) }.toSeq.distinct.sorted
-      val rows = flags.map(f => (f, r(("q" + f, 0.5)), r(("p" + f, 0.9))))
-      s.createDataFrame(rows).toDF("l_returnflag", "median_qty", "p90_price")
-        .orderBy(col("l_returnflag"))
-    }
+    import graft.util.OrderStats.Percentile
+    graft.util.OrderStats.percentiles(Tables(s, dir, "lineitem"), Seq("l_returnflag"),
+        Seq(Percentile(col("l_quantity"), 0.5, "median_qty"),
+          Percentile(col("l_extendedprice"), 0.9, "p90_price")))
+      .orderBy(col("l_returnflag"))
   }
 
   private val q11Sql = """
@@ -502,49 +466,27 @@ object Olap {
     ORDER BY r_name, n_name"""
 
   /** Customer-value deciles (LTV segmentation) with NO global sort in
-    * the scale path: past [[graft.util.OrderStats.BuiltinEnvelopeRows]]
-    * customers, decile boundaries come from distributed exact
-    * selection ([[graft.util.OrderStats]] — iterative histogram
-    * refinement, every pass a fully-parallel aggregation), and each
+    * the scale path: the nine decile boundaries come from
+    * [[graft.util.OrderStats.percentiles]] over one global group (its
+    * class doc holds the built-in/selection switch), and each
     * customer's decile is 1 + the number of LITERAL boundaries above
-    * their spend — a codegen'd compare, no join at all. A one-group
-    * `percentile_cont` plans as a single reduce task sorting every
-    * customer (measured 5.6× growth at 10× data); an ntile(10) window
-    * is the same single-partition sort. Neither survives 100 TB —
-    * but UNDER the envelope that one-task sort is a few thousand rows
-    * and one job where the selection pays ~4 driver-synchronized
-    * rounds, so the boundary probe is adaptive on the measured
-    * customer count (the q11 rule; both paths percentile_cont
-    * bit-for-bit per OrderStatsSpec). Decile 1 = top spenders.
+    * their spend — a codegen'd compare, no join at all. Decile 1 = top
+    * spenders.
     *
-    * The interpolation mirrors `percentile_cont` exactly (position
-    * p·(n−1), (hi−pos)·v[lo] + (pos−lo)·v[hi], percentages parsed
-    * from the same decimal literals), so the DuckDB oracle is
-    * unchanged and still hash-exact.
+    * The boundaries equal the oracle's bit for bit, percentages parsed
+    * from the same decimal literals, so the DuckDB oracle is unchanged
+    * and still hash-exact.
     */
   private def q16(s: SparkSession, dir: String): DataFrame = {
     val spend = Tables(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(dsum(col("o_totalprice"), 2).as("spend"))
     val spendM = graft.util.MatStore.table(s, s"q16spend:$dir", "graft_q16") { spend }
-    val ps = (1 to 9).map(k => s"0.$k".toDouble)
-    // Adaptive on the measured customer count (the q11 rule, r16):
-    // under OrderStats.BuiltinEnvelopeRows the built-in one-job
-    // aggregate computes the 9 boundaries (its single sorted buffer is
-    // safe at that scale and ~10× cheaper than the ~4 driver-
-    // synchronized selection jobs); past it the distributed selection
-    // takes over. Both are percentile_cont bit-for-bit (OrderStatsSpec),
-    // so the plan changes, never the answer — or the oracle hash.
-    val bounds: Map[Double, Double] =
-      if (spendM.count() <= graft.util.OrderStats.BuiltinEnvelopeRows) {
-        spendM.createOrReplaceTempView("spend_q16")
-        val cols = (1 to 9).map(k =>
-          s"percentile_cont(0.$k) WITHIN GROUP (ORDER BY spend) AS b$k")
-        val row = s.sql(s"SELECT ${cols.mkString(", ")} FROM spend_q16").head()
-        (1 to 9).map(k => s"0.$k".toDouble -> row.getDouble(k - 1)).toMap
-      } else graft.util.OrderStats.percentileCont(spendM, "spend", ps)
-    val decile = ps.map(p => when(col("spend") < lit(bounds(p)), 1).otherwise(0))
-      .reduce(_ + _)
+    import graft.util.OrderStats.Percentile
+    val bounds = graft.util.OrderStats.percentiles(spendM, Nil, (1 to 9).map(k =>
+      Percentile(col("spend"), s"0.$k".toDouble, s"b$k"))).head()
+    val decile = (0 until 9).map(i =>
+      when(col("spend") < lit(bounds.getDouble(i)), 1).otherwise(0)).reduce(_ + _)
     spendM
       .withColumn("decile", (lit(1) + decile).cast("int"))
       .groupBy(col("decile"))

@@ -133,10 +133,11 @@ final class SignLshIndex(spark: SparkSession, indexDir: String)
 
   /** Full build from a corpus (vecs: vec_id, embedding) —
     * initialization; calibrates and pins the family from this corpus'
-    * size. Returns the published version.
+    * size. Duplicate ids collapse as in [[fresh]]. Returns the
+    * published version.
     */
   def build(vecs: DataFrame): Long = {
-    val e = withNorm(vecs).persist()
+    val e = withNorm(vecs.dropDuplicates(idKey)).persist()
     try {
       // shared family resolution: the measured-anchor map below
       // 2^17 rows, the retention-probe solver past it — a corpus the

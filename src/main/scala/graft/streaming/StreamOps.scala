@@ -174,15 +174,18 @@ object StreamOps {
     * version that already holds them if the trigger is a replay. A
     * replay (`tag` is journaled) recovers the rows whose key the tagged
     * version added ([[graft.util.SegmentedIndex.idsAddedAt]]), so first
-    * run and replay decide over the same rows; a first run takes the
-    * index's first-writer-wins [[graft.util.SegmentedIndex.fresh]] rows,
-    * which the caller appends with the tag.
+    * run and replay decide over the same rows; a first run drops the
+    * rows whose key the index already holds (the anti-join half of
+    * [[graft.util.SegmentedIndex.fresh]]: the journal has collapsed
+    * `b` on `key` already), which the caller appends with the tag.
     */
   private def freshRows(index: graft.util.SegmentedIndex, b: DataFrame,
-      tag: String): (Option[Long], DataFrame) = {
+      key: String, tag: String): (Option[Long], DataFrame) = {
+    require(key == index.idKey, s"the journal collapses on $key, " +
+      s"the index keys on ${index.idKey}: the batch is not unique on its id")
     val tagged = index.versionTagged(tag)
-    (tagged, tagged.fold(index.fresh(b))(v =>
-      b.join(index.idsAddedAt(v), Seq(index.idKey), "left_semi")).localCheckpoint())
+    (tagged, tagged.fold(b.join(index.known(b.select(col(key))), Seq(key), "left_anti"))(v =>
+      b.join(index.idsAddedAt(v), Seq(key), "left_semi")).localCheckpoint())
   }
 
   /** Continuous maintenance of a [[graft.sim.SignLshIndex]] — the
@@ -324,7 +327,7 @@ object StreamOps {
     // the audited set is the batch's FRESH docs, shingled exactly ONCE:
     // the same localCheckpointed window table feeds the index append
     // (its census delta) and the duplication audit below
-    val (tagged, fresh) = freshRows(index, b.select(col("doc_id"), col("text")), tag)
+    val (tagged, fresh) = freshRows(index, b.select(col("doc_id"), col("text")), "doc_id", tag)
     val wins = graft.text.TextOps.winnowWindows(fresh).localCheckpoint()
     val v = tagged.getOrElse(index.appendShingled(fresh, wins, Some(tag)))
     val batchCensus = wins.select(col("doc_id"), col("fp")).distinct()
@@ -383,7 +386,7 @@ object StreamOps {
     // the scored set is the batch's FRESH docs, tokenized exactly ONCE —
     // the same localCheckpointed bigram stream feeds the index append
     // (its census delta) and the scoring joins below
-    val (tagged, fresh) = freshRows(index, b.select(col("doc_id"), col("text")), tag)
+    val (tagged, fresh) = freshRows(index, b.select(col("doc_id"), col("text")), "doc_id", tag)
     val big = graft.text.TextOps.bigramStream(fresh).localCheckpoint()
     val v = tagged.getOrElse(index.appendBigrams(fresh, big, Some(tag)))
     val c12 = index.censusAtFor(v, big.select(col("bigram")))
@@ -471,7 +474,7 @@ object StreamOps {
     val (b, tag) = journal("crawl", batch, batchId)
     // a reset batch re-crawling known ids with new text is no replay: it
     // takes the fresh path, where the doc_id-keyed index drops it
-    val (tagged, fresh) = freshRows(index, b, tag)
+    val (tagged, fresh) = freshRows(index, b, "doc_id", tag)
     val appendedV = tagged.orElse(
       if (fresh.isEmpty) None else Some(index.appendFresh(fresh, Some(tag))))
     appendedV.foreach { v =>

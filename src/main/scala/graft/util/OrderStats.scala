@@ -8,18 +8,29 @@ import org.apache.spark.sql.types.DecimalType
 import graft.functions.DoubleOrderBits.orderBits
 import graft.util.Fixpoint.Until
 
-/** Distributed EXACT order statistics (selection) — the scale-safe
-  * replacement for `percentile_cont`, whose physical plan buffers
-  * every group's full value list in the aggregate (one group = a
-  * single reduce task sorting every row, measured 5.6× growth at 10×
-  * data on q16; bounded groups still grow their per-group buffers
-  * linearly with the data, q11/e10).
+/** Exact interpolated percentiles (`percentile_cont`), one entry for
+  * every caller: [[percentiles]] takes a frame, its group columns and
+  * a list of (value column, percentage, output name) requests, and
+  * returns one row per group.
   *
-  * Method: iterative histogram refinement, generalized over groups,
-  * with ALL per-group state held in DataFrames — the driver only ever
-  * sees scalars (group-cardinality estimate, open-range count, tail
-  * rank bound), so group cardinality is unbounded (the per-customer-
-  * percentile shape a training pipeline hits at 100 TB).
+  * The switch, stated once here for q11, q16 and e10: the entry counts
+  * its input, and up to 4M rows (`BuiltinEnvelopeRows`) it runs Spark's
+  * one-job built-in `percentile` aggregate; past that it runs the
+  * distributed selection below. The built-in's per-group state is a
+  * (value → count) map — safe while distinct values stay far under the
+  * envelope — and it costs one job where the selection costs ~4
+  * driver-synchronized ones (measured 0.1 s vs 1.4 s on q11 at sf0.1).
+  * Past the envelope the selection wins outright: near-unique double
+  * columns make the built-in's buffer O(rows per group), and a single
+  * group (q16's shape) is one reduce task sorting every row (measured
+  * 5.6× growth at 10× data). Both paths are bit-equal
+  * (OrderStatsSpec), so the switch changes the PLAN, never the answer.
+  *
+  * The selection is iterative histogram refinement, generalized over
+  * groups, with ALL per-group state held in DataFrames — the driver
+  * only ever sees scalars (group-cardinality estimate, open-range
+  * count, tail rank bound), so group cardinality is unbounded (the
+  * per-customer-percentile shape a training pipeline hits at 100 TB).
   *
   *  1. Every requested (group, rank) starts with the group's global
   *     [min, max] range and its 0-based target index.
@@ -50,17 +61,20 @@ import graft.util.Fixpoint.Until
   * mass in the low tail) a linear split eliminates only a few binades
   * per round.
   *
-  * Group-key plumbing: groups are keyed internally by a non-null
-  * string image `gk` (a null flag + the value cast to string), so
+  * Several value columns share one selection: their rows stack under
+  * a composite group key (the request's value-column tag plus the
+  * group columns), so their histogram rounds share every pass over the
+  * data instead of paying the engine's fixed job count per column.
+  * The key is a non-null string image `gk` (the JSON array of the tag
+  * and the group values cast to string), so
   *  - NULL groups flow through like any other group — matching the
-  *    built-in aggregate's GROUP BY semantics, which q11/e10's
-  *    adaptive switch relies on (the plan changes, never the answer);
+  *    built-in aggregate's GROUP BY semantics;
   *  - every engine join is a plain equi-join on `gk`, which the
   *    co-partitioned layout below satisfies with no extra exchange
   *    (null-safe joins would be rewritten around coalesced keys and
   *    stop matching the cached partitioning).
   * Group columns must be atomic types (their string image must
-  * separate distinct values); the original column is carried
+  * separate distinct values); the original columns are carried
   * alongside and restored in the output.
   *
   * Distribution of the per-round state join (range → rows) is
@@ -74,19 +88,13 @@ import graft.util.Fixpoint.Until
   */
 object OrderStats {
 
-  /** Input-rows envelope under which callers prefer the built-in
-    * single-pass percentile aggregate: its per-group state is a
-    * (value → count) map — safe while distinct values stay far under
-    * the envelope — and it costs ONE job where the selection path
-    * costs ~4 driver-synchronized jobs (measured 0.1 s vs 1.4 s on
-    * q11 at sf0.1). Past the envelope the selection path wins
-    * outright: near-unique double columns make the buffer O(rows per
-    * group), and the one-job advantage drowns in the buffered sort.
-    * Both paths are bit-equal (OrderStatsSpec), so the switch changes
-    * the PLAN, never the answer — the standard adaptive-execution
-    * trade, made on a deterministic row count.
+  /** One request: `percentile_cont(p) WITHIN GROUP (ORDER BY value)`,
+    * output as column `name`.
     */
-  val BuiltinEnvelopeRows: Long = 4L * 1000 * 1000
+  final case class Percentile(value: Column, p: Double, name: String)
+
+  /** Input rows up to which the built-in aggregate runs (class doc). */
+  private val BuiltinEnvelopeRows: Long = 4L * 1000 * 1000
 
   /** Group-cardinality envelope under which the per-round range table
     * is broadcast (state rows = groups × open ranks; 64k groups × a
@@ -94,9 +102,9 @@ object OrderStats {
     * by group once and the state is shuffle-hash-joined in — the plan
     * that holds at unbounded cardinality.
     */
-  val GroupBroadcastEnvelope: Long = 65536L
+  private[graft] val GroupBroadcastEnvelope: Long = 65536L
 
-  /** Auto-sized histogram width for `buckets = 0` call sites. Two
+  /** Auto-sized histogram width when `buckets` is 0. Two
     * opposing forces, both measured on q11/q16 at sf1: wider buckets
     * collapse the round count (ceil(64 / log2 B) + 1: 8 at B=256, 6
     * at B=4096), but the histogram's map-side partial aggregation
@@ -127,12 +135,6 @@ object OrderStats {
   private def runSelection(vp: DataFrame, state0: DataFrame,
       broadcastState: Boolean, buckets: Int, tailK: Int,
       stateRows: Long): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    // fail at the API boundary, not inside the final aggregate: the
-    // tail path's bounded top-k (TopKAggregate) hard-caps k at 8192,
-    // and kMax below can reach tailK
-    require(tailK >= 1 && tailK <= 8192,
-      s"tailK must be in [1, 8192] (TopKAggregate's k cap), got $tailK")
     val openCond = col("lo") =!= col("hi") && col("cnt") > tailK
     // ceil(64 / log2 B) + 1 structural bound (see scaladoc) + slack
     val maxRounds = 64 / (31 - Integer.numberOfLeadingZeros(buckets)) + 5
@@ -248,87 +250,74 @@ object OrderStats {
     }
   }
 
-  /** Non-null string image of the group column: distinct atomic values
-    * map to distinct strings, NULL maps to its own key.
-    */
-  private def groupKey(g: Column): Column =
-    concat(when(g.isNull, lit("n")).otherwise(lit("v")),
-      coalesce(g.cast("string"), lit("")))
+  // ---- the entry -----------------------------------------------------
 
-  // ---- public API -----------------------------------------------------
-
-  /** Exact 0-based order statistics of `col` in `df` (one global
-    * group).
-    *
-    * @return rank -> value, for each requested rank (ranks must be in
-    *         [0, n); duplicates in `ranks` are fine)
+  /** Exact `percentile_cont` of each request, one row per group of
+    * `groups` (none: one global row): the group columns, then the
+    * requests' columns, then `aggs` — plain aggregates computed over
+    * the same groups, so a caller that also needs counts or sums reads
+    * its input once more at most. The built-in aggregate or the
+    * selection, by input size (class doc).
     */
-  def orderStatistics(df: DataFrame, valueCol: String, ranks: Seq[Long],
-      buckets: Int = 0, tailK: Int = 8192): Map[Long, Double] = {
-    require(ranks.nonEmpty, "no ranks requested")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val vp = df.select(lit("g").as("gk"), col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull).persist()
-    try {
-      val head = vp.groupBy(col("gk"))
-        .agg(count(lit(1)).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx"))
-        .collect().headOption
-        .getOrElse(throw new IllegalArgumentException("no rows to select from"))
-      val (n, mn, mx) = (head.getLong(1), head.getDouble(2), head.getDouble(3))
-      ranks.foreach(r =>
-        require(r >= 0 && r < n, s"rank $r out of [0, $n)"))
-      val state0 = ranks.distinct.map(r => ("g", r, mn, mx, r, n))
-        .toDF("gk", "rank", "lo", "hi", "t", "cnt")
-      val b = if (buckets > 0) buckets else autoBuckets(ranks.distinct.size.toLong)
-      runSelection(vp, state0, broadcastState = true, b, tailK,
-        stateRows = ranks.distinct.size.toLong)
-        .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
-    } finally vp.unpersist()
+  def percentiles(df: DataFrame, groups: Seq[String], requests: Seq[Percentile],
+      aggs: Seq[Column] = Nil): DataFrame =
+    percentiles(df, groups, requests, aggs, forceSelection = false,
+      buckets = 0, tailK = 8192)
+
+  /** [[percentiles]] with the selection's knobs: `forceSelection` skips
+    * the envelope, `buckets` is the histogram width (0: auto-sized) and
+    * `tailK` the range size the final top-k resolves.
+    */
+  private[graft] def percentiles(df: DataFrame, groups: Seq[String],
+      requests: Seq[Percentile], aggs: Seq[Column], forceSelection: Boolean,
+      buckets: Int, tailK: Int): DataFrame = {
+    require(requests.nonEmpty, "no percentiles requested")
+    requests.foreach(r =>
+      require(r.p >= 0.0 && r.p <= 1.0, s"percentage ${r.p} out of [0, 1]"))
+    require(buckets == 0 || buckets >= 2, s"buckets must be 0 or >= 2, got $buckets")
+    // the tail path's bounded top-k (TopKAggregate) hard-caps k at
+    // 8192, and its k can reach tailK
+    require(tailK >= 1 && tailK <= 8192,
+      s"tailK must be in [1, 8192] (TopKAggregate's k cap), got $tailK")
+    if (!forceSelection && df.count() <= BuiltinEnvelopeRows) {
+      val cols = requests.map(r => percentile(r.value, lit(r.p)).as(r.name)) ++ aggs
+      df.groupBy(groups.map(col): _*).agg(cols.head, cols.tail: _*)
+    } else selection(df, groups, requests, aggs, buckets, tailK)
   }
 
-  /** `percentile_cont(p)` of `col` computed through the distributed
-    * selection — same linear-interpolation semantics as the SQL
-    * aggregate (position p·(n−1), interpolate
-    * (hi−pos)·v[lo] + (pos−lo)·v[hi]), but with a distributed plan.
+  /** The past-envelope plan: one stacked selection over every value
+    * column, pivoted back to one row per group and joined to `aggs`.
     */
-  def percentileCont(df: DataFrame, valueCol: String,
-      percentages: Seq[Double]): Map[Double, Double] = {
-    val g = groupedPercentileCont(
-      df.select(lit("").as("gpc_g"), col(valueCol)), "gpc_g", valueCol, percentages)
-    percentages.map(p => p -> g(("", p))).toMap
-  }
-
-  /** Per-group `percentile_cont` as a DataFrame — unbounded group
-    * cardinality: all per-group state stays distributed; the driver
-    * sees only scalars. NULL group values form their own group, as in
-    * the built-in aggregate; groups whose values are all NULL have no
-    * output row.
-    *
-    * @return (groupCol [original type], percentage double, value double)
-    */
-  def groupedPercentileContDF(df: DataFrame, groupCol: String,
-      valueCol: String, percentages: Seq[Double], buckets: Int = 0,
-      tailK: Int = 8192): DataFrame = {
-    require(percentages.nonEmpty, "no percentages requested")
-    percentages.foreach(p =>
-      require(p >= 0.0 && p <= 1.0, s"percentage $p out of [0, 1]"))
-    val base = df
-      .select(groupKey(col(groupCol)).as("gk"), col(groupCol).as("g"),
-        col(valueCol).cast("double").as("v"))
+  private def selection(df: DataFrame, groups: Seq[String],
+      requests: Seq[Percentile], aggs: Seq[Column], buckets: Int,
+      tailK: Int): DataFrame = {
+    val values = requests.map(_.value).distinct
+    val tagOf = requests.map(r => values.indexOf(r.value))
+    val pcts = values.indices.map(t =>
+      requests.zip(tagOf).collect { case (r, `t`) => r.p }.distinct)
+    val gs = groups.indices.map(i => s"os_g$i")
+    val gcols = gs.map(col)
+    val stacked = values.zipWithIndex.map { case (v, t) =>
+      df.select((lit(t).as("tag") +: groups.zip(gs).map { case (g, n) => col(g).as(n) }) :+
+        v.cast("double").as("v"): _*)
+    }.reduce(_ unionAll _)
+    val base = stacked
+      .withColumn("gk", to_json(array(col("tag").cast("string") +:
+        gcols.map(_.cast("string")): _*)))
       .filter(col("v").isNotNull)
       .persist()
-    try {
+    val picked = try {
       // lazy checkpoint: the count() right below materializes it, so
       // the summary costs one job, not two
       val heads = base.groupBy(col("gk"))
-        .agg(first(col("g")).as("g"), count(lit(1)).as("n"),
-          min(col("v")).as("mn"), max(col("v")).as("mx"))
+        .agg(first(col("tag")).as("tag"), (gs.map(g => first(col(g)).as(g)) ++
+          Seq(count(lit(1)).as("n"), min(col("v")).as("mn"),
+            max(col("v")).as("mx"))): _*)
         .localCheckpoint(false)
       val nGroups = heads.count()
+      val stateRows = nGroups * 2L * pcts.map(_.size).max
       val broadcastState = nGroups <= GroupBroadcastEnvelope
-      val b = if (buckets > 0) buckets
-        else autoBuckets(nGroups * 2L * percentages.distinct.size)
+      val b = if (buckets > 0) buckets else autoBuckets(stateRows)
       val vp = if (broadcastState) base.select(col("gk"), col("v"))
       else {
         val r = base.select(col("gk"), col("v")).repartition(col("gk")).persist()
@@ -336,10 +325,12 @@ object OrderStats {
         r
       }
       try {
-        val parr = array(percentages.map(lit): _*)
+        // each stacked group asks for its own column's percentages only
+        val parr = element_at(array(pcts.map(ps => array(ps.map(lit): _*)): _*),
+          col("tag") + 1)
         val pmap = heads
-          .select(col("gk"), col("g"), col("n"), col("mn"), col("mx"),
-            explode(parr).as("p"))
+          .select((Seq(col("gk"), col("tag")) ++ gcols ++ Seq(col("n"),
+            col("mn"), col("mx"), explode(parr).as("p"))): _*)
           .withColumn("pos", col("p") * (col("n") - 1).cast("double"))
           .withColumn("rlo", floor(col("pos")).cast("long"))
           .withColumn("rhi", ceil(col("pos")).cast("long"))
@@ -351,44 +342,38 @@ object OrderStats {
             first(col("n")).as("cnt"))
           .select(col("gk"), col("rank"), col("lo"), col("hi"),
             col("rank").as("t"), col("cnt"))
-        val r = runSelection(vp, state0, broadcastState, b, tailK,
-          stateRows = nGroups * 2L * percentages.distinct.size)
+        val r = runSelection(vp, state0, broadcastState, b, tailK, stateRows)
         val rlo = r.select(col("gk").as("lgk"), col("rank").as("lrank"),
           col("value").as("vlo"))
         val rhi = r.select(col("gk").as("hgk"), col("rank").as("hrank"),
           col("value").as("vhi"))
+        // same interpolation as percentile_cont: position p·(n−1),
+        // (hi−pos)·v[lo] + (pos−lo)·v[hi]
         pmap
           .join(rlo, col("gk") === col("lgk") && col("rlo") === col("lrank"))
           .join(rhi, col("gk") === col("hgk") && col("rhi") === col("hrank"))
-          .select(col("g").as(groupCol), col("p").as("percentage"),
+          .select((col("tag") +: gcols) ++ Seq(col("p"),
             when(col("rlo") === col("rhi"), col("vlo"))
               .otherwise(
                 (col("rhi").cast("double") - col("pos")) * col("vlo") +
                   (col("pos") - col("rlo").cast("double")) * col("vhi"))
-              .as("value"))
+              .as("value")): _*)
           .localCheckpoint() // materialize so the persisted inputs can go
-      } finally if (!(vp eq base)) vp.unpersist()
+      } finally if (!broadcastState) vp.unpersist()
     } finally base.unpersist()
-  }
-
-  /** Per-group `percentile_cont` collected to a map — the
-    * bounded-group-cardinality convenience form of
-    * [[groupedPercentileContDF]] (the RESULT is O(groups ×
-    * percentages) and lands on the driver; the computation itself is
-    * the same fully-distributed engine). Group values are keyed by
-    * their string image; a NULL group maps to a null key.
-    *
-    * @return (group value as string, percentage) -> interpolated value
-    */
-  def groupedPercentileCont(df: DataFrame, groupCol: String, valueCol: String,
-      percentages: Seq[Double], buckets: Int = 0,
-      tailK: Int = 8192): Map[(String, Double), Double] = {
-    val out = groupedPercentileContDF(
-      df.select(col(groupCol).cast("string").as(groupCol), col(valueCol)),
-      groupCol, valueCol, percentages, buckets, tailK)
-    out.collect()
-      .map(r => (if (r.isNullAt(0)) null else r.getString(0),
-        r.getDouble(1)) -> r.getDouble(2))
-      .toMap
+    val cols = requests.zip(tagOf).map { case (r, t) =>
+      first(when(col("tag") === t && col("p") === r.p, col("value")),
+        ignoreNulls = true).as(r.name)
+    }
+    val wide = picked.groupBy(gcols: _*).agg(cols.head, cols.tail: _*)
+    // every group of `df` gets its row, as under the built-in aggregate
+    // (a group whose values are all NULL reads NULL percentiles)
+    val perGroup = df.groupBy(groups.map(col): _*)
+      .agg(count(lit(1)).as("os_rows"), aggs: _*)
+    val on = groups.zip(gs).map { case (g, n) => col(g) <=> col(n) }
+      .reduceOption(_ && _).getOrElse(lit(true))
+    perGroup.join(wide, on, "left")
+      .select((groups ++ requests.map(_.name) ++
+        perGroup.columns.drop(groups.size + 1)).map(col): _*)
   }
 }

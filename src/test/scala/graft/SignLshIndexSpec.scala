@@ -227,4 +227,17 @@ class SignLshIndexSpec extends AnyFunSuite {
       assert(s == qcos(emb(q), emb(n)), s"pair ($q,$n) score drifted")
     }
   }
+
+  test("a build over a corpus that repeats a vec_id stores one vec row per id") {
+    val vecs = Tables(spark, sf, "embeddings").select("vec_id", "embedding")
+      .filter(col("vec_id") % 10 === 0)
+    val repeated = vecs.orderBy(col("vec_id")).limit(1)
+    val idx = new SignLshIndex(spark,
+      java.nio.file.Files.createTempDirectory("signidx_dup").toString)
+    idx.build(vecs.unionByName(repeated))
+    val stored = idx.vectors()
+    assert(stored.count() == vecs.count())
+    assert(stored.select("vec_id").distinct().count() == stored.count(),
+      "a repeated vec_id must be stored once")
+  }
 }

@@ -4,7 +4,7 @@
 set -e
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_SF_DIR="${1:-/root/testdata/sf0.1}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
+. tools/host_defaults.sh
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -19,7 +19,7 @@ done
 RUNDIR="$(mktemp -d /tmp/graft_bench.XXXXXX)"
 cd "$RUNDIR"
 echo "bench artifacts under $RUNDIR" >&2
-exec java $ADDOPENS -Xmx${SPARK_GRAFT_XMX:-64g} \
+exec java $ADDOPENS -Xmx$SPARK_GRAFT_XMX \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Bench ${2:+"$2"}
